@@ -1,27 +1,28 @@
 #!/usr/bin/env python
 """Benchmark harness.
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 8: this
-sandbox VM's hypervisor CPU quota throttles sustained >8-thread bursts —
-measured local[32] suite draws of 8.7 s / 108 s / 10.1 s vs local[8]'s
-stable 5-6 s on identical input; on real hardware raise it) and prints
-ONE JSON line::
+Times every ``__spark_entry__.SPECS`` row that declares bench overrides —
+the same plans the parity test checks, at ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: every core
+of the host) — and prints ONE JSON line::
 
-    {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., "docs": N, "docs_per_sec": ...}
+    {"metric": "...", "value": <headline_sec>, "unit": "sec",
+     "queries": {name: median_sec}, "draws": {name: [sec, ...]}, ...}
 
 The spatial corpus is the deterministic amplified interleave
 (``SPARK_GRAFT_AMP``, default 128 -> ~640k docs at sf0.1, the reference's
-experiment scale).  Measurement protocol follows the reference
-(`Experiment/PerformanceEval/DSSESearchVariesByRange.java:31,73-111`):
-a warm-up pass on every query, then the timed pass.
+experiment scale), encoded, Hilbert-sorted and prefix-indexed once before
+timing.  Protocol, after the reference
+(`Experiment/PerformanceEval/DSSESearchVariesByRange.java:31,73-111`): one
+warm-up pass over every query, then ``DRAWS`` timed draws per query; each
+draw builds the plan and runs it into the ``noop`` sink, which computes
+every output column (a ``.count()`` sink lets Catalyst prune them).  The
+reported time is the median draw; all draws are emitted.
 
 ``--scaling`` runs the compute-bound pipeline (``run_heavy``) at two
 parallelism levels — ``local[$SPARK_GRAFT_SCALING_N]`` vs 4N cores
 (default local[1] vs local[4]) — on identical on-disk input and reports
-throughput at both plus two scaling-efficiency estimators (BASELINE.json
-two-cluster-size criterion, sandbox form) — results written to
+throughput at both plus two scaling-efficiency estimators, written to
 BENCH/scaling.json.
 """
 
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -36,1301 +38,128 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 AMP = int(os.environ.get("SPARK_GRAFT_AMP", "128"))
-
-
 WORK = os.environ.get("SPARK_GRAFT_BENCH_DIR", "/tmp/hcs_bench")
+DRAWS = 3
+# the headline: the 8-query spatial suite, comparable with BENCH_r01..r05
+HEADLINE = (
+    "grq_range", "grq_prefix", "brq_any", "brq_all",
+    "tile_assign", "pip_join", "knn", "cell_stats",
+)
 
 
-def _corpus_path(partitions: int = 16) -> str:
-    tag = os.path.basename(SF_DIR.rstrip("/"))
-    # the partition count is part of the cache key: a 16-file suite corpus
-    # must not satisfy the scaling pipeline's 64-file request (task-wave
+def _source_key(name: str) -> str:
+    """Cache key of a fixture table: the sf tag plus the parquet's size and
+    mtime, so fixtures regenerated in place never reuse stale re-laid
+    copies."""
+    st = os.stat(f"{SF_DIR}/{name}.parquet")
+    return f"{os.path.basename(SF_DIR.rstrip('/'))}_{st.st_size}_{st.st_mtime_ns}"
+
+
+def _corpus_path(amp: int, partitions: int = 16) -> str:
+    # the partition count is part of the key: a 16-file suite corpus must
+    # not satisfy the scaling pipeline's 64-file request (task-wave
     # structure is the thing being measured there)
-    return f"{WORK}/corpus_{tag}_amp{AMP}_p{partitions}"
+    return f"{WORK}/corpus_{_source_key('documents')}_amp{amp}_p{partitions}"
 
 
-def _materialize_corpus(spark, partitions: int = 16) -> str:
+def _materialize_corpus(spark, amp: int, partitions: int = 16) -> str:
     """One-time synthetic-corpus materialization (untimed setup — a real
-    deployment reads the interleaved table from storage).
-
-    File count trades fixed per-task overhead (fewer, larger files) against
-    straggler amortization (more waves per core).  The query suite uses 16;
-    the scaling pipeline passes 64 so the smallest master still runs 8+
-    waves and a slow task cannot add a whole wave of idle time."""
+    deployment reads the interleaved table from storage).  File count
+    trades fixed per-task overhead against straggler amortization: the
+    suite uses 16, the scaling pipeline 64 so the smallest master still
+    runs 8+ waves."""
     from hilbert_curve_spark.sources.interleave import build_documents
 
-    path = _corpus_path(partitions)
+    path = _corpus_path(amp, partitions)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        build_documents(spark, SF_DIR, amp=AMP, partitions=partitions).write.mode(
+        build_documents(spark, SF_DIR, amp=amp, partitions=partitions).write.mode(
             "overwrite"
         ).parquet(path)
     return path
 
 
 def _sf_table(spark, name: str, partitions: int = 8):
-    """The sf fixture table re-laid as ``partitions`` parquet files
-    (untimed, one-time per (sf, table) like the corpus materialization).
-
-    The driver's fixtures are single-row-group single-file parquet —
-    unsplittable, so every scan rooted at them would run ONE task no
-    matter the core count (measured: the md5-shingle pass over
-    documents ran 7 s single-threaded).  A deployment's tables arrive as
-    many files/row-groups; this restores that shape so the bench measures
-    the operators, not the fixture's file layout."""
-    tag = os.path.basename(SF_DIR.rstrip("/"))
-    path = f"{WORK}/table_{name}_{tag}_p{partitions}"
+    """The fixture table re-laid as ``partitions`` parquet files (untimed,
+    once per source version).  The fixtures are single-row-group
+    single-file parquet — unsplittable, so every scan rooted at them would
+    run ONE task no matter the core count; a deployment's tables arrive as
+    many files, and this restores that shape."""
+    path = f"{WORK}/table_{name}_{_source_key(name)}_p{partitions}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            spark.read.parquet(f"{SF_DIR}/{name}.parquet")
-            .repartition(partitions)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+        spark.read.parquet(f"{SF_DIR}/{name}.parquet").repartition(partitions).write.mode(
+            "overwrite"
+        ).parquet(path)
     return spark.read.parquet(path)
 
 
-def _build(spark):
-    """Maintained derived tables: doc_geo (hilbert-sorted layout) + prefix
-    index, written as parquet and read back — the deployment shape
-    (columnar cache build is slower than a parquet round-trip for these
-    schemas, and sorted parquet is what enables scan pruning)."""
+def bench_ctx(spark, amp: int):
+    """The maintained tables every timed plan reads, built untimed: doc_geo
+    (Hilbert-sorted layout) and the prefix index written as parquet and
+    read back (sorted parquet is what enables scan pruning), the flat
+    tables re-laid as splittable files, the materialized corpus.  Returns
+    (Ctx, corpus doc count)."""
+    from __spark_entry__ import Ctx
     from hilbert_curve_spark.operators.encode import encode_documents_native
     from hilbert_curve_spark.operators.range_query import prefix_index
     from hilbert_curve_spark.sources.layout import write_sorted
 
-    corpus = spark.read.parquet(_materialize_corpus(spark))
-    raw_path = f"{_corpus_path()}_raw"
-    geo_path = f"{_corpus_path()}_geo"
-    # bulk encode-to-table: the pure-JVM native path (no filter above)
-    encode_documents_native(corpus).write.mode("overwrite").parquet(raw_path)
-    write_sorted(spark.read.parquet(raw_path), geo_path, partitions=32)
-    geo = spark.read.parquet(geo_path)
-    n = geo.count()
-    idx_path = f"{_corpus_path()}_pidx"
-    # deployment layout: posting index range-partitioned + sorted by the
-    # probe key, so the literal pbits prefilter in grq_prefix_mode becomes
-    # parquet row-group pruning (probe reads a sliver, not 16M rows)
+    corpus_path = _materialize_corpus(spark, amp)
+    corpus = spark.read.parquet(corpus_path)
+    # bulk encode-to-table: the pure-JVM native path
+    encode_documents_native(corpus).write.mode("overwrite").parquet(f"{corpus_path}_raw")
+    write_sorted(spark.read.parquet(f"{corpus_path}_raw"), f"{corpus_path}_geo", partitions=32)
+    geo = spark.read.parquet(f"{corpus_path}_geo")
+    # posting index range-partitioned + sorted by the probe key, so the
+    # literal pbits prefilter becomes parquet row-group pruning
     (
         prefix_index(geo)
         .repartitionByRange(32, "pbits", "plen")
         .sortWithinPartitions("pbits", "plen")
         .write.mode("overwrite")
-        .parquet(idx_path)
+        .parquet(f"{corpus_path}_pidx")
     )
-    pidx = spark.read.parquet(idx_path)
-    return geo, pidx, n
-
-
-def _queries(geo, pidx):
-    from pyspark.sql import functions as F
-
-    from hilbert_curve_spark import workload as W
-    from hilbert_curve_spark.operators import brq as brq_ops
-    from hilbert_curve_spark.operators import knn as knn_ops
-    from hilbert_curve_spark.operators import pip as pip_ops
-    from hilbert_curve_spark.operators import range_query as rq
-    from hilbert_curve_spark.operators import skew
-    from hilbert_curve_spark.operators import tiles as tiles_ops
-
-    def q_grq_range():
-        return rq.grq_range_mode(geo, **W.R1).count()
-
-    def q_grq_prefix():
-        return rq.grq_prefix_mode(pidx, **W.R3).count()
-
-    def q_brq_any():
-        return brq_ops.brq(geo, **W.R2, keywords=W.KW_ANY, mode="any").count()
-
-    def q_brq_all():
-        return brq_ops.brq(geo, **W.R1, keywords=W.KW_ALL, mode="all").count()
-
-    def q_tile_assign():
-        return tiles_ops.tile_assignment(geo, W.TILES).count()
-
-    def q_pip_join():
-        return pip_ops.pip_join(geo, W.POLYGONS).count()
-
-    def q_knn():
-        qx, qy = W.KNN_Q
-        return knn_ops.knn(geo, qx, qy, W.KNN_K).count()
-
-    def q_cell_stats():
-        return skew.salted_cell_counts(geo).count()
-
-    return {
-        "grq_range": q_grq_range,
-        "grq_prefix": q_grq_prefix,
-        "brq_any": q_brq_any,
-        "brq_all": q_brq_all,
-        "tile_assign": q_tile_assign,
-        "pip_join": q_pip_join,
-        "knn": q_knn,
-        "cell_stats": q_cell_stats,
-    }
-
-
-def _pipeline_queries(spark):
-    """Dedup / ANN / media family — the same query shapes the driver entry
-    checks for correctness, timed under the same min-of-N protocol.  The
-    dedup and ANN queries run at the flat-table scale (their driver shape;
-    the flat text/embedding tables are the only real-content inputs at this
-    sf), media_frames runs over the full amplified interleaved corpus."""
-    from hilbert_curve_spark import workload as W
-    from hilbert_curve_spark.operators import dedup as dedup_ops
-    from hilbert_curve_spark.operators import graph as graph_ops
-    from hilbert_curve_spark.operators import similarity as sim_ops
-    from hilbert_curve_spark.operators.media import extract_media_features, sample_frames
-
-    flat = _sf_table(spark, "documents")
-    emb = _sf_table(spark, "embeddings")
-    corpus = spark.read.parquet(_corpus_path())
-
-    def q_minhash_pairs():
-        return dedup_ops.minhash_pairs_checked(flat).count()
-
-    def q_dedup_clusters():
-        return graph_ops.dedup_clusters(
-            dedup_ops.jaccard_pairs(flat, threshold_pct=W.JACCARD_T)
-        ).count()
-
-    def q_ivf_topk():
-        return sim_ops.ivf_topk(
-            emb, W.ANN_QUERY, W.ANN_K, n_centroids=8, nprobe=2
-        ).count()
-
-    def q_media_frames():
-        return sample_frames(extract_media_features(corpus)).count()
-
-    def q_span_stats():
-        from hilbert_curve_spark.operators.spans import span_stats
-
-        return span_stats(corpus).count()
-
-    def q_events_geofence():
-        from hilbert_curve_spark.operators.events import geofence_counts
-
-        events = _sf_table(spark, "events")
-        return geofence_counts(events, W.POLYGONS).count()
-
-    def q_geofence_join():
-        from hilbert_curve_spark.operators.events import geofence_join
-
-        events = _sf_table(spark, "events")
-        return geofence_join(events, W.many_fences(64)).count()
-
-    def q_interval_join():
-        from hilbert_curve_spark.operators.events import interval_join
-
-        events = _sf_table(spark, "events")
-        return interval_join(events, "click", "purchase", 30).count()
-
-    def q_stay_points():
-        from hilbert_curve_spark.operators.trajectory import stay_points
-
-        events = _sf_table(spark, "events")
-        return stay_points(events).count()
-
-    def q_od_flows():
-        from hilbert_curve_spark.operators.trajectory import od_flows
-
-        events = _sf_table(spark, "events")
-        return od_flows(events).count()
-
-    def q_colocation():
-        from hilbert_curve_spark.operators.trajectory import colocation_pairs
-
-        events = _sf_table(spark, "events")
-        return colocation_pairs(events, max_dist=256, min_overlap_minutes=60).count()
-
-    def q_trips():
-        from hilbert_curve_spark.operators.trajectory import trips
-
-        events = _sf_table(spark, "events")
-        return trips(events).count()
-
-    def q_heavy_hitters():
-        from hilbert_curve_spark.operators.textops import heavy_hitters_cms
-
-        return heavy_hitters_cms(flat).count()
-
-    def q_emerging_hotspots():
-        from hilbert_curve_spark.operators.trajectory import emerging_hotspots
-
-        events = _sf_table(spark, "events")
-        return emerging_hotspots(events, cell_shift=8).count()
-
-    def q_user_home_cells():
-        from hilbert_curve_spark.operators.trajectory import user_home_cells
-
-        events = _sf_table(spark, "events")
-        return user_home_cells(events, cell_shift=8).count()
-
-    def q_user_home_scd():
-        from hilbert_curve_spark.operators.trajectory import user_home_scd
-
-        events = _sf_table(spark, "events")
-        return user_home_scd(events, cell_shift=8).count()
-
-    def q_cell_flow_balance():
-        from hilbert_curve_spark.operators.trajectory import cell_flow_balance
-
-        events = _sf_table(spark, "events")
-        return cell_flow_balance(events, 60, 8).count()
-
-    def q_st_cube_trend():
-        from hilbert_curve_spark.operators.trajectory import st_cube_trend
-
-        events = _sf_table(spark, "events")
-        return st_cube_trend(events, cell_shift=8, n_bins=8, s_min=6).count()
-
-    def q_bearing_histogram():
-        from hilbert_curve_spark.operators.trajectory import bearing_histogram
-
-        events = _sf_table(spark, "events")
-        return bearing_histogram(events, cell_shift=8).count()
-
-    def q_radius_gyration():
-        from hilbert_curve_spark.operators.trajectory import radius_gyration
-
-        events = _sf_table(spark, "events")
-        return radius_gyration(events).count()
-
-    def q_geo_funnel():
-        from hilbert_curve_spark.operators.trajectory import geo_funnel
-
-        events = _sf_table(spark, "events")
-        return geo_funnel(events, W.POLYGONS[2], W.POLYGONS[1], within_s=86400).count()
-
-    def q_cell_peak_hours():
-        from hilbert_curve_spark.operators.trajectory import cell_peak_hours
-
-        events = _sf_table(spark, "events")
-        return cell_peak_hours(events, cell_shift=8).count()
-
-    def q_cell_recency_scores():
-        from hilbert_curve_spark.operators.trajectory import cell_recency_scores
-
-        events = _sf_table(spark, "events")
-        return cell_recency_scores(events, cell_shift=8, horizon_s=604800).count()
-
-    def q_companion_pairs():
-        from hilbert_curve_spark.operators.trajectory import companion_pairs
-
-        events = _sf_table(spark, "events")
-        return companion_pairs(
-            events, cell_shift=9, window_minutes=360, min_windows=3
-        ).count()
-
-    def q_cell_trigrams():
-        from hilbert_curve_spark.operators.trajectory import cell_trigrams
-
-        events = _sf_table(spark, "events")
-        return cell_trigrams(events, cell_shift=8, top_k=20).count()
-
-    def q_cell_dow_anomaly():
-        from hilbert_curve_spark.operators.trajectory import cell_dow_anomaly
-
-        events = _sf_table(spark, "events")
-        return cell_dow_anomaly(events, cell_shift=8).count()
-
-    def q_compaction_plan():
-        from hilbert_curve_spark.sources.export import compaction_plan
-
-        docs = _sf_table(spark, "documents")
-        return compaction_plan(docs, n_shards=64, target_rows=120).count()
-
-    def q_knox_stat():
-        from hilbert_curve_spark.operators.trajectory import knox_stat
-
-        events = _sf_table(spark, "events")
-        return knox_stat(events, s_radius=64, t_window=3600).count()
-
-    def q_impossible_travel():
-        from hilbert_curve_spark.operators.trajectory import impossible_travel
-
-        events = _sf_table(spark, "events")
-        return impossible_travel(events, vmax=2).count()
-
-    def q_covisit_pairs():
-        from hilbert_curve_spark.operators.trajectory import covisit_pairs
-
-        events = _sf_table(spark, "events")
-        return covisit_pairs(events, cell_shift=8, min_shared=2).count()
-
-    def q_cell_visit_gaps():
-        from hilbert_curve_spark.operators.trajectory import cell_visit_gaps
-
-        events = _sf_table(spark, "events")
-        return cell_visit_gaps(events, cell_shift=8).count()
-
-    return {
-        "geofence_join": q_geofence_join,
-        "events_interval_join": q_interval_join,
-        "stay_points": q_stay_points,
-        "od_flows": q_od_flows,
-        "colocation_pairs": q_colocation,
-        "trips": q_trips,
-        "emerging_hotspots": q_emerging_hotspots,
-        "user_home_cells": q_user_home_cells,
-        "user_home_scd": q_user_home_scd,
-        "cell_flow_balance": q_cell_flow_balance,
-        "st_cube_trend": q_st_cube_trend,
-        "bearing_histogram": q_bearing_histogram,
-        "radius_gyration": q_radius_gyration,
-        "covisit_pairs": q_covisit_pairs,
-        "cell_visit_gaps": q_cell_visit_gaps,
-        "knox_stat": q_knox_stat,
-        "impossible_travel": q_impossible_travel,
-        "geo_funnel": q_geo_funnel,
-        "cell_peak_hours": q_cell_peak_hours,
-        "cell_recency_scores": q_cell_recency_scores,
-        "companion_pairs": q_companion_pairs,
-        "cell_trigrams": q_cell_trigrams,
-        "cell_dow_anomaly": q_cell_dow_anomaly,
-        "compaction_plan": q_compaction_plan,
-        "heavy_hitters": q_heavy_hitters,
-        "minhash_pairs": q_minhash_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        "ivf_topk": q_ivf_topk,
-        "media_frames": q_media_frames,
-        "span_stats": q_span_stats,
-        "events_geofence": q_events_geofence,
-    }
-
-
-def _spatial_join_queries(geo):
-    """Round-3 spatial-join family over the same amplified corpus: batched
-    kNN join, within-radius pair join, zonal stats, pyramid rollup — timed
-    as its own subtotal (the headline total stays the 8-query suite for
-    comparability with BENCH_r01/r02)."""
-    from hilbert_curve_spark import workload as W
-    from hilbert_curve_spark.operators.brq import radius_search
-    from hilbert_curve_spark.operators.rollup import cell_pyramid
-    from hilbert_curve_spark.operators.rollup import cell_distinct_kmv
-    from hilbert_curve_spark.operators.spatial_join import (
-        corridor_search,
-        distance_join,
-        distance_self_join,
-        knn_join,
-        nearest_join,
-        rect_self_join,
-        zonal_median,
-        zonal_stats,
+    ctx = Ctx(
+        spark, SF_DIR, amp,
+        doc_geo=geo,
+        prefix_index=spark.read.parquet(f"{corpus_path}_pidx"),
+        corpus=corpus,
+        documents=_sf_table(spark, "documents"),
+        events=_sf_table(spark, "events"),
+        embeddings=_sf_table(spark, "embeddings"),
+        store_dir=f"{corpus_path}_store",
     )
+    return ctx, geo.count()
 
-    def q_knn_join():
-        return knn_join(geo, W.KNN_JOIN_QUERIES, W.KNN_JOIN_K).count()
 
-    def q_distance_pairs():
-        return distance_self_join(geo, W.DIST_RADIUS).count()
+def bench_specs(names=None) -> list:
+    """The timed rows in table order (all of them, or just ``names``)."""
+    from __spark_entry__ import SPECS
 
-    def q_poi_distance_join():
-        return distance_join(geo, W.POIS, W.POI_RADIUS).count()
+    return [s for s in SPECS if s.bench is not None and (names is None or s.name in names)]
 
-    def q_radius_brq():
-        qx, qy = W.RADIUS_Q
-        return radius_search(geo, qx, qy, W.RADIUS_R, keywords=W.KW_ANY).count()
 
-    def q_zonal_stats():
-        return zonal_stats(geo, W.POLYGONS).count()
-
-    def q_zonal_median():
-        return zonal_median(geo, W.POLYGONS).count()
-
-    def q_cell_kmv():
-        return cell_distinct_kmv(geo).count()
-
-    def q_cell_pyramid():
-        return cell_pyramid(geo, W.PYRAMID_LEVELS).count()
-
-    def q_focal_stats():
-        from hilbert_curve_spark.operators.rollup import focal_stats
-
-        return focal_stats(geo, shift=6).count()
-
-    def q_zorder_range():
-        from hilbert_curve_spark.operators.zorder import zorder_range_mode
-
-        return zorder_range_mode(geo, **W.R1).count()
-
-    def q_rect_join():
-        return rect_self_join(geo, W.RECT_SAMPLE_MOD, W.RECT_MAX_EXTENT).count()
-
-    def q_nearest_poi():
-        return nearest_join(geo, W.POIS).count()
-
-    def q_rknn_counts():
-        from hilbert_curve_spark.operators.spatial_join import rknn_counts
-
-        return rknn_counts(geo, W.POIS).count()
-
-    def q_idw_surface():
-        from hilbert_curve_spark.operators.spatial_join import idw_surface
-
-        return idw_surface(geo, grid_shift=8, radius=96).count()
-
-    def q_pip_rings():
-        from hilbert_curve_spark.operators.pip import pip_rings_join
-
-        return pip_rings_join(geo, W.RING_POLYGONS).count()
-
-    def q_cell_keyword_gini():
-        from hilbert_curve_spark.operators.brq import cell_keyword_gini
-
-        return cell_keyword_gini(geo, W.TOPKW_SHIFT).count()
-
-    def q_cell_isochrone():
-        from hilbert_curve_spark.operators.rollup import cell_isochrone
-
-        return cell_isochrone(
-            geo, [(x, y) for _, x, y in W.POIS], W.ISO_MAX_HOPS, W.TOPKW_SHIFT
-        ).count()
-
-    def q_tile_topk():
-        from hilbert_curve_spark.operators.rollup import tile_feature_topk
-
-        return tile_feature_topk(geo, W.PYRAMID_LEVELS, 3).count()
-
-    def q_cell_skyline():
-        from hilbert_curve_spark.operators.brq import cell_skyline
-
-        return cell_skyline(geo, W.TOPKW_SHIFT).count()
-
-    def q_cell_cost_distance():
-        from hilbert_curve_spark.operators.rollup import cell_cost_distance
-
-        return cell_cost_distance(
-            geo, [(x, y) for _, x, y in W.POIS], W.COST_BUDGET, W.TOPKW_SHIFT
-        ).count()
-
-    def q_core_area():
-        from hilbert_curve_spark.operators.rollup import core_area
-
-        return core_area(geo, 90, W.TOPKW_SHIFT).count()
-
-    def q_grq_batch():
-        from hilbert_curve_spark.operators.range_query import grq_batch
-
-        return grq_batch(geo, W.batch_boxes()).count()
-
-    def q_corridor_search():
-        return corridor_search(geo, W.ROUTE, W.CORRIDOR_R).count()
-
-    def q_dbscan():
-        # sf0.1 density-scaled parameters (VERDICT r3 item 6): at 640k docs
-        # the sf0.01 fixture's eps=12/min_pts=4 percolates the gaussian core
-        # into one giant component; eps=3/min_pts=8 keeps the corpus
-        # non-percolated (measured: ~11.6k clusters, 260k member points, no
-        # runaway CC rounds) while still clustering 40% of the corpus.
-        from hilbert_curve_spark.operators.graph import dbscan
-
-        return dbscan(geo, eps=3, min_pts=8).count()
-
-    def q_poi_nearest_join():
-        from hilbert_curve_spark.operators.spatial_join import nearest_join_bucketed
-
-        return nearest_join_bucketed(geo, W.poi_grid(16), W.poi_cover_radius(16)).count()
-
-    def q_construction2():
-        from hilbert_curve_spark.operators.construction import construction2_grq
-
-        return construction2_grq(geo, **W.R2).count()
-
-    def q_keyword_updates():
-        from hilbert_curve_spark.operators.updates import (
-            build_keyword_update_stream,
-            srdsse_search,
-        )
-
-        return srdsse_search(build_keyword_update_stream(geo, W.KW_ANY), W.KW_ANY).count()
-
-    def q_ranked_search():
-        from hilbert_curve_spark.operators.brq import keyword_index, ranked_search
-
-        return ranked_search(
-            geo,
-            keyword_index(geo, keywords=W.RANKED_KWS),
-            **W.R2,
-            keywords=W.RANKED_KWS,
-            k=W.RANKED_K,
-            scale=W.RANKED_SCALE,
-        ).count()
-
-    return {
-        "ranked_search": q_ranked_search,
-        "corridor_search": q_corridor_search,
-        "dbscan_clusters": q_dbscan,
-        "poi_nearest_join": q_poi_nearest_join,
-        "construction2_grq": q_construction2,
-        "keyword_updates": q_keyword_updates,
-        "knn_join": q_knn_join,
-        "distance_pairs": q_distance_pairs,
-        "rect_join": q_rect_join,
-        "nearest_poi": q_nearest_poi,
-        "rknn_counts": q_rknn_counts,
-        "idw_surface": q_idw_surface,
-        "pip_rings": q_pip_rings,
-        "cell_keyword_gini": q_cell_keyword_gini,
-        "cell_isochrone": q_cell_isochrone,
-        "tile_topk": q_tile_topk,
-        "cell_skyline": q_cell_skyline,
-        "cell_cost_distance": q_cell_cost_distance,
-        "core_area": q_core_area,
-        "grq_batch": q_grq_batch,
-        "poi_distance_join": q_poi_distance_join,
-        "radius_brq": q_radius_brq,
-        "zonal_stats": q_zonal_stats,
-        "zonal_median": q_zonal_median,
-        "cell_kmv": q_cell_kmv,
-        "cell_pyramid": q_cell_pyramid,
-        "focal_stats": q_focal_stats,
-        "zorder_range": q_zorder_range,
+def time_specs(ctx, specs, draws: int = DRAWS) -> dict[str, list[float]]:
+    """Warm-up pass over every spec, then ``draws`` timed draws each; a draw
+    builds the plan with the row's overrides and runs it into the noop sink."""
+    overrides = {
+        s.name: {k: v(ctx) if callable(v) else v for k, v in s.bench.items()} for s in specs
     }
 
-
-def _storage_queries(spark, geo):
-    """Round-4 storage/trajectory wave: geohash prefix search, manifest-
-    pruned GRQ, snap-to-road (literal + cell-bucketed), snapshot-as-of GRQ,
-    per-cell change detection, stratified spatial sampling, and the
-    Hausdorff trajectory-similarity join.  Stored layouts (manifest) are
-    written once during the warm-up pass and only read in the timed pass —
-    the deployment shape (a real table is written once, queried forever)."""
-    from pyspark.sql import functions as F  # noqa: F401 (parity with family style)
-
-    from hilbert_curve_spark import workload as W
-    from hilbert_curve_spark.config import DEFAULT
-    from hilbert_curve_spark.operators import range_query as rq
-    from hilbert_curve_spark.operators import updates as upd_ops
-
-    store: dict = {}
-
-    def _update_log():
-        log = store.get("log")
-        if log is None:
-            log = upd_ops.build_update_stream(spark, SF_DIR, amp=AMP)
-            store["log"] = log
-        return log
-
-    def q_geohash_search():
-        from hilbert_curve_spark.operators.geohash import geohash_search
-
-        return geohash_search(geo, **W.R3, chars=4).count()
-
-    def q_str_pack():
-        from hilbert_curve_spark.operators.partitioning import str_pack
-
-        return str_pack(geo, W.STR_LEAF_CAP).count()
-
-    def q_stay_contacts():
-        from hilbert_curve_spark.operators.trajectory import stay_contacts
-
-        ev = _sf_table(spark, "events")
-        return stay_contacts(
-            ev, dist=W.CONTACT_DIST, min_overlap_s=W.CONTACT_MIN_OVERLAP_S
-        ).count()
-
-    def q_viterbi_match():
-        from hilbert_curve_spark.operators.trajectory import viterbi_match
-
-        ev = _sf_table(spark, "events")
-        return viterbi_match(ev, W.ROADS, W.VITERBI_T, W.VITERBI_LAMBDA).count()
-
-    def q_flow_accumulation():
-        from hilbert_curve_spark.operators.rollup import flow_accumulation
-
-        return flow_accumulation(geo, shift=W.TOPKW_SHIFT).count()
-
-    def q_visibility_pairs():
-        from hilbert_curve_spark.operators.rollup import visibility_pairs
-
-        return visibility_pairs(
-            geo, W.VIS_MIN_PEAK, W.VIS_BLOCK_MIN, W.TOPKW_SHIFT
-        ).count()
-
-    def q_convex_layers():
-        from hilbert_curve_spark.operators.spatial_join import convex_layers
-
-        return convex_layers(geo, W.LAYERS_N, W.LAYERS_SAMPLE_MOD, W.HULL_SHIFT).count()
-
-    def q_voronoi_zones():
-        from hilbert_curve_spark.operators.rollup import voronoi_zones
-
-        return voronoi_zones(geo, W.VIS_MIN_PEAK, W.TOPKW_SHIFT).count()
-
-    def q_density_decay_fit():
-        from hilbert_curve_spark.operators.rollup import density_decay_fit
-
-        return density_decay_fit(
-            geo, W.DECAY_BUCKET_SHIFT, W.DECAY_N_BUCKETS, W.DECAY_SCALE
-        ).count()
-
-    def q_keyword_bitmap():
-        from hilbert_curve_spark.operators.brq import keyword_bitmap_query
-
-        return keyword_bitmap_query(geo, W.KW_ALL).count()
-
-    def q_compact_cells():
-        from hilbert_curve_spark.operators.tiles import compact_cells
-
-        return compact_cells(geo, 1, W.TOPKW_SHIFT).count()
-
-    def q_lbp_census():
-        from hilbert_curve_spark.operators.rollup import lbp_census
-
-        return lbp_census(geo, 1, W.TOPKW_SHIFT).count()
-
-    def q_curve_locality():
-        from hilbert_curve_spark.operators.zorder import curve_locality_report
-
-        boxes = [
-            dict(box_id="r1", **W.R1),
-            dict(box_id="r2", **W.R2),
-            dict(box_id="r3", **W.R3),
-        ]
-        return curve_locality_report(spark, boxes).count()
-
-    def q_raster_ivm():
-        from hilbert_curve_spark.operators.updates import raster_ivm
-
-        return raster_ivm(spark, SF_DIR, amp=AMP).count()
-
-    def q_peak_paths():
-        from hilbert_curve_spark.operators.rollup import peak_paths
-
-        return peak_paths(
-            geo, W.VIS_MIN_PEAK, W.PEAK_PATH_BUDGET, W.TOPKW_SHIFT
-        ).count()
-
-    def q_doc_event_join():
-        from hilbert_curve_spark.operators.spatial_join import doc_event_join
-
-        ev = _sf_table(spark, "events")
-        return doc_event_join(geo, ev, W.DEJ_RADIUS, W.DEJ_MOD).count()
-
-    def q_bloom_fetch():
-        from hilbert_curve_spark.operators.runtime_filter import bloom_pruned_fetch
-
-        docs = spark.read.parquet(_corpus_path())
-        return bloom_pruned_fetch(
-            docs, geo, **W.R1, m_bits=W.BLOOM_M, k_hashes=W.BLOOM_K
-        ).count()
-
-    def q_hull_points():
-        from hilbert_curve_spark.operators.spatial_join import hull_points
-
-        return hull_points(geo, W.HULL_SAMPLE_MOD, W.HULL_SHIFT).count()
-
-    def q_segment_crossings():
-        from hilbert_curve_spark.operators.trajectory import segment_crossings
-
-        ev = _sf_table(spark, "events")
-        return segment_crossings(
-            ev, W.XING_USER_MOD, W.XING_MAX_LEN, W.XING_SHIFT
-        ).count()
-
-    def q_grq_manifest():
-        from hilbert_curve_spark.sources.manifest import read_pruned, write_with_manifest
-
-        path = store.get("manifest")
-        if path is None:
-            path = f"{_corpus_path()}_manifest"
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                write_with_manifest(geo, path)
-            store["manifest"] = path
-        cover = rq.compile_box(**W.R2, config=DEFAULT)
-        return rq.grq_range_mode(read_pruned(spark, path, cover.ranges), **W.R2).count()
-
-    def q_snap_to_road():
-        from hilbert_curve_spark.operators.spatial_join import snap_to_road
-
-        return snap_to_road(geo, W.ROADS).count()
-
-    def q_road_snap_join():
-        from hilbert_curve_spark.operators.spatial_join import snap_to_road_bucketed
-
-        return snap_to_road_bucketed(
-            geo, W.road_grid(16), W.road_cover_radius(16), DEFAULT
-        ).count()
-
-    def q_grq_asof():
-        live = upd_ops.merge_as_of(_update_log(), 2)
-        dg = geo.join(live.select("doc_id"), "doc_id", "semi")
-        return rq.grq_range_mode(dg, **W.R1).count()
-
-    def q_cell_change():
-        from hilbert_curve_spark.operators.rollup import cell_change
-
-        return cell_change(geo, _update_log(), v_before=2, v_after=3, shift=6).count()
-
-    def q_cell_sample():
-        from hilbert_curve_spark.operators.rollup import cell_sample
-
-        return cell_sample(geo, 5, shift=6).count()
-
-    def q_traj_hausdorff():
-        from hilbert_curve_spark.operators.trajectory import hausdorff_pairs
-
-        events = _sf_table(spark, "events")
-        return hausdorff_pairs(events, max_h=512).count()
-
-    def q_adaptive_cells():
-        from hilbert_curve_spark.operators.adaptive import adaptive_cells
-
-        return adaptive_cells(
-            geo, W.ADAPT_CAP, W.ADAPT_SHIFT, W.ADAPT_LEVELS
-        ).count()
-
-    def q_adaptive_assign():
-        from hilbert_curve_spark.operators.adaptive import adaptive_assign
-
-        return adaptive_assign(
-            geo, W.ADAPT_CAP, W.ADAPT_SHIFT, W.ADAPT_LEVELS
-        ).count()
-
-    def q_local_moran():
-        from hilbert_curve_spark.operators.rollup import local_moran
-
-        return local_moran(geo, W.MORAN_SHIFT).count()
-
-    def q_partition_bounds():
-        from hilbert_curve_spark.operators.partitioning import partition_bounds
-
-        return partition_bounds(geo, W.PBOUNDS_BUCKETS).count()
-
-    def q_knn_graph():
-        from hilbert_curve_spark.operators.spatial_join import knn_graph
-
-        return knn_graph(geo, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS).count()
-
-    def q_zonal_overlay():
-        from hilbert_curve_spark.operators.spatial_join import zonal_overlay
-
-        return zonal_overlay(
-            geo, W.ZONES, W.OVERLAY_SAMPLE_MOD, W.OVERLAY_MAX_EXTENT
-        ).count()
-
-    def q_caption_pairs():
-        from hilbert_curve_spark.operators.spans import caption_pairs
-
-        corpus = spark.read.parquet(_corpus_path())
-        return caption_pairs(corpus).count()
-
-    def q_keyword_extents():
-        from hilbert_curve_spark.operators.brq import keyword_extents
-
-        return keyword_extents(geo, W.KW_EXTENT_SHIFT).count()
-
-    def q_road_coverage_gaps():
-        from hilbert_curve_spark.operators.spatial_join import road_coverage_gaps
-
-        return road_coverage_gaps(geo, W.ROADS, W.GAP_RADIUS).count()
-
-    def q_cell_density():
-        from hilbert_curve_spark.operators.rollup import box_density
-
-        return box_density(geo, W.DENSITY_R, W.MORAN_SHIFT).count()
-
-    # density-scaled threshold (2x the mean cell occupancy), like dbscan's
-    # eps/min_pts: the fixture threshold W.HOTSPOT_MIN is calibrated for the
-    # 8k-doc sf0.01 corpus and would mark EVERY occupied cell dense here
-    m_cells = (DEFAULT.edge >> W.MORAN_SHIFT) ** 2
-    hotspot_thr = max(W.HOTSPOT_MIN, 2 * geo.count() // m_cells)
-
-    def q_hotspot_regions():
-        from hilbert_curve_spark.operators.rollup import hotspot_regions
-
-        return hotspot_regions(geo, hotspot_thr, W.MORAN_SHIFT).count()
-
-    def q_span_chunks():
-        from hilbert_curve_spark.operators.spans import span_chunks
-
-        corpus = spark.read.parquet(_corpus_path())
-        return span_chunks(corpus, W.CHUNK_BUDGET, W.MEDIA_TOKEN_COST).count()
-
-    def q_media_dedup():
-        from hilbert_curve_spark.operators.media import media_dedup
-
-        corpus = spark.read.parquet(_corpus_path())
-        return media_dedup(corpus).count()
-
-    def q_skew_report():
-        from hilbert_curve_spark.operators.partitioning import skew_report
-
-        return skew_report(geo, W.SKEW_TOPK).count()
-
-    def q_span_chunks_inline():
-        from hilbert_curve_spark.operators.spans import span_chunks_inline
-
-        corpus = spark.read.parquet(_corpus_path())
-        return span_chunks_inline(corpus, W.CHUNK_BUDGET, W.MEDIA_TOKEN_COST).count()
-
-    def q_keyword_cooccurrence():
-        from hilbert_curve_spark.operators.brq import keyword_cooccurrence
-
-        return keyword_cooccurrence(geo, W.COOC_TOPK).count()
-
-    def q_cell_top_keyword():
-        from hilbert_curve_spark.operators.brq import cell_top_keyword
-
-        return cell_top_keyword(geo, W.TOPKW_SHIFT).count()
-
-    def q_cell_embedding_profile():
-        from hilbert_curve_spark.operators.similarity import cell_embedding_profile
-
-        emb = _sf_table(spark, "embeddings")
-        return cell_embedding_profile(geo, emb, W.EMB_SHIFT, W.EMB_SCALE).count()
-
-    def q_global_moran():
-        from hilbert_curve_spark.operators.rollup import global_moran
-
-        return global_moran(geo, W.GMORAN_SHIFT, W.GMORAN_Q).count()
-
-    def q_pair_histogram():
-        from hilbert_curve_spark.operators.spatial_join import (
-            pair_distance_histogram,
-        )
-
-        return pair_distance_histogram(geo, W.RIPLEY_RADII).count()
-
-    def q_brq_manifest():
-        from hilbert_curve_spark.operators.brq import brq
-        from hilbert_curve_spark.sources.manifest import (
-            read_keyword_pruned,
-            write_with_keyword_manifest,
-        )
-
-        path = store.get("kwmanifest")
-        if path is None:
-            path = f"{_corpus_path()}_kwmanifest"
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                write_with_keyword_manifest(geo, path)
-            store["kwmanifest"] = path
-        cover = rq.compile_box(**W.R2, config=DEFAULT)
-        pruned = read_keyword_pruned(spark, path, W.KW_RARE, cover.ranges)
-        return brq(pruned, **W.R2, keywords=W.KW_RARE, mode="any").count()
-
-    def q_cell_morphology():
-        from hilbert_curve_spark.operators.rollup import cell_morphology
-
-        return cell_morphology(geo, W.MORPH_SHIFT, W.MORPH_MIN).count()
-
-    def q_user_drift():
-        from hilbert_curve_spark.operators.trajectory import user_drift
-
-        events = _sf_table(spark, "events")
-        return user_drift(events, W.DRIFT_DAYS).count()
-
-    def q_geo_topk():
-        from hilbert_curve_spark.operators.similarity import geo_cosine_topk
-
-        emb = _sf_table(spark, "embeddings")
-        return geo_cosine_topk(emb, W.ANN_QUERY, **W.GEO_ANN_BOX, k=W.ANN_K).count()
-
-    def q_geofence_dwell():
-        from hilbert_curve_spark.operators.events import geofence_dwell
-
-        events = _sf_table(spark, "events")
-        return geofence_dwell(events, W.POLYGONS, W.DWELL_GAP_MIN).count()
-
-    def q_user_retention():
-        from hilbert_curve_spark.operators.events import user_retention
-
-        events = _sf_table(spark, "events")
-        return user_retention(events, W.RETENTION_DAYS).count()
-
-    def q_snapshot_diff():
-        from hilbert_curve_spark.operators.updates import snapshot_diff
-
-        return snapshot_diff(_update_log(), W.DIFF_FROM, W.DIFF_TO).count()
-
-    def q_span_transitions():
-        from hilbert_curve_spark.operators.spans import span_kind_transitions
-        from hilbert_curve_spark.sources.interleave import build_documents
-
-        docs = build_documents(spark, SF_DIR, amp=AMP)
-        return span_kind_transitions(docs).count()
-
-    def q_od_asymmetry():
-        from hilbert_curve_spark.operators.trajectory import od_asymmetry
-
-        events = _sf_table(spark, "events")
-        return od_asymmetry(events, 60, 8).count()
-
-    def q_cell_bands():
-        from hilbert_curve_spark.operators.rollup import cell_percentile_bands
-
-        return cell_percentile_bands(geo, W.BANDS, W.TOPKW_SHIFT).count()
-
-    def q_user_entropy():
-        from hilbert_curve_spark.operators.trajectory import user_entropy
-
-        events = _sf_table(spark, "events")
-        return user_entropy(events, 8).count()
-
-    def q_diff_keywords():
-        from hilbert_curve_spark.operators.updates import (
-            changelog_keywords,
-            snapshot_diff,
-        )
-
-        diff = snapshot_diff(_update_log(), W.DIFF_FROM, W.DIFF_TO)
-        return changelog_keywords(diff, geo).count()
-
-    def q_grid_kmeans():
-        from hilbert_curve_spark.operators.graph import grid_kmeans
-
-        return grid_kmeans(geo, W.KMEANS_K, W.KMEANS_ITERS, W.TOPKW_SHIFT).count()
-
-    def q_occupancy_profile():
-        from hilbert_curve_spark.operators.rollup import occupancy_profile
-
-        return occupancy_profile(geo, W.PYRAMID_LEVELS).count()
-
-    def q_kmv_merge():
-        from hilbert_curve_spark.operators.rollup import kmv_merge
-
-        return kmv_merge(geo, 8, 16).count()
-
-    def q_hotspot_persistence():
-        from hilbert_curve_spark.operators.trajectory import hotspot_persistence
-
-        events = _sf_table(spark, "events")
-        return hotspot_persistence(events, 8).count()
-
-    # the kNN edge table is built ONCE and persisted — pagerank and
-    # triangles consume the same maintained graph (the deployment shape:
-    # a build job materializes it, analytics read it), so their draws show
-    # marginal query cost, not a rebuild of the 8-9 s edge derivation
-    # (VERDICT r4 item 3).  The build cost itself stays measured: the
-    # persist materializes during the warm-up pass, and q_knn_graph times
-    # the unpersisted derivation.
-    _knn_edge_cache: list = []
-
-    def _knn_edges():
-        from pyspark.sql import functions as F
-
-        from hilbert_curve_spark.operators.spatial_join import knn_graph
-
-        if not _knn_edge_cache:
-            _knn_edge_cache.append(
-                knn_graph(geo, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS)
-                .select(
-                    F.col("doc_id").alias("src"), F.col("nbr_id").alias("dst")
-                )
-                .persist()
-            )
-        return _knn_edge_cache[0]
-
-    def q_knn_pagerank():
-        from hilbert_curve_spark.operators.graph import pagerank
-
-        return pagerank(_knn_edges()).count()
-
-    def q_knn_triangles():
-        from hilbert_curve_spark.operators.graph import triangle_counts
-
-        return triangle_counts(_knn_edges()).count()
-
-    def q_cell_mad_anomaly():
-        from hilbert_curve_spark.operators.trajectory import cell_mad_anomaly
-
-        events = _sf_table(spark, "events")
-        return cell_mad_anomaly(events, 8).count()
-
-    def q_typo_pairs():
-        from hilbert_curve_spark.operators.dedup import typo_pairs
-
-        return typo_pairs(geo).count()
-
-    def q_keyword_lift():
-        from hilbert_curve_spark.operators.brq import keyword_lift
-
-        return keyword_lift(geo, 6, 5).count()
-
-    def q_gravity_residuals():
-        from hilbert_curve_spark.operators.trajectory import gravity_residuals
-
-        events = _sf_table(spark, "events")
-        return gravity_residuals(events, 60, 8, 3).count()
-
-    def q_cell_gradient():
-        from hilbert_curve_spark.operators.rollup import cell_gradient
-
-        return cell_gradient(geo, 6).count()
-
-    def q_fence_peak_occupancy():
-        from hilbert_curve_spark.operators.events import fence_peak_occupancy
-
-        events = _sf_table(spark, "events")
-        return fence_peak_occupancy(events, W.POLYGONS, W.DWELL_GAP_MIN).count()
-
-    def q_containment_pairs():
-        from hilbert_curve_spark.operators.dedup import containment_pairs
-
-        docs = _sf_table(spark, "documents")
-        return containment_pairs(docs, 80, 3, 64).count()
-
-    def q_pq_topk():
-        from hilbert_curve_spark.operators.similarity import pq_topk
-
-        emb = _sf_table(spark, "embeddings")
-        return pq_topk(emb, W.ANN_QUERY, W.ANN_K, 4, 4, 2).count()
-
-    def q_commute_matrix():
-        from hilbert_curve_spark.operators.trajectory import commute_matrix
-
-        events = _sf_table(spark, "events")
-        return commute_matrix(events, 8).count()
-
-    def q_activity_cube():
-        from hilbert_curve_spark.operators.trajectory import activity_cube
-
-        events = _sf_table(spark, "events")
-        return activity_cube(events, 8).count()
-
-    def q_label_knn_accuracy():
-        from hilbert_curve_spark.operators.similarity import label_knn_accuracy
-
-        emb = _sf_table(spark, "embeddings")
-        # IVF-blocked candidate generation (same dial as the driver query):
-        # cid equi-join candidates, no all-pairs CartesianProduct
-        return label_knn_accuracy(emb, 5, n_centroids=12, nprobe=2).count()
-
-    def q_embed_cluster_purity():
-        from hilbert_curve_spark.operators.similarity import (
-            embed_cluster_purity,
-        )
-
-        emb = _sf_table(spark, "embeddings")
-        return embed_cluster_purity(emb, 3, 150_000).count()
-
-    def q_traj_resample():
-        from hilbert_curve_spark.operators.trajectory import traj_resample
-
-        events = _sf_table(spark, "events")
-        return traj_resample(events, 21600).count()
-
-    def q_markov_accuracy():
-        from hilbert_curve_spark.operators.trajectory import markov_accuracy
-
-        events = _sf_table(spark, "events")
-        return markov_accuracy(events, 8, W.MARKOV_SPLIT_S).count()
-
-    def q_cell_autocorr():
-        from hilbert_curve_spark.operators.trajectory import cell_autocorr
-
-        events = _sf_table(spark, "events")
-        return cell_autocorr(events, 8).count()
-
-    def q_anon_cells():
-        from hilbert_curve_spark.operators.rollup import anon_cells
-
-        return anon_cells(geo, W.K_ANON, W.PYRAMID_LEVELS).count()
-
-    def q_contamination_scan():
-        from hilbert_curve_spark.operators.textops import contamination_scan
-
-        docs = _sf_table(spark, "documents")
-        return contamination_scan(docs, W.EVAL_PROBES).count()
-
-    def q_contamination_scan_ac():
-        from hilbert_curve_spark.operators.textops import contamination_scan_ac
-
-        docs = _sf_table(spark, "documents")
-        return contamination_scan_ac(docs, W.EVAL_PROBES).count()
-
-    def q_pack_sequences():
-        from hilbert_curve_spark.operators.textops import pack_sequences
-
-        docs = _sf_table(spark, "documents")
-        return pack_sequences(docs, 512, 8).count()
-
-    def q_weighted_sample():
-        from hilbert_curve_spark.operators.textops import weighted_sample
-
-        docs = _sf_table(spark, "documents")
-        return weighted_sample(docs, 25).count()
-
-    def q_pack_mm():
-        from hilbert_curve_spark.operators.spans import pack_mm
-
-        corpus = spark.read.parquet(_corpus_path())
-        return pack_mm(
-            corpus, W.PACK_MM_BUDGET, W.MEDIA_TOKEN_COST, W.PACK_MM_SHARDS
-        ).count()
-
-    def q_mixture_plan():
-        from hilbert_curve_spark.operators.textops import mixture_plan
-
-        docs = _sf_table(spark, "documents")
-        return mixture_plan(docs, W.MIX_BUDGET, W.MIX_BAND).count()
-
-    def q_boilerplate_spans():
-        from hilbert_curve_spark.operators.spans import boilerplate_spans
-
-        corpus = spark.read.parquet(_corpus_path())
-        return boilerplate_spans(
-            corpus, W.BOILER_MIN_DOCS, W.BOILER_TOPK
-        ).count()
-
-    def q_spatial_split():
-        from hilbert_curve_spark.operators.partitioning import spatial_split
-
-        return spatial_split(geo, W.SPLIT_SHIFT, W.SPLIT_TEST_MOD).count()
-
-    def q_source_overlap():
-        from hilbert_curve_spark.operators.dedup import source_overlap
-
-        docs = _sf_table(spark, "documents")
-        return source_overlap(docs).count()
-
-    def q_source_profile():
-        from hilbert_curve_spark.operators.textops import source_profile
-
-        docs = _sf_table(spark, "documents")
-        return source_profile(docs).count()
-
-    def q_length_deciles():
-        from hilbert_curve_spark.operators.textops import length_deciles
-
-        docs = _sf_table(spark, "documents")
-        return length_deciles(docs).count()
-
-    def q_vocab_growth():
-        from hilbert_curve_spark.operators.spans import vocab_growth
-
-        corpus = spark.read.parquet(_corpus_path())
-        return vocab_growth(corpus, W.VOCAB_BUCKET_DOCS).count()
-
-    def q_percolation_curve():
-        from hilbert_curve_spark.operators.rollup import percolation_curve
-
-        return percolation_curve(geo, W.PERC_THRESHOLDS, shift=W.TOPKW_SHIFT).count()
-
-    def q_watershed_basins():
-        from hilbert_curve_spark.operators.rollup import watershed_basins
-
-        return watershed_basins(geo, shift=W.TOPKW_SHIFT).count()
-
-    def q_traj_simplify():
-        from hilbert_curve_spark.operators.trajectory import traj_simplify
-
-        ev = _sf_table(spark, "events")
-        return traj_simplify(ev, W.TRAJ_SIMP_EPS, W.TRAJ_SIMP_DEPTH).count()
-
-    def q_doc_repetition():
-        from hilbert_curve_spark.operators.spans import doc_repetition
-
-        corpus = spark.read.parquet(_corpus_path())
-        return doc_repetition(corpus).count()
-
-    def q_source_caps():
-        from hilbert_curve_spark.operators.textops import source_caps
-
-        docs = _sf_table(spark, "documents")
-        return source_caps(docs, W.SOURCE_CAP).count()
-
-    return {
-        "bloom_fetch": q_bloom_fetch,
-        "doc_event_join": q_doc_event_join,
-        "peak_paths": q_peak_paths,
-        "curve_locality": q_curve_locality,
-        "raster_ivm": q_raster_ivm,
-        "keyword_bitmap": q_keyword_bitmap,
-        "compact_cells": q_compact_cells,
-        "lbp_census": q_lbp_census,
-        "convex_layers": q_convex_layers,
-        "voronoi_zones": q_voronoi_zones,
-        "density_decay_fit": q_density_decay_fit,
-        "flow_accumulation": q_flow_accumulation,
-        "visibility_pairs": q_visibility_pairs,
-        "str_pack": q_str_pack,
-        "stay_contacts": q_stay_contacts,
-        "viterbi_match": q_viterbi_match,
-        "hull_points": q_hull_points,
-        "segment_crossings": q_segment_crossings,
-        "geohash_search": q_geohash_search,
-        "grq_manifest": q_grq_manifest,
-        "snap_to_road": q_snap_to_road,
-        "road_snap_join": q_road_snap_join,
-        "grq_asof": q_grq_asof,
-        "cell_change": q_cell_change,
-        "cell_sample": q_cell_sample,
-        "traj_hausdorff": q_traj_hausdorff,
-        "adaptive_cells": q_adaptive_cells,
-        "adaptive_assign": q_adaptive_assign,
-        "local_moran": q_local_moran,
-        "partition_bounds": q_partition_bounds,
-        "knn_graph": q_knn_graph,
-        "zonal_overlay": q_zonal_overlay,
-        "caption_pairs": q_caption_pairs,
-        "keyword_extents": q_keyword_extents,
-        "road_coverage_gaps": q_road_coverage_gaps,
-        "cell_density": q_cell_density,
-        "hotspot_regions": q_hotspot_regions,
-        "span_chunks": q_span_chunks,
-        "media_dedup": q_media_dedup,
-        "skew_report": q_skew_report,
-        "span_chunks_inline": q_span_chunks_inline,
-        "keyword_cooccurrence": q_keyword_cooccurrence,
-        "cell_top_keyword": q_cell_top_keyword,
-        "cell_embedding_profile": q_cell_embedding_profile,
-        "global_moran": q_global_moran,
-        "pair_histogram": q_pair_histogram,
-        "brq_manifest": q_brq_manifest,
-        "cell_morphology": q_cell_morphology,
-        "user_drift": q_user_drift,
-        "geo_topk": q_geo_topk,
-        "geofence_dwell": q_geofence_dwell,
-        "user_retention": q_user_retention,
-        "snapshot_diff": q_snapshot_diff,
-        "span_transitions": q_span_transitions,
-        "od_asymmetry": q_od_asymmetry,
-        "cell_bands": q_cell_bands,
-        "user_entropy": q_user_entropy,
-        "diff_keywords": q_diff_keywords,
-        "grid_kmeans": q_grid_kmeans,
-        "occupancy_profile": q_occupancy_profile,
-        "kmv_merge": q_kmv_merge,
-        "hotspot_persistence": q_hotspot_persistence,
-        "knn_pagerank": q_knn_pagerank,
-        "knn_triangles": q_knn_triangles,
-        "cell_mad_anomaly": q_cell_mad_anomaly,
-        "typo_pairs": q_typo_pairs,
-        "keyword_lift": q_keyword_lift,
-        "gravity_residuals": q_gravity_residuals,
-        "cell_gradient": q_cell_gradient,
-        "fence_peak_occupancy": q_fence_peak_occupancy,
-        "containment_pairs": q_containment_pairs,
-        "pq_topk": q_pq_topk,
-        "commute_matrix": q_commute_matrix,
-        "activity_cube": q_activity_cube,
-        "label_knn_accuracy": q_label_knn_accuracy,
-        "embed_cluster_purity": q_embed_cluster_purity,
-        "traj_resample": q_traj_resample,
-        "markov_accuracy": q_markov_accuracy,
-        "cell_autocorr": q_cell_autocorr,
-        "anon_cells": q_anon_cells,
-        "contamination_scan": q_contamination_scan,
-        "contamination_scan_ac": q_contamination_scan_ac,
-        "pack_sequences": q_pack_sequences,
-        "weighted_sample": q_weighted_sample,
-        "pack_mm": q_pack_mm,
-        "mixture_plan": q_mixture_plan,
-        "boilerplate_spans": q_boilerplate_spans,
-        "spatial_split": q_spatial_split,
-        "source_overlap": q_source_overlap,
-        "source_profile": q_source_profile,
-        "length_deciles": q_length_deciles,
-        "vocab_growth": q_vocab_growth,
-        "traj_simplify": q_traj_simplify,
-        "doc_repetition": q_doc_repetition,
-        "source_caps": q_source_caps,
-        "percolation_curve": q_percolation_curve,
-        "watershed_basins": q_watershed_basins,
-    }
+    def run(s):
+        s.build(ctx, **overrides[s.name]).write.format("noop").mode("overwrite").save()
+
+    for s in specs:
+        run(s)
+    out = {}
+    for s in specs:
+        out[s.name] = []
+        for _ in range(draws):
+            t0 = time.perf_counter()
+            run(s)
+            out[s.name].append(round(time.perf_counter() - t0, 3))
+    return out
 
 
 def run_suite(master: str) -> dict:
@@ -1338,54 +167,24 @@ def run_suite(master: str) -> dict:
 
     spark = get_spark("hcs-bench", master=master)
     try:
-        t_build0 = time.time()
-        geo, pidx, n_docs = _build(spark)
-        build_sec = time.time() - t_build0
-        qs = _queries(geo, pidx)
-        pipeline = _pipeline_queries(spark)
-        sjoins = _spatial_join_queries(geo)
-        storage = _storage_queries(spark, geo)
-        all_qs = {**qs, **pipeline, **sjoins, **storage}
-        for f in all_qs.values():  # warm-up (JIT/codegen/cache), reference protocol
-            f()
-        # the two draw-noise-prone queries (r3->r4 "regressions" that the r4
-        # draw files showed were single hot draws) report median-of-3 so one
-        # hypervisor-steal burst can't pollute the round-over-round table
-        # (VERDICT r4 item 6); everything else stays min-of-2, the protocol
-        # BENCH_r01..r04 used
-        median_of_3 = {"grq_prefix", "events_geofence"}
-        times = {}
-        for name, f in all_qs.items():
-            n_draws = 3 if name in median_of_3 else 2
-            draws = []
-            for _ in range(n_draws):  # the VM has bursty CPU steal
-                t0 = time.time()
-                f()
-                draws.append(time.time() - t0)
-            val = sorted(draws)[1] if name in median_of_3 else min(draws)
-            times[name] = round(val, 3)
-        # headline total stays the 8-query spatial suite (comparable with
-        # BENCH_r01/r02 and BENCH/BASELINE.md); the pipeline family is
-        # reported alongside as its own subtotal
-        spatial_sec = round(sum(times[k] for k in qs), 3)
-        pipeline_sec = round(sum(times[k] for k in pipeline), 3)
-        spatial_join_sec = round(sum(times[k] for k in sjoins), 3)
-        storage_sec = round(sum(times[k] for k in storage), 3)
+        t0 = time.perf_counter()
+        ctx, n_docs = bench_ctx(spark, AMP)
+        build_sec = time.perf_counter() - t0
+        draws = time_specs(ctx, bench_specs())
+        medians = {k: round(statistics.median(v), 3) for k, v in draws.items()}
+        headline = round(sum(medians[k] for k in HEADLINE), 3)
         return {
+            "metric": "spatial-join + tiling suite wall time (amplified corpus)",
+            "value": headline,
+            "unit": "sec",
+            "queries": medians,
+            "draws": draws,
+            "sf": SF_DIR,
             "master": master,
-            "build_sec": round(build_sec, 3),
-            "queries": times,
-            "total_sec": spatial_sec,
-            "pipeline_sec": pipeline_sec,
-            "spatial_join_sec": spatial_join_sec,
-            "storage_sec": storage_sec,
-            # the honest round-over-round number: the whole timed suite, so
-            # newly added queries cannot hide outside the headline (VERDICT
-            # r3 item 8) — the headline `value` stays the 8-query spatial
-            # suite comparable with BENCH_r01/r02
-            "full_suite_sec": round(sum(times.values()), 3),
             "docs": n_docs,
-            "docs_per_sec": round(n_docs * len(qs) / spatial_sec, 1),
+            "docs_per_sec": round(n_docs * len(HEADLINE) / headline, 1),
+            "build_sec": round(build_sec, 3),
+            "full_suite_sec": round(sum(medians.values()), 3),
         }
     finally:
         spark.stop()
@@ -1395,38 +194,31 @@ def run_heavy(master: str, amp: int) -> dict:
     """Compute-bound pipeline for the scaling criterion: encode + prefix
     index build + keyword index build + MinHash signatures over an
     amp-scaled corpus.  Sub-second stages are deliberately excluded: they
-    are scheduler-latency-bound and say nothing about core scaling, and on
-    this VM a hypervisor-steal burst inside a short stage swings a draw by
-    3x.  Every timed stage here is multi-second at local[2] so bursts
-    amortize; this is also the work that dominates a real deployment's
-    cost."""
-    from pyspark.sql import functions as F  # noqa: F401 — used by force()
+    are scheduler-latency-bound and say nothing about core scaling.  Every
+    timed stage is multi-second at local[2] so noise amortizes; this is also
+    the work that dominates a real deployment's cost."""
+    from pyspark.sql import functions as F
 
     from hilbert_curve_spark.operators import dedup as dedup_ops
+    from hilbert_curve_spark.operators.brq import keyword_index
     from hilbert_curve_spark.operators.encode import encode_documents_native
     from hilbert_curve_spark.operators.range_query import prefix_index
     from hilbert_curve_spark.session import get_spark
     from hilbert_curve_spark.sources.interleave import build_documents
     from hilbert_curve_spark.sources.layout import write_sorted
 
-    global AMP
-    amp_save, AMP = AMP, amp
     spark = get_spark("hcs-scaling", master=master)
     try:
-        # ---- untimed setup: identical on-disk input for both masters.
-        # This sandbox VM throttles buffered writes to ~13 MB/s (direct IO
-        # measures 588 MB/s), so parquet WRITES are environment-bound noise;
-        # the timed stages below are pure compute + read (aggregates that
-        # force full evaluation), which is what actually scales with cores.
-        corpus_path = _materialize_corpus(spark, partitions=64)
-        geo_path = f"{WORK}/scaling_geo_amp{amp}"
+        # untimed setup: identical on-disk input for both masters; the timed
+        # stages are pure compute + read (aggregates forcing full evaluation)
+        corpus_path = _materialize_corpus(spark, amp, partitions=64)
+        geo_path = f"{corpus_path}_scaling_geo"
         if not os.path.exists(os.path.join(geo_path, "_SUCCESS")):
-            raw = f"{WORK}/scaling_raw_amp{amp}"
+            raw = f"{corpus_path}_scaling_raw"
             encode_documents_native(spark.read.parquet(corpus_path)).write.mode(
                 "overwrite"
             ).parquet(raw)
             write_sorted(spark.read.parquet(raw), geo_path, partitions=64)
-        AMP = amp_save
         flat = _sf_table(spark, "documents").repartition(64)
         # warm-up: force JVM/codegen/Arrow init before timing
         encode_documents_native(build_documents(spark, SF_DIR, amp=2)).count()
@@ -1445,20 +237,15 @@ def run_heavy(master: str, amp: int) -> dict:
                     exprs.append(F.sum(F.length(c.cast("string"))))
             return df.agg(*exprs).collect()
 
-        n = geo.count()
-
-        def timed(fn, reps=3):
-            # this VM suffers bursty hypervisor CPU-steal; min-of-N is the
-            # standard noise-robust throughput estimator
+        def timed(fn, reps=3):  # min-of-N: noise only ever adds time
             best = float("inf")
             for _ in range(reps):
-                t = time.time()
+                t = time.perf_counter()
                 fn()
-                best = min(best, time.time() - t)
+                best = min(best, time.perf_counter() - t)
             return round(best, 3)
 
-        from hilbert_curve_spark.operators.brq import keyword_index
-
+        n = geo.count()
         pidx = prefix_index(geo)
         n_post = pidx.count()
         stages = {
@@ -1480,90 +267,59 @@ def run_heavy(master: str, amp: int) -> dict:
         spark.stop()
 
 
+def run_scaling() -> dict:
+    # AMP=1024 (5.12M docs) makes every timed stage 20-75 s at local[1], long
+    # enough that fixed per-job scheduling amortizes
+    amp = int(os.environ.get("SPARK_GRAFT_SCALING_AMP", "1024"))
+    n_small = int(os.environ.get("SPARK_GRAFT_SCALING_N", "1"))
+    reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
+    m_small, m_big = f"local[{n_small}]", f"local[{4 * n_small}]"
+    # Two estimators, every draw recorded so the spread is visible: the
+    # median paired-draw efficiency, and the capability efficiency
+    # (min_small / min_big) / 4 — valid because CPU contention only ever
+    # ADDS time.
+    draws = []
+    for _ in range(reps):
+        r_small, r_big = run_heavy(m_small, amp), run_heavy(m_big, amp)
+        eff = (r_small["total_sec"] / r_big["total_sec"]) / 4.0
+        draws.append({"small": r_small, "big": r_big, "efficiency": round(eff, 3)})
+    med = sorted(draws, key=lambda d: d["efficiency"])[len(draws) // 2]
+    r_small, r_big = med["small"], med["big"]
+    best_small = min(d["small"]["total_sec"] for d in draws)
+    best_big = min(d["big"]["total_sec"] for d in draws)
+    out = {
+        "metric": (
+            f"compute-bound pipeline wall time, {m_small} vs {m_big} on "
+            f"identical input ({reps} paired draws)"
+        ),
+        "value": r_big["total_sec"],
+        "unit": "sec",
+        "queries": r_big["stages"],
+        "sf": SF_DIR,
+        "docs": r_big["docs"],
+        "small": r_small,
+        "big": r_big,
+        "masters": [m_small, m_big],
+        "throughput_N": r_small["docs_per_sec"],
+        "throughput_4N": r_big["docs_per_sec"],
+        "scaling_efficiency": med["efficiency"],
+        "efficiency_draws": [d["efficiency"] for d in draws],
+        "draw_totals": [
+            {"small_sec": d["small"]["total_sec"], "big_sec": d["big"]["total_sec"]}
+            for d in draws
+        ],
+        "capability_small_sec": best_small,
+        "capability_big_sec": best_big,
+        "capability_efficiency": round((best_small / best_big) / 4.0, 3),
+    }
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
+        json.dump(out, f, indent=1)
+    return out
+
+
 def main():
-    scaling = "--scaling" in sys.argv
-    if scaling:
-        # AMP=1024 (5.12M docs) makes every timed stage 20-75 s at local[1]:
-        # long enough that fixed per-job scheduling and short steal bursts
-        # amortize — the median paired-draw efficiency crossed 0.8 only at
-        # this stage length (0.86 vs 0.77 at AMP=512 on the same day)
-        amp = int(os.environ.get("SPARK_GRAFT_SCALING_AMP", "1024"))
-        # N and 4N parallelism on identical input.  N defaults to 1 (so 4N=4)
-        # because this sandbox VM enforces a hypervisor CPU quota: sustained
-        # multi-thread bursts hit unpredictable steal throttling (measured:
-        # the same stage at local[32] swings 16s -> 151s within one session;
-        # even the local[2]/local[8] pairing drew paired efficiencies from
-        # 0.13 to 0.78 across sessions, while local[1]/local[4] stays in
-        # 0.76-0.99).  Override with SPARK_GRAFT_SCALING_N on real hardware.
-        n_small = int(os.environ.get("SPARK_GRAFT_SCALING_N", "1"))
-        reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
-        m_small, m_big = f"local[{n_small}]", f"local[{4 * n_small}]"
-        # The VM's hypervisor CPU quota produces multi-minute throttling
-        # episodes that can poison either side of a paired draw (observed
-        # paired efficiencies from 0.12 to 1.14 — the >1 draws mean the
-        # SMALL side was throttled, which is physically impossible
-        # otherwise).  Two estimators are therefore reported, every draw
-        # recorded so the spread is visible:
-        #   * median of the paired-draw efficiencies (robust to a minority
-        #     of bad draws, still noisy when >half the draws are hit), and
-        #   * capability efficiency (min_small / min_big) / 4 — the
-        #     noise-robust estimator of the machine's actual ability at
-        #     each parallelism, valid because steal only ever ADDS time.
-        draws = []
-        for _ in range(reps):
-            r_small = run_heavy(m_small, amp)
-            r_big = run_heavy(m_big, amp)
-            eff = (r_small["total_sec"] / r_big["total_sec"]) / 4.0
-            draws.append({"small": r_small, "big": r_big, "efficiency": round(eff, 3)})
-        draws_sorted = sorted(draws, key=lambda d: d["efficiency"])
-        med = draws_sorted[len(draws_sorted) // 2]
-        r_small, r_big = med["small"], med["big"]
-        best_small = min(d["small"]["total_sec"] for d in draws)
-        best_big = min(d["big"]["total_sec"] for d in draws)
-        out = {
-            "metric": (
-                f"compute-bound pipeline wall time, {m_small} vs {m_big} on "
-                f"identical input ({reps} paired draws)"
-            ),
-            "value": r_big["total_sec"],
-            "unit": "sec",
-            "queries": r_big["stages"],
-            "sf": SF_DIR,
-            "docs": r_big["docs"],
-            "small": r_small,
-            "big": r_big,
-            "masters": [m_small, m_big],
-            "throughput_N": r_small["docs_per_sec"],
-            "throughput_4N": r_big["docs_per_sec"],
-            "scaling_efficiency": med["efficiency"],
-            "efficiency_draws": [d["efficiency"] for d in draws],
-            "draw_totals": [
-                {"small_sec": d["small"]["total_sec"], "big_sec": d["big"]["total_sec"]}
-                for d in draws
-            ],
-            "capability_small_sec": best_small,
-            "capability_big_sec": best_big,
-            "capability_efficiency": round((best_small / best_big) / 4.0, 3),
-        }
-        os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-        with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
-            json.dump(out, f, indent=1)
-    else:
-        r = run_suite(f"local[{CPUS}]")
-        out = {
-            "metric": "spatial-join + tiling suite wall time (amplified corpus)",
-            "value": r["total_sec"],
-            "unit": "sec",
-            "queries": r["queries"],
-            "sf": SF_DIR,
-            "docs": r["docs"],
-            "docs_per_sec": r["docs_per_sec"],
-            "build_sec": r["build_sec"],
-            "pipeline_sec": r["pipeline_sec"],
-            "spatial_join_sec": r["spatial_join_sec"],
-            "storage_sec": r["storage_sec"],
-            "full_suite_sec": r["full_suite_sec"],
-        }
+    out = run_scaling() if "--scaling" in sys.argv else run_suite(f"local[{CPUS}]")
     print(json.dumps(out))
 
 

@@ -14,9 +14,14 @@ def test_entry_smoke(spark):
     assert df.schema is not None
 
 
-@pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
+# one queries() dict for the module: its calls share one Ctx, so the corpus
+# is derived and encoded once, as in a driver run
+QUERIES = entry_mod.queries()
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_dir, name):
-    q = entry_mod.queries()[name]
+    q = QUERIES[name]
     oracles = entry_mod.oracle_sql()
     df = q(spark, sf_dir)
     if name not in oracles:

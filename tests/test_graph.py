@@ -72,3 +72,19 @@ def test_dedup_survivors_keeps_reps_and_singletons(spark):
         ("d4", "d4"),
         ("d5", "d4"),
     }
+
+
+def test_small_star_dedups_large_star_duplicates(spark):
+    # nodes 1 and 2 both neighbor 0 and 5, so large-star emits (5, 0) once
+    # from each of them; small-star must absorb the duplicate
+    from hilbert_curve_spark.operators.graph import _large_star, _small_star
+
+    edges = [(0, 1), (0, 2), (1, 5), (2, 5), (5, 7), (7, 9), (3, 4)]
+    e = spark.createDataFrame(edges, "u long, v long")
+    large = _large_star(e)
+    assert large.count() > large.distinct().count()
+    small = _small_star(large)
+    assert sorted(small.collect()) == sorted(small.distinct().collect())
+    cc = spark.createDataFrame(edges, "src long, dst long")
+    got = {(r["node"], r["rep"]) for r in connected_components(cc).collect()}
+    assert got == set(_uf_components(edges).items())

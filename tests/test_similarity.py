@@ -1,14 +1,13 @@
 """Similarity-search validation: ANN probe recall against the exact
 brute-force top-k, and embed-dup threshold semantics."""
 
+from hilbert_curve_spark import workload as W
 from hilbert_curve_spark.operators import similarity as sim
-
-import __spark_entry__ as entry_mod
 
 
 def test_ann_recall_vs_exact(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = entry_mod.ANN_QUERY
+    q = W.ANN_QUERY
     exact = [r["vec_id"] for r in sim.cosine_topk(emb, q, 10).collect()]
     # 3-bit code fits the 500-vector corpus (~60/bucket); the synthetic
     # embeddings are random gaussians (top-10 cosines only ~0.3-0.47), the
@@ -35,7 +34,7 @@ def test_ivf_probe_all_equals_exact(spark, sf_dir):
     """Probing every inverted list must reproduce exact brute-force top-k —
     the IVF structure only prunes, never re-ranks differently."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = entry_mod.ANN_QUERY
+    q = W.ANN_QUERY
     exact = [(r["vec_id"], r["cos_e6"]) for r in sim.cosine_topk(emb, q, 10).collect()]
     full = [
         (r["vec_id"], r["cos_e6"])
@@ -49,7 +48,7 @@ def test_ivf_partial_probe_recall(spark, sf_dir):
     of the probed lists, ranked by the exact cosine; recall floor 0.3
     (random inverted lists retain ~nprobe/n_centroids of any top-k)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = entry_mod.ANN_QUERY
+    q = W.ANN_QUERY
     exact = [r["vec_id"] for r in sim.cosine_topk(emb, q, 10).collect()]
     approx = [r["vec_id"] for r in sim.ivf_topk(emb, q, 10, n_centroids=8, nprobe=2).collect()]
     recall = len(set(exact) & set(approx)) / len(exact)

@@ -114,7 +114,7 @@ def test_zonal_stats_equals_pip_groupby(spark, sf_dir):
     from hilbert_curve_spark import workload as W
     from hilbert_curve_spark.operators.pip import pip_join
 
-    dg = em._doc_geo(spark, sf_dir)
+    dg = em.Ctx(spark, sf_dir).doc_geo
     got = {
         r.poly_id: (r.n_docs, r.sum_x, r.sum_y)
         for r in zonal_stats(dg, W.POLYGONS, DEFAULT).collect()
@@ -138,7 +138,7 @@ def test_focal_stats_matches_brute_force(spark, sf_dir):
 
     import __spark_entry__ as em
 
-    dg = em._doc_geo(spark, sf_dir)
+    dg = em.Ctx(spark, sf_dir).doc_geo
     shift = 6
     hist = {}
     for r in dg.select("x", "y").collect():
@@ -165,7 +165,7 @@ def test_focal_stats_plan_no_python(spark, sf_dir):
     import __spark_entry__ as em
 
     plan = (
-        focal_stats(em._doc_geo(spark, sf_dir), shift=6)
+        focal_stats(em.Ctx(spark, sf_dir).doc_geo, shift=6)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -177,7 +177,7 @@ def test_focal_stats_plan_no_python(spark, sf_dir):
 def test_cell_pyramid_invariants(spark, sf_dir):
     import __spark_entry__ as em
 
-    dg = em._doc_geo(spark, sf_dir)
+    dg = em.Ctx(spark, sf_dir).doc_geo
     n = dg.count()
     pyr = cell_pyramid(dg, levels=4, config=DEFAULT).collect()
     by_level = {}
@@ -481,7 +481,7 @@ def test_zonal_median_matches_python(spark, sf_dir):
     from hilbert_curve_spark.operators.pip import pip_join
     from hilbert_curve_spark.operators.spatial_join import zonal_median
 
-    dg = em._doc_geo(spark, sf_dir)
+    dg = em.Ctx(spark, sf_dir).doc_geo
     got = {
         r.poly_id: (r.n_docs, r.median_x, r.median_y)
         for r in zonal_median(dg, W.POLYGONS, DEFAULT).collect()
@@ -504,7 +504,7 @@ def test_cell_kmv_matches_python(spark, sf_dir):
     import __spark_entry__ as em
     from hilbert_curve_spark.operators.rollup import cell_distinct_kmv
 
-    dg = em._doc_geo(spark, sf_dir)
+    dg = em.Ctx(spark, sf_dir).doc_geo
     got = {
         r.gcell: (r.n_distinct, r.kmv_estimate)
         for r in cell_distinct_kmv(dg).collect()

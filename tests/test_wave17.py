@@ -113,7 +113,7 @@ def test_impossible_travel_stream_matches_batch(spark, sf_dir):
     }
     streamed = {
         (r.user_id, r.from_event, r.to_event, r.dt_s, r.dist2)
-        for r in entry_mod._events_stream_impossible(spark, sf_dir).collect()
+        for r in entry_mod.queries()["events_stream_impossible"](spark, sf_dir).collect()
     }
     assert streamed == batch
     assert batch

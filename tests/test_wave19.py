@@ -12,7 +12,7 @@ def test_geo_funnel_stream_matches_batch_summary(spark, sf_dir):
     batch = geo_funnel(
         events, W.POLYGONS[2], W.POLYGONS[1], within_s=86400
     ).collect()[0]
-    streamed = entry_mod._events_stream_funnel(spark, sf_dir).collect()[0]
+    streamed = entry_mod.queries()["events_stream_funnel"](spark, sf_dir).collect()[0]
     assert (
         streamed.n_users,
         streamed.n_reached_a,

@@ -10,11 +10,11 @@ def test_stream_dwell_equals_batch(spark, sf_dir):
 
     batch = {
         tuple(r)
-        for r in E._geofence_dwell(spark, sf_dir).collect()
+        for r in E.queries()["geofence_dwell"](spark, sf_dir).collect()
     }
     stream = {
         tuple(r)
-        for r in E._events_stream_dwell(spark, sf_dir).collect()
+        for r in E.queries()["events_stream_dwell"](spark, sf_dir).collect()
     }
     assert stream == batch
     assert batch  # non-trivial: the fixture produces dwell episodes

@@ -9,7 +9,7 @@ def _knn_edges(spark, sf_dir):
     from hilbert_curve_spark.operators.spatial_join import knn_graph
 
     g = knn_graph(
-        E._doc_geo(spark, sf_dir), W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS
+        E.Ctx(spark, sf_dir).doc_geo, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS
     )
     return [(r.doc_id, r.nbr_id) for r in g.collect()]
 
@@ -35,7 +35,7 @@ def test_pagerank_brute_force(spark, sf_dir):
     import __spark_entry__ as E
     from pyspark.sql import functions as F
 
-    e = E._doc_geo(spark, sf_dir)
+    e = E.Ctx(spark, sf_dir).doc_geo
     from hilbert_curve_spark.operators.spatial_join import knn_graph
 
     edf = knn_graph(e, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS).select(
@@ -76,7 +76,7 @@ def test_triangle_counts_brute_force(spark, sf_dir):
     from hilbert_curve_spark.operators.spatial_join import knn_graph
 
     edf = knn_graph(
-        E._doc_geo(spark, sf_dir), W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS
+        E.Ctx(spark, sf_dir).doc_geo, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS
     ).select(F.col("doc_id").alias("src"), F.col("nbr_id").alias("dst"))
     got = {(r.doc_id, r.n_tri) for r in triangle_counts(edf).collect()}
     assert got == expect

@@ -18,7 +18,7 @@ def test_typo_pairs_brute_force(spark, sf_dir):
     import __spark_entry__ as E
     from hilbert_curve_spark.operators.dedup import typo_pairs
 
-    geo = E._doc_geo(spark, sf_dir)
+    geo = E.Ctx(spark, sf_dir).doc_geo
     vocab = sorted(
         r.kw for r in geo.selectExpr("explode(keywords) AS kw").distinct().collect()
     )
@@ -40,7 +40,7 @@ def test_keyword_lift_brute_force(spark, sf_dir):
     import __spark_entry__ as E
     from hilbert_curve_spark.operators.brq import keyword_lift
 
-    geo = E._doc_geo(spark, sf_dir)
+    geo = E.Ctx(spark, sf_dir).doc_geo
     rows = geo.selectExpr(
         "(x DIV 64) * 64 + (y DIV 64) AS gcell_raw", "x", "y", "keywords"
     ).select("x", "y", "keywords").collect()

@@ -8,7 +8,7 @@ def test_cell_gradient_brute_force(spark, sf_dir):
     import __spark_entry__ as E
     from hilbert_curve_spark.operators.rollup import cell_gradient
 
-    geo = E._doc_geo(spark, sf_dir)
+    geo = E.Ctx(spark, sf_dir).doc_geo
     hist = {}
     for r in geo.select("x", "y").collect():
         key = (r.x >> 6, r.y >> 6)
@@ -42,8 +42,8 @@ def test_fence_peak_occupancy_brute_force(spark, sf_dir):
     import __spark_entry__ as E
     from hilbert_curve_spark.operators.events import fence_peak_occupancy
 
-    events = E._events(spark, sf_dir)
-    dwell = E._geofence_dwell(spark, sf_dir).collect()
+    events = E.Ctx(spark, sf_dir).events
+    dwell = E.queries()["geofence_dwell"](spark, sf_dir).collect()
     marks = {}
     epi = {}
     for r in dwell:

@@ -93,7 +93,7 @@ def test_pq_codes_brute_force(spark, sf_dir):
 def test_pq_topk_brute_force(spark, sf_dir):
     from hilbert_curve_spark import workload  # noqa: F401
     from hilbert_curve_spark.operators.similarity import pq_topk
-    from __spark_entry__ import ANN_K, ANN_QUERY
+    from hilbert_curve_spark.workload import ANN_K, ANN_QUERY
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     vecs = {

@@ -7,7 +7,7 @@ def _box_rows(spark, sf_dir):
     from hilbert_curve_spark import workload as W
     from pyspark.sql import functions as F
 
-    dg = E._doc_geo(spark, sf_dir)
+    dg = E.Ctx(spark, sf_dir).doc_geo
     return {
         (r.doc_id, r.x, r.y)
         for r in dg.filter(
@@ -20,7 +20,7 @@ def _box_rows(spark, sf_dir):
 def test_jsonl_roundtrip(spark, sf_dir):
     import __spark_entry__ as E
 
-    got = {tuple(r) for r in E._jsonl_roundtrip(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["jsonl_roundtrip"](spark, sf_dir).collect()}
     assert got == _box_rows(spark, sf_dir)
     assert got
 
@@ -28,6 +28,6 @@ def test_jsonl_roundtrip(spark, sf_dir):
 def test_orc_roundtrip(spark, sf_dir):
     import __spark_entry__ as E
 
-    got = {tuple(r) for r in E._orc_roundtrip(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["orc_roundtrip"](spark, sf_dir).collect()}
     assert got == _box_rows(spark, sf_dir)
     assert got

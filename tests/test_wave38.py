@@ -10,7 +10,7 @@ def _events_pts(spark, sf_dir):
 
     return [
         (r.user_id, r.ep, r.event_id, r.x, r.y)
-        for r in E._events(spark, sf_dir)
+        for r in E.Ctx(spark, sf_dir).events
         .select(
             "user_id",
             F.col("ts").cast("timestamp").cast("long").alias("ep"),
@@ -50,7 +50,7 @@ def test_traj_resample_brute_force(spark, sf_dir):
             else:
                 x, y = prev[2], prev[3]
             expected.add((u, t, x, y))
-    got = {tuple(r) for r in E._traj_resample(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["traj_resample"](spark, sf_dir).collect()}
     assert got == expected
     assert got
 
@@ -59,7 +59,7 @@ def test_traj_resample_tick_grid(spark, sf_dir):
     """Every emitted tick is a step multiple inside the user's span."""
     import __spark_entry__ as E
 
-    out = E._traj_resample(spark, sf_dir)
+    out = E.queries()["traj_resample"](spark, sf_dir)
     assert out.filter(F.col("tick_s") % 21600 != 0).count() == 0
     assert out.filter((F.col("x") < 0) | (F.col("x") > 4095)).count() == 0
 
@@ -92,7 +92,7 @@ def test_markov_accuracy_brute_force(spark, sf_dir):
         n_eval = sum(cnts.values())
         n_corr = cnts.get(model[pc], 0)
         expected.add((pc, model[pc], n_eval, n_corr))
-    got = {tuple(r) for r in E._markov_accuracy(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["markov_accuracy"](spark, sf_dir).collect()}
     assert got == expected
     assert got
 
@@ -128,6 +128,6 @@ def test_cell_autocorr_brute_force(spark, sf_dir):
                 sum(a * b for a, b in pairs),
             )
         )
-    got = {tuple(r) for r in E._cell_autocorr(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["cell_autocorr"](spark, sf_dir).collect()}
     assert got == expected
     assert got

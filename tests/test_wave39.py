@@ -10,7 +10,7 @@ def test_anon_cells_brute_force(spark, sf_dir):
     from hilbert_curve_spark.config import DEFAULT
 
     k, lv = W.K_ANON, W.PYRAMID_LEVELS
-    geo = E._doc_geo(spark, sf_dir)
+    geo = E.Ctx(spark, sf_dir).doc_geo
     cells = [r.cell for r in geo.select("cell").collect()]
     from collections import Counter
 
@@ -32,7 +32,7 @@ def test_anon_cells_brute_force(spark, sf_dir):
     expected = {
         (l, c, n, region_total[(l, c)]) for (l, c), n in published.items()
     } | {(-1, -1, suppressed, suppressed)}
-    got = {tuple(r) for r in E._anon_cells(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["anon_cells"](spark, sf_dir).collect()}
     assert got == expected
     # the guarantee the release relies on: every published region >= k
     assert all(rt >= k for (l, c, n, rt) in got if l >= 0)
@@ -56,7 +56,7 @@ def test_contamination_scan_brute_force(spark, sf_dir):
         n_docs = sum(1 for t in texts if pat in t)
         n_occ = sum((len(t) - len(t.replace(pat, ""))) // len(pat) for t in texts)
         expected.add((pid, n_docs, n_occ))
-    got = {tuple(r) for r in E._contamination_scan(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["contamination_scan"](spark, sf_dir).collect()}
     assert got == expected
     # zero-hit probes must still report (schema is |probes|, data-independent)
     assert len(got) == len(W.EVAL_PROBES)
@@ -69,8 +69,8 @@ def test_contamination_scan_ac_equals_codegen(spark, sf_dir):
     form bit-for-bit (the no-self-overlap probe precondition)."""
     import __spark_entry__ as E
 
-    a = {tuple(r) for r in E._contamination_scan(spark, sf_dir).collect()}
-    b = {tuple(r) for r in E._contamination_scan_ac(spark, sf_dir).collect()}
+    a = {tuple(r) for r in E.queries()["contamination_scan"](spark, sf_dir).collect()}
+    b = {tuple(r) for r in E.queries()["contamination_scan_ac"](spark, sf_dir).collect()}
     assert a == b
 
 

@@ -33,7 +33,7 @@ def test_pack_sequences_brute_force(spark, sf_dir):
             expected[(sh, seq)] = (nd + 1, nt + t, min(fd, d), max(ld, d))
             cum += t
     exp = {(sh, sq, *v) for (sh, sq), v in expected.items()}
-    got = {tuple(r) for r in E._pack_sequences(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["pack_sequences"](spark, sf_dir).collect()}
     assert got == exp
     assert got
 
@@ -43,7 +43,7 @@ def test_pack_sequences_conservation(spark, sf_dir):
     import __spark_entry__ as E
 
     rows = _doc_toks(spark, sf_dir)
-    out = E._pack_sequences(spark, sf_dir)
+    out = E.queries()["pack_sequences"](spark, sf_dir)
     agg = out.agg(F.sum("n_docs"), F.sum("n_tokens")).collect()[0]
     assert agg[0] == len(rows)
     assert agg[1] == sum(t for _, t in rows)
@@ -81,7 +81,7 @@ def test_weighted_sample_brute_force(spark, sf_dir):
         rows.sort()
         for i, (_, d, q) in enumerate(rows[:k], start=1):
             expected.add((lp, d, q, i))
-    got = {tuple(r) for r in E._weighted_sample(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["weighted_sample"](spark, sf_dir).collect()}
     assert got == expected
     assert got
     # weighting is real: the sampled mean quality should not trail the

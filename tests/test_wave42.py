@@ -42,7 +42,7 @@ def test_pack_mm_brute_force(spark, sf_dir):
             expected[(sh, seq)] = (nd + 1, nt + t, nm + m, min(fd, d), max(ld, d))
             cum += t
     exp = {(sh, sq, *v) for (sh, sq), v in expected.items()}
-    got = {tuple(r) for r in E._pack_mm(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["pack_mm"](spark, sf_dir).collect()}
     assert got == exp
     assert got
 
@@ -58,7 +58,7 @@ def test_pack_mm_conservation(spark, sf_dir):
     n_docs = len({d for d, *_ in spans})
     total = sum(mc if k == "media" else len(t) for _, k, t, _ in spans)
     agg = (
-        E._pack_mm(spark, sf_dir)
+        E.queries()["pack_mm"](spark, sf_dir)
         .agg(F.sum("n_docs"), F.sum("n_tokens"))
         .collect()[0]
     )
@@ -102,7 +102,7 @@ def test_mixture_plan_brute_force(spark, sf_dir):
         (lang, band, *strata[(lang, band)], alloc[(lang, band)])
         for lang, band in strata
     }
-    got = {tuple(r) for r in E._mixture_plan(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["mixture_plan"](spark, sf_dir).collect()}
     assert got == exp
     # Hamilton apportionment conserves the budget exactly.
     assert sum(a for *_, a in got) == b
@@ -129,6 +129,6 @@ def test_boilerplate_spans_brute_force(spark, sf_dir):
     exp = {
         (text, -nd, -no, i + 1) for i, (nd, no, text) in enumerate(ranked)
     }
-    got = {tuple(r) for r in E._boilerplate_spans(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["boilerplate_spans"](spark, sf_dir).collect()}
     assert got == exp
     assert got  # the zipf head must clear the DF floor at fixture scale

@@ -23,7 +23,7 @@ def test_spatial_split_brute_force(spark, sf_dir):
     def is_test(bx, by):
         return _fold10(f"b|{bx}|{by}") % mod == 0
 
-    pts = E._doc_geo(spark, sf_dir).select("x", "y").collect()
+    pts = E.Ctx(spark, sf_dir).doc_geo.select("x", "y").collect()
     agg = {}
     for r in pts:
         bx, by = r.x >> shift, r.y >> shift
@@ -44,7 +44,7 @@ def test_spatial_split_brute_force(spark, sf_dir):
         blocks.add(bx * (maxb + 1) + by)
         agg[split] = (nd + 1, blocks)
     exp = {(s, nd, len(bl)) for s, (nd, bl) in agg.items()}
-    got = {tuple(r) for r in E._spatial_split(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["spatial_split"](spark, sf_dir).collect()}
     assert got == exp
     splits = {s for s, *_ in got}
     assert splits == {"train", "test", "buffer"}  # all three at fixture scale
@@ -76,7 +76,7 @@ def test_source_overlap_brute_force(spark, sf_dir):
             for j in range(i + 1, len(ss)):
                 pairs[(ss[i], ss[j])] = pairs.get((ss[i], ss[j]), 0) + 1
     exp = {(a, b, n) for (a, b), n in pairs.items()}
-    got = {tuple(r) for r in E._source_overlap(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["source_overlap"](spark, sf_dir).collect()}
     assert got == exp
     assert got  # the fixture's duplicated texts must span sources
 
@@ -104,5 +104,5 @@ def test_source_profile_brute_force(spark, sf_dir):
         fps.add(_wordset_fp(r.text))
         agg[r.source] = (nd + 1, fps, sq + r.q, st + r.wc)
     exp = {(s, nd, len(fps), sq, st) for s, (nd, fps, sq, st) in agg.items()}
-    got = {tuple(r) for r in E._source_profile(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["source_profile"](spark, sf_dir).collect()}
     assert got == exp

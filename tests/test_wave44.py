@@ -19,7 +19,7 @@ def test_length_deciles_brute_force(spark, sf_dir):
     for d in range(1, b):
         need = (d * n + b - 1) // b  # smallest t with cum_count >= ceil(dn/b)
         exp.add((d, toks[need - 1]))
-    got = {tuple(r) for r in E._length_deciles(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["length_deciles"](spark, sf_dir).collect()}
     assert got == exp
     # thresholds are monotone in the decile
     ordered = [t for _, t in sorted(got)]
@@ -51,7 +51,7 @@ def test_vocab_growth_brute_force(spark, sf_dir):
     for b in sorted(hist):
         cum += hist[b]
         exp.add((b, hist[b], cum))
-    got = {tuple(r) for r in E._vocab_growth(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["vocab_growth"](spark, sf_dir).collect()}
     assert got == exp
     # the curve must flatten: a zipf vocabulary is front-loaded
     first_bucket = min(exp)[1]

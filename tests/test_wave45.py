@@ -59,7 +59,7 @@ def test_traj_simplify_brute_force(spark, sf_dir):
         for i, k in enumerate(kept):
             if k:
                 exp.add((u, i + 1, path[i][0], path[i][1]))
-    got = {tuple(r) for r in E._traj_simplify(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["traj_simplify"](spark, sf_dir).collect()}
     assert got == exp
     # bounded output: at most 2^depth + 1 vertices per user, and the
     # simplification must actually drop points somewhere
@@ -89,7 +89,7 @@ def test_doc_repetition_brute_force(spark, sf_dir):
         c[1] += n - d
         c[2] += n
     exp = {(b, *v) for b, v in hist.items()}
-    got = {tuple(r) for r in E._doc_repetition(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["doc_repetition"](spark, sf_dir).collect()}
     assert got == exp
     # the synthetic zipf keywords must produce real variance in the census
     assert len(hist) > 1
@@ -135,7 +135,7 @@ def test_source_caps_brute_force(spark, sf_dir):
                 sum(t for *_, t in dropped),
             )
         )
-    got = {tuple(r) for r in E._source_caps(spark, sf_dir).collect()}
+    got = {tuple(r) for r in E.queries()["source_caps"](spark, sf_dir).collect()}
     assert got == exp
     # the cap must bite at this scale (some source drops documents)
     assert any(r[4] > 0 for r in got)

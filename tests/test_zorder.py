@@ -107,8 +107,8 @@ def test_morton_expr_matches_numpy(spark):
 def test_zorder_range_equals_hilbert_range(spark, sf_dir):
     import __spark_entry__ as em
 
-    a = {tuple(r) for r in em._grq_range(spark, sf_dir).collect()}
-    b = {tuple(r) for r in em._zorder_range(spark, sf_dir).collect()}
+    a = {tuple(r) for r in em.queries()["grq_range"](spark, sf_dir).collect()}
+    b = {tuple(r) for r in em.queries()["zorder_range"](spark, sf_dir).collect()}
     assert a == b and a
 
 
@@ -116,7 +116,7 @@ def test_zorder_plan_no_python(spark, sf_dir):
     import __spark_entry__ as em
 
     plan = (
-        em._zorder_range(spark, sf_dir)
+        em.queries()["zorder_range"](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -130,11 +130,11 @@ def test_zorder_stored_pushes_and_prunes(spark, sf_dir):
     (PushedFilters), no shuffle, and the result equals grq_stored's."""
     import __spark_entry__ as em
 
-    q = em._zorder_stored(spark, sf_dir)
+    q = em.queries()["zorder_stored"](spark, sf_dir)
     plan = q._jdf.queryExecution().executedPlan().toString()
     scan_line = next(l for l in plan.splitlines() if "PushedFilters" in l)
     assert "z" in scan_line
     assert "Exchange" not in plan
     a = {tuple(r) for r in q.collect()}
-    b = {tuple(r) for r in em._grq_stored(spark, sf_dir).collect()}
+    b = {tuple(r) for r in em.queries()["grq_stored"](spark, sf_dir).collect()}
     assert a == b and a
