@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
+from .skew import grid_keys, salted_cell_counts
 
 
 def _grid_pyramid(
@@ -41,18 +42,8 @@ def _grid_pyramid(
     """(level, qx, qy, n_docs) for level 0 (finest, cell edge ``2^shift``)
     .. levels-1 (coarsest): one salted corpus scan + native ancestor
     explode of the histogram (same shape as ``rollup.cell_pyramid``)."""
-    base = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n"))
+    base = salted_cell_counts(doc_geo, config, grid_keys(shift)).withColumnRenamed(
+        "n_docs", "n"
     )
     ancestors = (
         f"transform(sequence(0, {levels - 1}), l -> named_struct("

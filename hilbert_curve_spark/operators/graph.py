@@ -29,7 +29,7 @@ shuffle-bounded CC for data too large for any single machine:
 
 Labels are component-minimum node ids, so results are deterministic and
 engine-neutral: the DuckDB oracle recomputes the same labels with a
-recursive-CTE min-label closure (`__spark_entry__._dedup_clusters_oracle`).
+recursive-CTE min-label closure (:func:`dedup_clusters_oracle`).
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
+from .skew import salted_cell_counts
 
 
 def _edge_stats(edges: DataFrame) -> tuple:
@@ -443,13 +444,8 @@ def grid_kmeans(
             for i, (cx, cy) in enumerate(cents)
         ]
     )
-    final = (
-        pts.withColumn("cid", F.array_min(arms).getField("c"))
-        .withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets)))
-        .groupBy("cid", "salt")
-        .agg(F.count(F.lit(1)).alias("pn"))
-        .groupBy("cid")
-        .agg(F.sum("pn").cast("long").alias("n_docs"))
+    final = salted_cell_counts(
+        pts.withColumn("cid", F.array_min(arms).getField("c")), config, ("cid",)
     )
     cent_rows = ", ".join(
         f"({i}, {cx}, {cy})" for i, (cx, cy) in enumerate(cents)

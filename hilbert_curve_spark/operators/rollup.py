@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
-from .skew import salted_cell_counts
+from .skew import grid_keys, salted_cell_counts
 
 
 def cell_pyramid(
@@ -165,19 +165,7 @@ def focal_stats(
     cost is O(cells), never O(docs).  The final own-count attach is a hash
     join between two cell-sized sides (AQE broadcasts the smaller)."""
     s = int(shift)
-    cells = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", s).alias("gx"),
-            F.shiftright("y", s).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
-    )
+    cells = salted_cell_counts(doc_geo, config, grid_keys(s))
     offs = ", ".join(
         f"named_struct('dx', {dx}L, 'dy', {dy}L)"
         for dx in (-1, 0, 1)
@@ -479,19 +467,7 @@ def box_density(
     pinned against ``focal_stats`` at r=1."""
     m = config.edge >> shift
     spark = doc_geo.sparkSession
-    hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
-    )
+    hist = salted_cell_counts(doc_geo, config, grid_keys(shift))
     dense = spark.range(m * m).select(
         F.expr(f"id div {m}").alias("gx"), F.pmod("id", F.lit(m)).alias("gy")
     )
@@ -568,6 +544,110 @@ LEFT JOIN sat sd ON sd.gx = h.gx - {r} - 1 AND sd.gy = h.gy - {r} - 1"""
 
 
 # ---------------------------------------------------------------------------
+# Shared numpy helpers of the grid-bounded Arrow kernels
+# ---------------------------------------------------------------------------
+
+_ROOK = ((1, 0), (-1, 0), (0, 1), (0, -1))
+_INF = 2**62
+
+
+def _rook_grid(gx, gy, n_docs, m: int):
+    """Key-sort one occupied-cell histogram of the ``m x m`` grid and index
+    its rook neighbours: ``(key, gx, gy, n_docs, nbrs)`` with the flat key
+    ``gx*m + gy`` ascending and ``nbrs[i, j]`` the index of cell ``i``'s
+    neighbour at offset ``_ROOK[j]`` (+x, -x, +y, -y), -1 when that cell
+    is unoccupied or off the grid.  Four ``searchsorted`` probes of the
+    sorted keys; everything built on this table is bounded by ``m^2``
+    cells, never by the corpus."""
+    import numpy as np
+
+    gx, gy, nd = (np.asarray(a, np.int64) for a in (gx, gy, n_docs))
+    key = gx * m + gy
+    order = np.argsort(key)
+    key, gx, gy, nd = key[order], gx[order], gy[order], nd[order]
+    nbrs = np.full((len(key), 4), -1, dtype=np.int64)
+    for j, (dx, dy) in enumerate(_ROOK):
+        nx, ny = gx + dx, gy + dy
+        nk = nx * m + ny
+        pos = np.clip(np.searchsorted(key, nk), 0, max(len(key) - 1, 0))
+        hit = (nx >= 0) & (nx < m) & (ny >= 0) & (ny < m) & (key[pos] == nk)
+        nbrs[hit, j] = pos[hit]
+    return key, gx, gy, nd, nbrs
+
+
+def _steepest_ascent(key, nd, nbrs):
+    """Per cell, the index of its steepest-ascent rook neighbour (strictly
+    denser, the densest wins, ties to the smaller flat key); local maxima
+    point at themselves.  Density strictly rises along every pointer, so
+    the pointers form a forest rooted at the peaks."""
+    import numpy as np
+
+    best = np.arange(len(key), dtype=np.int64)
+    for j in range(4):
+        rows = np.nonzero(nbrs[:, j] >= 0)[0]
+        cand, cur = nbrs[rows, j], best[rows]
+        # strictly denser beats the current best; equal density breaks to
+        # the smaller flat key, but only among neighbours strictly denser
+        # than the cell itself (the self pointer carries its own density)
+        better = (nd[cand] > nd[cur]) | (
+            (nd[cand] == nd[cur]) & (nd[cand] > nd[rows]) & (key[cand] < key[cur])
+        )
+        best[rows[better]] = cand[better]
+    return best
+
+
+def _cost_surface(is_src, nbrs, w, budget: int):
+    """Cheapest cost from any source cell through the rook graph, paying
+    ``w[i]`` to ENTER cell ``i``: Jacobi min-plus rounds until the exact
+    fixpoint or ``budget`` rounds (with weights >= 1 an in-budget optimal
+    path has <= ``budget`` edges, so the cap loses nothing); cells beyond
+    ``budget`` read ``_INF``.  Exact int64 and order-independent."""
+    import numpy as np
+
+    has = nbrs >= 0
+    safe = np.where(has, nbrs, 0)
+    dist = np.where(is_src, np.int64(0), np.int64(_INF))
+    for _ in range(int(budget)):
+        best_nbr = np.where(has, dist[safe], np.int64(_INF)).min(axis=1)
+        new = np.minimum(dist, best_nbr + w)
+        if np.array_equal(new, dist):
+            break
+        dist = new
+    return np.where(dist <= budget, dist, np.int64(_INF))
+
+
+class _UnionFind:
+    """Union-find over cell indices with path halving and MIN-ROOT union:
+    the smaller index becomes the root, so over key-sorted cells every
+    root is its component's minimum flat key.  ``size`` holds each root's
+    component size."""
+
+    def __init__(self, n: int):
+        import numpy as np
+
+        self.parent = np.arange(n, dtype=np.int64)
+        self.size = np.ones(n, dtype=np.int64)
+
+    def find(self, i):
+        parent = self.parent
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    def union(self, i, j) -> int:
+        """Merge the components of ``i`` and ``j``; the merged root, or -1
+        when they were already one component."""
+        ri, rj = self.find(i), self.find(j)
+        if ri == rj:
+            return -1
+        ri, rj = min(ri, rj), max(ri, rj)
+        self.parent[rj] = ri
+        self.size[ri] += self.size[rj]
+        return ri
+
+
+# ---------------------------------------------------------------------------
 # Hot-spot region labeling — connected components over the density grid
 # ---------------------------------------------------------------------------
 
@@ -592,67 +672,29 @@ def hotspot_regions(
     subset is bounded by the ``M^2`` grid no matter how large the corpus
     is, so the component labeling runs as ONE Arrow grouped-map task over
     it (the isochrone/cost-distance pattern, :func:`_grid_relax_fn`'s
-    sibling): right/up rook edges from two ``searchsorted`` probes of the
-    sorted flat keys, then min-root union-find with path compression —
-    the root index is always the smaller one and cells are key-sorted, so
-    the final label is exactly the component's minimum flat key.  The
+    sibling): rook edges from the shared :func:`_rook_grid` table, then
+    the min-root :class:`_UnionFind` — the root index is always the
+    smaller one and cells are key-sorted, so the final label is exactly
+    the component's minimum flat key.  The
     corpus never touches Python; at 10^12 docs the cost is the scan.
     (Corpus-sized graphs — dedup clusters, DBSCAN — keep the distributed
     large/small-star CC of :mod:`.graph`; this kernel is ONLY for
     manifest-sized rasters.)"""
     m = config.edge >> shift
-    hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
-    )
+    hist = salted_cell_counts(doc_geo, config, grid_keys(shift))
     dense = hist.filter(F.col("n_docs") >= min_docs)
 
     def fn(pdf):
         import numpy as np
         import pandas as pd
 
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        nd = pdf["n_docs"].to_numpy(np.int64)
-        if len(gx) == 0:
-            return pd.DataFrame(
-                {c: np.array([], np.int64) for c in ("gx", "gy", "n_docs", "region")}
-            )
-        key = gx * m + gy
-        order = np.argsort(key)
-        key, gx, gy, nd = key[order], gx[order], gy[order], nd[order]
-        parent = np.arange(len(key), dtype=np.int64)
-
-        def find(i):
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        for dx, dy in ((1, 0), (0, 1)):
-            nk = (gx + dx) * m + (gy + dy)
-            valid = (gx + dx < m) & (gy + dy < m)
-            pos = np.clip(np.searchsorted(key, nk), 0, len(key) - 1)
-            hit = valid & (key[pos] == nk)
-            for i, j in zip(np.nonzero(hit)[0], pos[hit]):
-                ri, rj = find(i), find(j)
-                if ri != rj:
-                    # min-root union: cells are key-sorted, so the smaller
-                    # index IS the smaller flat key
-                    if ri < rj:
-                        parent[rj] = ri
-                    else:
-                        parent[ri] = rj
-        roots = np.array([find(i) for i in range(len(key))], dtype=np.int64)
+        key, gx, gy, nd, nbrs = _rook_grid(pdf["gx"], pdf["gy"], pdf["n_docs"], m)
+        uf = _UnionFind(len(key))
+        up = nbrs[:, [0, 2]]  # +x and +y arms: each rook edge once
+        rows, arms = np.nonzero(up >= 0)
+        for i, j in zip(rows, up[rows, arms]):
+            uf.union(i, j)
+        roots = np.array([uf.find(i) for i in range(len(key))], dtype=np.int64)
         return pd.DataFrame(
             {"gx": gx, "gy": gy, "n_docs": nd, "region": key[roots]}
         )
@@ -852,11 +894,9 @@ def _grid_relax_fn(
     relaxation over the occupied-cell histogram.  The graph is the rook
     adjacency of occupied cells in an ``m x m`` grid — AT MOST ``m^2``
     vertices no matter how large the corpus is — so the whole iteration is
-    one Arrow batch: neighbor indices are four ``searchsorted`` probes of
-    the sorted flat cell keys (computed once), each round is four
-    ``np.minimum.at`` scatter-mins, and the loop exits at the exact
-    fixpoint or the round cap.  Exact int64 throughout; ``np.minimum.at``
-    is order-independent, so the result is deterministic."""
+    one Arrow batch over the shared :func:`_rook_grid` neighbour table,
+    relaxed by :func:`_cost_surface` until the exact fixpoint or the round
+    cap.  Exact int64 throughout and deterministic."""
     import numpy as np
     import pandas as pd
 
@@ -865,44 +905,10 @@ def _grid_relax_fn(
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        nd = pdf["n_docs"].to_numpy(np.int64)
-        empty = pd.DataFrame(
-            {
-                "gx": np.array([], np.int64),
-                "gy": np.array([], np.int64),
-                "n_docs": np.array([], np.int64),
-                out_col: np.array([], np.int64),
-            }
-        )
-        if len(gx) == 0:
-            return empty
-        key = gx * m + gy
-        order = np.argsort(key)
-        key, gx, gy, nd = key[order], gx[order], gy[order], nd[order]
+        key, gx, gy, nd, nbrs = _rook_grid(pdf["gx"], pdf["gy"], pdf["n_docs"], m)
         w = 1 + np.minimum(3, nd // 8) if weighted else np.ones_like(nd)
-        inf = np.int64(2**62)
-        dist = np.where(np.isin(key, src_keys), np.int64(0), inf)
-        arms = []
-        for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-            nx, ny = gx + dx, gy + dy
-            valid = (nx >= 0) & (nx < m) & (ny >= 0) & (ny < m)
-            nk = nx * m + ny
-            pos = np.clip(np.searchsorted(key, nk), 0, len(key) - 1)
-            hit = valid & (key[pos] == nk)
-            arms.append((np.nonzero(hit)[0], pos[hit]))
-        for _ in range(int(rounds)):
-            new = dist.copy()
-            for src_i, dst_i in arms:
-                np.minimum.at(new, dst_i, dist[src_i] + w[dst_i])
-            if np.array_equal(new, dist):
-                break
-            dist = new
-        # <= rounds is the oracle's recursion prune: with weights >= 1 an
-        # in-budget optimal path has <= rounds edges, so the cap loses
-        # nothing and drops exactly the out-of-budget cells
-        reached = dist <= np.int64(rounds)
+        dist = _cost_surface(np.isin(key, src_keys), nbrs, w, rounds)
+        reached = dist < _INF
         return pd.DataFrame(
             {
                 "gx": gx[reached],
@@ -936,25 +942,13 @@ def cell_isochrone(
     after is bounded by the ``M x M`` grid — AT MOST ``M^2`` cells no
     matter how large the corpus is — so the breadth-first closure runs as
     ONE Arrow-batched grouped-map task over the histogram
-    (:func:`_grid_relax_fn`: four ``searchsorted`` neighbor probes + a
-    vectorized scatter-min per round, exact int64, fixpoint or hop-cap
+    (:func:`_grid_relax_fn`: the shared rook-neighbour table + a
+    vectorized min-plus relaxation per round, exact int64, fixpoint or hop-cap
     exit).  This is the compaction-plan/core-area pattern — the corpus
     never touches Python, and the manifest-sized graph step costs
     microseconds instead of one driver-scheduled join round per hop (the
     previous form paid ~0.5 s/round in scheduling alone at any scale)."""
-    hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
-    )
+    hist = salted_cell_counts(doc_geo, config, grid_keys(shift))
     src_cells = sorted({(int(x) >> shift, int(y) >> shift) for x, y in sources})
     fn = _grid_relax_fn(
         config.edge >> shift, src_cells, int(max_hops), False, "hops"
@@ -1113,19 +1107,7 @@ def cell_cost_distance(
     oracle's recursive closure exactly.  The corpus never touches Python;
     the graph step is manifest-sized (the compaction-plan/core-area
     pattern), replacing one driver-scheduled join round per relaxation."""
-    hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
-    )
+    hist = salted_cell_counts(doc_geo, config, grid_keys(shift))
     src_cells = sorted({(int(x) >> shift, int(y) >> shift) for x, y in sources})
     fn = _grid_relax_fn(config.edge >> shift, src_cells, int(budget), True, "cost")
     return hist.groupBy(F.lit(0).alias("_g")).applyInPandas(
@@ -1195,17 +1177,7 @@ def core_area(
     occupied-cell list is manifest-sized, not corpus-sized)."""
     m = config.edge >> shift
     hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
+        salted_cell_counts(doc_geo, config, grid_keys(shift))
         .select(
             (F.col("gx") * m + F.col("gy")).cast("long").alias("gcell"),
             F.col("n_docs").cast("long").alias("n_docs"),
@@ -1282,17 +1254,7 @@ def cell_morphology(
     broadcasts."""
     s = int(shift)
     occ = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", s).alias("gx"),
-            F.shiftright("y", s).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
+        salted_cell_counts(doc_geo, config, grid_keys(s))
         .filter(F.col("n_docs") >= int(min_count))
     )
     nine = F.expr(
@@ -1383,17 +1345,7 @@ def cell_percentile_bands(
     manifest-sized)."""
     m = config.edge >> shift
     hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
+        salted_cell_counts(doc_geo, config, grid_keys(shift))
         .select(
             (F.col("gx") * m + F.col("gy")).cast("long").alias("gcell"),
             F.col("n_docs").cast("long").alias("n_docs"),
@@ -1637,19 +1589,7 @@ def cell_gradient(
     max_cell_count^2`` — safe below ~5e8 docs per cell (salt the shift
     coarser long before that)."""
     s = int(shift)
-    cells = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", s).alias("gx"),
-            F.shiftright("y", s).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").cast("long").alias("n_docs"))
-    )
+    cells = salted_cell_counts(doc_geo, config, grid_keys(s))
     offs = ", ".join(
         f"named_struct('dx', {dx}L, 'dy', {dy}L)"
         for dx in (-1, 0, 1)
@@ -1881,89 +1821,45 @@ def percolation_curve(
     grid."""
     m = config.edge >> shift
     ts = sorted({int(t) for t in thresholds})
-    hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
+    hist = salted_cell_counts(doc_geo, config, grid_keys(shift))
+    # one sentinel row (gx = -1, dropped by the kernel) keeps the single
+    # group alive on an empty raster, so every threshold still gets its row
+    sentinel = hist.sparkSession.range(1).select(
+        *[F.lit(-1).cast(f.dataType).alias(f.name) for f in hist.schema.fields]
     )
 
     def fn(pdf):
         import numpy as np
         import pandas as pd
 
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        nd = pdf["n_docs"].to_numpy(np.int64)
-        key = gx * m + gy
-        order = np.argsort(key)
-        key, gx, gy, nd = key[order], gx[order], gy[order], nd[order]
-        n = len(key)
-        # neighbor slots (computed once, like _grid_relax_fn)
-        arms = []
-        for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-            nx, ny = gx + dx, gy + dy
-            valid = (nx >= 0) & (nx < m) & (ny >= 0) & (ny < m)
-            nk = nx * m + ny
-            if n:
-                pos = np.clip(np.searchsorted(key, nk), 0, n - 1)
-                hit = valid & (key[pos] == nk)
-            else:
-                pos = np.zeros(0, np.int64)
-                hit = np.zeros(0, bool)
-            full = np.full(n, -1, np.int64)
-            full[hit] = pos[hit]
-            arms.append(full)
-        parent = np.arange(n, dtype=np.int64)
-        size = np.ones(n, dtype=np.int64)
+        pdf = pdf[pdf["gx"] >= 0]
+        _, _, _, nd, nbrs = _rook_grid(pdf["gx"], pdf["gy"], pdf["n_docs"], m)
+        n = len(nd)
+        uf = _UnionFind(n)
         active = np.zeros(n, dtype=bool)
-
-        def find(i):
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        stats = {"comp": 0, "max": 0, "cells": 0}
-
-        def activate(i):
-            active[i] = True
-            stats["comp"] += 1
-            stats["cells"] += 1
-            stats["max"] = max(stats["max"], 1)
-            for arm in arms:
-                j = arm[i]
-                if j >= 0 and active[j]:
-                    ri, rj = find(i), find(j)
-                    if ri != rj:
-                        if size[ri] < size[rj]:
-                            ri, rj = rj, ri
-                        parent[rj] = ri
-                        size[ri] += size[rj]
-                        stats["comp"] -= 1
-                        stats["max"] = max(stats["max"], size[ri])
-
+        comp = biggest = 0
         by_density = np.argsort(-nd, kind="stable")
         rows = []
         ptr = 0
         for t in sorted(ts, reverse=True):
             while ptr < n and nd[by_density[ptr]] >= t:
-                activate(int(by_density[ptr]))
+                i = by_density[ptr]
+                active[i] = True
+                comp += 1
+                biggest = max(biggest, 1)
+                for j in nbrs[i]:
+                    r = uf.union(i, j) if j >= 0 and active[j] else -1
+                    if r >= 0:
+                        comp -= 1
+                        biggest = max(biggest, int(uf.size[r]))
                 ptr += 1
-            rows.append((t, stats["cells"], stats["comp"], stats["max"]))
+            rows.append((t, ptr, comp, biggest))
         out = pd.DataFrame(
             rows, columns=["threshold", "n_cells", "n_regions", "max_region_cells"]
         )
         return out.astype("int64")
 
-    return hist.groupBy(F.lit(0).alias("_g")).applyInPandas(
+    return hist.unionByName(sentinel).groupBy(F.lit(0).alias("_g")).applyInPandas(
         fn, "threshold long, n_cells long, n_regions long, max_region_cells long"
     )
 
@@ -2039,67 +1935,23 @@ def watershed_basins(
 
     Physical plan: ONE salted corpus scan builds the histogram; pointer
     assignment and root-finding run as ONE Arrow grouped-map task over
-    the grid-bounded histogram — four ``searchsorted`` neighbor probes
-    pick each cell's steepest ascent vectorized, then pointer-jumping
+    the grid-bounded histogram — :func:`_steepest_ascent` picks each
+    cell's pointer vectorized over the shared :func:`_rook_grid` neighbour
+    table, then pointer-jumping
     (``parent = parent[parent]``) converges in O(log chain) fully
     vectorized rounds (the forest is acyclic because density strictly
     increases along every pointer).  Aggregation back to basin rows is
     numpy group-by inside the same batch; the corpus never touches
     Python."""
     m = config.edge >> shift
-    hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
-    )
+    hist = salted_cell_counts(doc_geo, config, grid_keys(shift))
 
     def fn(pdf):
         import numpy as np
         import pandas as pd
 
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        nd = pdf["n_docs"].to_numpy(np.int64)
-        if len(gx) == 0:
-            return pd.DataFrame(
-                {c: np.array([], np.int64)
-                 for c in ("basin", "n_cells", "n_docs", "peak_docs")}
-            )
-        key = gx * m + gy
-        order = np.argsort(key)
-        key, gx, gy, nd = key[order], gx[order], gy[order], nd[order]
-        n = len(key)
-        best = np.arange(n, dtype=np.int64)  # self-pointer = local peak
-        best_nd = nd.copy()
-        best_key = key.copy()
-        for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-            nx, ny = gx + dx, gy + dy
-            valid = (nx >= 0) & (nx < m) & (ny >= 0) & (ny < m)
-            nk = nx * m + ny
-            pos = np.clip(np.searchsorted(key, nk), 0, n - 1)
-            hit = valid & (key[pos] == nk)
-            cand = pos[hit]
-            rows_ = np.nonzero(hit)[0]
-            # strictly denser beats current best; equal density breaks to
-            # the smaller flat key (and any strictly-denser neighbor beats
-            # the self pointer, which carries the cell's own density)
-            better = (nd[cand] > best_nd[rows_]) | (
-                (nd[cand] == best_nd[rows_])
-                & (nd[cand] > nd[rows_])
-                & (key[cand] < best_key[rows_])
-            )
-            best[rows_[better]] = cand[better]
-            best_nd[rows_] = nd[best[rows_]]
-            best_key[rows_] = key[best[rows_]]
-        parent = best
+        key, _, _, nd, nbrs = _rook_grid(pdf["gx"], pdf["gy"], pdf["n_docs"], m)
+        parent = _steepest_ascent(key, nd, nbrs)
         while True:
             nxt = parent[parent]
             if np.array_equal(nxt, parent):
@@ -2189,54 +2041,14 @@ def flow_accumulation(
     (`Experiment/TestByUserInput/BRQComparisonInput.java:13-23`) have no
     surface analysis; this extends the engine's own raster family."""
     m = config.edge >> shift
-    hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", shift).alias("gx"),
-            F.shiftright("y", shift).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
-    )
+    hist = salted_cell_counts(doc_geo, config, grid_keys(shift))
 
     def fn(pdf):
         import numpy as np
         import pandas as pd
 
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        nd = pdf["n_docs"].to_numpy(np.int64)
-        if len(gx) == 0:
-            return pd.DataFrame(
-                {c: np.array([], np.int64) for c in ("cell", "n_docs", "acc_docs")}
-            )
-        key = gx * m + gy
-        order = np.argsort(key)
-        key, gx, gy, nd = key[order], gx[order], gy[order], nd[order]
-        n = len(key)
-        best = np.arange(n, dtype=np.int64)
-        best_nd = nd.copy()
-        best_key = key.copy()
-        for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-            nx, ny = gx + dx, gy + dy
-            valid = (nx >= 0) & (nx < m) & (ny >= 0) & (ny < m)
-            nk = nx * m + ny
-            pos = np.clip(np.searchsorted(key, nk), 0, n - 1)
-            hit = valid & (key[pos] == nk)
-            cand = pos[hit]
-            rows_ = np.nonzero(hit)[0]
-            better = (nd[cand] > best_nd[rows_]) | (
-                (nd[cand] == best_nd[rows_])
-                & (nd[cand] > nd[rows_])
-                & (key[cand] < best_key[rows_])
-            )
-            best[rows_[better]] = cand[better]
-            best_nd[rows_] = nd[best[rows_]]
-            best_key[rows_] = key[best[rows_]]
+        key, _, _, nd, nbrs = _rook_grid(pdf["gx"], pdf["gy"], pdf["n_docs"], m)
+        best = _steepest_ascent(key, nd, nbrs)
         acc = nd.copy()
         # children before parents: pointers strictly increase density, so
         # ascending-density order is a topological order of the forest
@@ -2314,17 +2126,7 @@ def visibility_pairs(
     m = config.edge >> s
     half = 1 << (s - 1)
     hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", s).alias("gx"),
-            F.shiftright("y", s).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
+        salted_cell_counts(doc_geo, config, grid_keys(s))
         .withColumn("k", (F.col("gx") * m + F.col("gy")).cast("long"))
     )
     # peaks = occupied cells with NO strictly denser rook neighbor: a
@@ -2499,17 +2301,7 @@ def voronoi_zones(
     m = config.edge >> s
     half = 1 << (s - 1)
     hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", s).alias("gx"),
-            F.shiftright("y", s).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
+        salted_cell_counts(doc_geo, config, grid_keys(s))
         .withColumn("k", (F.col("gx") * m + F.col("gy")).cast("long"))
     )
     off = F.expr(
@@ -2758,17 +2550,7 @@ def lbp_census(
     s = int(shift)
     m = config.edge >> s
     occ = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", s).alias("gx"),
-            F.shiftright("y", s).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
+        salted_cell_counts(doc_geo, config, grid_keys(s))
         .filter(F.col("n_docs") >= int(min_docs))
         .select("gx", "gy")
     )
@@ -2859,76 +2641,33 @@ def peak_paths(
     m = config.edge >> s
     b = int(budget)
     mp = int(min_peak)
-    hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", s).alias("gx"),
-            F.shiftright("y", s).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
-    )
+    hist = salted_cell_counts(doc_geo, config, grid_keys(s))
 
     def fn(pdf):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {c: np.array([], np.int64) for c in ("peak", "step", "gx", "gy", "cost")}
-        )
-        if len(pdf) == 0:
-            return empty
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        nd = pdf["n_docs"].to_numpy(np.int64)
-        key = gx * m + gy
-        order = np.argsort(key)
-        key, gx, gy, nd = key[order], gx[order], gy[order], nd[order]
+        key, gx, gy, nd, nbrs = _rook_grid(pdf["gx"], pdf["gy"], pdf["n_docs"], m)
         n = len(key)
         w = 1 + np.minimum(3, nd // 8)
-        # rook neighbor index table (searchsorted probes, -1 = absent)
-        nbrs = np.full((n, 4), -1, dtype=np.int64)
-        for j, (dx, dy) in enumerate(((1, 0), (-1, 0), (0, 1), (0, -1))):
-            nx, ny = gx + dx, gy + dy
-            valid = (nx >= 0) & (nx < m) & (ny >= 0) & (ny < m)
-            nk = nx * m + ny
-            pos = np.clip(np.searchsorted(key, nk), 0, n - 1)
-            hit = valid & (key[pos] == nk)
-            nbrs[hit, j] = pos[hit]
         # peaks: no STRICTLY denser rook neighbor (ties do not disqualify),
         # n_docs >= min_peak
         denser = np.where(nbrs >= 0, nd[np.clip(nbrs, 0, n - 1)] > nd[:, None], False)
         is_peak = (nd >= mp) & ~denser.any(axis=1)
         if not is_peak.any():
-            return empty
+            return pd.DataFrame(
+                {c: np.array([], np.int64) for c in ("peak", "step", "gx", "gy", "cost")}
+            )
         # source: global max peak, ties to smaller key (key-sorted array ->
         # first index among max n_docs peaks)
         pk_idx = np.nonzero(is_peak)[0]
         src = pk_idx[np.argmax(nd[pk_idx])]  # first max in key order
-        INF = np.int64(1 << 40)
-        dist = np.full(n, INF, dtype=np.int64)
-        dist[src] = 0
-        # Bellman-Ford scatter-min: positive weights, <= budget edges
-        for _ in range(b):
-            prev = dist
-            new = dist.copy()
-            for j in range(4):
-                has = nbrs[:, j] >= 0
-                cand = np.where(has, dist[np.clip(nbrs[:, j], 0, n - 1)], INF) + w
-                np.minimum(new, np.where(has, cand, INF), out=new)
-            if np.array_equal(new, dist):
-                break
-            dist = new
-        dist = np.where(dist <= b, dist, INF)
+        dist = _cost_surface(np.arange(n) == src, nbrs, w, b)
         # parent from the final surface: rook neighbor with
         # cost[n] == cost[c] - w[c], smallest key
         parent = np.full(n, -1, dtype=np.int64)
         for i in range(n):
-            if dist[i] == 0 or dist[i] >= INF:
+            if dist[i] == 0 or dist[i] >= _INF:
                 continue
             best = -1
             for j in range(4):
@@ -2939,7 +2678,7 @@ def peak_paths(
             parent[i] = best
         out = {c: [] for c in ("peak", "step", "gx", "gy", "cost")}
         for t in pk_idx:
-            if t == src or dist[t] >= INF:
+            if t == src or dist[t] >= _INF:
                 continue
             cur, step = t, 0
             total = int(dist[t])

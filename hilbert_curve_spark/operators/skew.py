@@ -26,15 +26,23 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT, EngineConfig
 
 
-def salted_cell_counts(doc_geo: DataFrame, config: EngineConfig = DEFAULT) -> DataFrame:
-    """(cell, n_docs) via two-phase salted aggregation."""
-    s = config.salt_buckets
+def grid_keys(shift: int) -> tuple:
+    """The ``(x >> shift AS gx, y >> shift AS gy)`` grid-cell key columns."""
+    return F.shiftright("x", shift).alias("gx"), F.shiftright("y", shift).alias("gy")
+
+
+def salted_cell_counts(
+    doc_geo: DataFrame, config: EngineConfig = DEFAULT, by: tuple = ("cell",)
+) -> DataFrame:
+    """``(*by, n_docs)`` via two-phase salted aggregation: count per
+    ``(*by, salt)``, then sum per ``by``.  ``by`` holds column names or
+    aliased Columns (e.g. the ``(x >> s AS gx, y >> s AS gy)`` grid)."""
     partial = (
-        doc_geo.withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(s)))
-        .groupBy("cell", "salt")
+        doc_geo.withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets)))
+        .groupBy(*by, "salt")
         .agg(F.count("*").alias("pn"))
     )
-    return partial.groupBy("cell").agg(F.sum("pn").alias("n_docs"))
+    return partial.groupBy(*partial.columns[:-2]).agg(F.sum("pn").alias("n_docs"))
 
 
 def salted_join(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT, EngineConfig
 from ..curve.cover import cover_box
 from ..functions.udfs import hilbert_encode_udf
+from .skew import grid_keys, salted_cell_counts
 
 TileSpec = dict  # {tile_id, x_start, y_start, width, height}
 
@@ -138,17 +139,7 @@ def compact_cells(
     m = config.edge >> s
     levels = m.bit_length() - 1  # m = 2^levels
     hist = (
-        doc_geo.withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets))
-        )
-        .groupBy(
-            F.shiftright("x", s).alias("gx"),
-            F.shiftright("y", s).alias("gy"),
-            "salt",
-        )
-        .agg(F.count("*").alias("pn"))
-        .groupBy("gx", "gy")
-        .agg(F.sum("pn").alias("n_docs"))
+        salted_cell_counts(doc_geo, config, grid_keys(s))
         .filter(F.col("n_docs") >= int(min_docs))
         .select("gx", "gy")
     )

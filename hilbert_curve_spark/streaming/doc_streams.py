@@ -36,8 +36,9 @@ DOCS_SCHEMA = StructType(
 
 def read_docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source document stream (one file per micro-batch).  The fixture
-    table is a single parquet file; the glob + basePath dance matches
-    `__spark_entry__._events_stream_tumbling`."""
+    table is a single parquet file; the glob + basePath dance matches the
+    events source behind the ``events_stream_tumbling`` row of
+    ``__spark_entry__.SPECS``."""
     return (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", 1)

@@ -24,6 +24,45 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def ctx(spark, sf_dir):
+    """One driver context for the whole session, so tests that read the
+    derived tables share one encoded, persisted ``doc_geo``."""
+    import __spark_entry__ as E
+
+    return E.Ctx(spark, sf_dir)
+
+
+@pytest.fixture(scope="session")
+def border_points():
+    """Points hugging all four borders of the full lattice: a 128-unit deep
+    frame whose density falls off from each corner, plus the four corner
+    points themselves.  At the raster operators' shifts (5, 6, 9) every
+    border row/column of the cell grid is occupied, the corner cells
+    included, so the rook-neighbour probes hit both grid bounds."""
+    from hilbert_curve_spark.config import DEFAULT
+
+    edge, s, pts = DEFAULT.edge, 5, []
+
+    def draw():
+        nonlocal s
+        s = (s * 1103515245 + 12345) % (1 << 31)
+        return s
+
+    for i in range(800):
+        along = min(draw() % edge, draw() % edge, draw() % edge)
+        d = draw() % 128
+        pts.append(
+            [
+                (along, d),
+                (edge - 1 - d, along),
+                (edge - 1 - along, edge - 1 - d),
+                (d, edge - 1 - along),
+            ][i % 4]
+        )
+    return pts + [(0, 0), (edge - 1, 0), (0, edge - 1), (edge - 1, edge - 1)]
+
+
 def assert_df_equals_oracle(spark_df, sql, sf_dir, sort_cols=None):
     """Driver-style comparison: row count + schema names + order-insensitive
     value equality between a Spark DataFrame and DuckDB SQL over the same

@@ -198,40 +198,41 @@ def test_box_density_matches_brute_force(spark):
     assert got == want
 
 
-def test_hotspot_regions_matches_union_find(spark):
+def test_hotspot_regions_matches_union_find(spark, border_points):
     """Region labels must equal a brute-force union-find over the dense
-    cells' rook adjacency (label = min flat key), singletons included."""
+    cells' rook adjacency (label = min flat key), singletons included —
+    on scattered points and on points lining every grid border."""
     from hilbert_curve_spark.operators.rollup import hotspot_regions
 
-    pts = _lcg_points(500, seed=41, edge=DEFAULT.edge)
     shift, min_docs = 9, 6
     m = DEFAULT.edge >> shift
-    hist = {}
-    for x, y in pts:
-        k = (x >> shift, y >> shift)
-        hist[k] = hist.get(k, 0) + 1
-    dense = {c: n for c, n in hist.items() if n >= min_docs}
-    assert dense and len(dense) < len(hist)  # non-trivial threshold
-    parent = {c: c for c in dense}
+    for pts in (_lcg_points(500, seed=41, edge=DEFAULT.edge), border_points):
+        hist = {}
+        for x, y in pts:
+            k = (x >> shift, y >> shift)
+            hist[k] = hist.get(k, 0) + 1
+        dense = {c: n for c, n in hist.items() if n >= min_docs}
+        assert dense and len(dense) < len(hist)  # non-trivial threshold
+        parent = {c: c for c in dense}
 
-    def find(c):
-        while parent[c] != c:
-            parent[c] = parent[parent[c]]
-            c = parent[c]
-        return c
+        def find(c):
+            while parent[c] != c:
+                parent[c] = parent[parent[c]]
+                c = parent[c]
+            return c
 
-    for gx, gy in dense:
-        for nb in ((gx + 1, gy), (gx, gy + 1)):
-            if nb in dense:
-                ra, rb = find((gx, gy)), find(nb)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-    want = {
-        (gx, gy, n, min(c[0] * m + c[1] for c in dense if find(c) == find((gx, gy))))
-        for (gx, gy), n in dense.items()
-    }
-    got = {
-        (r.gx, r.gy, r.n_docs, r.region)
-        for r in hotspot_regions(_geo(spark, pts), min_docs, shift).collect()
-    }
-    assert got == want
+        for gx, gy in dense:
+            for nb in ((gx + 1, gy), (gx, gy + 1)):
+                if nb in dense:
+                    ra, rb = find((gx, gy)), find(nb)
+                    if ra != rb:
+                        parent[max(ra, rb)] = min(ra, rb)
+        want = {
+            (gx, gy, n, min(c[0] * m + c[1] for c in dense if find(c) == find((gx, gy))))
+            for (gx, gy), n in dense.items()
+        }
+        got = {
+            (r.gx, r.gy, r.n_docs, r.region)
+            for r in hotspot_regions(_geo(spark, pts), min_docs, shift).collect()
+        }
+        assert got == want

@@ -109,12 +109,11 @@ def test_knn_join_k_larger_than_corpus(spark):
     assert len(out) == 5  # whole corpus returned, no infinite loop
 
 
-def test_zonal_stats_equals_pip_groupby(spark, sf_dir):
-    import __spark_entry__ as em
+def test_zonal_stats_equals_pip_groupby(ctx):
     from hilbert_curve_spark import workload as W
     from hilbert_curve_spark.operators.pip import pip_join
 
-    dg = em.Ctx(spark, sf_dir).doc_geo
+    dg = ctx.doc_geo
     got = {
         r.poly_id: (r.n_docs, r.sum_x, r.sum_y)
         for r in zonal_stats(dg, W.POLYGONS, DEFAULT).collect()
@@ -133,12 +132,10 @@ def test_zonal_stats_equals_pip_groupby(spark, sf_dir):
     assert got == exp and got
 
 
-def test_focal_stats_matches_brute_force(spark, sf_dir):
+def test_focal_stats_matches_brute_force(ctx):
     from hilbert_curve_spark.operators.rollup import focal_stats
 
-    import __spark_entry__ as em
-
-    dg = em.Ctx(spark, sf_dir).doc_geo
+    dg = ctx.doc_geo
     shift = 6
     hist = {}
     for r in dg.select("x", "y").collect():
@@ -159,13 +156,11 @@ def test_focal_stats_matches_brute_force(spark, sf_dir):
     assert sum(n for (_, _, n, _) in got) == dg.count()
 
 
-def test_focal_stats_plan_no_python(spark, sf_dir):
+def test_focal_stats_plan_no_python(ctx):
     from hilbert_curve_spark.operators.rollup import focal_stats
 
-    import __spark_entry__ as em
-
     plan = (
-        focal_stats(em.Ctx(spark, sf_dir).doc_geo, shift=6)
+        focal_stats(ctx.doc_geo, shift=6)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -174,10 +169,8 @@ def test_focal_stats_plan_no_python(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_cell_pyramid_invariants(spark, sf_dir):
-    import __spark_entry__ as em
-
-    dg = em.Ctx(spark, sf_dir).doc_geo
+def test_cell_pyramid_invariants(ctx):
+    dg = ctx.doc_geo
     n = dg.count()
     pyr = cell_pyramid(dg, levels=4, config=DEFAULT).collect()
     by_level = {}
@@ -475,13 +468,12 @@ def test_dbscan_border_and_noise(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_zonal_median_matches_python(spark, sf_dir):
-    import __spark_entry__ as em
+def test_zonal_median_matches_python(ctx):
     from hilbert_curve_spark import workload as W
     from hilbert_curve_spark.operators.pip import pip_join
     from hilbert_curve_spark.operators.spatial_join import zonal_median
 
-    dg = em.Ctx(spark, sf_dir).doc_geo
+    dg = ctx.doc_geo
     got = {
         r.poly_id: (r.n_docs, r.median_x, r.median_y)
         for r in zonal_median(dg, W.POLYGONS, DEFAULT).collect()
@@ -498,13 +490,12 @@ def test_zonal_median_matches_python(spark, sf_dir):
         assert got[pid] == (n, mx, my), pid
 
 
-def test_cell_kmv_matches_python(spark, sf_dir):
+def test_cell_kmv_matches_python(ctx):
     import hashlib
 
-    import __spark_entry__ as em
     from hilbert_curve_spark.operators.rollup import cell_distinct_kmv
 
-    dg = em.Ctx(spark, sf_dir).doc_geo
+    dg = ctx.doc_geo
     got = {
         r.gcell: (r.n_distinct, r.kmv_estimate)
         for r in cell_distinct_kmv(dg).collect()

@@ -4,20 +4,19 @@ counting) and robust per-cell MAD anomaly detection."""
 from hilbert_curve_spark import workload as W
 
 
-def _knn_edges(spark, sf_dir):
-    import __spark_entry__ as E
+def _knn_edges(ctx):
     from hilbert_curve_spark.operators.spatial_join import knn_graph
 
     g = knn_graph(
-        E.Ctx(spark, sf_dir).doc_geo, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS
+        ctx.doc_geo, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS
     )
     return [(r.doc_id, r.nbr_id) for r in g.collect()]
 
 
-def test_pagerank_brute_force(spark, sf_dir):
+def test_pagerank_brute_force(ctx):
     from hilbert_curve_spark.operators.graph import pagerank
 
-    edges = _knn_edges(spark, sf_dir)
+    edges = _knn_edges(ctx)
     assert edges
     nodes = {u for u, _ in edges} | {v for _, v in edges}
     deg = {}
@@ -32,10 +31,9 @@ def test_pagerank_brute_force(spark, sf_dir):
         r = {n: base + (85 * inflow.get(n, 0)) // 100 for n in nodes}
     expect = set(r.items())
 
-    import __spark_entry__ as E
     from pyspark.sql import functions as F
 
-    e = E.Ctx(spark, sf_dir).doc_geo
+    e = ctx.doc_geo
     from hilbert_curve_spark.operators.spatial_join import knn_graph
 
     edf = knn_graph(e, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS).select(
@@ -47,12 +45,12 @@ def test_pagerank_brute_force(spark, sf_dir):
     assert max(ranks) > min(ranks)  # the graph has hubs: ranks discriminate
 
 
-def test_triangle_counts_brute_force(spark, sf_dir):
+def test_triangle_counts_brute_force(ctx):
     from itertools import combinations
 
     from hilbert_curve_spark.operators.graph import triangle_counts
 
-    edges = _knn_edges(spark, sf_dir)
+    edges = _knn_edges(ctx)
     und = {tuple(sorted(e)) for e in edges}
     adj = {}
     for a, b in und:
@@ -71,12 +69,11 @@ def test_triangle_counts_brute_force(spark, sf_dir):
         )
     expect = set(tri.items())
 
-    import __spark_entry__ as E
     from pyspark.sql import functions as F
     from hilbert_curve_spark.operators.spatial_join import knn_graph
 
     edf = knn_graph(
-        E.Ctx(spark, sf_dir).doc_geo, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS
+        ctx.doc_geo, W.KNN_GRAPH_K, W.KNN_GRAPH_RADIUS
     ).select(F.col("doc_id").alias("src"), F.col("nbr_id").alias("dst"))
     got = {(r.doc_id, r.n_tri) for r in triangle_counts(edf).collect()}
     assert got == expect

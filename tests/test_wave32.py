@@ -14,11 +14,10 @@ def _lev(a: str, b: str) -> int:
     return prev[-1]
 
 
-def test_typo_pairs_brute_force(spark, sf_dir):
-    import __spark_entry__ as E
+def test_typo_pairs_brute_force(ctx):
     from hilbert_curve_spark.operators.dedup import typo_pairs
 
-    geo = E.Ctx(spark, sf_dir).doc_geo
+    geo = ctx.doc_geo
     vocab = sorted(
         r.kw for r in geo.selectExpr("explode(keywords) AS kw").distinct().collect()
     )
@@ -36,11 +35,10 @@ def test_typo_pairs_brute_force(spark, sf_dir):
     assert any(len(a) != len(b) for a, b in expect)
 
 
-def test_keyword_lift_brute_force(spark, sf_dir):
-    import __spark_entry__ as E
+def test_keyword_lift_brute_force(ctx):
     from hilbert_curve_spark.operators.brq import keyword_lift
 
-    geo = E.Ctx(spark, sf_dir).doc_geo
+    geo = ctx.doc_geo
     rows = geo.selectExpr(
         "(x DIV 64) * 64 + (y DIV 64) AS gcell_raw", "x", "y", "keywords"
     ).select("x", "y", "keywords").collect()

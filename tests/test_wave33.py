@@ -4,11 +4,10 @@ shingle-containment (quote detection) pairs."""
 from hilbert_curve_spark import workload as W
 
 
-def test_cell_gradient_brute_force(spark, sf_dir):
-    import __spark_entry__ as E
+def test_cell_gradient_brute_force(ctx):
     from hilbert_curve_spark.operators.rollup import cell_gradient
 
-    geo = E.Ctx(spark, sf_dir).doc_geo
+    geo = ctx.doc_geo
     hist = {}
     for r in geo.select("x", "y").collect():
         key = (r.x >> 6, r.y >> 6)
@@ -38,11 +37,11 @@ def test_cell_gradient_brute_force(spark, sf_dir):
     assert any(g2 == 0 for *_, g2 in got)
 
 
-def test_fence_peak_occupancy_brute_force(spark, sf_dir):
+def test_fence_peak_occupancy_brute_force(spark, sf_dir, ctx):
     import __spark_entry__ as E
     from hilbert_curve_spark.operators.events import fence_peak_occupancy
 
-    events = E.Ctx(spark, sf_dir).events
+    events = ctx.events
     dwell = E.queries()["geofence_dwell"](spark, sf_dir).collect()
     marks = {}
     epi = {}

@@ -2,12 +2,11 @@
 round-trips must be lossless."""
 
 
-def _box_rows(spark, sf_dir):
-    import __spark_entry__ as E
+def _box_rows(ctx):
     from hilbert_curve_spark import workload as W
     from pyspark.sql import functions as F
 
-    dg = E.Ctx(spark, sf_dir).doc_geo
+    dg = ctx.doc_geo
     return {
         (r.doc_id, r.x, r.y)
         for r in dg.filter(
@@ -17,17 +16,17 @@ def _box_rows(spark, sf_dir):
     }
 
 
-def test_jsonl_roundtrip(spark, sf_dir):
+def test_jsonl_roundtrip(spark, sf_dir, ctx):
     import __spark_entry__ as E
 
     got = {tuple(r) for r in E.queries()["jsonl_roundtrip"](spark, sf_dir).collect()}
-    assert got == _box_rows(spark, sf_dir)
+    assert got == _box_rows(ctx)
     assert got
 
 
-def test_orc_roundtrip(spark, sf_dir):
+def test_orc_roundtrip(spark, sf_dir, ctx):
     import __spark_entry__ as E
 
     got = {tuple(r) for r in E.queries()["orc_roundtrip"](spark, sf_dir).collect()}
-    assert got == _box_rows(spark, sf_dir)
+    assert got == _box_rows(ctx)
     assert got

@@ -4,13 +4,12 @@ Markov next-cell accuracy, and per-cell lag-1 autocorrelation moments."""
 from pyspark.sql import functions as F
 
 
-def _events_pts(spark, sf_dir):
-    import __spark_entry__ as E
+def _events_pts(ctx):
     from hilbert_curve_spark.sources import derive
 
     return [
         (r.user_id, r.ep, r.event_id, r.x, r.y)
-        for r in E.Ctx(spark, sf_dir).events
+        for r in ctx.events
         .select(
             "user_id",
             F.col("ts").cast("timestamp").cast("long").alias("ep"),
@@ -22,11 +21,11 @@ def _events_pts(spark, sf_dir):
     ]
 
 
-def test_traj_resample_brute_force(spark, sf_dir):
+def test_traj_resample_brute_force(spark, sf_dir, ctx):
     import __spark_entry__ as E
 
     step = 21600
-    pts = _events_pts(spark, sf_dir)
+    pts = _events_pts(ctx)
     by_user = {}
     for u, ep, eid, x, y in pts:
         by_user.setdefault(u, []).append((ep, eid, x, y))
@@ -64,14 +63,14 @@ def test_traj_resample_tick_grid(spark, sf_dir):
     assert out.filter((F.col("x") < 0) | (F.col("x") > 4095)).count() == 0
 
 
-def test_markov_accuracy_brute_force(spark, sf_dir):
+def test_markov_accuracy_brute_force(spark, sf_dir, ctx):
     import __spark_entry__ as E
     from hilbert_curve_spark import workload as W
     from hilbert_curve_spark.sources.derive import EDGE
 
     split = W.MARKOV_SPLIT_S
     step = 1 << 8
-    pts = _events_pts(spark, sf_dir)
+    pts = _events_pts(ctx)
     by_user = {}
     for u, ep, eid, x, y in pts:
         by_user.setdefault(u, []).append((ep, eid, (x // step) * EDGE + y // step))
@@ -97,12 +96,12 @@ def test_markov_accuracy_brute_force(spark, sf_dir):
     assert got
 
 
-def test_cell_autocorr_brute_force(spark, sf_dir):
+def test_cell_autocorr_brute_force(spark, sf_dir, ctx):
     import __spark_entry__ as E
     from hilbert_curve_spark.sources.derive import EDGE
 
     step = 1 << 8
-    pts = _events_pts(spark, sf_dir)
+    pts = _events_pts(ctx)
     hourly = {}
     for _, ep, _, x, y in pts:
         key = ((x // step) * EDGE + y // step, ep // 3600)

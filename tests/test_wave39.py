@@ -4,13 +4,13 @@ generalization and verbatim eval-probe contamination scanning."""
 from pyspark.sql import functions as F
 
 
-def test_anon_cells_brute_force(spark, sf_dir):
+def test_anon_cells_brute_force(spark, sf_dir, ctx):
     import __spark_entry__ as E
     from hilbert_curve_spark import workload as W
     from hilbert_curve_spark.config import DEFAULT
 
     k, lv = W.K_ANON, W.PYRAMID_LEVELS
-    geo = E.Ctx(spark, sf_dir).doc_geo
+    geo = ctx.doc_geo
     cells = [r.cell for r in geo.select("cell").collect()]
     from collections import Counter
 

@@ -12,7 +12,7 @@ def _fold10(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:10], 16)
 
 
-def test_spatial_split_brute_force(spark, sf_dir):
+def test_spatial_split_brute_force(spark, sf_dir, ctx):
     import __spark_entry__ as E
     from hilbert_curve_spark import workload as W
     from hilbert_curve_spark.sources import derive
@@ -23,7 +23,7 @@ def test_spatial_split_brute_force(spark, sf_dir):
     def is_test(bx, by):
         return _fold10(f"b|{bx}|{by}") % mod == 0
 
-    pts = E.Ctx(spark, sf_dir).doc_geo.select("x", "y").collect()
+    pts = ctx.doc_geo.select("x", "y").collect()
     agg = {}
     for r in pts:
         bx, by = r.x >> shift, r.y >> shift

@@ -52,28 +52,32 @@ def _components(cells):
     return sizes
 
 
-def test_percolation_curve_matches_per_threshold_labeling(spark):
+def test_percolation_curve_matches_per_threshold_labeling(spark, border_points):
     """The one-pass Newman-Ziff sweep must equal an independent component
-    labeling at every threshold."""
+    labeling at every threshold: on a scattered raster, on one whose cells
+    line all four grid borders, and on an empty raster (one all-zero row
+    per threshold, as the oracle returns)."""
     pts = _lcg_points(300, seed=43, edge=512)
     shift = 6
-    hist = _hist(pts, shift)
     thresholds = [1, 3, 5, 8]
-    got = {
-        (r.threshold, r.n_cells, r.n_regions, r.max_region_cells)
-        for r in percolation_curve(_geo(spark, pts), thresholds, shift).collect()
-    }
-    want = set()
-    for t in thresholds:
-        cells = [c for c, n in hist.items() if n >= t]
-        sizes = _components(cells)
-        want.add((t, len(cells), len(sizes), max(sizes) if sizes else 0))
-    assert got == want
-    # the sweep must be non-trivial: strictly fewer cells at the top
-    # threshold, and at least one threshold with >1 region
-    by_t = {r[0]: r for r in got}
-    assert by_t[8][1] < by_t[1][1]
-    assert any(r[2] > 1 for r in got)
+    for case in (pts, border_points, []):
+        hist = _hist(case, shift)
+        got = {
+            (r.threshold, r.n_cells, r.n_regions, r.max_region_cells)
+            for r in percolation_curve(_geo(spark, case), thresholds, shift).collect()
+        }
+        want = set()
+        for t in thresholds:
+            cells = [c for c, n in hist.items() if n >= t]
+            sizes = _components(cells)
+            want.add((t, len(cells), len(sizes), max(sizes) if sizes else 0))
+        assert got == want
+        if case is pts:
+            # the sweep must be non-trivial: strictly fewer cells at the top
+            # threshold, and at least one threshold with >1 region
+            by_t = {r[0]: r for r in got}
+            assert by_t[8][1] < by_t[1][1]
+            assert any(r[2] > 1 for r in got)
 
 
 def test_percolation_monotonicity(spark):
@@ -118,22 +122,22 @@ def _brute_watershed(hist, m):
     return {(k, c, d, p) for k, (c, d, p) in basins.items()}
 
 
-def test_watershed_basins_match_brute_force(spark):
-    pts = _lcg_points(700, seed=29, edge=512)
+def test_watershed_basins_match_brute_force(spark, border_points):
     shift = 6
     m = DEFAULT.edge >> shift
-    hist = _hist(pts, shift)
-    want = _brute_watershed(hist, m)
-    got = {
-        (r.basin, r.n_cells, r.n_docs, r.peak_docs)
-        for r in watershed_basins(_geo(spark, pts), shift).collect()
-    }
-    assert got == want
-    # conservation: every occupied cell and every doc lands in one basin
-    assert sum(r[1] for r in got) == len(hist)
-    assert sum(r[2] for r in got) == len(pts)
-    # non-trivial: more than one basin, and some basin has >1 cell
-    assert len(got) > 1 and any(r[1] > 1 for r in got)
+    for pts in (_lcg_points(700, seed=29, edge=512), border_points):
+        hist = _hist(pts, shift)
+        want = _brute_watershed(hist, m)
+        got = {
+            (r.basin, r.n_cells, r.n_docs, r.peak_docs)
+            for r in watershed_basins(_geo(spark, pts), shift).collect()
+        }
+        assert got == want
+        # conservation: every occupied cell and every doc lands in one basin
+        assert sum(r[1] for r in got) == len(hist)
+        assert sum(r[2] for r in got) == len(pts)
+        # non-trivial: more than one basin, and some basin has >1 cell
+        assert len(got) > 1 and any(r[1] > 1 for r in got)
 
 
 def test_watershed_peak_is_basin_max(spark):

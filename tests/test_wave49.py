@@ -48,27 +48,27 @@ def _pointers(h, m):
     return ptr
 
 
-def test_flow_accumulation_matches_brute_force(spark):
-    pts = _lcg_points(400, seed=21)
+def test_flow_accumulation_matches_brute_force(spark, border_points):
     m = 64
-    h = _hist(pts)
-    ptr = _pointers(h, m)
-    # brute force: push every cell's mass along its full pointer chain
-    acc = {c: 0 for c in h}
-    for c, n in h.items():
-        cur = c
-        while True:
-            acc[cur] += n
-            nxt = ptr[cur]
-            if nxt == cur:
-                break
-            cur = nxt
-    got = {
-        r["cell"]: (r["n_docs"], r["acc_docs"])
-        for r in flow_accumulation(_geo(spark, pts)).collect()
-    }
-    expect = {gx * m + gy: (h[(gx, gy)], acc[(gx, gy)]) for gx, gy in h}
-    assert got == expect
+    for pts in (_lcg_points(400, seed=21), border_points):
+        h = _hist(pts)
+        ptr = _pointers(h, m)
+        # brute force: push every cell's mass along its full pointer chain
+        acc = {c: 0 for c in h}
+        for c, n in h.items():
+            cur = c
+            while True:
+                acc[cur] += n
+                nxt = ptr[cur]
+                if nxt == cur:
+                    break
+                cur = nxt
+        got = {
+            r["cell"]: (r["n_docs"], r["acc_docs"])
+            for r in flow_accumulation(_geo(spark, pts)).collect()
+        }
+        expect = {gx * m + gy: (h[(gx, gy)], acc[(gx, gy)]) for gx, gy in h}
+        assert got == expect
 
 
 def test_flow_accumulation_conservation(spark):
