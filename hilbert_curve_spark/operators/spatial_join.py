@@ -19,7 +19,10 @@ Scale design notes:
   naive 9x.  The join is a plain shuffled hash equi-join on the cell key
   (AQE skew-split backstops the gaussian hot cells); no distinct pass is
   needed because each unordered pair is emitted exactly once by
-  construction.
+  construction.  The blocking lives in ONE helper, ``_within_radius``
+  (this unordered form, plus a directed 3x3 form), which every
+  within-radius point pairing calls: the kNN graph, IDW, the doc x event
+  join, and trajectory's stay-contact, Hausdorff and Knox joins.
 
 * ``knn_join`` — the batched form of ``operators/knn.py``: every query point
   compiles to a Hilbert cover of its L-inf candidate box, all covers ride
@@ -42,7 +45,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
@@ -52,12 +55,98 @@ from .range_query import cover_cells_probe, compile_box
 
 # self + E/NE/N/NW: half the 8-neighborhood (negations cover the other half)
 _HALF_OFFSETS = [(0, 0), (1, 0), (1, 1), (0, 1), (-1, 1)]
+_NINE_OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 
 
 def _cell_shift(radius: int) -> int:
     """Smallest s with 2**s >= radius (cell edge >= radius guarantees any
     pair within ``radius`` spans at most one cell step per axis)."""
     return max(1, int(radius - 1).bit_length())
+
+
+def _cell_key(gx, gy, edge: int, off=None):
+    """Composite equi-join key of cell ``(gx, gy)`` moved by ``off = (dx,
+    dy)``: ``(gx + dx) * edge + gy + dy`` — the one key format of every
+    blocked join, for Columns and plain Python ints alike.  ``edge`` is at
+    least the cells per axis + 2, so the key is injective over every
+    neighbour a probe can reach (off-lattice neighbours match nothing)."""
+    if off is None:
+        return gx * edge + gy
+    dx, dy = off
+    return (gx + dx) * edge + gy + dy
+
+
+def _within_radius(
+    probe: DataFrame,
+    home: DataFrame,
+    radius: int,
+    config: EngineConfig = DEFAULT,
+    tie: str | None = None,
+    keep: Column | None = None,
+) -> DataFrame:
+    """The within-radius blocked join: every (probe row, home row) pair
+    whose points lie within L2 ``radius``.  Each frame carries its point as
+    ``x, y``; every column comes back suffixed ``_a`` (probe) or ``_b``
+    (home), plus ``dist2`` (long, ``<= radius**2``).
+
+    Both sides key to ``2**s``-cells with ``s = _cell_shift(radius)``, so a
+    qualifying pair is at most one cell step apart per axis.  The probe
+    explodes its neighbour offsets and the sides equi-join on one
+    ``_cell_key``; ``keep`` (a Column over the suffixed names) filters the
+    joined candidates before the distance residual.
+
+    * Directed form (default): the full 3x3 neighbourhood, so each ordered
+      (probe, home) pair meets exactly once.
+    * Unordered self-join form (``tie`` names a unique id column, probe and
+      home the same points): the five half-offsets, and same-cell pairs
+      keep only ``tie_a < tie_b`` — each unordered pair is emitted exactly
+      once, 5x probe replication instead of 9x, no dedup pass."""
+    s = _cell_shift(radius)
+    edge = config.edge
+    r2 = int(radius) * int(radius)
+    offs = ", ".join(
+        f"named_struct('dx', {dx}L, 'dy', {dy}L)"
+        for dx, dy in (_NINE_OFFSETS if tie is None else _HALF_OFFSETS)
+    )
+    a = (
+        probe.select(
+            *[F.col(c).alias(f"{c}_a") for c in probe.columns],
+            F.shiftright("x", s).alias("gx"),
+            F.shiftright("y", s).alias("gy"),
+        )
+        .withColumn("o", F.explode(F.expr(f"array({offs})")))
+        .withColumn(
+            "ck", _cell_key(F.col("gx"), F.col("gy"), edge, (F.col("o.dx"), F.col("o.dy")))
+        )
+    )
+    b = home.select(
+        *[F.col(c).alias(f"{c}_b") for c in home.columns],
+        _cell_key(F.shiftright("x", s), F.shiftright("y", s), edge).alias("ck"),
+    )
+    pairs = a.join(b, "ck")
+    if tie is not None:
+        same_cell = (F.col("o.dx") == 0) & (F.col("o.dy") == 0)
+        pairs = pairs.filter(~same_cell | (F.col(f"{tie}_a") < F.col(f"{tie}_b")))
+    if keep is not None:
+        pairs = pairs.filter(keep)
+    dist2 = (F.col("x_a") - F.col("x_b")) ** 2 + (F.col("y_a") - F.col("y_b")) ** 2
+    return (
+        pairs.withColumn("dist2", dist2.cast("long"))
+        .filter(F.col("dist2") <= r2)
+        .drop("ck", "o", "gx", "gy")
+    )
+
+
+def _poi_cells(spark, pois: list[tuple[str, int, int]], s: int, edge: int) -> DataFrame:
+    """Each POI replicated in Python to its 3x3 neighbour ``2**s``-cells
+    (9 literal rows per POI, keyed by ``_cell_key``): ``(poi_id, px, py,
+    ck)``."""
+    rows = [
+        (pid, px, py, _cell_key(px >> s, py >> s, edge, off))
+        for pid, px, py in pois
+        for off in _NINE_OFFSETS
+    ]
+    return spark.createDataFrame(rows, "poi_id string, px long, py long, ck long")
 
 
 def distance_self_join(
@@ -69,41 +158,11 @@ def distance_self_join(
     Exact (the cell blocking is lossless for c >= radius); one shuffled hash
     join on the composite cell key; no post-join dedup needed.
     """
-    s = _cell_shift(radius)
-    edge = config.edge
-    r2 = radius * radius
-
-    def keyed(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            F.col("doc_id").alias(f"id_{tag}"),
-            F.col("x").alias(f"x_{tag}"),
-            F.col("y").alias(f"y_{tag}"),
-            F.shiftright("x", s).alias(f"cx_{tag}"),
-            F.shiftright("y", s).alias(f"cy_{tag}"),
-        )
-
-    offs = ", ".join(
-        f"named_struct('dx', {dx}L, 'dy', {dy}L)" for dx, dy in _HALF_OFFSETS
-    )
-    probe = (
-        keyed(doc_geo, "a")
-        .withColumn("o", F.explode(F.expr(f"array({offs})")))
-        .withColumn("ck", (F.col("cx_a") + F.col("o.dx")) * edge + F.col("cy_a") + F.col("o.dy"))
-    )
-    home = keyed(doc_geo, "b").withColumn(
-        "ck", F.col("cx_b") * edge + F.col("cy_b")
-    )
-    dist2 = (F.col("x_a") - F.col("x_b")) ** 2 + (F.col("y_a") - F.col("y_b")) ** 2
-    same_cell = (F.col("o.dx") == 0) & (F.col("o.dy") == 0)
-    pairs = (
-        probe.join(home, "ck")
-        .filter(~same_cell | (F.col("id_a") < F.col("id_b")))
-        .withColumn("dist2", dist2.cast("long"))
-        .filter(F.col("dist2") <= r2)
-    )
+    pts = doc_geo.select("doc_id", "x", "y")
+    pairs = _within_radius(pts, pts, radius, config, tie="doc_id")
     return pairs.select(
-        F.least("id_a", "id_b").alias("doc_a"),
-        F.greatest("id_a", "id_b").alias("doc_b"),
+        F.least("doc_id_a", "doc_id_b").alias("doc_a"),
+        F.greatest("doc_id_a", "doc_id_b").alias("doc_b"),
         "dist2",
     )
 
@@ -149,14 +208,7 @@ def distance_join(
     s = _cell_shift(radius)
     edge = config.edge
     r2 = radius * radius
-    spark = doc_geo.sparkSession
-    rows = [
-        (pid, px, py, ((px >> s) + dx) * edge + ((py >> s) + dy))
-        for pid, px, py in pois
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    ]
-    poi_df = spark.createDataFrame(rows, "poi_id string, px long, py long, ck long")
+    poi_df = _poi_cells(doc_geo.sparkSession, pois, s, edge)
     covers = []
     for _, px, py in pois:
         x_lo, x_hi = max(0, px - radius), min(edge - 1, px + radius)
@@ -166,9 +218,7 @@ def distance_join(
     dist2 = (F.col("x") - F.col("px")) ** 2 + (F.col("y") - F.col("py")) ** 2
     return (
         doc_geo.filter(range_predicate(prefilter))
-        .withColumn(
-            "ck", F.shiftright("x", s) * edge + F.shiftright("y", s)
-        )
+        .withColumn("ck", _cell_key(F.shiftright("x", s), F.shiftright("y", s), edge))
         .join(F.broadcast(poi_df), "ck")
         .withColumn("dist2", dist2.cast("long"))
         .filter(F.col("dist2") <= r2)
@@ -525,17 +575,10 @@ def nearest_join_bucketed(
     s = _cell_shift(radius)
     edge = config.edge
     r2 = radius * radius
-    spark = doc_geo.sparkSession
-    rows = [
-        (pid, px, py, ((px >> s) + dx) * edge + ((py >> s) + dy))
-        for pid, px, py in pois
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    ]
-    poi_df = spark.createDataFrame(rows, "poi_id string, px long, py long, ck long")
+    poi_df = _poi_cells(doc_geo.sparkSession, pois, s, edge)
     dist2 = (F.col("x") - F.col("px")) ** 2 + (F.col("y") - F.col("py")) ** 2
     cand = (
-        doc_geo.withColumn("ck", F.shiftright("x", s) * edge + F.shiftright("y", s))
+        doc_geo.withColumn("ck", _cell_key(F.shiftright("x", s), F.shiftright("y", s), edge))
         .join(F.broadcast(poi_df), "ck")
         .withColumn("dist2", dist2.cast("long"))
         .filter(F.col("dist2") <= r2)
@@ -639,7 +682,7 @@ def rect_self_join(
             .withColumn(
                 "cy", F.expr(f"explode(sequence(y_lo_{tag} >> {s}, y_hi_{tag} >> {s}))")
             )
-            .withColumn("ck", F.col("cx") * edge + F.col("cy"))
+            .withColumn("ck", _cell_key(F.col("cx"), F.col("cy"), edge))
         )
     a = replicated("a")
     b = replicated("b").drop("cx", "cy")
@@ -804,14 +847,14 @@ def snap_to_road_bucketed(
         ylo, yhi = min(ay, by), max(ay, by)
         for cx in range(max(0, xlo - radius) >> s, (min(edge - 1, xhi + radius) >> s) + 1):
             for cy in range(max(0, ylo - radius) >> s, (min(edge - 1, yhi + radius) >> s) + 1):
-                rows.append((rid, xlo, xhi, ylo, yhi, cx * edge + cy))
+                rows.append((rid, xlo, xhi, ylo, yhi, _cell_key(cx, cy, edge)))
     road_df = spark.createDataFrame(
         rows, "road_id string, xlo long, xhi long, ylo long, yhi long, ck long"
     )
     dx = F.greatest(F.col("xlo") - F.col("x"), F.col("x") - F.col("xhi"), F.lit(0))
     dy = F.greatest(F.col("ylo") - F.col("y"), F.col("y") - F.col("yhi"), F.lit(0))
     cand = (
-        doc_geo.withColumn("ck", F.shiftright("x", s) * edge + F.shiftright("y", s))
+        doc_geo.withColumn("ck", _cell_key(F.shiftright("x", s), F.shiftright("y", s), edge))
         .join(F.broadcast(road_df), "ck")
         .withColumn("dist2", (dx * dx + dy * dy).cast("long"))
         .filter(F.col("dist2") <= r2)
@@ -917,45 +960,17 @@ def _directed_in_radius(
     config: EngineConfig = DEFAULT,
 ) -> DataFrame:
     """Every ordered (doc_id, nbr_id, dist2) pair with the probe doc's
-    neighbor within L2 ``radius`` — the 9-cell blocked directed join
-    shared by both :func:`knn_graph` passes (probe replicates 9x, home
-    keys its own cell; each ordered pair meets exactly once)."""
-    s = _cell_shift(radius)
-    edge = config.edge
-    r2 = int(radius) * int(radius)
-
-    def keyed(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            F.col("doc_id").alias(f"id_{tag}"),
-            F.col("x").alias(f"x_{tag}"),
-            F.col("y").alias(f"y_{tag}"),
-            F.shiftright("x", s).alias(f"cx_{tag}"),
-            F.shiftright("y", s).alias(f"cy_{tag}"),
-        )
-
-    offs = ", ".join(
-        f"named_struct('dx', {dx}L, 'dy', {dy}L)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
+    neighbor within L2 ``radius`` — the directed 3x3 form of
+    :func:`_within_radius`, shared by both :func:`knn_graph` passes."""
+    pairs = _within_radius(
+        probe_geo.select("doc_id", "x", "y"),
+        home_geo.select("doc_id", "x", "y"),
+        radius,
+        config,
+        keep=F.col("doc_id_a") != F.col("doc_id_b"),
     )
-    probe = (
-        keyed(probe_geo, "a")
-        .withColumn("o", F.explode(F.expr(f"array({offs})")))
-        .withColumn(
-            "ck",
-            (F.col("cx_a") + F.col("o.dx")) * edge + F.col("cy_a") + F.col("o.dy"),
-        )
-    )
-    home = keyed(home_geo, "b").withColumn("ck", F.col("cx_b") * edge + F.col("cy_b"))
-    dist2 = (F.col("x_a") - F.col("x_b")) ** 2 + (F.col("y_a") - F.col("y_b")) ** 2
-    return (
-        probe.join(home, "ck")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .withColumn("dist2", dist2.cast("long"))
-        .filter(F.col("dist2") <= r2)
-        .select(
-            F.col("id_a").alias("doc_id"), F.col("id_b").alias("nbr_id"), "dist2"
-        )
+    return pairs.select(
+        F.col("doc_id_a").alias("doc_id"), F.col("doc_id_b").alias("nbr_id"), "dist2"
     )
 
 
@@ -1322,8 +1337,6 @@ def idw_surface(
     if int(scale) <= int(radius) * int(radius):
         raise ValueError("idw_surface requires scale > radius^2 (weights >= 1)")
     g = int(grid_shift)
-    r2 = int(radius) * int(radius)
-    b = _cell_shift(int(radius))
     edge = config.edge
     half = 1 << (g - 1) if g > 0 else 0
 
@@ -1334,39 +1347,19 @@ def idw_surface(
         .distinct()
         .select(
             (F.col("gx") * edge + F.col("gy")).alias("cell"),
-            (F.col("gx") * (1 << g) + half).alias("qx"),
-            (F.col("gy") * (1 << g) + half).alias("qy"),
+            (F.col("gx") * (1 << g) + half).alias("x"),
+            (F.col("gy") * (1 << g) + half).alias("y"),
         )
     )
-    nine = ", ".join(
-        f"named_struct('dx', {dx}L, 'dy', {dy}L)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
-    probe = centers.withColumn("o", F.explode(F.expr(f"array({nine})"))).withColumn(
-        "bk",
-        (F.shiftright("qx", b) + F.col("o.dx")) * edge
-        + F.shiftright("qy", b)
-        + F.col("o.dy"),
-    )
-    samples = doc_geo.select(
-        "x", "y", F.expr(_IDW_VALUE_SQL).cast("long").alias("v")
-    ).withColumn("bk", F.shiftright("x", b) * edge + F.shiftright("y", b))
-    joined = probe.join(samples, "bk").filter(
-        (F.col("qx") - F.col("x")) * (F.col("qx") - F.col("x"))
-        + (F.col("qy") - F.col("y")) * (F.col("qy") - F.col("y"))
-        <= F.lit(r2)
-    )
-    w_expr = (
-        f"CAST({int(scale)} DIV (1 + (qx - x) * (qx - x) + (qy - y) * (qy - y))"
-        f" AS BIGINT)"
-    )
+    samples = doc_geo.select("x", "y", F.expr(_IDW_VALUE_SQL).cast("long").alias("v"))
+    joined = _within_radius(centers, samples, radius, config)
+    w_expr = f"CAST({int(scale)} DIV (1 + dist2) AS BIGINT)"
     return (
         joined.withColumn("w", F.expr(w_expr))
-        .groupBy("cell")
+        .groupBy(F.col("cell_a").alias("cell"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_samples"),
-            F.expr("CAST(SUM(w * v) DIV SUM(w) AS BIGINT)").alias("est"),
+            F.expr("CAST(SUM(w * v_b) DIV SUM(w) AS BIGINT)").alias("est"),
         )
     )
 
@@ -1778,43 +1771,15 @@ def doc_event_join(
     set-at-a-time two-table join."""
     from ..sources import derive
 
-    b = max(1, int(radius - 1).bit_length())
-    r2 = int(radius) * int(radius)
-    m = config.edge >> b
     ev = events.filter(F.col("event_id") % int(event_mod) == 0).select(
         "event_id",
         "event_type",
-        F.expr(derive.x_sql("event_id")).alias("ex"),
-        F.expr(derive.y_sql("event_id")).alias("ey"),
+        F.expr(derive.x_sql("event_id")).alias("x"),
+        F.expr(derive.y_sql("event_id")).alias("y"),
     )
-    nine = F.expr(
-        "array(" + ", ".join(
-            f"struct({dx} AS dx, {dy} AS dy)"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        ) + ")"
-    )
-    probes = ev.select(
-        "event_id", "ex", "ey", F.explode(nine).alias("o")
-    ).select(
-        "event_id",
-        "ex",
-        "ey",
-        (
-            (F.shiftright("ex", b) + F.col("o.dx")) * (m + 2)
-            + F.shiftright("ey", b)
-            + F.col("o.dy")
-        ).alias("ck"),
-    )
-    docs = doc_geo.select(
-        "x", "y", (F.shiftright("x", b) * (m + 2) + F.shiftright("y", b)).alias("ck")
-    )
-    d2 = (F.col("x") - F.col("ex")) * (F.col("x") - F.col("ex")) + (
-        F.col("y") - F.col("ey")
-    ) * (F.col("y") - F.col("ey"))
     counts = (
-        probes.join(docs, "ck")
-        .filter(d2 <= r2)
-        .groupBy("event_id")
+        _within_radius(ev.select("event_id", "x", "y"), doc_geo.select("x", "y"), radius, config)
+        .groupBy(F.col("event_id_a").alias("event_id"))
         .agg(F.count("*").alias("nd"))
     )
     return ev.join(counts, "event_id", "left").select(

@@ -248,68 +248,24 @@ def colocation_pairs(
     dist2, overlap_s)`` with ``user_a < user_b`` — every qualifying stay
     pair exactly once.
 
-    Plan shape: the stay table (already aggregated — orders of magnitude
-    smaller than events) is blocked on ``max_dist``-sized centroid cells;
-    the probe side replicates to the 9-cell neighborhood (lossless for
-    cell >= max_dist) and hash-joins the home cell, with the distance AND
-    interval-overlap predicates as join residuals — so the only shuffle
-    beyond stay_points' own is one equi-join on the composite cell key,
-    never an all-pairs product.  The ``user_a < user_b`` residual keeps
-    exactly one orientation of each pair (the 9 offsets hit 9 distinct
-    target cells, so no orientation is emitted twice)."""
-    from .spatial_join import _cell_shift
-
-    d2 = int(max_dist) * int(max_dist)
-    min_ov = int(min_overlap_minutes) * 60
-    s = _cell_shift(int(max_dist))
-    # centroid grid is the lattice itself: edge cells suffice for the key
-    from ..sources.derive import EDGE
-
-    stays = stay_points(
-        events, radius=radius, gap_minutes=gap_minutes,
-        min_minutes=min_minutes, min_points=min_points,
-    ).localCheckpoint(eager=False)  # probe + home both consume the
-    # sessionization window — pin it so events shuffle once, not twice
-
-    def keyed(tag: str) -> DataFrame:
-        return stays.select(
-            F.col("user_id").alias(f"user_{tag}"),
-            F.col("stay_id").alias(f"stay_{tag}"),
-            F.col("start_s").alias(f"start_{tag}"),
-            F.col("end_s").alias(f"end_{tag}"),
-            F.col("cx").alias(f"cx_{tag}"),
-            F.col("cy").alias(f"cy_{tag}"),
-            F.shiftright("cx", s).alias(f"gx_{tag}"),
-            F.shiftright("cy", s).alias(f"gy_{tag}"),
-        )
-
-    offs = ", ".join(
-        f"named_struct('dx', {dx}L, 'dy', {dy}L)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
+    The same operator as :func:`stay_contacts` — one implementation, with
+    the overlap bound given in minutes."""
+    return stay_contacts(
+        events, radius, gap_minutes, min_minutes, min_points,
+        dist=max_dist, min_overlap_s=int(min_overlap_minutes) * 60,
     )
-    probe = (
-        keyed("a")
-        .withColumn("o", F.explode(F.expr(f"array({offs})")))
-        .withColumn(
-            "ck", (F.col("gx_a") + F.col("o.dx")) * EDGE + F.col("gy_a") + F.col("o.dy")
-        )
-    )
-    home = keyed("b").withColumn("ck", F.col("gx_b") * EDGE + F.col("gy_b"))
-    dist2 = (F.col("cx_a") - F.col("cx_b")) ** 2 + (
-        F.col("cy_a") - F.col("cy_b")
-    ) ** 2
-    overlap = F.least("end_a", "end_b") - F.greatest("start_a", "start_b")
-    return (
-        probe.join(home, "ck")
-        .filter(F.col("user_a") < F.col("user_b"))
-        .withColumn("dist2", dist2.cast("long"))
-        .filter(F.col("dist2") <= F.lit(d2))
-        .withColumn("overlap_s", overlap)
-        .filter(F.col("overlap_s") >= F.lit(min_ov))
-        .select(
-            "user_a", "stay_a", "user_b", "stay_b", "dist2", "overlap_s"
-        )
+
+
+def _stay_side(stays: DataFrame) -> DataFrame:
+    """The stay table as one side of a within-radius join: the centroid is
+    the ``x, y`` point, the rest is payload."""
+    return stays.select(
+        F.col("user_id").alias("user"),
+        F.col("stay_id").alias("stay"),
+        F.col("start_s").alias("start"),
+        F.col("end_s").alias("end"),
+        F.col("cx").alias("x"),
+        F.col("cy").alias("y"),
     )
 
 
@@ -415,7 +371,8 @@ def hausdorff_pairs(
 
     Physical plan, never all-pairs:
 
-    1. candidate pairs — the 9-cell blocked stay join (cell >= max_h):
+    1. candidate pairs — the directed within-radius blocked stay join
+       (``spatial_join._within_radius``, cell >= max_h):
        ``H <= max_h`` forces EVERY a-stay within ``max_h`` of B, so in
        particular some stay pair is within ``max_h`` and the blocking is
        recall-COMPLETE; distinct to user pairs.
@@ -428,69 +385,31 @@ def hausdorff_pairs(
 
     All shuffles are hash aggregations/joins on pair or user keys — no
     window sort, no product beyond the blocked candidates."""
-    from .spatial_join import _cell_shift
-    from ..sources.derive import EDGE
+    from .spatial_join import _within_radius
 
     h2 = int(max_h) * int(max_h)
-    s = _cell_shift(int(max_h))
     # the stay derivation (full event shuffle + gap-and-island window)
     # feeds FOUR consumers (blocking probe/home + both per-user stay
     # sides) — pin it once instead of re-sessionizing per consumer
-    stays = stay_points(
-        events, radius=radius, gap_minutes=gap_minutes,
-        min_minutes=min_minutes, min_points=min_points,
-    ).localCheckpoint(eager=False)
-
-    offs = ", ".join(
-        f"named_struct('dx', {dx}L, 'dy', {dy}L)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
+    stays = _stay_side(
+        stay_points(
+            events, radius=radius, gap_minutes=gap_minutes,
+            min_minutes=min_minutes, min_points=min_points,
+        ).localCheckpoint(eager=False)
     )
-    probe = (
-        stays.select(
-            F.col("user_id").alias("user_a"),
-            F.col("cx").alias("pcx"),
-            F.col("cy").alias("pcy"),
-        )
-        .withColumn("o", F.explode(F.expr(f"array({offs})")))
-        .withColumn(
-            "ck",
-            (F.shiftright("pcx", s) + F.col("o.dx")) * EDGE
-            + F.shiftright("pcy", s)
-            + F.col("o.dy"),
-        )
-    )
-    home = stays.select(
-        F.col("user_id").alias("user_b"),
-        F.col("cx").alias("hcx"),
-        F.col("cy").alias("hcy"),
-    ).withColumn("ck", F.shiftright("hcx", s) * EDGE + F.shiftright("hcy", s))
-    cd2 = (
-        (F.col("pcx") - F.col("hcx")) ** 2 + (F.col("pcy") - F.col("hcy")) ** 2
-    ).cast("long")
     cand = (
-        probe.join(home, "ck")
-        .filter(F.col("user_a") < F.col("user_b"))
-        .filter(cd2 <= F.lit(h2))
+        _within_radius(stays, stays, max_h, keep=F.col("user_a") < F.col("user_b"))
         .select("user_a", "user_b")
         .distinct()
     )
-    sa = stays.select(
-        F.col("user_id").alias("user_a"),
-        F.col("stay_id").alias("stay_a"),
-        F.col("cx").alias("ax"),
-        F.col("cy").alias("ay"),
-    )
-    sb = stays.select(
-        F.col("user_id").alias("user_b"),
-        F.col("stay_id").alias("stay_b"),
-        F.col("cx").alias("bx"),
-        F.col("cy").alias("by"),
-    )
+
+    def side(t: str) -> DataFrame:
+        return stays.select(*[F.col(c).alias(f"{c}_{t}") for c in ("user", "stay", "x", "y")])
+
     d2 = (
-        (F.col("ax") - F.col("bx")) ** 2 + (F.col("ay") - F.col("by")) ** 2
+        (F.col("x_a") - F.col("x_b")) ** 2 + (F.col("y_a") - F.col("y_b")) ** 2
     ).cast("long")
-    tri = cand.join(sa, "user_a").join(sb, "user_b").withColumn("d2", d2)
+    tri = cand.join(side("a"), "user_a").join(side("b"), "user_b").withColumn("d2", d2)
     h_ab = (
         tri.groupBy("user_a", "user_b", "stay_a")
         .agg(F.min("d2").alias("mn"))
@@ -1153,8 +1072,9 @@ def knox_stat(
     are exact integers so the caller can apply any reference distribution.
 
     Plan: NEVER all-pairs on the engine side —
-    - space pairs: the lossless 4-half-offset cell blocking of
-      ``distance_self_join`` at a cell size >= s_radius;
+    - space pairs: the unordered self-join form of the within-radius
+      blocked join (``spatial_join._within_radius``, the half-offset
+      blocking of ``distance_self_join``) at a cell size >= s_radius;
     - time pairs: the 1-D analogue — epoch buckets of width ``t_window``,
       each event probes its own and previous bucket (half-open dedup on
       event_id), so every qualifying pair meets in exactly one bucket;
@@ -1163,54 +1083,20 @@ def knox_stat(
     a 1-row aggregate; the three 1-row frames cross-broadcast into the
     final row.  Pair volume inside hot buckets is the statistic's honest
     cost (same note as pair_distance_histogram)."""
-    from ..sources.derive import EDGE
-    from .spatial_join import _cell_shift
+    from .spatial_join import _within_radius
 
-    # minimal lossless cell: smallest 2**s >= radius (the old
-    # bit_length-of-radius form overshot power-of-two radii by 2x per
-    # axis — 4x the candidate pairs at the default s_radius=64)
-    s = _cell_shift(int(s_radius))
-    r2 = int(s_radius) * int(s_radius)
     tw = int(t_window)
-    pts = _with_coords_epoch(events).select("event_id", "ex", "ey", "ep")
+    pts = _with_coords_epoch(events).select(
+        "event_id", F.col("ex").alias("x"), F.col("ey").alias("y"), "ep"
+    )
 
     n = pts.agg(F.count(F.lit(1)).cast("long").alias("n"))
     n_pairs = n.select(
         F.expr("CAST(n * (n - 1) DIV 2 AS BIGINT)").alias("n_pairs")
     )
 
-    # --- space side: half-offset cell blocking (each unordered pair meets
-    # once: same-cell pairs via (0,0)+id<, cross-cell via the 4 half offsets)
-    offs = "named_struct('dx', 0L, 'dy', 0L), named_struct('dx', 1L, 'dy', 0L), " \
-           "named_struct('dx', 1L, 'dy', 1L), named_struct('dx', 0L, 'dy', 1L), " \
-           "named_struct('dx', 1L, 'dy', -1L)"
-    a = pts.select(
-        F.col("event_id").alias("id_a"),
-        F.col("ex").alias("x_a"), F.col("ey").alias("y_a"),
-        F.col("ep").alias("ep_a"),
-        F.shiftright("ex", s).alias("cx"), F.shiftright("ey", s).alias("cy"),
-    ).withColumn("o", F.explode(F.expr(f"array({offs})"))).withColumn(
-        "ck", (F.col("cx") + F.col("o.dx")) * EDGE + F.col("cy") + F.col("o.dy")
-    )
-    b = pts.select(
-        F.col("event_id").alias("id_b"),
-        F.col("ex").alias("x_b"), F.col("ey").alias("y_b"),
-        F.col("ep").alias("ep_b"),
-        (F.shiftright("ex", s) * EDGE + F.shiftright("ey", s)).alias("ck"),
-    )
-    same_cell = (F.col("o.dx") == 0) & (F.col("o.dy") == 0)
-    sp = (
-        a.join(b, "ck")
-        .filter(
-            (~same_cell | (F.col("id_a") < F.col("id_b")))
-            & (F.col("id_a") != F.col("id_b"))
-        )
-        .filter(
-            (F.col("x_a") - F.col("x_b")) * (F.col("x_a") - F.col("x_b"))
-            + (F.col("y_a") - F.col("y_b")) * (F.col("y_a") - F.col("y_b"))
-            <= F.lit(r2)
-        )
-    )
+    # --- space side: each unordered pair meets once (half-offset blocking)
+    sp = _within_radius(pts, pts, s_radius, tie="event_id")
     space_agg = sp.agg(
         F.count(F.lit(1)).cast("long").alias("n_space"),
         F.sum(
@@ -3348,82 +3234,32 @@ def stay_contacts(
     ``LEAST(end) - GREATEST(start)`` on whole-second epochs and distance is
     exact integer ``dist2`` between centroids.
 
-    Physical plan: the pair generation is the grid-blocked half-offset
-    join of ``distance_self_join`` applied to the STAY table (already
-    orders of magnitude smaller than the event stream): centroids key to
-    ``2^b``-cells with ``2^b >= dist``, the probe side explodes to the five
-    half-offsets (self + E/NE/N/NW — each unordered cell pair generated
-    exactly once), candidates equi-join on the cell key, and the
-    time-overlap + distance residuals run in codegen.  Two shuffles total
-    (user_id window for stays, cell key for the join); at 100 TB add the
-    day-bucket to the join key so state stays bounded per partition.
+    Physical plan: the pair generation is the directed form of the
+    within-radius blocked join (``spatial_join._within_radius``) applied to
+    the STAY table (already orders of magnitude smaller than the event
+    stream): centroids key to ``2^s``-cells with ``2^s >= dist``, the probe
+    side explodes to the 3x3 neighbourhood, candidates equi-join on the
+    cell key, and the ``user_a < user_b`` residual keeps exactly one
+    orientation of each cross-user pair (each ordered pair meets once).
+    The time-overlap + distance residuals run in codegen.  Two shuffles
+    total (user_id window for stays, cell key for the join); at 100 TB add
+    the day-bucket to the join key so state stays bounded per partition.
 
     Reference parity: the reference's pairwise point joins
     (`hilbert/HilbertComponent/GetPointIndex.java:59-93`) have no temporal
     dimension; this is their space-time contact extension."""
-    b = max(1, int(dist - 1).bit_length())
-    d2max = int(dist) * int(dist)
-    stays = stay_points(
-        events, radius, gap_minutes, min_minutes, min_points
-    ).localCheckpoint(eager=False)  # probe + home both read the stays
-    cells = stays.select(
-        "user_id",
-        "stay_id",
-        "start_s",
-        "end_s",
-        "cx",
-        "cy",
-        F.shiftright("cx", b).alias("bx"),
-        F.shiftright("cy", b).alias("by"),
+    from .spatial_join import _within_radius
+
+    stays = _stay_side(
+        stay_points(events, radius, gap_minutes, min_minutes, min_points)
+        .localCheckpoint(eager=False)  # probe + home both read the stays
     )
-    offsets = F.expr(
-        "array(struct(0 AS dx, 0 AS dy), struct(1 AS dx, 0 AS dy), "
-        "struct(1 AS dx, 1 AS dy), struct(0 AS dx, 1 AS dy), "
-        "struct(-1 AS dx, 1 AS dy))"
-    )
-    edge_cells = 1 << (12 - b) if b <= 12 else 1
-    probe = cells.select(
-        "*", F.explode(offsets).alias("o")
-    ).select(
-        *[F.col(c).alias(f"a_{c}") for c in cells.columns if c not in ("bx", "by")],
-        ((F.col("bx") + F.col("o.dx")) * (edge_cells + 2) + F.col("by") + F.col("o.dy")).alias("ck"),
-        F.col("o.dx").alias("dx"),
-        F.col("o.dy").alias("dy"),
-    )
-    build = cells.select(
-        *[F.col(c).alias(f"b_{c}") for c in cells.columns if c not in ("bx", "by")],
-        (F.col("bx") * (edge_cells + 2) + F.col("by")).alias("ck"),
-    )
-    d2 = (F.col("a_cx") - F.col("b_cx")) * (F.col("a_cx") - F.col("b_cx")) + (
-        F.col("a_cy") - F.col("b_cy")
-    ) * (F.col("a_cy") - F.col("b_cy"))
-    ov = F.least("a_end_s", "b_end_s") - F.greatest("a_start_s", "b_start_s")
-    pairs = (
-        probe.join(build, "ck")
-        .filter(
-            # same-cell offset: order the pair so it is emitted once;
-            # directional offsets generate each cross-cell pair exactly once
-            ((F.col("dx") != 0) | (F.col("dy") != 0) | (F.col("a_user_id") < F.col("b_user_id")))
-            & (F.col("a_user_id") != F.col("b_user_id"))
-        )
-        .filter((d2 <= d2max) & (ov >= int(min_overlap_s)))
-        .select(
-            F.col("a_user_id"),
-            F.col("a_stay_id"),
-            F.col("b_user_id"),
-            F.col("b_stay_id"),
-            d2.cast("long").alias("dist2"),
-            ov.cast("long").alias("overlap_s"),
-        )
-    )
-    swap = F.col("a_user_id") > F.col("b_user_id")
-    return pairs.select(
-        F.when(swap, F.col("b_user_id")).otherwise(F.col("a_user_id")).alias("user_a"),
-        F.when(swap, F.col("b_stay_id")).otherwise(F.col("a_stay_id")).alias("stay_a"),
-        F.when(swap, F.col("a_user_id")).otherwise(F.col("b_user_id")).alias("user_b"),
-        F.when(swap, F.col("a_stay_id")).otherwise(F.col("b_stay_id")).alias("stay_b"),
-        "dist2",
-        "overlap_s",
+    overlap = F.least("end_a", "end_b") - F.greatest("start_a", "start_b")
+    return (
+        _within_radius(stays, stays, dist, keep=F.col("user_a") < F.col("user_b"))
+        .withColumn("overlap_s", overlap.cast("long"))
+        .filter(F.col("overlap_s") >= int(min_overlap_s))
+        .select("user_a", "stay_a", "user_b", "stay_b", "dist2", "overlap_s")
     )
 
 

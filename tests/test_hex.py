@@ -4,6 +4,7 @@ of the exact integer arithmetic."""
 
 import duckdb
 import numpy as np
+import pandas as pd
 
 from hilbert_curve_spark.functions.cells import hex_cell_sql, hex_center
 
@@ -11,11 +12,12 @@ S = 16
 
 
 def _duck_cells(points):
+    """Hex cells of ``points`` computed by DuckDB, in input order."""
+    pts = np.asarray(points, dtype=np.int64).reshape(-1, 2)
     con = duckdb.connect()
-    con.execute("CREATE TABLE pts(x BIGINT, y BIGINT)")
-    con.executemany("INSERT INTO pts VALUES (?, ?)", [(int(x), int(y)) for x, y in points])
+    con.register("pts", pd.DataFrame({"i": np.arange(len(pts)), "x": pts[:, 0], "y": pts[:, 1]}))
     expr = hex_cell_sql("x", "y", S, div="//")
-    return [r[0] for r in con.execute(f"SELECT {expr} FROM pts").fetchall()]
+    return [r[0] for r in con.execute(f"SELECT {expr} FROM pts ORDER BY i").fetchall()]
 
 
 def _brute_best_dist(x, y):

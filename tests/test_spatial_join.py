@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from hilbert_curve_spark.config import DEFAULT, EngineConfig
 from hilbert_curve_spark.operators.encode import encode_documents  # noqa: F401 (import check)
 from hilbert_curve_spark.operators.spatial_join import (
+    _cell_shift,
     distance_self_join,
     knn_join,
     rect_self_join,
@@ -43,14 +44,28 @@ def _lcg_points(n, seed=7, edge=4096):
     return pts
 
 
-def test_distance_join_matches_brute_force(spark):
-    pts = _lcg_points(300, edge=256)  # dense enough for many pairs
-    got = {
-        (r.doc_a, r.doc_b, r.dist2)
-        for r in distance_self_join(_geo(spark, pts), 20, DEFAULT).collect()
-    }
-    assert got == _brute_pairs(pts, 20)
-    assert len(got) > 50  # non-vacuous
+def _on_last_cell_line(pts, doc_ids, radius):
+    """Whether any of ``doc_ids`` lies in the lattice's last cell column or
+    row at the blocking of ``radius`` (where a +1 probe offset leaves the
+    grid)."""
+    s = _cell_shift(radius)
+    last = (DEFAULT.edge >> s) - 1
+    return any(
+        pts[int(d[1:])][0] >> s == last or pts[int(d[1:])][1] >> s == last
+        for d in doc_ids
+    )
+
+
+def test_distance_join_matches_brute_force(spark, border_points):
+    # a dense 256-unit corner, then the lattice borders and corners
+    for pts in (_lcg_points(300, edge=256), border_points):
+        got = {
+            (r.doc_a, r.doc_b, r.dist2)
+            for r in distance_self_join(_geo(spark, pts), 20, DEFAULT).collect()
+        }
+        assert got == _brute_pairs(pts, 20)
+        assert len(got) > 50  # non-vacuous
+    assert _on_last_cell_line(border_points, {d for p in got for d in p[:2]}, 20)
 
 
 def test_distance_join_cell_border_and_boundary(spark):
@@ -628,28 +643,31 @@ def test_snap_bucketed_plan_no_bnlj(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_knn_graph_matches_brute_force(spark):
+def test_knn_graph_matches_brute_force(spark, border_points):
     from hilbert_curve_spark.operators.spatial_join import knn_graph
 
-    pts = _lcg_points(120, seed=31, edge=256)  # dense: real neighbor lists
     k, radius = 3, 24
-    got = {
-        (r.doc_id, r.rank, r.nbr_id, r.dist2)
-        for r in knn_graph(_geo(spark, pts), k, radius).collect()
-    }
-    ids = [f"d{i:04d}" for i in range(len(pts))]
-    want = set()
-    for i in range(len(pts)):
-        cands = []
-        for j in range(len(pts)):
-            if i == j:
-                continue
-            d2 = (pts[i][0] - pts[j][0]) ** 2 + (pts[i][1] - pts[j][1]) ** 2
-            if d2 <= radius * radius:
-                cands.append((d2, ids[j]))
-        for rank, (d2, nid) in enumerate(sorted(cands)[:k], 1):
-            want.add((ids[i], rank, nid, d2))
-    assert got == want
+    # dense 256-unit corner (real neighbor lists), then the lattice borders
+    for pts in (_lcg_points(120, seed=31, edge=256), border_points):
+        got = {
+            (r.doc_id, r.rank, r.nbr_id, r.dist2)
+            for r in knn_graph(_geo(spark, pts), k, radius).collect()
+        }
+        ids = [f"d{i:04d}" for i in range(len(pts))]
+        want = set()
+        for i in range(len(pts)):
+            cands = []
+            for j in range(len(pts)):
+                if i == j:
+                    continue
+                d2 = (pts[i][0] - pts[j][0]) ** 2 + (pts[i][1] - pts[j][1]) ** 2
+                if d2 <= radius * radius:
+                    cands.append((d2, ids[j]))
+            for rank, (d2, nid) in enumerate(sorted(cands)[:k], 1):
+                want.add((ids[i], rank, nid, d2))
+        assert got == want
+        assert got  # non-vacuous
+    assert _on_last_cell_line(border_points, {d for r in got for d in (r[0], r[2])}, radius)
 
 
 def test_knn_graph_symmetric_rank1_pairs(spark):
