@@ -38,7 +38,7 @@ from .hilbert import decode2d, encode2d
 
 __all__ = [
     "Cover", "cover_box", "cover_polygon", "coalesce_ranges", "dense_cover",
-    "ranges_to_sql_predicate", "cell_shift_for_budget", "expand_ranges_to_cells",
+    "cell_shift_for_budget", "expand_ranges_to_cells",
 ]
 
 
@@ -294,11 +294,6 @@ def dense_cover(x_lo: int, x_hi: int, y_lo: int, y_hi: int, order: int) -> Cover
         [(int(h[s]), int(h[e])) for s, e in zip(starts, ends)],
         x_lo, x_hi, y_lo, y_hi, order, exact=True,
     )
-
-
-def ranges_to_sql_predicate(ranges: list[tuple[int, int]], col: str = "hilbert") -> str:
-    """Render a cover as an OR-of-BETWEEN SQL predicate (pushdown-friendly)."""
-    return " OR ".join(f"({col} BETWEEN {lo} AND {hi})" for lo, hi in ranges)
 
 
 def cell_shift_for_budget(ranges: list[tuple[int, int]], budget: int = 4096) -> int:

@@ -57,20 +57,6 @@ def h3_cell_udf(resolution: int = 9):
     return _enc
 
 
-def s2_cell_udf(level: int = 13):
-    """(lat, lon degrees) -> S2 cell id (signed long, Java-S2 convention).
-
-    Vectorized numpy kernel (``curve/s2.py``) — no per-row Python, no
-    external s2 dependency."""
-
-    @F.pandas_udf("long")
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        ids = _s2k.cell_from_latlng(lat.to_numpy(), lon.to_numpy(), level)
-        return pd.Series(ids)
-
-    return _enc
-
-
 def s2_cell_xyz_udf(level: int = 13):
     """(vx, vy, vz doubles, unnormalized direction) -> S2 cell id (long).
 

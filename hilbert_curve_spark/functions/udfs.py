@@ -10,10 +10,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.column import Column
 from pyspark.sql.types import LongType
 
-from ..curve.hilbert import decode2d, encode2d
+from ..curve.hilbert import encode2d
 
 
 def hilbert_encode_udf(order: int):
@@ -25,25 +24,3 @@ def hilbert_encode_udf(order: int):
         return pd.Series(h)
 
     return _encode
-
-
-def hilbert_decode_x_udf(order: int):
-    @F.pandas_udf(LongType())
-    def _dx(h: pd.Series) -> pd.Series:
-        x, _ = decode2d(h.to_numpy(np.int64), order)
-        return pd.Series(x)
-
-    return _dx
-
-
-def hilbert_decode_y_udf(order: int):
-    @F.pandas_udf(LongType())
-    def _dy(h: pd.Series) -> pd.Series:
-        _, y = decode2d(h.to_numpy(np.int64), order)
-        return pd.Series(y)
-
-    return _dy
-
-
-def hilbert_col(x: Column, y: Column, order: int) -> Column:
-    return hilbert_encode_udf(order)(x, y)

@@ -20,7 +20,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
-from .range_query import box_residual, compile_box, range_predicate
+from .range_query import grq_range_mode
+
+
+def _keyword_filter(df: DataFrame, keywords: list[str], mode: str) -> DataFrame:
+    """BRQ keyword test: ``any`` keeps docs carrying >= 1 query keyword,
+    ``all`` docs carrying every one — a codegen array predicate against a
+    literal array."""
+    kw = F.array(*[F.lit(k) for k in keywords])
+    if mode == "any":
+        return df.filter(F.arrays_overlap(F.col("keywords"), kw))
+    if mode == "all":
+        return df.filter(
+            F.size(F.array_intersect(F.array_distinct(F.col("keywords")), kw))
+            == len(keywords)
+        )
+    raise ValueError(f"unknown mode {mode!r}")
 
 
 def brq(
@@ -30,18 +45,8 @@ def brq(
     mode: str = "any",
     config: EngineConfig = DEFAULT,
 ) -> DataFrame:
-    cover = compile_box(x_lo, x_hi, y_lo, y_hi, config)
-    out = doc_geo.filter(range_predicate(cover))
-    if not cover.exact:
-        out = out.filter(box_residual(cover))
-    kw = F.array(*[F.lit(k) for k in keywords])
-    if mode == "any":
-        out = out.filter(F.arrays_overlap(F.col("keywords"), kw))
-    elif mode == "all":
-        out = out.filter(F.size(F.array_intersect(F.array_distinct(F.col("keywords")), kw)) == len(keywords))
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-    return out
+    out = grq_range_mode(doc_geo, x_lo, x_hi, y_lo, y_hi, config)
+    return _keyword_filter(out, keywords, mode)
 
 
 def radius_search(
@@ -65,23 +70,13 @@ def radius_search(
     edge = config.edge
     x_lo, x_hi = max(0, qx - radius), min(edge - 1, qx + radius)
     y_lo, y_hi = max(0, qy - radius), min(edge - 1, qy + radius)
-    cover = compile_box(x_lo, x_hi, y_lo, y_hi, config)
-    out = doc_geo.filter(range_predicate(cover))
+    out = grq_range_mode(doc_geo, x_lo, x_hi, y_lo, y_hi, config)
     d2 = (F.col("x") - F.lit(qx)) ** 2 + (F.col("y") - F.lit(qy)) ** 2
     out = out.withColumn("dist2", d2.cast("long")).filter(
         F.col("dist2") <= radius * radius
     )
     if keywords:
-        kw = F.array(*[F.lit(k) for k in keywords])
-        if mode == "any":
-            out = out.filter(F.arrays_overlap(F.col("keywords"), kw))
-        elif mode == "all":
-            out = out.filter(
-                F.size(F.array_intersect(F.array_distinct(F.col("keywords")), kw))
-                == len(keywords)
-            )
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
+        out = _keyword_filter(out, keywords, mode)
     return out.select("doc_id", "x", "y", "dist2")
 
 
@@ -144,10 +139,7 @@ def ranked_search(
     doc_id-keyed hash join between two pruned sides (AQE picks build side),
     one hash aggregation with map-side combine, and ``TakeOrderedAndProject``
     partial top-k — no full-corpus shuffle anywhere."""
-    cover = compile_box(x_lo, x_hi, y_lo, y_hi, config)
-    spatial = doc_geo.filter(range_predicate(cover))
-    if not cover.exact:
-        spatial = spatial.filter(box_residual(cover))
+    spatial = grq_range_mode(doc_geo, x_lo, x_hi, y_lo, y_hi, config)
     hits = kw_index.filter(F.col("keyword").isin(keywords))
     weights = (
         hits.groupBy("keyword")
@@ -212,10 +204,7 @@ def brq_posting_mode(
     postings.  The keyword filter ``isin(<literal list>)`` prunes the index
     scan; the surviving posting set (docs for a handful of keywords) is
     small relative to the corpus, and the join key is doc_id."""
-    cover = compile_box(x_lo, x_hi, y_lo, y_hi, config)
-    spatial = doc_geo.filter(range_predicate(cover))
-    if not cover.exact:
-        spatial = spatial.filter(box_residual(cover))
+    spatial = grq_range_mode(doc_geo, x_lo, x_hi, y_lo, y_hi, config)
     hits = kw_index.filter(F.col("keyword").isin(keywords))
     if mode == "any":
         return spatial.join(hits.select("doc_id").distinct(), "doc_id", "semi")

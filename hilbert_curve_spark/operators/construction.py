@@ -33,22 +33,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
+from ..curve.bpc import bpc_cover_of_ranges, prefix_to_range
 
 
 def dyadic_cover(lo: int, hi: int, order: int) -> list[tuple[int, int]]:
     """Minimal aligned power-of-two interval cover of ``[lo, hi]`` within
     ``[0, 2**order)`` — the node set ``findMinimumCover`` selects from the
-    axis tree (greedy largest-aligned-block; <= 2*order intervals)."""
+    axis tree: the BPC of the interval over ``order`` bits (<= 2*order
+    intervals; disjoint prefixes sort in ascending interval order)."""
     if not (0 <= lo <= hi < (1 << order)):
         raise ValueError("interval out of axis domain")
-    out: list[tuple[int, int]] = []
-    while lo <= hi:
-        size = (lo & -lo) if lo else (1 << order)
-        while size > hi - lo + 1:
-            size >>= 1
-        out.append((lo, lo + size - 1))
-        lo += size
-    return out
+    return [prefix_to_range(p) for p in bpc_cover_of_ranges([(lo, hi)], order)]
 
 
 def _axis_predicate(col: str, cover: list[tuple[int, int]]) -> F.Column:

@@ -57,18 +57,3 @@ def merge_islands(values: DataFrame, col: str = "hilbert", part_shift: int = 12)
         .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
         .select("lo", "hi")
     )
-
-
-def merge_islands_oracle(values_sql: str, col: str = "hilbert") -> str:
-    """Oracle for merge_islands over ``values_sql`` (yields column {col})."""
-    return f"""
-WITH vals AS (SELECT DISTINCT {col} FROM ({values_sql})), flagged AS (
-  SELECT {col},
-         CASE WHEN {col} - LAG({col}) OVER (ORDER BY {col}) = 1 THEN 0 ELSE 1 END AS b
-  FROM vals
-), isl AS (
-  SELECT {col}, SUM(b) OVER (ORDER BY {col} ROWS UNBOUNDED PRECEDING) AS island
-  FROM flagged
-)
-SELECT MIN({col}) AS lo, MAX({col}) AS hi FROM isl GROUP BY island
-"""

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
-from .range_query import box_residual, compile_box, range_predicate
+from .range_query import grq_range_mode
 
 _COUNT_CACHE: "weakref.WeakKeyDictionary[DataFrame, int]" = weakref.WeakKeyDictionary()
 
@@ -49,11 +49,7 @@ def _candidates(doc_geo: DataFrame, qx: int, qy: int, r: int, config: EngineConf
     edge = config.edge
     x_lo, x_hi = max(0, qx - r), min(edge - 1, qx + r)
     y_lo, y_hi = max(0, qy - r), min(edge - 1, qy + r)
-    cover = compile_box(x_lo, x_hi, y_lo, y_hi, config)
-    out = doc_geo.filter(range_predicate(cover))
-    if not cover.exact:
-        out = out.filter(box_residual(cover))
-    return out
+    return grq_range_mode(doc_geo, x_lo, x_hi, y_lo, y_hi, config)
 
 
 def _with_dist(df: DataFrame, qx: int, qy: int) -> DataFrame:

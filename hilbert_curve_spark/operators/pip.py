@@ -174,22 +174,15 @@ def pip_rings_join(
                 F.lit("").alias("poly_id"), "doc_id", "x", "y"
             ).limit(0)
         )
-    from ..curve.cover import cover_polygon
+    from ..curve.cover import cover_polygon, merge_overlapping
     from .range_query import cover_cells_probe
 
     def _merged_ranges(rings: list) -> list[tuple[int, int]]:
-        ivs = sorted(
+        return merge_overlapping([
             r
             for ring in rings
             for r in cover_polygon(ring, config.order, config.max_ranges).ranges
-        )
-        out: list[tuple[int, int]] = []
-        for lo, hi in ivs:
-            if out and lo <= out[-1][1] + 1:
-                out[-1] = (out[-1][0], max(out[-1][1], hi))
-            else:
-                out.append((lo, hi))
-        return out
+        ])
 
     per_poly: list[tuple[tuple, list[tuple[int, int]]]] = []
     for i, p in enumerate(ring_polygons):

@@ -2,25 +2,25 @@
 `Scheme/RSKQ/RSKQ_Biginteger.GRQSearch:875-995`; plaintext ground truth
 `hilbert/HilbertApp/HilbertRangeSearchApp.java:86-106`).
 
-Two physical strategies, both returning the exact same result set:
+One probe turns a Hilbert interval list into a scan predicate:
+:func:`cover_predicate`.  A rectangle compiles driver-side to a budgeted
+range cover (perimeter algorithm + min-gap coalescing); up to 64 merged
+intervals become an OR-of-BETWEEN on ``hilbert`` that Catalyst pushes to the
+parquet scan (min/max row-group pruning on Hilbert-sorted data).  Longer
+interval lists keep a 64-interval coalesced literal for that pruning and add
+the exact test of the reference's own probe — the interval union's BPC
+prefix set, looked up per level as ``shiftright(hilbert, L) IN (...)``
+(``preCover`` + ``PDB.get``, RSKQ_Biginteger.java:139-188) — so the
+predicate stays at most ``bits + 1`` hash InSet terms whatever the range
+count.  No shuffle, no join.
 
-* **range mode** — compile the rectangle to a budgeted Hilbert range cover
-  (driver-side, perimeter algorithm + min-gap coalescing) and emit an
-  OR-of-BETWEEN predicate on the ``hilbert`` column plus the exact box
-  residual.  On a Hilbert-sorted table this is pure partition/row-group
-  pruning: Catalyst pushes the BETWEENs to the parquet scan, so at 100 TB
-  only row groups whose hilbert min/max intersect the cover are read.
-  No shuffle, no join.
-
-* **prefix mode** — compile the rectangle to its BPC prefix set and probe a
-  prebuilt prefix-posting index (reference PDB semantics) with a broadcast
-  hash join.  The prefix list for a query rectangle is tiny (<= a few
-  hundred strings), so the build side always broadcasts; the probe side is
-  the index bucketed by prefix.
+``grq_range_mode`` applies it to ``doc_geo``; ``grq_prefix_mode`` answers the
+same rectangle from the prefix-posting index (reference PDB semantics) by
+probing its leaf level with the same predicate.
 
 Budgeted covers over-approximate (SmallHilbertCurve.java:156-162), so the
-residual ``x/y BETWEEN`` filter is always re-applied — result sets therefore
-match the reference exactly for any budget.
+residual ``x/y BETWEEN`` filter is re-applied whenever the cover is inexact —
+result sets therefore match the reference exactly for any budget.
 """
 
 from __future__ import annotations
@@ -33,7 +33,12 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
 from ..curve.bpc import bpc_cover_of_ranges
-from ..curve.cover import Cover, cover_box
+from ..curve.cover import Cover, coalesce_ranges, cover_box, merge_overlapping
+
+# literal BETWEEN terms a predicate may carry (the union prefilters' old
+# budget): an OR-of-BETWEEN costs analysis time per term, and at a few
+# hundred terms its left-deep tree overflows the analyzer's stack
+_LITERAL_RANGES = 64
 
 
 def compile_box(
@@ -42,12 +47,40 @@ def compile_box(
     return cover_box(x_lo, x_hi, y_lo, y_hi, config.order, config.max_ranges)
 
 
-def range_predicate(cover: "Cover | list[tuple[int, int]]") -> F.Column:
-    """OR-of-BETWEEN on hilbert — a literal predicate Catalyst pushes to the
-    scan (min/max row-group pruning on Hilbert-sorted data)."""
-    ranges = cover.ranges if isinstance(cover, Cover) else cover
-    terms = [F.col("hilbert").between(lo, hi) for lo, hi in ranges]
-    return functools.reduce(operator.or_, terms)
+def cover_predicate(
+    ranges: list[tuple[int, int]],
+    config: EngineConfig = DEFAULT,
+    col: str = "hilbert",
+) -> F.Column:
+    """Rows whose curve index (SQL expression ``col``) lies in the union of
+    the inclusive ``ranges`` — the one literal interval predicate.
+
+    Up to ``_LITERAL_RANGES`` merged intervals it is an OR-of-BETWEEN,
+    which Catalyst pushes to the scan.  Past that, the intervals coalesced to
+    that many BETWEENs keep the scan pruning and the exact membership test is
+    the union's BPC prefix set, one ``shiftright(col, L) IN (...)`` per level
+    ``L`` present (``preCover`` + ``PDB.get``,
+    RSKQ_Biginteger.java:139-188): at most ``bits + 1`` hash lookups per
+    row whatever the range count.  It is rendered as one SQL string because
+    a Column per literal costs seconds to build and analyze."""
+    merged = merge_overlapping(ranges)
+    literal = functools.reduce(
+        operator.or_,
+        [F.expr(col).between(lo, hi) for lo, hi in coalesce_ranges(merged, _LITERAL_RANGES)],
+    )
+    if len(merged) <= _LITERAL_RANGES:
+        return literal
+    if merged[0][0] < 0 or merged[-1][1] >> config.bits:
+        raise ValueError(f"ranges exceed the {config.bits}-bit curve domain")
+    levels: dict[int, list[int]] = {}
+    for prefix in bpc_cover_of_ranges(merged, config.bits):
+        pbits, plen = prefix_to_key(prefix)
+        levels.setdefault(config.bits - plen, []).append(pbits)
+    member = " OR ".join(
+        f"shiftright({col}, {level}) IN ({', '.join(map(str, keys))})"
+        for level, keys in sorted(levels.items())
+    )
+    return literal & F.expr(member)
 
 
 def cover_cells_probe(
@@ -71,12 +104,7 @@ def cover_cells_probe(
     BroadcastNestedLoopJoin — O(rows x ranges); the aligned-cell key makes
     it O(1) per probe row regardless of range count (round-1 measured the
     difference as 61.9 s -> ~1 s on pip_join)."""
-    from ..curve.cover import (
-        cell_shift_for_budget,
-        coalesce_ranges,
-        expand_ranges_to_cells,
-        merge_overlapping,
-    )
+    from ..curve.cover import cell_shift_for_budget, expand_ranges_to_cells
 
     spark = doc_geo.sparkSession
     all_ranges = [r for _, ranges in per_shape for r in ranges]
@@ -89,9 +117,8 @@ def cover_cells_probe(
     ranges_df = spark.createDataFrame(
         rows, f"{payload_schema}, ck long, lo long, hi long"
     )
-    union_cover = coalesce_ranges(merge_overlapping(all_ranges), 64)
     return (
-        doc_geo.filter(range_predicate(union_cover))
+        doc_geo.filter(cover_predicate(all_ranges))
         .withColumn("_ck", F.shiftright(F.col("hilbert"), shift))
         .join(
             F.broadcast(ranges_df),
@@ -115,7 +142,7 @@ def grq_range_mode(
 ) -> DataFrame:
     """Docs inside the rectangle via Hilbert cover + exact residual."""
     cover = compile_box(x_lo, x_hi, y_lo, y_hi, config)
-    out = doc_geo.filter(range_predicate(cover))
+    out = doc_geo.filter(cover_predicate(cover.ranges, config))
     if not cover.exact:
         out = out.filter(box_residual(cover))
     return out
@@ -160,36 +187,19 @@ def grq_prefix_mode(
     x_lo: int, x_hi: int, y_lo: int, y_hi: int,
     config: EngineConfig = DEFAULT,
 ) -> DataFrame:
-    """doc_ids in the rectangle via BPC prefix probes.
+    """doc_ids in the rectangle, answered from the prefix-posting index.
 
-    The BPC cover of an *exact* range cover expands exactly the box's cells
-    (tested in tests/test_bpc.py), and its prefixes are pairwise disjoint —
-    each doc matches at most one, so the probe join needs neither residual
-    filter nor distinct: it is a single broadcast hash join.
+    The reference looks up each prefix of the query's BPC set in its PDB
+    (``preCover`` + ``PDB.get``, RSKQ_Biginteger.java:139-188).  Here the
+    lookup is :func:`cover_predicate` over the box's exact cover, evaluated
+    on the index's leaf level: at ``plen = bits`` every doc has exactly one
+    posting and its ``pbits`` is the doc's Hilbert value, so the exact
+    cover's membership test selects exactly the box's docs.  One filtered
+    scan — no probe list, no join, no residual.
     """
     cover = cover_box(x_lo, x_hi, y_lo, y_hi, config.order, max_ranges=0)
-    prefixes = bpc_cover_of_ranges(cover.ranges, config.bits)
-    spark = index.sparkSession
-    keys = [prefix_to_key(p) for p in prefixes]
-    plist = spark.createDataFrame(keys, "pbits long, plen int")
-    # literal isin prefilter ahead of the join: join keys cannot prune a
-    # scan, but this literal list can — on an index stored sorted by
-    # (pbits, plen) it becomes parquet row-group pruning, so the probe
-    # reads a sliver of the posting table instead of all of it
-    probe = index.filter(F.col("pbits").isin([k[0] for k in keys]))
-    return probe.join(F.broadcast(plist), ["pbits", "plen"]).select("doc_id")
-
-
-def merge_ranges(ranges: list) -> list:
-    """Union of Hilbert index intervals: sort + merge overlapping/adjacent.
-    Driver-side, O(total ranges log total ranges)."""
-    out = []
-    for lo, hi in sorted(ranges):
-        if out and lo <= out[-1][1] + 1:
-            out[-1] = (out[-1][0], max(out[-1][1], hi))
-        else:
-            out.append((lo, hi))
-    return out
+    leaf = (F.col("plen") == config.bits) & cover_predicate(cover.ranges, config, col="pbits")
+    return index.filter(leaf).select("doc_id")
 
 
 def grq_batch(
@@ -202,17 +212,17 @@ def grq_batch(
     engine amortizes the scan across a query batch instead — the
     multi-query optimization every tile server and dashboard needs.
 
-    Physical plan: compile every box's Hilbert cover, take the interval
-    UNION of all covers (driver-side merge), and push ONE merged range
-    predicate into the scan — on the Hilbert-sorted stored layout this is
-    the same row-group pruning a single query gets, now shared.  Each
-    surviving row is then tagged with every box containing it by a
-    codegen ``filter(array(CASE...))`` explode over the EXACT box
+    Physical plan: compile every box's Hilbert cover and filter the scan
+    with ONE :func:`cover_predicate` over the union of all covers — on the
+    Hilbert-sorted stored layout this is the same row-group pruning a
+    single query gets, now shared, and past 64 merged intervals the exact
+    union is a per-level BPC hash lookup instead of one BETWEEN per
+    interval.  Each surviving row is then tagged with every box containing
+    it by a codegen ``filter(array(CASE...))`` explode over the EXACT box
     predicates (4 comparisons per box — the cover is for pruning, the
     residual test is per-box, so over-approximate covers stay correct).
     No join, no shuffle; output fan-out equals true matches."""
     covers = [compile_box(*b, config) for b in boxes]
-    merged = merge_ranges([r for c in covers for r in c.ranges])
     arr = F.array(
         *[
             F.when(
@@ -223,7 +233,7 @@ def grq_batch(
         ]
     )
     return (
-        doc_geo.filter(range_predicate(merged))
+        doc_geo.filter(cover_predicate([r for c in covers for r in c.ranges], config))
         .select(
             F.explode(F.filter(arr, lambda c: c.isNotNull())).alias("box_id"),
             "doc_id",

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT, EngineConfig
 from .knn import _corpus_count
 from .pip import Polygon, pip_join, pip_oracle_sql
-from .range_query import cover_cells_probe, compile_box
+from .range_query import compile_box, cover_cells_probe, cover_predicate
 
 # self + E/NE/N/NW: half the 8-neighborhood (negations cover the other half)
 _HALF_OFFSETS = [(0, 0), (1, 0), (1, 1), (0, 1), (-1, 1)]
@@ -202,9 +202,6 @@ def distance_join(
     union-of-covers prefilter (each POI's circumscribing box) additionally
     pushes to the scan, so on Hilbert-sorted storage only the row groups
     near any POI are read."""
-    from ..curve.cover import coalesce_ranges, merge_overlapping
-    from .range_query import range_predicate
-
     s = _cell_shift(radius)
     edge = config.edge
     r2 = radius * radius
@@ -214,10 +211,9 @@ def distance_join(
         x_lo, x_hi = max(0, px - radius), min(edge - 1, px + radius)
         y_lo, y_hi = max(0, py - radius), min(edge - 1, py + radius)
         covers.extend(compile_box(x_lo, x_hi, y_lo, y_hi, config).ranges)
-    prefilter = coalesce_ranges(merge_overlapping(covers), 64)
     dist2 = (F.col("x") - F.col("px")) ** 2 + (F.col("y") - F.col("py")) ** 2
     return (
-        doc_geo.filter(range_predicate(prefilter))
+        doc_geo.filter(cover_predicate(covers, config))
         .withColumn("ck", _cell_key(F.shiftright("x", s), F.shiftright("y", s), edge))
         .join(F.broadcast(poi_df), "ck")
         .withColumn("dist2", dist2.cast("long"))
@@ -459,9 +455,6 @@ def corridor_search(
     then the exact division-free point-to-segment test runs as one codegen
     ``exists`` fold over the literal segment array.  No join, no shuffle,
     no Python — scales linearly in docs-near-route, not corpus size."""
-    from ..curve.cover import coalesce_ranges, merge_overlapping
-    from .range_query import range_predicate
-
     edge = config.edge
     r2 = radius * radius
     segs = list(zip(vertices, vertices[1:]))
@@ -472,14 +465,13 @@ def corridor_search(
         y_lo = max(0, min(ay, by) - radius)
         y_hi = min(edge - 1, max(ay, by) + radius)
         covers.extend(compile_box(x_lo, x_hi, y_lo, y_hi, config).ranges)
-    prefilter = coalesce_ranges(merge_overlapping(covers), 64)
     seg_lits = ", ".join(
         f"named_struct('ax', {ax}L, 'ay', {ay}L, 'bx', {bx}L, 'by', {by}L)"
         for (ax, ay), (bx, by) in segs
     )
     residual = F.expr(f"exists(array({seg_lits}), s -> ({_corridor_pred_sql(r2)}))")
     return (
-        doc_geo.filter(range_predicate(prefilter))
+        doc_geo.filter(cover_predicate(covers, config))
         .filter(residual)
         .select("doc_id", "x", "y")
     )

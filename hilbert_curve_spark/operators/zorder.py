@@ -20,14 +20,12 @@ comparison lives on the Hilbert side where the engine actually sorts."""
 
 from __future__ import annotations
 
-import functools
-import operator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
 from ..curve.morton import morton_expr_sql, zcover_box
+from .range_query import cover_predicate
 
 
 def with_morton(doc_geo: DataFrame, config: EngineConfig = DEFAULT) -> DataFrame:
@@ -49,10 +47,7 @@ def zorder_stored_mode(
     ranges, exact = zcover_box(
         x_lo, x_hi, y_lo, y_hi, config.order, config.max_ranges
     )
-    pred = functools.reduce(
-        operator.or_, [F.col("z").between(lo, hi) for lo, hi in ranges]
-    )
-    out = stored.filter(pred)
+    out = stored.filter(cover_predicate(ranges, config, col="z"))
     if not exact:
         out = out.filter(
             F.col("x").between(x_lo, x_hi) & F.col("y").between(y_lo, y_hi)
@@ -69,11 +64,8 @@ def zorder_range_mode(
     ranges, exact = zcover_box(
         x_lo, x_hi, y_lo, y_hi, config.order, config.max_ranges
     )
-    z = F.expr(morton_expr_sql("x", "y", config.order))
-    pred = functools.reduce(
-        operator.or_, [z.between(lo, hi) for lo, hi in ranges]
-    )
-    out = doc_geo.filter(pred)
+    z = morton_expr_sql("x", "y", config.order)
+    out = doc_geo.filter(cover_predicate(ranges, config, col=z))
     if not exact:
         out = out.filter(
             F.col("x").between(x_lo, x_hi) & F.col("y").between(y_lo, y_hi)

@@ -10,7 +10,6 @@ from hilbert_curve_spark.curve.cover import (
     coalesce_ranges,
     cover_box,
     dense_cover,
-    ranges_to_sql_predicate,
 )
 from hilbert_curve_spark.curve.hilbert import encode2d
 
@@ -107,13 +106,6 @@ def test_shift_cap_stays_below_64():
     assert s == 63
     cells = expand_ranges_to_cells(ranges, s)
     assert {c for c, _, _ in cells} == {0}  # same cell Spark computes at 63
-
-
-def test_sql_predicate_render():
-    assert (
-        ranges_to_sql_predicate([(1, 5), (9, 9)])
-        == "(hilbert BETWEEN 1 AND 5) OR (hilbert BETWEEN 9 AND 9)"
-    )
 
 
 def test_orientation_matches_reference():

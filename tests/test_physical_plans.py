@@ -3,11 +3,13 @@ the actual Catalyst plans — filters pushed to the scan, broadcasts where
 promised, no shuffle on the doc side of tile/pip joins, codegen in the
 index build."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from hilbert_curve_spark import workload as W
 from hilbert_curve_spark.config import DEFAULT
+from hilbert_curve_spark.curve.cover import cover_box, merge_overlapping
 from hilbert_curve_spark.operators import pip as pip_ops
 from hilbert_curve_spark.operators import range_query as rq
 from hilbert_curve_spark.operators import tiles as tiles_ops
@@ -40,6 +42,68 @@ def test_range_predicate_pushed_to_scan(sorted_geo):
 def test_range_query_has_no_shuffle(sorted_geo):
     q = rq.grq_range_mode(sorted_geo, **W.R1)
     assert "Exchange" not in _plan(q)  # pure pruned scan + filter
+
+
+_EXACT_BOXES = [
+    (100, 1099, 200, 1199),
+    (1500, 2600, 300, 900),
+    (37, 3000, 2500, 2600),
+    (2047, 2049, 0, 4095),
+]
+
+
+def test_cover_predicate_matches_interval_membership(spark):
+    """Thousands of exact ranges: the BPC per-level lookup keeps exactly the
+    values inside the interval union, range endpoints and their neighbours
+    included."""
+    ranges = [
+        r for b in _EXACT_BOXES for r in cover_box(*b, DEFAULT.order, max_ranges=0).ranges
+    ]
+    assert len(ranges) >= 2000
+    ends = np.array(ranges).ravel()
+    rng = np.random.default_rng(3)
+    vals = np.unique(np.concatenate([
+        rng.integers(0, 1 << DEFAULT.bits, 20000), ends - 1, ends, ends + 1,
+    ]))
+    vals = vals[(vals >= 0) & (vals < 1 << DEFAULT.bits)]
+    merged = np.array(merge_overlapping(ranges))
+    j = np.searchsorted(merged[:, 0], vals, side="right") - 1
+    inside = (j >= 0) & (vals <= merged[np.maximum(j, 0), 1])
+    frame = spark.createDataFrame([(int(v),) for v in vals], "hilbert long")
+    got = {r.hilbert for r in frame.filter(rq.cover_predicate(ranges)).collect()}
+    assert got == {int(v) for v in vals[inside]}
+    # the prefix levels need the curve's bit width; a wider range fails loudly
+    with pytest.raises(ValueError):
+        rq.cover_predicate(ranges + [(1 << DEFAULT.bits, 1 << DEFAULT.bits)])
+
+
+def test_cover_predicate_literal_pushes_to_scan(sorted_geo):
+    """A cover of up to 64 ranges is the plain OR-of-BETWEEN; a longer one
+    keeps a 64-range literal — both reach the parquet scan."""
+    for ranges in (
+        rq.compile_box(**W.R1).ranges,
+        cover_box(*_EXACT_BOXES[0], DEFAULT.order, max_ranges=0).ranges,
+    ):
+        plan = _plan(sorted_geo.filter(rq.cover_predicate(ranges)))
+        scan_line = next(l for l in plan.splitlines() if "PushedFilters" in l)
+        assert "hilbert" in scan_line
+        assert ("shiftright" in plan) == (len(ranges) > 64)
+
+
+def test_grq_prefix_mode_matches_brute_force(spark, sorted_geo):
+    """Prefix mode answers from the index's leaf level — one filtered scan,
+    no join, no shuffle — for covers below and above 64 exact ranges."""
+    idx = rq.prefix_index(sorted_geo, DEFAULT)
+    pts = [(r.doc_id, r.x, r.y) for r in sorted_geo.select("doc_id", "x", "y").collect()]
+    boxes = [tuple(W.R3.values()), tuple(W.R1.values()), _EXACT_BOXES[1]]
+    assert len(cover_box(*boxes[1], DEFAULT.order, max_ranges=0).ranges) > 64
+    for x_lo, x_hi, y_lo, y_hi in boxes:
+        q = rq.grq_prefix_mode(idx, x_lo, x_hi, y_lo, y_hi, DEFAULT)
+        got = [r.doc_id for r in q.collect()]
+        expect = {d for d, x, y in pts if x_lo <= x <= x_hi and y_lo <= y <= y_hi}
+        assert expect and sorted(got) == sorted(expect)
+        plan = _plan(q)
+        assert "Join" not in plan and "Exchange" not in plan
 
 
 def test_tile_assignment_is_broadcast_hash_join(sorted_geo):

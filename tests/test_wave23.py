@@ -1,40 +1,58 @@
 """Wave-23 operators: batched GRQ (N boxes, one pass) and the flow-
 divergence raster."""
 
+import numpy as np
+
 from hilbert_curve_spark import workload as W
 
 
+def _seeded_boxes(n: int, seed: int) -> list[tuple[int, int, int, int]]:
+    """``n`` squares of side 16-400 placed uniformly on the lattice."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for _ in range(n):
+        side = int(rng.integers(16, 401))
+        x0, y0 = (int(v) for v in rng.integers(0, W.EDGE - side, size=2))
+        out.append((x0, x0 + side - 1, y0, y0 + side - 1))
+    return out
+
+
 def test_grq_batch_brute_force(spark, sf_dir):
+    """The standard batch plus 64- and 256-box batches, whose merged covers
+    (thousands of ranges) once overflowed the analyzer's stack as one
+    BETWEEN per range."""
     from hilbert_curve_spark.operators.encode import encode_documents
     from hilbert_curve_spark.operators.range_query import grq_batch
     from hilbert_curve_spark.sources.interleave import build_documents
 
-    boxes = W.batch_boxes()
     geo = encode_documents(build_documents(spark, sf_dir, amp=4))
     pts = [(r.doc_id, r.x, r.y) for r in geo.select("doc_id", "x", "y").collect()]
-    expect = {
-        (i, d, x, y)
-        for d, x, y in pts
-        for i, (xl, xh, yl, yh) in enumerate(boxes)
-        if xl <= x <= xh and yl <= y <= yh
-    }
-    got = {
-        (r.box_id, r.doc_id, r.x, r.y) for r in grq_batch(geo, boxes).collect()
-    }
-    assert got == expect
-    # a doc matched by >1 box must exist OR boxes must be genuinely disjoint
-    # in hits — and at least 3 boxes must be non-empty (real batch)
-    assert len({b for b, *_ in expect}) >= 3
+    xs = np.array([x for _, x, _ in pts])
+    ys = np.array([y for _, _, y in pts])
+    for boxes in (W.batch_boxes(), _seeded_boxes(64, 7), _seeded_boxes(256, 11)):
+        b = np.array(boxes)
+        hit = (
+            (xs[:, None] >= b[:, 0]) & (xs[:, None] <= b[:, 1])
+            & (ys[:, None] >= b[:, 2]) & (ys[:, None] <= b[:, 3])
+        )
+        expect = {(int(i), *pts[j]) for j, i in zip(*np.nonzero(hit))}
+        got = {
+            (r.box_id, r.doc_id, r.x, r.y) for r in grq_batch(geo, boxes).collect()
+        }
+        assert got == expect, len(boxes)
+        # at least 3 boxes must be non-empty (a real batch)
+        assert len({i for i, *_ in expect}) >= 3
 
 
 def test_grq_batch_merged_cover_is_union(spark):
     """The merged prune interval set must cover every per-box cover and
     stay disjoint (the scan predicate is sound and non-redundant)."""
-    from hilbert_curve_spark.operators.range_query import compile_box, merge_ranges
+    from hilbert_curve_spark.curve.cover import merge_overlapping
+    from hilbert_curve_spark.operators.range_query import compile_box
 
     boxes = W.batch_boxes()
     covers = [compile_box(*b) for b in boxes]
-    merged = merge_ranges([r for c in covers for r in c.ranges])
+    merged = merge_overlapping([r for c in covers for r in c.ranges])
     for lo, hi in merged:
         assert lo <= hi
     for (l1, h1), (l2, h2) in zip(merged, merged[1:]):
