@@ -122,7 +122,21 @@ class Ctx:
 
     @property
     def prefix_index(self) -> DataFrame:
-        return self.memo("prefix_index", lambda: rq.prefix_index(self.doc_geo, DEFAULT))
+        """The posting index stored range-partitioned and sorted by the probe
+        key (sorted parquet is what enables scan pruning), then read back."""
+
+        def write(path: str) -> None:
+            (
+                rq.prefix_index(self.doc_geo, DEFAULT)
+                .repartitionByRange(32, "pbits", "plen")
+                .sortWithinPartitions("pbits", "plen")
+                .write.mode("overwrite")
+                .parquet(path)
+            )
+
+        return self.memo(
+            "prefix_index", lambda: self.spark.read.parquet(self.stored("prefix_index", write))
+        )
 
     @property
     def update_log(self) -> DataFrame:

@@ -96,13 +96,12 @@ def _sf_table(spark, name: str, partitions: int = 8):
 
 def bench_ctx(spark, amp: int):
     """The maintained tables every timed plan reads, built untimed: doc_geo
-    (Hilbert-sorted layout) and the prefix index written as parquet and
-    read back (sorted parquet is what enables scan pruning), the flat
-    tables re-laid as splittable files, the materialized corpus.  Returns
-    (Ctx, corpus doc count)."""
+    (Hilbert-sorted layout) written as parquet and read back (sorted
+    parquet is what enables scan pruning; the ctx stores its prefix index
+    the same way on first use), the flat tables re-laid as splittable
+    files, the materialized corpus.  Returns (Ctx, corpus doc count)."""
     from __spark_entry__ import Ctx
     from hilbert_curve_spark.operators.encode import encode_documents_native
-    from hilbert_curve_spark.operators.range_query import prefix_index
     from hilbert_curve_spark.sources.layout import write_sorted
 
     corpus_path = _materialize_corpus(spark, amp)
@@ -111,19 +110,9 @@ def bench_ctx(spark, amp: int):
     encode_documents_native(corpus).write.mode("overwrite").parquet(f"{corpus_path}_raw")
     write_sorted(spark.read.parquet(f"{corpus_path}_raw"), f"{corpus_path}_geo", partitions=32)
     geo = spark.read.parquet(f"{corpus_path}_geo")
-    # posting index range-partitioned + sorted by the probe key, so the
-    # literal pbits prefilter becomes parquet row-group pruning
-    (
-        prefix_index(geo)
-        .repartitionByRange(32, "pbits", "plen")
-        .sortWithinPartitions("pbits", "plen")
-        .write.mode("overwrite")
-        .parquet(f"{corpus_path}_pidx")
-    )
     ctx = Ctx(
         spark, SF_DIR, amp,
         doc_geo=geo,
-        prefix_index=spark.read.parquet(f"{corpus_path}_pidx"),
         corpus=corpus,
         documents=_sf_table(spark, "documents"),
         events=_sf_table(spark, "events"),

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .skew import keyed_pairs
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -111,25 +113,18 @@ def jaccard_pairs(
         F.expr("split(text, ' ')[0]").alias("tok0"),
     ).localCheckpoint(eager=False)  # both join sides consume the md5-shingle
     # projection — pin it so the corpus is hashed once, not twice
-    a = g.alias("a")
-    b = g.withColumn(
-        "jband",
-        F.explode(F.array(F.col("lband") - 1, F.col("lband"), F.col("lband") + 1)),
-    ).alias("b")
-    inter = F.size(F.array_intersect(F.col("a.grams"), F.col("b.grams")))
-    union = F.size(F.col("a.grams")) + F.size(F.col("b.grams")) - inter
+    # b probes lband - 1, lband, lband + 1: exactly one can equal a's lband
+    probe = g.withColumn(
+        "lband", F.explode(F.array(F.col("lband") - 1, F.col("lband"), F.col("lband") + 1))
+    )
+    inter = F.size(F.array_intersect("grams_a", "grams_b"))
+    union = F.size("grams_a") + F.size("grams_b") - inter
     jac_pct = F.floor(F.lit(100) * inter / union).cast("long")
     return (
-        a.join(
-            b,
-            # exactly one of b's 3 probe keys can equal a.lband -> no dup pairs
-            (F.col("a.lband") == F.col("b.jband"))
-            & (F.col("a.tok0") == F.col("b.tok0"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        keyed_pairs(g, ["lband", "tok0"], "doc_id", b=probe)
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
             jac_pct.alias("jac_pct"),
         )
         .filter(F.col("jac_pct") >= threshold_pct)
@@ -286,16 +281,9 @@ def minhash_lsh_pairs(
     buckets = sigs.select("doc_id", F.explode(F.expr(band_expr)).alias("e")).select(
         "doc_id", F.col("e.band").alias("band"), F.col("e.bkey").alias("bkey")
     )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        keyed_pairs(buckets, ["band", "bkey"], "doc_id")
+        .select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
         .distinct()
     )
 
@@ -459,20 +447,13 @@ def simhash_near_pairs(fps: DataFrame, max_hamming: int = 3) -> DataFrame:
     ).select(
         "doc_id", "simhash", F.col("e.band").alias("band"), F.col("e.piece").alias("piece")
     )
-    a = pieces.alias("a")
-    b = pieces.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.piece") == F.col("b.piece"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        keyed_pairs(pieces, ["band", "piece"], "doc_id")
         .filter(ham <= max_hamming)
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
             ham.alias("hamming"),
         )
         .distinct()
@@ -550,12 +531,9 @@ def typo_pairs(doc_geo: DataFrame) -> DataFrame:
             )
         ).alias("sig"),
     )
-    a = sigs.select(F.col("kw").alias("kw1"), "sig")
-    b = sigs.select(F.col("kw").alias("kw2"), "sig")
     return (
-        a.join(b, "sig")
-        .filter(F.col("kw1") < F.col("kw2"))
-        .select("kw1", "kw2")
+        keyed_pairs(sigs, "sig", "kw")
+        .select(F.col("kw_a").alias("kw1"), F.col("kw_b").alias("kw2"))
         .distinct()
         .filter(F.expr("levenshtein(kw1, kw2) = 1"))
     )
@@ -621,12 +599,9 @@ def containment_pairs(
     sizes = live.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("sz")
     )
-    a = live.select(F.col("doc_id").alias("doc_a"), "gram")
-    b = live.select(F.col("doc_id").alias("doc_b"), "gram")
     inter = (
-        a.join(b, "gram")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        keyed_pairs(live, "gram", "doc_id")
+        .groupBy(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("inter"))
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a"))
@@ -730,14 +705,9 @@ def source_overlap(docs: DataFrame) -> DataFrame:
     fps = docs.select(
         "source", F.expr(wordset_fp_sql()).alias("fp")
     ).distinct()
-    a = fps.alias("a")
-    b = fps.alias("b")
     return (
-        a.join(b, "fp")
-        .filter(F.col("a.source") < F.col("b.source"))
-        .groupBy(
-            F.col("a.source").alias("src_a"), F.col("b.source").alias("src_b")
-        )
+        keyed_pairs(fps, "fp", "source")
+        .groupBy(F.col("source_a").alias("src_a"), F.col("source_b").alias("src_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )
 

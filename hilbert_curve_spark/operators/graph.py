@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
-from .skew import salted_cell_counts
+from .skew import keyed_pairs, salted_cell_counts
 
 
 def _edge_stats(edges: DataFrame) -> tuple:
@@ -675,9 +675,9 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
     ).localCheckpoint()
-    e1 = ori.select(F.col("u").alias("apex"), F.col("v").alias("p"))
-    e2 = ori.select(F.col("u").alias("apex"), F.col("v").alias("q"))
-    wedges = e1.join(e2, "apex").filter(F.col("p") < F.col("q"))
+    wedges = keyed_pairs(ori.withColumnRenamed("u", "apex"), "apex", "v").select(
+        "apex", F.col("v_a").alias("p"), F.col("v_b").alias("q")
+    )
     # the closing edge between p and q is oriented one way or the other;
     # check both (p, q) and (q, p) against the oriented set
     close = ori.select(

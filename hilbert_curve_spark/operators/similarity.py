@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from .skew import keyed_pairs
+
 
 def _dot_sql(a: str, b: str) -> str:
     """JVM-side dot product of two float arrays (zip_with + aggregate)."""
@@ -88,19 +90,19 @@ def embed_dup_pairs(
     """
     n = embeddings.select(
         "vec_id",
-        F.col(block_col).alias("blk"),
         "embedding",
         F.expr(f"SQRT({_norm2_sql('embedding')})").alias("nrm"),
-    )
-    a, b = n.alias("a"), n.alias("b")
+        block_col,
+    ).localCheckpoint(eager=False)  # both pair sides consume the norm
+    # projection (and the caller's block key) — pin it so it computes once
     cos = F.expr(
-        f"CAST(FLOOR(1000000.0 * {_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)) AS BIGINT)"
+        f"CAST(FLOOR(1000000.0 * {_dot_sql('embedding_a', 'embedding_b')} / (nrm_a * nrm_b)) AS BIGINT)"
     )
     return (
-        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.vec_id") < F.col("b.vec_id")))
+        keyed_pairs(n, block_col, "vec_id")
         .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
+            F.col("vec_id_a").alias("vec_a"),
+            F.col("vec_id_b").alias("vec_b"),
             cos.alias("cos_e6"),
         )
         .filter(F.col("cos_e6") >= threshold_e6)
@@ -1134,38 +1136,16 @@ def embed_cluster_purity(
     FLOOR-ppm.  The dedup-threshold tuning loop made a first-class,
     oracle-checked job.
 
-    Plan: the pair join is bucket-blocked (2^nbits buckets), CC is the
-    shuffle-bounded min-agg star algorithm, purity is one labels
-    broadcast join + two cluster-bounded aggs."""
+    Plan: the pairs are :func:`embed_dup_pairs` blocked on the sign-LSH
+    bucket (2^nbits buckets), CC is the shuffle-bounded min-agg star
+    algorithm, purity is one labels broadcast join + two cluster-bounded
+    aggs."""
     from .graph import dedup_clusters
 
     dim = len(embeddings.select("embedding").first()["embedding"])
-    n = embeddings.select(
-        "vec_id",
-        "embedding",
-        F.expr(f"SQRT({_norm2_sql('embedding')})").alias("nrm"),
-        lsh_bucket_expr(dim, nbits).alias("bucket"),
-    ).localCheckpoint(eager=False)  # both pair sides consume the
-    # norm+bucket projection — pin it so it computes once
-    a, b = n.alias("a"), n.alias("b")
-    cos = F.expr(
-        f"CAST(FLOOR(1000000.0 * {_dot_sql('a.embedding', 'b.embedding')} "
-        f"/ (a.nrm * b.nrm)) AS BIGINT)"
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("doc_a"),
-            F.col("b.vec_id").alias("doc_b"),
-            cos.alias("cos_e6"),
-        )
-        .filter(F.col("cos_e6") >= int(threshold_e6))
-    )
-    cc = dedup_clusters(pairs)
+    bucketed = embeddings.withColumn("bucket", lsh_bucket_expr(dim, nbits))
+    pairs = embed_dup_pairs(bucketed, int(threshold_e6), block_col="bucket")
+    cc = dedup_clusters(pairs.withColumnsRenamed({"vec_a": "doc_a", "vec_b": "doc_b"}))
     labeled = cc.join(
         F.broadcast(
             embeddings.select(

@@ -16,6 +16,9 @@ on as backstop):
   the build side is replicated S ways with ``explode(sequence(0, S-1))``;
   the join key becomes ``(cell, salt)``.  Used when the dimension side is
   too big to broadcast outright.
+
+The keyed unordered self-join every co-occurrence operator runs
+(:func:`keyed_pairs`) lives here too: its cost is the skew of its key.
 """
 
 from __future__ import annotations
@@ -43,6 +46,37 @@ def salted_cell_counts(
         .agg(F.count("*").alias("pn"))
     )
     return partial.groupBy(*partial.columns[:-2]).agg(F.sum("pn").alias("n_docs"))
+
+
+def keyed_pairs(
+    rows: DataFrame, on: str | list[str], tie: str, b: DataFrame | None = None
+) -> DataFrame:
+    """Every pair of a ``rows`` row (side a) and a ``b`` row (side b,
+    default ``rows``) that agree on every ``on`` column, with
+    ``tie_a < tie_b``: the posting-list self-join behind the co-occurrence
+    operators (the reference's prefix- and keyword-keyed posting maps,
+    `Scheme/RSKQ/RSKQ_Biginteger.java:26-27`).
+
+    The ``on`` columns come back once, unsuffixed; every other column comes
+    back as ``<col>_a`` and ``<col>_b``.  Exactly once: two rows sharing a
+    key meet in one row, ordered by ``tie``, and rows with equal ``tie``
+    never pair.  A pair listed under several shared keys yields one row per
+    key; callers that want distinct pairs dedup themselves.  A ``b`` that
+    replicates a row under several probe keys (a band and its neighbours)
+    keeps the rule as long as at most one of them equals the a side's key.
+
+    Cost: one shuffle of each side on the key, then Σ_key C(n_key, 2)
+    candidates for the self form (n_a · n_b per key with ``b``), so one hot
+    key with n rows alone costs n²/2."""
+    on = [on] if isinstance(on, str) else list(on)
+
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        return df.select(
+            *[F.col(c) if c in on else F.col(c).alias(f"{c}_{tag}") for c in df.columns]
+        )
+
+    pairs = side(rows, "a").join(side(rows if b is None else b, "b"), on)
+    return pairs.filter(F.col(f"{tie}_a") < F.col(f"{tie}_b"))
 
 
 def salted_join(

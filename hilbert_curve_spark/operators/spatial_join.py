@@ -52,6 +52,7 @@ from ..config import DEFAULT, EngineConfig
 from .knn import _corpus_count
 from .pip import Polygon, pip_join, pip_oracle_sql
 from .range_query import compile_box, cover_cells_probe, cover_predicate
+from .skew import keyed_pairs
 
 # self + E/NE/N/NW: half the 8-neighborhood (negations cover the other half)
 _HALF_OFFSETS = [(0, 0), (1, 0), (1, 1), (0, 1), (-1, 1)]
@@ -651,7 +652,7 @@ def rect_self_join(
     s = int(max_extent).bit_length()  # cell edge 2**s >= max_extent: <=2x2 cells
     m = "md5(CAST(doc_id AS BINARY))"
     sel, w, h = _rect_exprs("m", max_extent)
-    rects = (
+    cells = (
         doc_geo.withColumn("m", F.expr(m))
         .filter(F.expr(f"({sel} % {sample_mod}) = 0"))
         .select(
@@ -661,34 +662,20 @@ def rect_self_join(
             F.expr(f"LEAST(x + {w}, {edge - 1})").alias("x_hi"),
             F.expr(f"LEAST(y + {h}, {edge - 1})").alias("y_hi"),
         )
+        .withColumn("cx", F.expr(f"explode(sequence(x_lo >> {s}, x_hi >> {s}))"))
+        .withColumn("cy", F.expr(f"explode(sequence(y_lo >> {s}, y_hi >> {s}))"))
+        .withColumn("ck", _cell_key(F.col("cx"), F.col("cy"), edge))
     )
-
-    def replicated(tag: str) -> DataFrame:
-        side = rects.select(
-            *[F.col(c).alias(f"{c}_{tag}") for c in ("doc_id", "x_lo", "y_lo", "x_hi", "y_hi")]
-        )
-        return (
-            side.withColumn(
-                "cx", F.expr(f"explode(sequence(x_lo_{tag} >> {s}, x_hi_{tag} >> {s}))")
-            )
-            .withColumn(
-                "cy", F.expr(f"explode(sequence(y_lo_{tag} >> {s}, y_hi_{tag} >> {s}))")
-            )
-            .withColumn("ck", _cell_key(F.col("cx"), F.col("cy"), edge))
-        )
-    a = replicated("a")
-    b = replicated("b").drop("cx", "cy")
     ix_w = F.least("x_hi_a", "x_hi_b") - F.greatest("x_lo_a", "x_lo_b") + 1
     ix_h = F.least("y_hi_a", "y_hi_b") - F.greatest("y_lo_a", "y_lo_b") + 1
     pairs = (
-        a.join(b, "ck")
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+        keyed_pairs(cells, "ck", "doc_id")
         .filter((ix_w > 0) & (ix_h > 0))
         # PBSM reference point: only the cell holding the intersection's
-        # lower-left corner reports the pair
+        # lower-left corner reports the pair (equal ck: cx_a = cx_b)
         .filter(
-            (F.shiftright(F.greatest("x_lo_a", "x_lo_b"), s) == F.col("cx"))
-            & (F.shiftright(F.greatest("y_lo_a", "y_lo_b"), s) == F.col("cy"))
+            (F.shiftright(F.greatest("x_lo_a", "x_lo_b"), s) == F.col("cx_a"))
+            & (F.shiftright(F.greatest("y_lo_a", "y_lo_b"), s) == F.col("cy_a"))
         )
     )
     return pairs.select(

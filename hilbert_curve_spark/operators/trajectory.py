@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .skew import keyed_pairs
+
 
 def _with_coords_epoch(events: DataFrame) -> DataFrame:
     from ..sources import derive
@@ -889,15 +891,15 @@ def covisit_pairs(
     cross-multiplication-free integer division and ``user_a < user_b``.
 
     The space-only companion of :func:`colocation_pairs` (which requires
-    time overlap): an inverted-index set-similarity join — the same shape
-    as the n-gram Jaccard join in ``dedup.py`` with cells as tokens.
+    time overlap): an inverted-index set-similarity join with cells as
+    tokens.
 
     Plan: corpus collapses to DISTINCT (user, cell) first (hash agg with
     map-side combine — everything after is bounded by distinct pairs, not
-    events), then a cell-keyed equi self-join generates candidates and one
-    hash agg counts shared cells; per-user set sizes come from the tiny
-    aggregated frame via broadcast-ready joins.  Skew: a cell visited by u
-    users emits C(u,2) candidates — the standard inverted-index cost; at
+    events), then the cell-keyed ``skew.keyed_pairs`` self-join generates
+    candidates and one hash agg counts shared cells; per-user set sizes
+    come from the tiny aggregated frame via broadcast-ready joins.  Skew: a
+    cell visited by u users emits C(u,2) candidates (``keyed_pairs``); at
     100 TB cap it with a document-frequency cut on super-hot cells (drop
     cells above a visitor-count ceiling BEFORE the join — a lossy recall
     trade documented in the dedup family) or salt via AQE skew-join; exact
@@ -922,13 +924,9 @@ def covisit_pairs(
     sizes = visits.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_cells")
     )
-    a = visits.alias("a")
-    b = visits.alias("b")
     shared = (
-        a.join(b, (F.col("a.cell") == F.col("b.cell")) & (F.col("a.user_id") < F.col("b.user_id")))
-        .groupBy(
-            F.col("a.user_id").alias("user_a"), F.col("b.user_id").alias("user_b")
-        )
+        keyed_pairs(visits, "cell", "user_id")
+        .groupBy(F.col("user_id_a").alias("user_a"), F.col("user_id_b").alias("user_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("shared_cells"))
         .filter(F.col("shared_cells") >= int(min_shared))
     )
@@ -1520,13 +1518,12 @@ def companion_pairs(
     (user, window, cell) presence rows.
 
     Plan: events collapse to DISTINCT (user, window, cell) FIRST (hash agg
-    with map-side combine); the (window, cell) equi self-join generates
-    candidate pairs; a second DISTINCT drops duplicate same-window
-    co-occurrences (two users sharing several cells in one window count
-    once); a final hash agg counts windows.  Never all-pairs — candidates
-    are bounded by per-(window, cell) occupancy, the same inverted-index
-    cost model as covisit_pairs, with the same documented hot-bucket DF
-    ceiling at extreme scale."""
+    with map-side combine); the (window, cell)-keyed ``skew.keyed_pairs``
+    self-join generates candidate pairs; a second DISTINCT drops duplicate
+    same-window co-occurrences (two users sharing several cells in one
+    window count once); a final hash agg counts windows.  Never all-pairs —
+    candidates are bounded by per-(window, cell) occupancy, C(u, 2) for u
+    users in one bucket (the cost ``keyed_pairs`` documents)."""
     from ..sources.derive import EDGE
 
     step = 1 << int(cell_shift)
@@ -1539,20 +1536,9 @@ def companion_pairs(
             f"CAST(ex DIV {step} AS BIGINT) * {EDGE} + CAST(ey DIV {step} AS BIGINT)"
         ).alias("cell"),
     ).distinct()
-    a = presence.alias("a")
-    b = presence.alias("b")
     together = (
-        a.join(
-            b,
-            (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
-        .select(
-            F.col("a.user_id").alias("user_a"),
-            F.col("b.user_id").alias("user_b"),
-            F.col("a.w").alias("w"),
-        )
+        keyed_pairs(presence, ["w", "cell"], "user_id")
+        .select(F.col("user_id_a").alias("user_a"), F.col("user_id_b").alias("user_b"), "w")
         .distinct()
     )
     return (
@@ -3135,17 +3121,11 @@ def segment_crossings(
         ).alias("gy"),
     ).withColumn("ck", F.col("gx") * m_cells + F.col("gy"))
 
-    a = exploded.select(*[F.col(c).alias(f"a_{c}") for c in exploded.columns])
-    b = exploded.select(*[F.col(c).alias(f"b_{c}") for c in exploded.columns])
-
-    joined = a.join(
-        b,
-        (F.col("a_ck") == F.col("b_ck")) & (F.col("a_user_id") < F.col("b_user_id")),
-    ).filter(
+    joined = keyed_pairs(exploded, "ck", "user_id").filter(
         # reference-point rule: emit only in the cell holding the top-left
         # corner of the bbox intersection
-        (F.col("a_gx") == F.shiftright(F.greatest("a_x_lo", "b_x_lo"), s))
-        & (F.col("a_gy") == F.shiftright(F.greatest("a_y_lo", "b_y_lo"), s))
+        (F.col("gx_a") == F.shiftright(F.greatest("x_lo_a", "x_lo_b"), s))
+        & (F.col("gy_a") == F.shiftright(F.greatest("y_lo_a", "y_lo_b"), s))
     )
 
     def orient(ox, oy, ax, ay, px, py):
@@ -3153,19 +3133,19 @@ def segment_crossings(
             F.col(ay) - F.col(oy)
         ) * (F.col(px) - F.col(ox))
 
-    o1 = orient("a_x1", "a_y1", "a_x2", "a_y2", "b_x1", "b_y1")
-    o2 = orient("a_x1", "a_y1", "a_x2", "a_y2", "b_x2", "b_y2")
-    o3 = orient("b_x1", "b_y1", "b_x2", "b_y2", "a_x1", "a_y1")
-    o4 = orient("b_x1", "b_y1", "b_x2", "b_y2", "a_x2", "a_y2")
+    o1 = orient("x1_a", "y1_a", "x2_a", "y2_a", "x1_b", "y1_b")
+    o2 = orient("x1_a", "y1_a", "x2_a", "y2_a", "x2_b", "y2_b")
+    o3 = orient("x1_b", "y1_b", "x2_b", "y2_b", "x1_a", "y1_a")
+    o4 = orient("x1_b", "y1_b", "x2_b", "y2_b", "x2_a", "y2_a")
     def strictly_opposite(u, v):
         return ((u > 0) & (v < 0)) | ((u < 0) & (v > 0))
 
     crossed = joined.filter(strictly_opposite(o1, o2) & strictly_opposite(o3, o4))
     return crossed.select(
-        F.col("a_user_id").alias("user_a"),
-        F.col("a_seg_id").alias("seg_a"),
-        F.col("b_user_id").alias("user_b"),
-        F.col("b_seg_id").alias("seg_b"),
+        F.col("user_id_a").alias("user_a"),
+        F.col("seg_id_a").alias("seg_a"),
+        F.col("user_id_b").alias("user_b"),
+        F.col("seg_id_b").alias("seg_b"),
     )
 
 

@@ -75,6 +75,15 @@ def test_simhash_near_pairs(spark, corpus):
     # hamming values are symmetric-consistent
     for r in pairs:
         assert 0 <= r["hamming"] <= 16
+    # band blocking is pigeonhole-complete: every pair within 16 bits
+    got = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in pairs}
+    want = {
+        (a, b, bin(vals[a] ^ vals[b]).count("1"))
+        for a in vals
+        for b in vals
+        if a < b and bin(vals[a] ^ vals[b]).count("1") <= 16
+    }
+    assert got == want
 
 
 def test_jaccard_blocking_no_false_positives(spark, corpus):
