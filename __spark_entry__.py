@@ -17,6 +17,7 @@ expressions and as oracle SQL — so both engines see bit-identical
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import os
 import shutil
@@ -154,9 +155,13 @@ class Ctx:
     def stored(self, name: str, write: Callable[[str], None]) -> str:
         """Path of a layout ``write(path)`` materializes once per context."""
 
+        def own_store():  # removed at exit; a caller-given store_dir never is
+            store = tempfile.mkdtemp(prefix="hcs_store_")
+            atexit.register(shutil.rmtree, store, ignore_errors=True)
+            return store
+
         def build():
-            store = self.memo("store_dir", lambda: tempfile.mkdtemp(prefix="hcs_store_"))
-            path = os.path.join(store, name)
+            path = os.path.join(self.memo("store_dir", own_store), name)
             write(path)
             return path
 
@@ -466,8 +471,7 @@ def _csv_roundtrip(c: Ctx) -> DataFrame:
     DataRow CSV shape (FixRangeCompareToConstructionOne.java:148-173), the
     positional-schema reader loads it back, hilbert is recomputed from the
     CSV coordinates, and the R1 GRQ runs on the re-ingested table."""
-    path = f"/tmp/hcs_csv_roundtrip_{os.path.basename(c.sf_dir.rstrip('/'))}"
-    readers.write_datarow_csv(c.doc_geo, path)
+    path = c.stored("csv_roundtrip", lambda p: readers.write_datarow_csv(c.doc_geo, p))
     back = readers.read_datarow_csv(c.spark, path)
     geo2 = back.select(
         F.expr("'doc' || lpad(CAST(fileID AS STRING), 10, '0')").alias("doc_id"),
@@ -482,9 +486,8 @@ def _format_roundtrip(c: Ctx, fmt: str) -> DataFrame:
     """Export doc_geo in ``fmt``, re-read with an explicit schema, run the
     R1 box on the re-ingested table: equality with the box oracle on the
     ORIGINAL corpus proves lossless type round-tripping."""
-    path = f"/tmp/hcs_{fmt}_roundtrip_{os.path.basename(c.sf_dir.rstrip('/'))}"
-    getattr(readers, f"write_geo_{fmt}")(c.doc_geo, path)
-    back = getattr(readers, f"read_geo_{fmt}")(c.spark, path)
+    write, read = getattr(readers, f"write_geo_{fmt}"), getattr(readers, f"read_geo_{fmt}")
+    back = read(c.spark, c.stored(f"{fmt}_roundtrip", lambda p: write(c.doc_geo, p)))
     return back.filter(
         (F.col("x") >= W.R1["x_lo"]) & (F.col("x") <= W.R1["x_hi"])
         & (F.col("y") >= W.R1["y_lo"]) & (F.col("y") <= W.R1["y_hi"])
@@ -701,7 +704,7 @@ def _events_stream_funnel(c: Ctx) -> DataFrame:
         "append", "drv_funnel",
     )[0]
     in_a = pip_ops.inside_polygon_expr(W.POLYGONS[2]["vertices"], "ex", "ey")
-    denoms = traj_ops._with_coords_epoch(c.events).agg(
+    denoms = ev_ops.event_points(c.events).agg(
         F.countDistinct("user_id").cast("long").alias("n_users"),
         F.countDistinct(F.when(in_a, F.col("user_id"))).cast("long").alias("n_reached_a"),
     )

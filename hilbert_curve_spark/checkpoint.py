@@ -8,7 +8,8 @@ A pipeline is a named sequence of stages; each stage writes its output as
 parquet under ``<root>/<stage>/`` plus a manifest JSON recording:
 
 * the stage input fingerprint (so a resume detects upstream changes),
-* per-partition row counts + bytes (lineage: which partition produced what),
+* per-partition row counts + bytes (lineage: which partition produced what,
+  read from each part file's parquet footer, so no extra Spark job),
 * wall time and the engine config.
 
 ``run`` skips stages whose manifest is present and whose input fingerprint
@@ -29,8 +30,8 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -58,16 +59,6 @@ class CheckpointRunner:
     def _data_path(self, stage: str) -> Path:
         return self.root / stage
 
-    def _partition_lineage(self, df: DataFrame) -> list[dict]:
-        counts = (
-            df.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .count()
-            .orderBy("_pid")
-            .collect()
-        )
-        return [{"partition": int(r["_pid"]), "rows": int(r["count"])} for r in counts]
-
     def run(self, stages: list[Stage], fingerprint_inputs: dict[str, str]) -> dict[str, DataFrame]:
         """Execute stages in order, skipping completed ones (resume)."""
         fp = _fingerprint(fingerprint_inputs)
@@ -84,14 +75,17 @@ class CheckpointRunner:
             df = st.build(self.spark, outputs)
             if st.sort_key:
                 df = df.repartitionByRange(8, st.sort_key).sortWithinPartitions(st.sort_key)
-            out = df.persist()
-            lineage = self._partition_lineage(out)
-            out.write.mode("overwrite").parquet(str(dpath))
-            # per-partition bytes: one part-file per write task, in partition
-            # order — pair them up with the row lineage
-            part_files = sorted(p for p in dpath.glob("part-*") if p.is_file())
-            for entry, pf in zip(lineage, part_files):
-                entry["bytes"] = pf.stat().st_size
+            df.write.mode("overwrite").parquet(str(dpath))
+            # lineage without a second job: each write task leaves one
+            # part-NNNNN file whose footer holds its row count
+            lineage = [
+                {
+                    "partition": int(pf.name[5:10]),
+                    "rows": pq.ParquetFile(pf).metadata.num_rows,
+                    "bytes": pf.stat().st_size,
+                }
+                for pf in sorted(dpath.glob("part-*"))
+            ]
             conf = self.spark.conf
             manifest = {
                 "stage": st.name,
@@ -109,6 +103,5 @@ class CheckpointRunner:
             tmp = mpath.with_suffix(".tmp")
             tmp.write_text(json.dumps(manifest, indent=1))
             tmp.rename(mpath)  # atomic commit: manifest present <=> stage done
-            out.unpersist()
             outputs[st.name] = self.spark.read.parquet(str(dpath))
         return outputs

@@ -10,8 +10,64 @@ north_star pipeline needs (micro-batch ingest + event-time aggregation).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+# ---------------------------------------------------------------------------
+# the event projection: lattice point, epoch, cell and fence tag
+# ---------------------------------------------------------------------------
+
+
+def event_points(events: DataFrame) -> DataFrame:
+    """``events`` plus ``ex``, ``ey`` (the derived lattice point: the
+    exact-LCG snippets of :mod:`..sources.derive` keyed on ``event_id``,
+    which every oracle recomputes bit-identically) and ``ep`` (whole-second
+    epoch of ``ts``) — the one place an event is quantized, as the
+    reference quantizes each point once before any scheme reads it
+    (`HilbertCoordinateProcessor.java:21-67`).
+
+    ``ep`` casts through TIMESTAMP first: parquet reads may infer
+    TIMESTAMP_NTZ, which has no direct BIGINT cast in Spark 4, and the
+    session pins UTC so both forms give the UTC epoch."""
+    from ..sources import derive
+
+    return (
+        events.withColumn("ex", F.expr(derive.x_sql("event_id")))
+        .withColumn("ey", F.expr(derive.y_sql("event_id")))
+        .withColumn("ep", F.col("ts").cast("timestamp").cast("long"))
+    )
+
+
+def event_cell(cell_shift: int, x: str = "ex", y: str = "ey") -> Column:
+    """The ``2**cell_shift``-coarsened lattice cell of point ``(x, y)`` as
+    one BIGINT key, ``(x DIV 2^s) * EDGE + (y DIV 2^s)`` — the
+    :func:`.spatial_join._cell_key` format at stride ``derive.EDGE``, which
+    is injective because a cell index never exceeds ``EDGE - 1``."""
+    from ..sources.derive import EDGE
+    from .spatial_join import _cell_key
+
+    step = 1 << int(cell_shift)
+    return _cell_key(
+        F.expr(f"CAST({x} DIV {step} AS BIGINT)"),
+        F.expr(f"CAST({y} DIV {step} AS BIGINT)"),
+        EDGE,
+    )
+
+
+def fence_tag(polygons: list[dict], x: str = "ex", y: str = "ey") -> Column:
+    """The ``poly_id`` of the FIRST listed polygon containing ``(x, y)``
+    (codegen ray-cast :func:`..operators.pip.inside_polygon_expr`, no join),
+    null outside every fence.  Zero fences give a typed string null, so an
+    ``isNotNull`` filter yields an empty result with the full schema on
+    batch and streaming sources alike."""
+    from .pip import inside_polygon_expr
+
+    tag = None
+    for p in polygons:
+        cond, poly = inside_polygon_expr(p["vertices"], x, y), F.lit(p["poly_id"])
+        tag = F.when(cond, poly) if tag is None else tag.when(cond, poly)
+    return F.lit(None).cast("string") if tag is None else tag
 
 
 def tumbling_counts(events: DataFrame, minutes: int = 60) -> DataFrame:
@@ -400,24 +456,11 @@ def geofence_counts(
     narrow codegen projection (coords + ray-casts against literal edge
     arrays, no join at all for a small fence set) + one hash aggregation
     with map-side combine."""
-    from ..sources import derive
-    from .pip import inside_polygon_expr
-
-    pts = events.withColumn(
-        "ex", F.expr(derive.x_sql("event_id"))
-    ).withColumn("ey", F.expr(derive.y_sql("event_id")))
-    chain = None
-    for p in polygons:
-        cond = inside_polygon_expr(p["vertices"], "ex", "ey")
-        branch = F.when(cond, F.lit(p["poly_id"]))
-        chain = branch if chain is None else chain.when(cond, F.lit(p["poly_id"]))
-    if chain is None:
-        # zero fences -> a typed-null tag the isNotNull filter drops: an
-        # empty result with the full schema, valid for batch AND streaming
-        # sources (pip_join's limit(0) branch is batch-only; ADVICE r3
-        # flagged the untyped-None crash here)
-        chain = F.lit(None).cast("string")
-    tagged = pts.withColumn("poly_id", chain).filter(F.col("poly_id").isNotNull())
+    tagged = (
+        event_points(events)
+        .withColumn("poly_id", fence_tag(polygons))
+        .filter(F.col("poly_id").isNotNull())
+    )
     if watermark is not None:
         tagged = tagged.withWatermark("ts", watermark)
     start = (
@@ -457,7 +500,6 @@ def geofence_join(
     re-aggregates; the streaming geofence keeps the literal chain, fine for
     small fence sets)."""
     from ..config import DEFAULT
-    from ..sources import derive
 
     edge = DEFAULT.edge
     max_extent = 1
@@ -493,10 +535,9 @@ def geofence_join(
         "ELSE ex * (e.y2 - e.y1) > e.x1 * (e.y2 - e.y1) + (ey - e.y1) * (e.x2 - e.x1) "
         "END))))"
     )
-    pts = (
-        events.withColumn("ex", F.expr(derive.x_sql("event_id")))
-        .withColumn("ey", F.expr(derive.y_sql("event_id")))
-        .withColumn("ck", F.shiftright("ex", s) * edge + F.shiftright("ey", s))
+    # ck must equal the driver-side fence cells above, keyed at config.edge
+    pts = event_points(events).withColumn(
+        "ck", F.shiftright("ex", s) * edge + F.shiftright("ey", s)
     )
     tagged = (
         pts.join(F.broadcast(fences), "ck")
@@ -583,22 +624,14 @@ def geofence_dwell(
     user_id shuffle shared by the lag window and the (user, episode)
     aggregation — the gap-and-island shape of :func:`sessionize` with the
     polygon-change disjunct fused into the boundary test."""
-    from ..sources import derive
-    from .pip import inside_polygon_expr
-
     if not polygons:
         raise ValueError("geofence_dwell needs at least one polygon")
-    pts = events.withColumn(
-        "ex", F.expr(derive.x_sql("event_id"))
-    ).withColumn("ey", F.expr(derive.y_sql("event_id")))
-    chain = None
-    for p in polygons:
-        cond = inside_polygon_expr(p["vertices"], "ex", "ey")
-        branch = F.when(cond, F.lit(p["poly_id"]))
-        chain = branch if chain is None else chain.when(cond, F.lit(p["poly_id"]))
-    tagged = pts.withColumn("poly_id", chain).filter(F.col("poly_id").isNotNull())
+    tagged = (
+        event_points(events)
+        .withColumn("poly_id", fence_tag(polygons))
+        .filter(F.col("poly_id").isNotNull())
+    )
     gap = int(gap_minutes) * 60
-    ep = F.col("ts").cast("timestamp").cast("long")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     boundary = F.when(
         (F.col("poly_id") != F.lag("poly_id").over(w))
@@ -606,8 +639,7 @@ def geofence_dwell(
         F.lit(1),
     ).otherwise(F.lit(0))
     runs = (
-        tagged.withColumn("ep", ep)
-        .withColumn("b", boundary)
+        tagged.withColumn("b", boundary)
         .withColumn("episode", F.sum("b").over(w).cast("long"))
     )
     return runs.groupBy("user_id", "episode").agg(

@@ -1748,13 +1748,10 @@ def doc_event_join(
     Reference parity: the reference's per-query proximity scans
     (`hilbert/HilbertComponent/GetPointIndex.java:59-93`) generalized to a
     set-at-a-time two-table join."""
-    from ..sources import derive
+    from .events import event_points
 
-    ev = events.filter(F.col("event_id") % int(event_mod) == 0).select(
-        "event_id",
-        "event_type",
-        F.expr(derive.x_sql("event_id")).alias("x"),
-        F.expr(derive.y_sql("event_id")).alias("y"),
+    ev = event_points(events.filter(F.col("event_id") % int(event_mod) == 0)).select(
+        "event_id", "event_type", F.col("ex").alias("x"), F.col("ey").alias("y")
     )
     counts = (
         _within_radius(ev.select("event_id", "x", "y"), doc_geo.select("x", "y"), radius, config)

@@ -22,18 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .events import event_cell, event_points
 from .skew import keyed_pairs
-
-
-def _with_coords_epoch(events: DataFrame) -> DataFrame:
-    from ..sources import derive
-
-    ep = F.col("ts").cast("timestamp").cast("long")
-    return (
-        events.withColumn("ex", F.expr(derive.x_sql("event_id")))
-        .withColumn("ey", F.expr(derive.y_sql("event_id")))
-        .withColumn("ep", ep)
-    )
 
 
 def stay_points(
@@ -59,7 +49,7 @@ def stay_points(
     epochs exactly as sessionize does (see its TIMESTAMP_NTZ note)."""
     r2 = int(radius) * int(radius)
     gap = int(gap_minutes) * 60
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dx = F.col("ex") - F.lag("ex").over(w)
     dy = F.col("ey") - F.lag("ey").over(w)
@@ -144,12 +134,9 @@ def od_flows(
     function, no sort), then a second hash agg on the OD key.  Both stages
     partial-aggregate, so the shuffle volume is bounded by distinct keys,
     not events."""
-    from ..sources.derive import EDGE
-
     secs = int(window_minutes) * 60
-    step = 1 << int(cell_shift)
-    pts = _with_coords_epoch(events)
-    cell = F.expr(f"CAST((ex DIV {step}) * {EDGE} + (ey DIV {step}) AS BIGINT)")
+    pts = event_points(events)
+    cell = event_cell(cell_shift)
     keyed = pts.withColumn("cell", cell).withColumn(
         "window_start_s", (F.col("ep") - F.col("ep") % F.lit(secs))
     )
@@ -505,20 +492,17 @@ def emerging_hotspots(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     single shuffle bounded by occupied cells; no window, no join on the
     big side.  Integer cross-multiplication keeps the threshold exact in
     both engines."""
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     rng = pts.agg(
         F.min("ep").cast("long").alias("ep_lo"),
         F.max("ep").cast("long").alias("ep_hi"),
     )
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
     # integer halves: ep <= mid -> first, else second
     tagged = pts.crossJoin(F.broadcast(rng)).withColumn(
         "is_first", (F.col("ep") <= F.expr("(ep_lo + ep_hi) DIV 2")).cast("long")
     )
     agg = (
-        tagged.select(F.expr(f"CAST(ex DIV {step} AS BIGINT) * {EDGE} + CAST(ey DIV {step} AS BIGINT)").alias("cell"), "is_first")
+        tagged.select(event_cell(cell_shift).alias("cell"), "is_first")
         .groupBy("cell")
         .agg(
             F.sum("is_first").cast("long").alias("n_first"),
@@ -581,17 +565,11 @@ def user_home_cells(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     aggregated frame — bounded by distinct (user, cell) pairs, partitioned
     by user.  With the events table bucketed by user_id the shuffle
     disappears (the trajectory-family note)."""
-    pts = _with_coords_epoch(events)
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
+    pts = event_points(events)
     counts = (
         pts.select(
             "user_id",
-            F.expr(
-                f"CAST(ex DIV {step} AS BIGINT) * {EDGE} "
-                f"+ CAST(ey DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift).alias("cell"),
         )
         .groupBy("user_id", "cell")
         .agg(F.count(F.lit(1)).cast("long").alias("n_visits"))
@@ -668,18 +646,13 @@ def st_cube_trend(
     is bounded by C(n_bins,2) regardless of corpus size."""
     if n_bins < 2:
         raise ValueError("st_cube_trend requires n_bins >= 2")
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     rng = pts.agg(
         F.min("ep").cast("long").alias("ep_lo"),
         F.max("ep").cast("long").alias("ep_hi"),
     )
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
     binned = pts.crossJoin(F.broadcast(rng)).select(
-        F.expr(
-            f"CAST(ex DIV {step} AS BIGINT) * {EDGE} + CAST(ey DIV {step} AS BIGINT)"
-        ).alias("cell"),
+        event_cell(cell_shift).alias("cell"),
         F.expr(
             f"CAST(((ep - ep_lo) * {int(n_bins)}) DIV (ep_hi - ep_lo + 1) AS INT)"
         ).alias("bin"),
@@ -774,10 +747,7 @@ def bearing_histogram(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     aggregation with map-side combine on (cell, octant) — output bounded
     by 9 x occupied cells.  With the events table bucketed by user_id the
     window shuffle disappears."""
-    pts = _with_coords_epoch(events)
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
+    pts = event_points(events)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seg = (
         pts.withColumn("px", F.lag("ex").over(w))
@@ -788,10 +758,7 @@ def bearing_histogram(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     )
     return (
         seg.select(
-            F.expr(
-                f"CAST(px DIV {step} AS BIGINT) * {EDGE} "
-                f"+ CAST(py DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift, x="px", y="py").alias("cell"),
             F.expr(f"CAST({_OCTANT_SQL} AS INT)").alias("octant"),
         )
         .groupBy("cell", "octant")
@@ -836,7 +803,7 @@ def radius_gyration(events: DataFrame) -> DataFrame:
     Plan: a single hash aggregation on user_id with map-side combine —
     one shuffle, no window, no second pass (the centroid algebra avoids
     re-scanning)."""
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     agg = pts.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("ex").cast("long").alias("sx"),
@@ -904,17 +871,11 @@ def covisit_pairs(
     cells above a visitor-count ceiling BEFORE the join — a lossy recall
     trade documented in the dedup family) or salt via AQE skew-join; exact
     as written at the workload's cell granularity."""
-    pts = _with_coords_epoch(events)
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
+    pts = event_points(events)
     visits = (
         pts.select(
             "user_id",
-            F.expr(
-                f"CAST(ex DIV {step} AS BIGINT) * {EDGE} "
-                f"+ CAST(ey DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift).alias("cell"),
         )
         .distinct()
         # the distinct is a full shuffle and the frame feeds FOUR consumers
@@ -995,17 +956,11 @@ def cell_visit_gaps(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     partition identically, so Spark plans a single Exchange with two sorts
     — then one hash aggregation; everything after the scan is bounded by
     events-in-occupied-cells."""
-    pts = _with_coords_epoch(events)
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
+    pts = event_points(events)
     cells = pts.select(
         "event_id",
         "ep",
-        F.expr(
-            f"CAST(ex DIV {step} AS BIGINT) * {EDGE} "
-            f"+ CAST(ey DIV {step} AS BIGINT)"
-        ).alias("cell"),
+        event_cell(cell_shift).alias("cell"),
     )
     w = Window.partitionBy("cell").orderBy("ep", "event_id")
     gaps = (
@@ -1084,7 +1039,7 @@ def knox_stat(
     from .spatial_join import _within_radius
 
     tw = int(t_window)
-    pts = _with_coords_epoch(events).select(
+    pts = event_points(events).select(
         "event_id", F.col("ex").alias("x"), F.col("ey").alias("y"), "ep"
     )
 
@@ -1202,7 +1157,7 @@ def impossible_travel(
     larger dt (big dt only LOWERS implied speed; we clamp the product at
     2^25 + 1 to stay exact and overflow-proof at any dt)."""
     v2 = int(vmax) * int(vmax)
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seg = (
         pts.withColumn("pe", F.lag("event_id").over(w))
@@ -1286,7 +1241,7 @@ def geo_funnel(
     window, no per-event state."""
     from .pip import inside_polygon_expr
 
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     in_a = inside_polygon_expr(poly_a["vertices"], "ex", "ey")
     in_b = inside_polygon_expr(poly_b["vertices"], "ex", "ey")
     tagged = pts.select("user_id", "ep", in_a.alias("in_a"), in_b.alias("in_b"))
@@ -1387,16 +1342,10 @@ def cell_peak_hours(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     shape as :func:`user_home_cells`: one (cell, hour) hash agg with
     map-side combine, then ONE window over the aggregated frame (<= 24
     rows per cell)."""
-    pts = _with_coords_epoch(events)
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
+    pts = event_points(events)
     counts = (
         pts.select(
-            F.expr(
-                f"CAST(ex DIV {step} AS BIGINT) * {EDGE} "
-                f"+ CAST(ey DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift).alias("cell"),
             F.expr("CAST((ep DIV 3600) % 24 AS INT)").alias("hour"),
         )
         .groupBy("cell", "hour")
@@ -1455,19 +1404,13 @@ def cell_recency_scores(
 
     Plan: one 1-value max broadcast + ONE per-cell conditional hash agg
     with map-side combine — identical shape to emerging_hotspots."""
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     frontier = pts.agg(F.max("ep").cast("long").alias("ep_max"))
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
     h = int(horizon_s)
     return (
         pts.crossJoin(F.broadcast(frontier))
         .select(
-            F.expr(
-                f"CAST(ex DIV {step} AS BIGINT) * {EDGE} "
-                f"+ CAST(ey DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift).alias("cell"),
             (F.col("ep_max") - F.col("ep")).alias("age"),
         )
         .groupBy("cell")
@@ -1524,17 +1467,12 @@ def companion_pairs(
     window count once); a final hash agg counts windows.  Never all-pairs —
     candidates are bounded by per-(window, cell) occupancy, C(u, 2) for u
     users in one bucket (the cost ``keyed_pairs`` documents)."""
-    from ..sources.derive import EDGE
-
-    step = 1 << int(cell_shift)
     secs = int(window_minutes) * 60
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     presence = pts.select(
         "user_id",
         F.expr(f"CAST(ep DIV {secs} AS BIGINT)").alias("w"),
-        F.expr(
-            f"CAST(ex DIV {step} AS BIGINT) * {EDGE} + CAST(ey DIV {step} AS BIGINT)"
-        ).alias("cell"),
+        event_cell(cell_shift).alias("cell"),
     ).distinct()
     together = (
         keyed_pairs(presence, ["w", "cell"], "user_id")
@@ -1591,17 +1529,9 @@ def cell_trigrams(
     compression lag and the trigram lags partition identically), a hash
     agg with map-side combine on the triple, and a partial top-k
     (orderBy + limit = TakeOrderedAndProject — each partition keeps k)."""
-    from ..sources.derive import EDGE
-
-    step = 1 << int(cell_shift)
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    celled = pts.withColumn(
-        "cell",
-        F.expr(
-            f"CAST(ex DIV {step} AS BIGINT) * {EDGE} + CAST(ey DIV {step} AS BIGINT)"
-        ),
-    )
+    celled = pts.withColumn("cell", event_cell(cell_shift))
     changed = celled.withColumn("pc", F.lag("cell").over(w)).filter(
         F.col("pc").isNull() | (F.col("pc") != F.col("cell"))
     )
@@ -1661,15 +1591,10 @@ def cell_dow_anomaly(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     Plan: ONE per-cell conditional aggregation (7 SUM(CASE) columns with
     map-side combine); the arg-max over the 7 aggregated columns is a
     literal codegen greatest/CASE chain — no window, no second pass."""
-    from ..sources.derive import EDGE
-
-    step = 1 << int(cell_shift)
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     agg = (
         pts.select(
-            F.expr(
-                f"CAST(ex DIV {step} AS BIGINT) * {EDGE} + CAST(ey DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift).alias("cell"),
             F.expr("CAST((ep DIV 86400) % 7 AS INT)").alias("dow"),
         )
         .groupBy("cell")
@@ -1744,18 +1669,12 @@ def user_home_scd(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     so it breaks the run like a true gap).  Every post-agg frame is
     bounded by distinct (user, day); all windows share the user_id
     partitioning, so the whole pipeline is ONE shuffle."""
-    pts = _with_coords_epoch(events)
-    step = 1 << int(cell_shift)
-    from ..sources.derive import EDGE
-
+    pts = event_points(events)
     daily = (
         pts.select(
             "user_id",
             F.expr("CAST(ep DIV 86400 AS BIGINT)").alias("day"),
-            F.expr(
-                f"CAST(ex DIV {step} AS BIGINT) * {EDGE} "
-                f"+ CAST(ey DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift).alias("cell"),
         )
         .groupBy("user_id", "day", "cell")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -1896,7 +1815,7 @@ def user_drift(events: DataFrame, days: int = 7) -> DataFrame:
     frame — |users| x |active buckets| rows, never events.  No joins, no
     explode."""
     day_s = int(days) * 86400
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     agg = pts.groupBy(
         "user_id", F.expr(f"CAST(ep DIV {day_s} AS BIGINT)").alias("bucket")
     ).agg(
@@ -2025,11 +1944,10 @@ def user_entropy(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     int64 while a single user has <= ~3.0M events — far above any real
     per-user cardinality; past that, pre-divide by ``SUM(nc)`` first (the
     documented dial, costs one ulp of the e6 quantization)."""
-    pts = _with_coords_epoch(events)
-    s = int(cell_shift)
+    pts = event_points(events)
     per_cell = pts.groupBy(
         "user_id",
-        (F.shiftright("ex", s) * 65536 + F.shiftright("ey", s)).alias("vcell"),
+        event_cell(cell_shift).alias("vcell"),
     ).agg(F.count(F.lit(1)).cast("long").alias("nc"))
     return per_cell.groupBy("user_id").agg(
         F.sum("nc").cast("long").alias("n_events"),
@@ -2077,7 +1995,7 @@ def hotspot_persistence(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     Plan: ONE events pass into the (day, cell) histogram (map-side
     combine), then a per-day ranking window and the final per-cell agg —
     both over |days| x |active cells| rows, never events."""
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     s = int(cell_shift)
     daily = pts.groupBy(
         F.expr("CAST(ep DIV 86400 AS BIGINT)").alias("day"),
@@ -2143,7 +2061,7 @@ def cell_mad_anomaly(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     combine, then two rank-window + join passes over |days| x |active
     cells| rows — events shuffle once; everything after is
     histogram-bounded."""
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     s = int(cell_shift)
     daily = pts.groupBy(
         F.expr("CAST(ep DIV 86400 AS BIGINT)").alias("day"),
@@ -2352,10 +2270,7 @@ def commute_matrix(
     scan), one rank window per (user, period) over the bounded histogram,
     a self-join ON user (both sides one row per user after the rank
     filter), and the final matrix agg."""
-    from ..sources.derive import EDGE
-
-    pts = _with_coords_epoch(events)
-    step = 1 << int(cell_shift)
+    pts = event_points(events)
     hour = F.expr("CAST((ep DIV 3600) % 24 AS BIGINT)")
     period = (
         F.when((hour >= night[0]) & (hour < night[1]), F.lit("home"))
@@ -2365,10 +2280,7 @@ def commute_matrix(
         pts.select(
             "user_id",
             period.alias("period"),
-            F.expr(
-                f"CAST(ex DIV {step} AS BIGINT) * {EDGE} "
-                f"+ CAST(ey DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift).alias("cell"),
         )
         .filter(F.col("period").isNotNull())
         .groupBy("user_id", "period", "cell")
@@ -2446,17 +2358,11 @@ def activity_cube(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     ``n_users`` is an exact COUNT(DISTINCT) per grouping set — the expand
     + two-phase distinct plan; at extreme scale swap in the KMV sketch
     (``rollup.cell_kmv``) per documented trade-off."""
-    from ..sources.derive import EDGE
-
-    pts = _with_coords_epoch(events)
-    step = 1 << int(cell_shift)
+    pts = event_points(events)
     keyed = pts.select(
         "user_id",
         F.expr("CAST(ep DIV 86400 AS BIGINT)").alias("day"),
-        F.expr(
-            f"CAST(ex DIV {step} AS BIGINT) * {EDGE} "
-            f"+ CAST(ey DIV {step} AS BIGINT)"
-        ).alias("cell"),
+        event_cell(cell_shift).alias("cell"),
     )
     return (
         keyed.cube("day", "cell")
@@ -2539,7 +2445,7 @@ def traj_resample(events: DataFrame, step_s: int = 21600) -> DataFrame:
     range join, no per-tick probe.  100 TB: bucket events by user_id and
     the shuffle disappears; state per user is one row."""
     step = int(step_s)
-    pts = _with_coords_epoch(events).select(
+    pts = event_points(events).select(
         "user_id", "ep", "event_id", F.col("ex").alias("x"), F.col("ey").alias("y")
     )
     bounds = pts.groupBy("user_id").agg(
@@ -2678,17 +2584,12 @@ def markov_accuracy(
     distinct cell pairs, never events).  100 TB: events bucketed by
     user_id make the pair stage shuffle-free; the model is tiny by
     construction (<= cells^2 rows)."""
-    from ..sources.derive import EDGE
-
-    step = 1 << int(cell_shift)
     split = int(split_s)
-    pts = _with_coords_epoch(events).select(
+    pts = event_points(events).select(
         "user_id",
         "ep",
         "event_id",
-        F.expr(
-            f"CAST(ex DIV {step} AS BIGINT) * {EDGE} + CAST(ey DIV {step} AS BIGINT)"
-        ).alias("cell"),
+        event_cell(cell_shift).alias("cell"),
     )
     w = Window.partitionBy("user_id").orderBy("ep", "event_id")
     pairs = (
@@ -2788,15 +2689,10 @@ def cell_autocorr(events: DataFrame, cell_shift: int = 8) -> DataFrame:
     Plan: one (cell, hour) hash agg with map-side combine over the events
     pass, then a lag window + final agg both partitioned by cell —
     histogram-sized frames end to end."""
-    from ..sources.derive import EDGE
-
-    step = 1 << int(cell_shift)
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     hourly = (
         pts.select(
-            F.expr(
-                f"CAST(ex DIV {step} AS BIGINT) * {EDGE} + CAST(ey DIV {step} AS BIGINT)"
-            ).alias("cell"),
+            event_cell(cell_shift).alias("cell"),
             F.expr("CAST(ep DIV 3600 AS BIGINT)").alias("hr"),
         )
         .groupBy("cell", "hr")
@@ -2897,7 +2793,7 @@ def traj_simplify(events: DataFrame, eps: int = 48, depth: int = 3) -> DataFrame
     w_ord = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_cnt = Window.partitionBy("user_id")
     base = (
-        _with_coords_epoch(events)
+        event_points(events)
         .select("user_id", "event_id", "ts", "ex", "ey")
         .withColumn("seq", F.row_number().over(w_ord))
         .withColumn("n_u", F.count(F.lit(1)).over(w_cnt))
@@ -3080,7 +2976,7 @@ def segment_crossings(
 
     max_len2 = int(max_len) * int(max_len)
     s = int(shift)
-    pts = _with_coords_epoch(events).filter(
+    pts = event_points(events).filter(
         F.col("user_id") % int(user_mod) == 0
     )
     w = W_.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3297,7 +3193,7 @@ def viterbi_match(
     broadcast closure.  At 100 TB this is the per-trajectory decode step
     of a map-matching pipeline, embarrassingly parallel over users."""
     t_max = int(n_steps)
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sel = (
         pts.withColumn("rn", F.row_number().over(w))

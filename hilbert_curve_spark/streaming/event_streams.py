@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.events import event_points, fence_tag
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -327,16 +329,11 @@ def stay_points_stream(
     segment INDEX always advances — including for non-qualifying segments —
     so ``stay_id`` equals the batch boundary-count numbering.  State is one
     fixed-width row per active user: bounded, no per-key growth."""
-    from ..sources import derive
-
     r2 = int(radius) * int(radius)
     gap = int(gap_minutes) * 60
     min_dur = int(min_minutes) * 60
     min_p = int(min_points)
-
-    pts = events.withColumn("ex", F.expr(derive.x_sql("event_id"))).withColumn(
-        "ey", F.expr(derive.y_sql("event_id"))
-    )
+    pts = event_points(events)
 
     def _emit(user_id, seg, n, start, last, sx, sy):
         return {
@@ -358,12 +355,11 @@ def stay_points_stream(
                 yield pd.DataFrame([_emit(user_id, seg, n, start, last, sx, sy)])
             return
         rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        secs = rows["ts"].astype("int64") // 1_000_000_000
         # late-data guard — same rationale as sessionize_stream
         wm_s = state.getCurrentWatermarkMs() // 1000
         pts3 = [
             (int(s), int(x), int(y))
-            for s, x, y in zip(secs.tolist(), rows["ex"].tolist(), rows["ey"].tolist())
+            for s, x, y in zip(rows["ep"].tolist(), rows["ex"].tolist(), rows["ey"].tolist())
             if wm_s <= 0 or s >= wm_s
         ]
         cur = tuple(state.get) if state.exists else None
@@ -438,14 +434,9 @@ def impossible_travel_stream(events: DataFrame, vmax: int = 2) -> DataFrame:
     The same late-data guard as sessionize_stream drops below-watermark
     arrivals (the batch comparison replays everything in one availableNow
     batch, where the guard is vacuous)."""
-    from ..sources import derive
-
     v2 = int(vmax) * int(vmax)
     cap = (1 << 25) + 1
-
-    pts = events.withColumn("ex", F.expr(derive.x_sql("event_id"))).withColumn(
-        "ey", F.expr(derive.y_sql("event_id"))
-    )
+    pts = event_points(events)
 
     def _detect(
         key: Tuple[Any, ...],
@@ -456,12 +447,11 @@ def impossible_travel_stream(events: DataFrame, vmax: int = 2) -> DataFrame:
         if state.hasTimedOut:  # NoTimeout: unreachable, defensive
             return
         rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        secs = rows["ts"].astype("int64") // 1_000_000_000
         wm_s = state.getCurrentWatermarkMs() // 1000
         pts4 = [
             (int(s), int(e), int(x), int(y))
             for s, e, x, y in zip(
-                secs.tolist(),
+                rows["ep"].tolist(),
                 rows["event_id"].tolist(),
                 rows["ex"].tolist(),
                 rows["ey"].tolist(),
@@ -539,12 +529,10 @@ def geo_funnel_stream(
     alerting shape.  Same watermark late-data guard as the other stateful
     twins (vacuous on a single availableNow replay batch)."""
     from ..operators.pip import inside_polygon_expr
-    from ..sources import derive
 
     within = int(within_s)
     pts = (
-        events.withColumn("ex", F.expr(derive.x_sql("event_id")))
-        .withColumn("ey", F.expr(derive.y_sql("event_id")))
+        event_points(events)
         .withColumn("in_a", inside_polygon_expr(poly_a["vertices"], "ex", "ey"))
         .withColumn("in_b", inside_polygon_expr(poly_b["vertices"], "ex", "ey"))
     )
@@ -558,12 +546,11 @@ def geo_funnel_stream(
         if state.hasTimedOut:  # NoTimeout: unreachable, defensive
             return
         rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        secs = rows["ts"].astype("int64") // 1_000_000_000
         wm_s = state.getCurrentWatermarkMs() // 1000
         t_a, resolved = (tuple(state.get) if state.exists else (-1, 0))
         out = []
         for s, a, b in zip(
-            secs.tolist(), rows["in_a"].tolist(), rows["in_b"].tolist()
+            rows["ep"].tolist(), rows["in_a"].tolist(), rows["in_b"].tolist()
         ):
             if wm_s > 0 and s < wm_s:
                 continue  # late-data guard, same rationale as sessionize
@@ -628,21 +615,12 @@ def geofence_dwell_stream(
     DETERMINISTICALLY when its flush arrives (no event-time-timeout race
     at stream end), and the flush itself opens nothing.  State is one
     fixed-width row per active user."""
-    from ..operators.pip import inside_polygon_expr
-    from ..sources import derive
-
     gap = int(gap_minutes) * 60
-    pts = events.withColumn(
-        "ex", F.expr(derive.x_sql("event_id"))
-    ).withColumn("ey", F.expr(derive.y_sql("event_id")))
-    chain = None
-    for p in polygons:
-        cond = inside_polygon_expr(p["vertices"], "ex", "ey")
-        branch = F.when(cond, F.lit(p["poly_id"]))
-        chain = branch if chain is None else chain.when(cond, F.lit(p["poly_id"]))
-    tagged = pts.withColumn(
+    tagged = event_points(events).withColumn(
         "poly_id",
-        F.when(F.col("event_type") == "flush", F.lit("_flush_")).otherwise(chain),
+        F.when(F.col("event_type") == "flush", F.lit("_flush_")).otherwise(
+            fence_tag(polygons)
+        ),
     ).filter(F.col("poly_id").isNotNull())
 
     def _emit(user_id, episode, poly, n, start, last):
@@ -661,11 +639,10 @@ def geofence_dwell_stream(
         if state.hasTimedOut:  # pragma: no cover - flush rows close states
             return
         rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        secs = rows["ts"].astype("int64") // 1_000_000_000
         wm_s = state.getCurrentWatermarkMs() // 1000
         seq = [
             (int(s), str(p))
-            for s, p in zip(secs.tolist(), rows["poly_id"].tolist())
+            for s, p in zip(rows["ep"].tolist(), rows["poly_id"].tolist())
             if wm_s <= 0 or s >= wm_s
         ]
         cur = tuple(state.get) if state.exists else None

@@ -1,6 +1,8 @@
 """Tier-1 smoke test of ``bench.py``: its timed set is pinned to spec rows,
 and the bench loop runs through the bench ctx on the smallest fixture."""
 
+import os
+
 import bench
 
 import __spark_entry__ as E
@@ -77,3 +79,22 @@ def test_bench_loop_runs_each_input_kind(spark, sf_dir, tmp_path, monkeypatch):
     draws = bench.time_specs(ctx, bench.bench_specs(KIND_PICKS), draws=1)
     assert set(draws) == set(KIND_PICKS)
     assert all(len(d) == 1 and d[0] > 0 for d in draws.values())
+
+
+def test_ctx_store_is_removed_at_exit_unless_given(tmp_path, monkeypatch):
+    """A ctx-made store dir is removed at interpreter exit; a caller-given
+    ``store_dir`` (the bench cache) is never registered for removal."""
+    calls = []
+    monkeypatch.setattr(E.atexit, "register", lambda fn, *a, **kw: calls.append((fn, a, kw)))
+
+    def write(path):
+        os.makedirs(path)
+
+    own = E.Ctx(None, "unused").stored("layout", write)
+    assert len(calls) == 1 and os.path.isdir(own)
+    fn, args, kwargs = calls[0]
+    fn(*args, **kwargs)
+    assert not os.path.exists(os.path.dirname(own))
+
+    given = E.Ctx(None, "unused", store_dir=str(tmp_path)).stored("layout", write)
+    assert len(calls) == 1 and given == str(tmp_path / "layout") and os.path.isdir(given)

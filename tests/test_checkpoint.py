@@ -3,6 +3,7 @@ resume, byte-equal outputs (FIXTURES.md invariant 3)."""
 
 import json
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from hilbert_curve_spark.checkpoint import CheckpointRunner, Stage
@@ -40,10 +41,18 @@ def test_resume_skips_completed_stages(spark, sf_dir, tmp_path):
     rows2 = sorted(t for t in out2["geo"].select("doc_id", "hilbert").collect())
     assert rows1 == rows2
 
-    # manifests carry per-partition lineage
+    # manifests carry per-partition lineage, equal to each part file's
+    # parquet footer and size
     m = json.loads((tmp_path / "ckpt" / "geo.manifest.json").read_text())
     assert m["rows"] == len(rows1)
     assert m["partitions"] and all("rows" in p for p in m["partitions"])
+    files = {int(f.name[5:10]): f for f in (tmp_path / "ckpt" / "geo").glob("part-*")}
+    assert sorted(files) == [p["partition"] for p in m["partitions"]]
+    for p in m["partitions"]:
+        f = files[p["partition"]]
+        assert p["rows"] == pq.ParquetFile(f).metadata.num_rows
+        assert p["bytes"] == f.stat().st_size
+    assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
 
 
 def test_resume_after_partial_run(spark, sf_dir, tmp_path):

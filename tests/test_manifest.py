@@ -2,8 +2,6 @@
 file statistics, planning selects exactly the overlapping files, and the
 pruned scan is lossless for cover queries."""
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,8 +19,8 @@ BOX = dict(x_lo=1100, x_hi=1500, y_lo=900, y_hi=1400)
 
 
 @pytest.fixture(scope="module")
-def store(spark, sf_dir):
-    path = tempfile.mkdtemp(prefix="hcs_manifest_") + "/doc_geo"
+def store(spark, sf_dir, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("hcs_manifest") / "doc_geo")
     write_with_manifest(
         encode_documents(build_documents(spark, sf_dir), DEFAULT),
         path,

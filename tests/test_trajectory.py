@@ -295,3 +295,20 @@ def test_hausdorff_oracle_parity(spark, sf_dir):
         spark.read.parquet(f"{sf_dir}/events.parquet"), max_h=512
     )
     assert_df_equals_oracle(out, T.hausdorff_pairs_oracle(max_h=512), sf_dir)
+
+
+@pytest.mark.parametrize("s", [0, 8, 11])
+def test_event_cell_matches_python_key(spark, s):
+    """``events.event_cell`` is ``(ex >> s) * 4096 + (ey >> s)`` on the
+    lattice corners and interior points, and injective over distinct
+    ``(ex >> s, ey >> s)`` cells."""
+    from hilbert_curve_spark.operators.events import event_cell
+
+    axis = [0, 1, 255, 256, 2047, 2048, 4094, 4095]
+    pts = [(x, y) for x in axis for y in axis]
+    df = spark.createDataFrame(pts, "ex long, ey long")
+    rows = df.select("ex", "ey", event_cell(s).alias("cell")).collect()
+    got = {(r.ex, r.ey): r.cell for r in rows}
+    assert got == {(x, y): (x >> s) * 4096 + (y >> s) for x, y in pts}
+    cells = {(x >> s, y >> s) for x, y in pts}
+    assert len(set(got.values())) == len(cells)

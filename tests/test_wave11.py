@@ -81,10 +81,10 @@ def test_pair_histogram_empty_bins(spark):
 
 
 def _event_pts(spark, sf_dir):
-    from hilbert_curve_spark.operators.trajectory import _with_coords_epoch
+    from hilbert_curve_spark.operators.events import event_points
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     return events, [
         (r.user_id, r.ep, r.ex, r.ey)
         for r in pts.select("user_id", "ep", "ex", "ey").collect()

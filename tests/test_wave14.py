@@ -3,8 +3,8 @@ per-cell revisit-gap profile — brute-force parity against pure-Python
 replays of the exact integer semantics."""
 
 from hilbert_curve_spark import workload as W
+from hilbert_curve_spark.operators.events import event_points
 from hilbert_curve_spark.operators.trajectory import (
-    _with_coords_epoch,
     cell_visit_gaps,
     covisit_pairs,
 )
@@ -14,7 +14,7 @@ EDGE = 4096
 
 def _event_rows(spark, sf_dir):
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     rows = [
         (r.user_id, r.event_id, r.ep, r.ex, r.ey)
         for r in pts.select("user_id", "event_id", "ep", "ex", "ey").collect()

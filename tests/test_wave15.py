@@ -3,8 +3,8 @@ detection, IDW interpolation raster — brute-force parity against pure-Python
 replays (the Knox brute force is the quadratic all-pairs count the engine
 must never run, which is exactly what makes it the right oracle here)."""
 
+from hilbert_curve_spark.operators.events import event_points
 from hilbert_curve_spark.operators.trajectory import (
-    _with_coords_epoch,
     impossible_travel,
     knox_stat,
 )
@@ -14,7 +14,7 @@ EDGE = 4096
 
 def _event_rows(spark, sf_dir):
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     rows = [
         (r.user_id, r.event_id, r.ep, r.ex, r.ey)
         for r in pts.select("user_id", "event_id", "ep", "ex", "ey").collect()

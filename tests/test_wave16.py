@@ -4,8 +4,8 @@ replays (including a direct shapely-free even-odd ray cast for the funnel's
 fence membership)."""
 
 from hilbert_curve_spark import workload as W
+from hilbert_curve_spark.operators.events import event_points
 from hilbert_curve_spark.operators.trajectory import (
-    _with_coords_epoch,
     cell_peak_hours,
     cell_recency_scores,
     geo_funnel,
@@ -16,7 +16,7 @@ EDGE = 4096
 
 def _event_rows(spark, sf_dir):
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     rows = [
         (r.user_id, r.ep, r.ex, r.ey)
         for r in pts.select("user_id", "ep", "ex", "ey").collect()

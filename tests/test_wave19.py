@@ -28,12 +28,12 @@ def test_geo_funnel_stream_conversion_times_match_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from hilbert_curve_spark.operators.pip import inside_polygon_expr
-    from hilbert_curve_spark.operators.trajectory import _with_coords_epoch
+    from hilbert_curve_spark.operators.events import event_points
     from hilbert_curve_spark.streaming import event_streams as es
     import __spark_entry__ as entry_mod
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pts = _with_coords_epoch(events)
+    pts = event_points(events)
     in_a = inside_polygon_expr(W.POLYGONS[2]["vertices"], "ex", "ey")
     in_b = inside_polygon_expr(W.POLYGONS[1]["vertices"], "ex", "ey")
     rows = [

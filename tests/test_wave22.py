@@ -52,8 +52,8 @@ def test_cell_cost_distance_brute_force(spark, sf_dir):
 
 
 def test_user_home_scd_brute_force(spark, sf_dir):
+    from hilbert_curve_spark.operators.events import event_points
     from hilbert_curve_spark.operators.trajectory import (
-        _with_coords_epoch,
         user_home_scd,
     )
     from hilbert_curve_spark.sources.derive import EDGE
@@ -63,7 +63,7 @@ def test_user_home_scd_brute_force(spark, sf_dir):
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     rows = [
         (r.user_id, r.ep // 86400, (r.ex // step) * EDGE + r.ey // step)
-        for r in _with_coords_epoch(events)
+        for r in event_points(events)
         .select("user_id", "ep", "ex", "ey")
         .collect()
     ]

@@ -96,14 +96,14 @@ def test_cell_morphology_brute_force(spark, sf_dir):
 
 
 def test_user_drift_brute_force(spark, sf_dir):
+    from hilbert_curve_spark.operators.events import event_points
     from hilbert_curve_spark.operators.trajectory import (
-        _with_coords_epoch,
         user_drift,
     )
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     day_s = W.DRIFT_DAYS * 86400
-    rows = _with_coords_epoch(events).select("user_id", "ep", "ex", "ey").collect()
+    rows = event_points(events).select("user_id", "ep", "ex", "ey").collect()
     agg = {}
     for r in rows:
         key = (r.user_id, r.ep // day_s)

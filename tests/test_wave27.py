@@ -5,13 +5,13 @@ from hilbert_curve_spark import workload as W
 
 
 def test_user_entropy_brute_force(spark, sf_dir):
+    from hilbert_curve_spark.operators.events import event_points
     from hilbert_curve_spark.operators.trajectory import (
-        _with_coords_epoch,
         user_entropy,
     )
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    rows = _with_coords_epoch(events).select("user_id", "ex", "ey").collect()
+    rows = event_points(events).select("user_id", "ex", "ey").collect()
     per_user = {}
     for r in rows:
         cell = ((r.ex >> 8) * 65536) + (r.ey >> 8)

@@ -21,13 +21,13 @@ def test_stream_dwell_equals_batch(spark, sf_dir):
 
 
 def test_hotspot_persistence_brute_force(spark, sf_dir):
+    from hilbert_curve_spark.operators.events import event_points
     from hilbert_curve_spark.operators.trajectory import (
-        _with_coords_epoch,
         hotspot_persistence,
     )
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    rows = _with_coords_epoch(events).select("ep", "ex", "ey").collect()
+    rows = event_points(events).select("ep", "ex", "ey").collect()
     daily = {}
     for r in rows:
         key = (r.ep // 86400, (r.ex >> 8) * 65536 + (r.ey >> 8))

@@ -82,13 +82,13 @@ def test_triangle_counts_brute_force(ctx):
 
 
 def test_cell_mad_anomaly_brute_force(spark, sf_dir):
+    from hilbert_curve_spark.operators.events import event_points
     from hilbert_curve_spark.operators.trajectory import (
-        _with_coords_epoch,
         cell_mad_anomaly,
     )
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    rows = _with_coords_epoch(events).select("ep", "ex", "ey").collect()
+    rows = event_points(events).select("ep", "ex", "ey").collect()
     daily = {}
     for r in rows:
         key = (r.ep // 86400, (r.ex >> 8) * 65536 + (r.ey >> 8))

@@ -70,15 +70,15 @@ def test_keyword_lift_brute_force(ctx):
 
 
 def test_gravity_residuals_brute_force(spark, sf_dir):
+    from hilbert_curve_spark.operators.events import event_points
     from hilbert_curve_spark.operators.trajectory import (
-        _with_coords_epoch,
         gravity_residuals,
     )
     from hilbert_curve_spark.sources.derive import EDGE
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     rows = (
-        _with_coords_epoch(events)
+        event_points(events)
         .select("user_id", "event_id", "ep", "ex", "ey")
         .collect()
     )

@@ -2,12 +2,12 @@
 
 
 def _keyed_rows(spark, sf_dir):
-    from hilbert_curve_spark.operators.trajectory import _with_coords_epoch
+    from hilbert_curve_spark.operators.events import event_points
     from hilbert_curve_spark.sources.derive import EDGE
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     rows = (
-        _with_coords_epoch(events)
+        event_points(events)
         .select("user_id", "ep", "ex", "ey")
         .collect()
     )

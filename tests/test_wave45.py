@@ -43,10 +43,10 @@ def _dp_brute(points, eps, depth):
 def test_traj_simplify_brute_force(spark, sf_dir):
     import __spark_entry__ as E
     from hilbert_curve_spark import workload as W
-    from hilbert_curve_spark.operators.trajectory import _with_coords_epoch
+    from hilbert_curve_spark.operators.events import event_points
 
     pts = (
-        _with_coords_epoch(spark.read.parquet(f"{sf_dir}/events.parquet"))
+        event_points(spark.read.parquet(f"{sf_dir}/events.parquet"))
         .select("user_id", "ts", "event_id", "ex", "ey")
         .collect()
     )

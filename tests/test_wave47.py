@@ -186,7 +186,7 @@ def _segments_cross(a, b):
 def test_crossings_match_brute_force_on_derived_corpus(spark, sf_dir):
     """End-to-end over the real events table: the blocked join must equal
     the quadratic reference on the identical derived segment set."""
-    from hilbert_curve_spark.operators.trajectory import _with_coords_epoch
+    from hilbert_curve_spark.operators.events import event_points
     from pyspark.sql import Window
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -195,7 +195,7 @@ def test_crossings_match_brute_force_on_derived_corpus(spark, sf_dir):
         for r in segment_crossings(events, user_mod=8, max_len=896).collect()
     }
     # quadratic reference built from the same lag derivation
-    pts = _with_coords_epoch(events).filter(F.col("user_id") % 8 == 0)
+    pts = event_points(events).filter(F.col("user_id") % 8 == 0)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     segs = (
         pts.withColumn("pe", F.lag("event_id").over(w))

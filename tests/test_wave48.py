@@ -168,12 +168,12 @@ def test_viterbi_is_cost_optimal(spark, sf_dir):
     t_n, lam = 4, W.VITERBI_LAMBDA
     roads = W.ROADS
     decoded = viterbi_match(events, roads, t_n, lam).collect()
-    from hilbert_curve_spark.operators.trajectory import _with_coords_epoch
+    from hilbert_curve_spark.operators.events import event_points
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pts = (
-        _with_coords_epoch(events)
+        event_points(events)
         .withColumn("rn", F.row_number().over(w))
         .withColumn("cnt", F.count("*").over(Window.partitionBy("user_id")))
         .filter((F.col("rn") <= t_n) & (F.col("cnt") >= t_n))
@@ -218,11 +218,11 @@ def test_viterbi_switch_penalty_controls_path(spark):
     )
     # monkey-path the coordinate derivation is NOT possible here, so build
     # the expectation from the derived coordinates instead
-    from hilbert_curve_spark.operators.trajectory import _with_coords_epoch
+    from hilbert_curve_spark.operators.events import event_points
 
     der = {
         r["event_id"]: (r["ex"], r["ey"])
-        for r in _with_coords_epoch(ev).collect()
+        for r in event_points(ev).collect()
     }
     free = {r["step"]: r["road_id"] for r in viterbi_match(ev, roads, 4, 0).collect()}
     for step, eid in enumerate(sorted(der)):
