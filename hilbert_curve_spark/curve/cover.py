@@ -36,10 +36,7 @@ import numpy as np
 
 from .hilbert import decode2d, encode2d
 
-__all__ = [
-    "Cover", "cover_box", "cover_polygon", "coalesce_ranges", "dense_cover",
-    "cell_shift_for_budget", "expand_ranges_to_cells",
-]
+__all__ = ["Cover", "cover_box", "cover_polygon", "coalesce_ranges", "dense_cover"]
 
 
 @dataclass(frozen=True)
@@ -192,15 +189,19 @@ def _rect_overlaps_polygon(
     return False
 
 
+# coarse cells a polygon's bounding box may span in ``cover_polygon``: the
+# rasterization tests each one against every edge in Python
+_POLYGON_CELLS = 1024
+
+
 def cover_polygon(
     vertices: list[tuple[int, int]],
     order: int,
     max_ranges: int = 0,
-    cell_budget: int = 1024,
 ) -> Cover:
     """Hilbert range cover of the cells a polygon touches.
 
-    Picks the finest aligned-cell shift whose bbox holds <= ``cell_budget``
+    Picks the finest aligned-cell shift whose bbox holds <= ``_POLYGON_CELLS``
     coarse cells, keeps only cells overlapping the polygon (lossless test
     above), maps each kept coarse cell to its contiguous Hilbert interval,
     merges adjacent intervals, then budget-coalesces.  ``exact`` is always
@@ -215,7 +216,7 @@ def cover_polygon(
     s = 0
     while s < order and ((x_hi >> s) - (x_lo >> s) + 1) * (
         (y_hi >> s) - (y_lo >> s) + 1
-    ) > cell_budget:
+    ) > _POLYGON_CELLS:
         s += 1
     kept_x, kept_y = [], []
     for cx in range(x_lo >> s, (x_hi >> s) + 1):
@@ -294,44 +295,3 @@ def dense_cover(x_lo: int, x_hi: int, y_lo: int, y_hi: int, order: int) -> Cover
         [(int(h[s]), int(h[e])) for s, e in zip(starts, ends)],
         x_lo, x_hi, y_lo, y_hi, order, exact=True,
     )
-
-
-def cell_shift_for_budget(ranges: list[tuple[int, int]], budget: int = 4096) -> int:
-    """Smallest shift ``s`` such that expanding every range to its aligned
-    ``hilbert >> s`` cells yields at most ``budget`` cells in total.
-
-    This turns an interval table into an equi-join key: a range join
-    ``hilbert BETWEEN lo AND hi`` against N broadcast ranges is a
-    nested-loop (every probe row × every range); joining instead on
-    ``hilbert >> s == cell`` with the BETWEEN kept as a residual is a
-    broadcast *hash* join — O(1) per probe row regardless of N.  The budget
-    bounds the broadcast table size; the shift only coarsens the hash key,
-    never the result (the residual stays exact).
-
-    The sum is bounded below by ``len(ranges)`` (each range contributes at
-    least one cell at any shift), so when more ranges than budget exist no
-    shift can satisfy it — the loop caps at shift **63** (every nonnegative
-    hilbert collapses to cell 0; the join degrades to the nested-loop
-    residual check but stays correct) instead of spinning forever.
-
-    The cap must be 63, not 64: Spark's ``shiftright`` is Java ``>>`` which
-    masks the shift amount mod 64, so ``shiftright(hilbert, 64)`` is a
-    NO-OP while Python ``h >> 64`` is 0 — at shift 64 the Spark-side cell
-    keys would never match the Python-expanded cell 0 and the hash join
-    would silently drop every row.  At 63 both engines agree (cell 0 for
-    all nonnegative values)."""
-    s = 0
-    while s < 63 and sum((hi >> s) - (lo >> s) + 1 for lo, hi in ranges) > budget:
-        s += 1
-    return s
-
-
-def expand_ranges_to_cells(
-    ranges: list[tuple[int, int]], shift: int
-) -> list[tuple[int, int, int]]:
-    """Each (lo, hi) -> one (cell, lo, hi) row per aligned cell it touches."""
-    return [
-        (cell, lo, hi)
-        for lo, hi in ranges
-        for cell in range(lo >> shift, (hi >> shift) + 1)
-    ]

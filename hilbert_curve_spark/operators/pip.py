@@ -2,19 +2,17 @@
 the axis-aligned box, `hilbert/HilbertComponent/Box.contains:144-152`; the
 north_star extends to general polygons).
 
-Physical plan (per north_rule: cell-bucketed broadcast join + exact test):
+Physical plan (one pruned scan + exact test, ``range_query.shape_probe``):
 
-1. **Prefilter** — each polygon's bounding box compiles to a budgeted
-   Hilbert range cover (driver-side); the merged literal union of all
-   covers is pushed to the scan (parquet row-group pruning on
+1. **Prefilter** — each polygon compiles (driver-side) to a rasterized
+   Hilbert range cover of the cells it touches; the merged literal union
+   of all covers is pushed to the scan (parquet row-group pruning on
    Hilbert-sorted storage).
-2. **Equi-key broadcast hash join** — every cover range expands to the
-   aligned ``hilbert >> s`` cells it touches (``s`` chosen so the broadcast
-   table stays under a budget), and the probe joins on
-   ``hilbert >> s == ck`` with ``hilbert BETWEEN lo AND hi`` as a residual.
-   A plain interval join would be a BroadcastNestedLoopJoin — every
-   surviving row tested against *all* ranges, O(rows × ranges); the hashed
-   cell key makes it O(rows).
+2. **Tag** — each surviving row explodes to one row per polygon whose
+   bounding box and exact test (3) hold, a codegen
+   ``explode(filter(array(CASE ...)))``; the polygon's id is picked by
+   index from a literal array.  No join and no broadcast table: the
+   polygon lists this operator serves are a handful of literals.
 3. **Exact test** — integer-exact even-odd ray cast evaluated as a native
    Column expression: the polygon's edge list is a literal
    ``array<struct>`` folded with ``aggregate`` (boolean XOR), entirely
@@ -32,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
+from ..curve.cover import Cover
 
 Polygon = dict  # {poly_id: str, vertices: list[(x, y)]}
 
@@ -42,61 +41,22 @@ def _edges(verts: list[tuple[int, int]]) -> list[tuple[int, int, int, int]]:
 
 
 def inside_polygon_expr(verts: list[tuple[int, int]], x: str = "x", y: str = "y") -> F.Column:
-    """Codegen even-odd ray cast: fold the literal edge array with a boolean
-    XOR (``!=``) accumulator.  Exact int64 arithmetic end to end."""
-    edge_lits = ", ".join(
-        f"named_struct('x1', CAST({x1} AS BIGINT), 'y1', CAST({y1} AS BIGINT), "
-        f"'x2', CAST({x2} AS BIGINT), 'y2', CAST({y2} AS BIGINT))"
-        for x1, y1, x2, y2 in _edges(verts)
-    )
-    return F.expr(
-        f"aggregate(array({edge_lits}), false, (acc, e) -> (acc != ("
-        f"((e.y1 > {y}) != (e.y2 > {y})) AND "
-        f"(CASE WHEN e.y2 - e.y1 > 0 "
-        f"THEN {x} * (e.y2 - e.y1) < e.x1 * (e.y2 - e.y1) + ({y} - e.y1) * (e.x2 - e.x1) "
-        f"ELSE {x} * (e.y2 - e.y1) > e.x1 * (e.y2 - e.y1) + ({y} - e.y1) * (e.x2 - e.x1) "
-        f"END))))"
-    )
+    """Codegen even-odd ray cast of one polygon: :func:`inside_rings_expr`
+    over its single ring."""
+    return inside_rings_expr([verts], x, y)
 
 
 def pip_join(
     doc_geo: DataFrame,
     polygons: list[Polygon],
     config: EngineConfig = DEFAULT,
-    cell_budget: int = 1024,
 ) -> DataFrame:
-    """(poly_id, doc_id, x, y) for every doc strictly inside each polygon."""
-    if not polygons:
-        return (
-            doc_geo.select(
-                F.lit("").alias("poly_id"), "doc_id", "x", "y"
-            ).limit(0)
-        )
-    from ..curve.cover import cover_polygon
-    from .range_query import cover_cells_probe
-
-    per_poly: list[tuple[tuple, list[tuple[int, int]]]] = []
-    for i, p in enumerate(polygons):
-        # rasterized polygon cover (curve/cover.py::cover_polygon): only the
-        # aligned cells the polygon touches, not its whole bounding box — a
-        # strictly tighter prefilter for thin/diagonal shapes; the exact
-        # ray-cast residual below keeps the result identical either way
-        cov = cover_polygon(p["vertices"], config.order, config.max_ranges)
-        per_poly.append(((p["poly_id"], i), cov.ranges))
-
-    # equi-key broadcast HASH join (shared plumbing, see cover_cells_probe);
-    # the exact ray-cast is the post-join residual
-    cand = cover_cells_probe(
-        doc_geo, per_poly, "poly_id string, poly_idx int", cell_budget
-    )
-    # per-polygon covers are disjoint range lists, so each doc matches at
-    # most one (ck, lo, hi) row per polygon — no distinct needed afterwards
-    inside = F.when(F.col("poly_idx") == 0, inside_polygon_expr(polygons[0]["vertices"]))
-    for i in range(1, len(polygons)):
-        inside = inside.when(F.col("poly_idx") == i, inside_polygon_expr(polygons[i]["vertices"]))
-    return (
-        cand.filter(inside.otherwise(F.lit(False)))
-        .select("poly_id", "doc_id", "x", "y")
+    """(poly_id, doc_id, x, y) for every doc strictly inside each polygon:
+    :func:`pip_rings_join` over one ring per polygon."""
+    return pip_rings_join(
+        doc_geo,
+        [{"poly_id": p["poly_id"], "rings": [p["vertices"]]} for p in polygons],
+        config,
     )
 
 
@@ -131,8 +91,9 @@ def inside_rings_expr(
     """Even-odd ray cast over the UNION of several closed rings' edges —
     the standard polygon-with-holes (and multi-polygon) membership rule:
     a point inside the outer ring and inside a hole ring crosses an odd
-    number of each, so the combined parity is even = outside.  Same exact
-    int64 crossing test as :func:`inside_polygon_expr`."""
+    number of each, so the combined parity is even = outside.  The literal
+    edge array is folded with a boolean XOR (``!=``) accumulator; exact
+    int64 arithmetic end to end."""
     edge_lits = ", ".join(
         f"named_struct('x1', CAST({x1} AS BIGINT), 'y1', CAST({y1} AS BIGINT), "
         f"'x2', CAST({x2} AS BIGINT), 'y2', CAST({y2} AS BIGINT))"
@@ -153,7 +114,6 @@ def pip_rings_join(
     doc_geo: DataFrame,
     ring_polygons: list[dict],
     config: EngineConfig = DEFAULT,
-    cell_budget: int = 1024,
 ) -> DataFrame:
     """Point-in-polygon join for polygons WITH HOLES (and multi-polygons):
     each entry is ``{poly_id, rings: [outer, hole, ...]}`` and membership
@@ -161,45 +121,30 @@ def pip_rings_join(
     holes, exactly, with zero new geometric machinery (the crossing test
     is ring-agnostic).
 
-    Plan: identical to :func:`pip_join` — the curve-cover prefilter is the
-    interval-UNION of every ring's rasterized cover (holes only remove
+    Plan: one :func:`..range_query.shape_probe`.  A polygon's cover is the
+    interval union of every ring's rasterized cover (holes only remove
     area, so the outer cover alone would do for a donut, but a
-    multi-polygon's disjoint parts each need their cover; merging keeps
-    the range list disjoint so the cover probe still matches each doc at
-    most once per polygon), candidates arrive through the broadcast hash
-    cover probe, and the multi-ring ray cast is the codegen residual."""
-    if not ring_polygons:
-        return (
-            doc_geo.select(
-                F.lit("").alias("poly_id"), "doc_id", "x", "y"
-            ).limit(0)
-        )
-    from ..curve.cover import cover_polygon, merge_overlapping
-    from .range_query import cover_cells_probe
+    multi-polygon's disjoint parts each need their cover); its residual is
+    the rings' bounding box, then the multi-ring ray cast — ``AND``
+    short-circuits, so the edge fold runs only inside the box."""
+    from ..curve.cover import cover_polygon
+    from .range_query import box_residual, shape_probe, shape_value
 
-    def _merged_ranges(rings: list) -> list[tuple[int, int]]:
-        return merge_overlapping([
-            r
-            for ring in rings
-            for r in cover_polygon(ring, config.order, config.max_ranges).ranges
-        ])
-
-    per_poly: list[tuple[tuple, list[tuple[int, int]]]] = []
-    for i, p in enumerate(ring_polygons):
-        per_poly.append(((p["poly_id"], i), _merged_ranges(p["rings"])))
-    cand = cover_cells_probe(
-        doc_geo, per_poly, "poly_id string, poly_idx int", cell_budget
-    )
-    inside = F.when(
-        F.col("poly_idx") == 0, inside_rings_expr(ring_polygons[0]["rings"])
-    )
-    for i in range(1, len(ring_polygons)):
-        inside = inside.when(
-            F.col("poly_idx") == i, inside_rings_expr(ring_polygons[i]["rings"])
+    shapes = []
+    for p in ring_polygons:
+        # rasterized polygon cover (curve/cover.py::cover_polygon): only the
+        # aligned cells the polygon touches, not its whole bounding box
+        covers = [cover_polygon(ring, config.order, config.max_ranges) for ring in p["rings"]]
+        bbox = Cover(
+            [r for c in covers for r in c.ranges],
+            min(c.x_lo for c in covers), max(c.x_hi for c in covers),
+            min(c.y_lo for c in covers), max(c.y_hi for c in covers),
+            config.order, exact=False,
         )
-    return (
-        cand.filter(inside.otherwise(F.lit(False)))
-        .select("poly_id", "doc_id", "x", "y")
+        shapes.append((bbox.ranges, box_residual(bbox) & inside_rings_expr(p["rings"])))
+    poly_id = shape_value([p["poly_id"] for p in ring_polygons], "string")
+    return shape_probe(doc_geo, shapes, config).select(
+        poly_id.alias("poly_id"), "doc_id", "x", "y"
     )
 
 

@@ -16,7 +16,11 @@ count.  No shuffle, no join.
 
 ``grq_range_mode`` applies it to ``doc_geo``; ``grq_prefix_mode`` answers the
 same rectangle from the prefix-posting index (reference PDB semantics) by
-probing its leaf level with the same predicate.
+probing its leaf level with the same predicate.  ``shape_probe`` answers N
+literal shapes at once — one predicate over the union of their covers, then
+each row tagged with every shape whose exact residual holds — and is the one
+tagging path of ``grq_batch``, tile assignment, the PIP joins, the kNN join
+and the POI distance join.
 
 Budgeted covers over-approximate (SmallHilbertCurve.java:156-162), so the
 residual ``x/y BETWEEN`` filter is re-applied whenever the cover is inexact —
@@ -62,8 +66,11 @@ def cover_predicate(
     ``L`` present (``preCover`` + ``PDB.get``,
     RSKQ_Biginteger.java:139-188): at most ``bits + 1`` hash lookups per
     row whatever the range count.  It is rendered as one SQL string because
-    a Column per literal costs seconds to build and analyze."""
+    a Column per literal costs seconds to build and analyze.  No ranges
+    select no rows."""
     merged = merge_overlapping(ranges)
+    if not merged:
+        return F.lit(False)
     literal = functools.reduce(
         operator.or_,
         [F.expr(col).between(lo, hi) for lo, hi in coalesce_ranges(merged, _LITERAL_RANGES)],
@@ -81,51 +88,6 @@ def cover_predicate(
         for level, keys in sorted(levels.items())
     )
     return literal & F.expr(member)
-
-
-def cover_cells_probe(
-    doc_geo: "DataFrame",
-    per_shape: list[tuple[tuple, list[tuple[int, int]]]],
-    payload_schema: str,
-    cell_budget: int = 1024,
-) -> "DataFrame":
-    """Shared plumbing for the cover-driven broadcast HASH joins (tile
-    assignment, PIP — previously two hand-copies that had to evolve in
-    lockstep): expand each shape's cover to aligned ``hilbert>>s`` cells,
-    broadcast them, and probe with an equi-key join plus the BETWEEN
-    residual, after a literal union-of-covers prefilter that pushes to the
-    scan.  ``per_shape`` pairs each shape's payload tuple (described by
-    ``payload_schema``, e.g. ``"tile_id string, bx_lo long, ..."``) with
-    its cover ranges; the result carries the payload columns on every
-    candidate row and callers conjoin their exact residuals (box window,
-    ray-cast) as post-join filters — Catalyst pushes them into the join.
-
-    Why a hash join: a column-vs-column BETWEEN alone is a
-    BroadcastNestedLoopJoin — O(rows x ranges); the aligned-cell key makes
-    it O(1) per probe row regardless of range count (round-1 measured the
-    difference as 61.9 s -> ~1 s on pip_join)."""
-    from ..curve.cover import cell_shift_for_budget, expand_ranges_to_cells
-
-    spark = doc_geo.sparkSession
-    all_ranges = [r for _, ranges in per_shape for r in ranges]
-    shift = cell_shift_for_budget(all_ranges, cell_budget)
-    rows = [
-        payload + (cell, lo, hi)
-        for payload, ranges in per_shape
-        for cell, lo, hi in expand_ranges_to_cells(ranges, shift)
-    ]
-    ranges_df = spark.createDataFrame(
-        rows, f"{payload_schema}, ck long, lo long, hi long"
-    )
-    return (
-        doc_geo.filter(cover_predicate(all_ranges))
-        .withColumn("_ck", F.shiftright(F.col("hilbert"), shift))
-        .join(
-            F.broadcast(ranges_df),
-            (F.col("_ck") == F.col("ck"))
-            & F.col("hilbert").between(F.col("lo"), F.col("hi")),
-        )
-    )
 
 
 def box_residual(cover: Cover) -> F.Column:
@@ -202,6 +164,44 @@ def grq_prefix_mode(
     return index.filter(leaf).select("doc_id")
 
 
+def shape_probe(
+    doc_geo: DataFrame,
+    shapes: list[tuple[list[tuple[int, int]], F.Column]],
+    config: EngineConfig = DEFAULT,
+) -> DataFrame:
+    """Which of N literal shapes holds each doc: ``doc_geo``'s columns plus
+    an int ``shape`` (the index into ``shapes``), one row per (doc, shape)
+    whose exact residual holds.  Each shape is ``(ranges, residual)``: its
+    Hilbert cover and the exact per-row test (box window, ray cast,
+    distance) the over-approximate cover needs.
+
+    Physical plan: ONE :func:`cover_predicate` over the union of all
+    covers filters the scan — on the Hilbert-sorted layout the row-group
+    pruning a single query gets, now shared — and each surviving row is
+    tagged with every shape whose residual holds by a codegen
+    ``explode(filter(array(CASE ...)))``.  No join, no shuffle; output
+    fan-out equals true matches.  Callers pick a per-shape payload with
+    :func:`shape_value`.  Meant for the short
+    shape lists a caller writes down; a many-shape reference layer keeps a
+    cell-keyed broadcast join (``events.geofence_join``,
+    ``spatial_join.nearest_join_bucketed``)."""
+    tags = F.array(
+        *[
+            F.when(residual, F.lit(i)).otherwise(F.lit(None).cast("int"))
+            for i, (_, residual) in enumerate(shapes)
+        ]
+    ).cast("array<int>")  # an empty array() would be array<void>
+    return doc_geo.filter(
+        cover_predicate([r for ranges, _ in shapes for r in ranges], config)
+    ).select("*", F.explode(F.filter(tags, lambda c: c.isNotNull())).alias("shape"))
+
+
+def shape_value(values: list, dtype: str) -> F.Column:
+    """The per-shape literal ``values[shape]`` on each :func:`shape_probe`
+    row, as ``dtype`` (so an empty shape list still types its columns)."""
+    return F.element_at(F.array(*map(F.lit, values)), F.col("shape") + 1).cast(dtype)
+
+
 def grq_batch(
     doc_geo: DataFrame, boxes: list, config: EngineConfig = DEFAULT
 ) -> DataFrame:
@@ -212,34 +212,19 @@ def grq_batch(
     engine amortizes the scan across a query batch instead — the
     multi-query optimization every tile server and dashboard needs.
 
-    Physical plan: compile every box's Hilbert cover and filter the scan
-    with ONE :func:`cover_predicate` over the union of all covers — on the
-    Hilbert-sorted stored layout this is the same row-group pruning a
-    single query gets, now shared, and past 64 merged intervals the exact
-    union is a per-level BPC hash lookup instead of one BETWEEN per
-    interval.  Each surviving row is then tagged with every box containing
-    it by a codegen ``filter(array(CASE...))`` explode over the EXACT box
-    predicates (4 comparisons per box — the cover is for pruning, the
-    residual test is per-box, so over-approximate covers stay correct).
-    No join, no shuffle; output fan-out equals true matches."""
-    covers = [compile_box(*b, config) for b in boxes]
-    arr = F.array(
-        *[
-            F.when(
-                F.col("x").between(xl, xh) & F.col("y").between(yl, yh),
-                F.lit(i),
-            ).otherwise(F.lit(None).cast("int"))
-            for i, (xl, xh, yl, yh) in enumerate(boxes)
-        ]
-    )
-    return (
-        doc_geo.filter(cover_predicate([r for c in covers for r in c.ranges], config))
-        .select(
-            F.explode(F.filter(arr, lambda c: c.isNotNull())).alias("box_id"),
-            "doc_id",
-            "x",
-            "y",
+    Physical plan: :func:`shape_probe` with the exact box predicates as
+    residuals (4 comparisons per box — the cover is for pruning, so
+    over-approximate covers stay correct): one pruned scan, past 64 merged
+    intervals a per-level BPC hash lookup, one Generate."""
+    shapes = [
+        (
+            compile_box(xl, xh, yl, yh, config).ranges,
+            F.col("x").between(xl, xh) & F.col("y").between(yl, yh),
         )
+        for xl, xh, yl, yh in boxes
+    ]
+    return shape_probe(doc_geo, shapes, config).select(
+        F.col("shape").alias("box_id"), "doc_id", "x", "y"
     )
 
 

@@ -26,16 +26,17 @@ Scale design notes:
 
 * ``knn_join`` — the batched form of ``operators/knn.py``: every query point
   compiles to a Hilbert cover of its L-inf candidate box, all covers ride
-  ONE ``cover_cells_probe`` broadcast hash join (one pruned scan for the
-  whole batch, not one scan per query), and a per-query window computes the
-  partial top-k.  The same L-inf completeness argument applies per query:
+  ONE ``range_query.shape_probe`` (one pruned scan for the whole batch, not
+  one scan per query, each candidate tagged with every query box holding
+  it), and a per-query window computes the partial top-k.  The same L-inf
+  completeness argument applies per query:
   if the k-th candidate distance <= the box radius the top-k is proven
   exact, else that query's box grows geometrically and the batch re-probes
   (queries already proven complete keep their radius — the re-probe is
   still one scan).
 
 * ``zonal_stats`` — raster/vector zonal aggregation: the PIP join's
-  candidates (cell-bucketed broadcast hash join + codegen ray-cast,
+  matches (one pruned scan tagged by the codegen ray-cast,
   `operators/pip.py`) feed a hash aggregation on ``poly_id``.  All
   aggregates are algebraic (count/sum) so map-side partial aggregation
   bounds the shuffle at one row per (task, polygon).
@@ -51,7 +52,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT, EngineConfig
 from .knn import _corpus_count
 from .pip import Polygon, pip_join, pip_oracle_sql
-from .range_query import compile_box, cover_cells_probe, cover_predicate
+from .range_query import box_residual, compile_box, cover_predicate, shape_probe, shape_value
 from .skew import keyed_pairs
 
 # self + E/NE/N/NW: half the 8-neighborhood (negations cover the other half)
@@ -187,39 +188,42 @@ FROM prb p JOIN hom h ON p.cx = h.cx AND p.cy = h.cy AND p.doc_key < h.doc_key
 WHERE (p.x - h.x) * (p.x - h.x) + (p.y - h.y) * (p.y - h.y) <= {r2}"""
 
 
+def _dist2(px, py) -> Column:
+    """Integer squared distance of the row's ``x, y`` to ``(px, py)``."""
+    return (F.col("x") - px) * (F.col("x") - px) + (F.col("y") - py) * (F.col("y") - py)
+
+
 def distance_join(
     doc_geo: DataFrame,
     pois: list[tuple[str, int, int]],
     radius: int,
     config: EngineConfig = DEFAULT,
 ) -> DataFrame:
-    """Asymmetric within-radius join against a small reference table
-    (points of interest): (poi_id, doc_id, dist2) for every doc within
-    ``radius`` of each POI — the broadcast twin of ``distance_self_join``.
+    """Asymmetric within-radius join against a short literal list of
+    points of interest: (poi_id, doc_id, dist2) for every doc within
+    ``radius`` of each POI.
 
-    The POI side is expanded to its 3x3 neighbor cells DRIVER-side (tiny:
-    9 rows per POI) and broadcast; the corpus probes it with a hash join on
-    its home cell — no shuffle of the doc side at all.  A literal
-    union-of-covers prefilter (each POI's circumscribing box) additionally
-    pushes to the scan, so on Hilbert-sorted storage only the row groups
-    near any POI are read."""
-    s = _cell_shift(radius)
+    One :func:`..range_query.shape_probe`: each POI's circumscribing box
+    compiles to a Hilbert cover, the union of the covers prunes the scan
+    (on Hilbert-sorted storage only the row groups near any POI are read),
+    and each surviving doc is tagged with every POI whose box and exact
+    integer distance test hold — no join, no shuffle of the doc side.  A
+    many-POI reference layer takes ``nearest_join_bucketed``'s cell-keyed
+    broadcast join instead."""
     edge = config.edge
     r2 = radius * radius
-    poi_df = _poi_cells(doc_geo.sparkSession, pois, s, edge)
-    covers = []
+    shapes = []
     for _, px, py in pois:
         x_lo, x_hi = max(0, px - radius), min(edge - 1, px + radius)
         y_lo, y_hi = max(0, py - radius), min(edge - 1, py + radius)
-        covers.extend(compile_box(x_lo, x_hi, y_lo, y_hi, config).ranges)
-    dist2 = (F.col("x") - F.col("px")) ** 2 + (F.col("y") - F.col("py")) ** 2
-    return (
-        doc_geo.filter(cover_predicate(covers, config))
-        .withColumn("ck", _cell_key(F.shiftright("x", s), F.shiftright("y", s), edge))
-        .join(F.broadcast(poi_df), "ck")
-        .withColumn("dist2", dist2.cast("long"))
-        .filter(F.col("dist2") <= r2)
-        .select("poi_id", "doc_id", "dist2")
+        cov = compile_box(x_lo, x_hi, y_lo, y_hi, config)
+        shapes.append((cov.ranges, box_residual(cov) & (_dist2(px, py) <= r2)))
+    px = shape_value([p[1] for p in pois], "long")
+    py = shape_value([p[2] for p in pois], "long")
+    return shape_probe(doc_geo, shapes, config).select(
+        shape_value([p[0] for p in pois], "string").alias("poi_id"),
+        "doc_id",
+        _dist2(px, py).cast("long").alias("dist2"),
     )
 
 
@@ -246,24 +250,21 @@ def _knn_join_candidates(
     radii: dict[str, int],
     config: EngineConfig,
 ) -> DataFrame:
-    """One batched cover probe for all query boxes; payload carries the
-    query point and its exact residual box."""
+    """One :func:`..range_query.shape_probe` for all query boxes; each
+    candidate carries its query's ``qid, qx, qy``."""
     edge = config.edge
-    per_q = []
+    shapes = []
     for qid, qx, qy in qspecs:
         r = radii[qid]
         x_lo, x_hi = max(0, qx - r), min(edge - 1, qx + r)
         y_lo, y_hi = max(0, qy - r), min(edge - 1, qy + r)
         cov = compile_box(x_lo, x_hi, y_lo, y_hi, config)
-        per_q.append(((qid, qx, qy, x_lo, x_hi, y_lo, y_hi), cov.ranges))
-    cand = cover_cells_probe(
-        doc_geo,
-        per_q,
-        "qid string, qx long, qy long, bx_lo long, bx_hi long, by_lo long, by_hi long",
-    )
-    return cand.filter(
-        F.col("x").between(F.col("bx_lo"), F.col("bx_hi"))
-        & F.col("y").between(F.col("by_lo"), F.col("by_hi"))
+        shapes.append((cov.ranges, box_residual(cov)))
+    return shape_probe(doc_geo, shapes, config).select(
+        "*",
+        shape_value([q[0] for q in qspecs], "string").alias("qid"),
+        shape_value([q[1] for q in qspecs], "long").alias("qx"),
+        shape_value([q[2] for q in qspecs], "long").alias("qy"),
     )
 
 
@@ -287,8 +288,9 @@ def knn_join(
     """Exact k nearest docs for EVERY query point in one batched plan:
     (qid, doc_id, dist2, rank).
 
-    Control loop mirrors ``knn()`` but batched: each round is one pruned
-    scan + one window top-k; the <= len(qspecs)*k collected rows decide per
+    Control loop mirrors ``knn()`` but batched: each round is one
+    ``shape_probe`` scan over every query's box + one window top-k; the
+    <= len(qspecs)*k collected rows decide per
     query whether its L-inf box provably contains its true top-k (k-th
     distance <= box radius), growing only the unproven boxes.
     """

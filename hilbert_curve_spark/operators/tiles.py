@@ -7,12 +7,11 @@
   and encoded by the Arrow-batched kernel.
 * ``tile_assignment`` maps documents to the tiles whose window contains
   them.  Physical plan: each tile compiles (driver-side) to a budgeted
-  Hilbert range cover whose ranges expand to aligned ``hilbert >> s``
-  cells; the tiny ``(tile_id, ck, lo, hi, box)`` table broadcasts and the
-  doc side probes it with a broadcast HASH join on the cell key (BETWEEN +
-  exact window as residuals) — no shuffle of the (huge) doc side, no
-  nested-loop fanout, and on Hilbert-sorted storage the union of all tile
-  covers prunes the scan.
+  Hilbert range cover; ``range_query.shape_probe`` filters the scan by the
+  union of all tile covers (row-group pruning on Hilbert-sorted storage)
+  and tags each surviving doc with every tile whose exact window holds it
+  — no join, no broadcast table, and the doc side is shuffled only by the
+  final distinct over the matches.
 """
 
 from __future__ import annotations
@@ -58,32 +57,23 @@ def tile_assignment(
 ) -> DataFrame:
     """(tile_id, doc_id) for every doc inside a tile window.
 
-    Driver compiles per-tile covers; the broadcast side carries the aligned
-    cell key (hash-join equi key), the range bounds, and the exact window —
-    the BETWEEN and box checks are residuals on the hash-matched rows.
+    Driver compiles per-tile covers; :func:`..range_query.shape_probe`
+    filters the scan by their union and tags each doc with every tile whose
+    exact window holds it.
     """
-    from .range_query import cover_cells_probe
+    from .range_query import box_residual, shape_probe, shape_value
 
-    per_tile: list[tuple[tuple, list[tuple[int, int]]]] = []
+    shapes = []
     for t in tiles:
         x_lo, y_lo = t["x_start"], t["y_start"]
         x_hi, y_hi = x_lo + t["width"] - 1, y_lo + t["height"] - 1
         cov = cover_box(x_lo, x_hi, y_lo, y_hi, config.order, config.max_ranges)
-        per_tile.append(((t["tile_id"], x_lo, x_hi, y_lo, y_hi), cov.ranges))
-
-    # equi-key broadcast HASH join (shared plumbing, see cover_cells_probe);
-    # the exact tile window is the post-join residual
-    joined = cover_cells_probe(
-        doc_geo,
-        per_tile,
-        "tile_id string, bx_lo long, bx_hi long, by_lo long, by_hi long",
-    ).filter(
-        F.col("x").between(F.col("bx_lo"), F.col("bx_hi"))
-        & F.col("y").between(F.col("by_lo"), F.col("by_hi"))
-    )
-    # per-tile cover ranges are disjoint, so each (tile, doc) appears at
-    # most once — the distinct only guards overlapping tile windows
-    return joined.select("tile_id", "doc_id").distinct()
+        shapes.append((cov.ranges, box_residual(cov)))
+    tile_id = shape_value([t["tile_id"] for t in tiles], "string")
+    # the oracle is a SELECT DISTINCT and a caller may repeat a tile_id
+    return shape_probe(doc_geo, shapes, config).select(
+        tile_id.alias("tile_id"), "doc_id"
+    ).distinct()
 
 
 def hilbert_sql_cte(order: int, cells_sql: str, pre_ctes: str = "") -> str:

@@ -91,23 +91,6 @@ def test_budgeted_cover_flag():
     assert cover_box(10, 20, 12, 27, 6).exact
 
 
-def test_shift_cap_stays_below_64():
-    """When more ranges than budget exist no shift can meet the budget; the
-    cap must be 63 (where Python ``>> 63`` and Spark's mod-64 ``shiftright``
-    agree on cell 0 for every nonnegative hilbert), never 64 (where Spark's
-    shiftright is a no-op and the hash-join keys silently never match)."""
-    from hilbert_curve_spark.curve.cover import (
-        cell_shift_for_budget,
-        expand_ranges_to_cells,
-    )
-
-    ranges = [(i * 100, i * 100 + 1) for i in range(40)]  # 40 ranges > budget 32
-    s = cell_shift_for_budget(ranges, budget=32)
-    assert s == 63
-    cells = expand_ranges_to_cells(ranges, s)
-    assert {c for c, _, _ in cells} == {0}  # same cell Spark computes at 63
-
-
 def test_orientation_matches_reference():
     from hilbert_curve_spark.curve.orientation import hilbert_orientation
 

@@ -106,33 +106,35 @@ def test_grq_prefix_mode_matches_brute_force(spark, sorted_geo):
         assert "Join" not in plan and "Exchange" not in plan
 
 
-def test_tile_assignment_is_broadcast_hash_join(sorted_geo):
-    q = tiles_ops.tile_assignment(sorted_geo, W.TILES, DEFAULT)
-    plan = _plan(q)
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan  # O(rows x ranges) regression
-
-
-def test_pip_join_is_broadcast_hash_join_no_python(sorted_geo):
-    q = pip_ops.pip_join(sorted_geo, W.POLYGONS, DEFAULT)
-    plan = _plan(q)
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # the ray cast is a native aggregate() fold — no Python runner stages
+def _assert_shape_probe(plan):
+    """One pruned scan tagged in place: the literal shapes' cover union
+    reaches the parquet scan, no join or broadcast table, no Python."""
+    assert "Join" not in plan and "BroadcastExchange" not in plan
+    scan_line = next(l for l in plan.splitlines() if "PushedFilters" in l)
+    assert "hilbert" in scan_line
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_cover_probe_exceeding_budget_still_matches(spark):
-    """Regression (ADVICE r2): with more cover ranges than the cell budget the
-    shift caps; at the old cap of 64 Spark's shiftright (Java >>, shift mod
-    64) was a no-op while the Python expansion emitted cell 0, so the hash
-    join silently matched nothing.  At cap 63 both sides agree on cell 0 and
-    every in-range row must survive."""
-    ranges = [(i * 100, i * 100 + 1) for i in range(40)]  # 40 ranges > budget 32
+def test_tile_assignment_is_pruned_scan_no_join(sorted_geo):
+    plan = _plan(tiles_ops.tile_assignment(sorted_geo, W.TILES, DEFAULT))
+    _assert_shape_probe(plan)
+    assert plan.count("Exchange") == 1  # the distinct's shuffle only
+
+
+def test_pip_join_is_pruned_scan_no_join_no_python(sorted_geo):
+    # the ray cast is a native aggregate() fold inside the tag
+    _assert_shape_probe(_plan(pip_ops.pip_join(sorted_geo, W.POLYGONS, DEFAULT)))
+
+
+def test_shape_probe_many_shapes_matches(spark):
+    """Forty one-range shapes over a bare ``hilbert`` column: every value
+    inside a shape's range is tagged with that shape, nothing else is."""
+    ranges = [(i * 100, i * 100 + 1) for i in range(40)]
     docs = spark.range(0, 4000).select(F.col("id").alias("hilbert"))
-    per_shape = [((f"s{i}",), [r]) for i, r in enumerate(ranges)]
-    out = rq.cover_cells_probe(docs, per_shape, "shape_id string", cell_budget=32)
-    assert out.count() == 80  # two hilbert values inside each of the 40 ranges
+    shapes = [([(lo, hi)], F.col("hilbert").between(lo, hi)) for lo, hi in ranges]
+    out = rq.shape_probe(docs, shapes).collect()
+    assert len(out) == 80  # two hilbert values inside each of the 40 ranges
+    assert all(ranges[r.shape][0] <= r.hilbert <= ranges[r.shape][1] for r in out)
 
 
 def test_prefix_index_is_codegen(sorted_geo):
@@ -264,16 +266,11 @@ def test_distance_join_is_single_shuffled_hash_join(sorted_geo):
     assert "HashJoin" in plan or "SortMergeJoin" in plan
 
 
-def test_knn_join_probe_is_broadcast_hash(sorted_geo):
+def test_knn_join_probe_is_pruned_scan_no_join(sorted_geo):
     from hilbert_curve_spark import workload as W
     from hilbert_curve_spark.operators.spatial_join import knn_join
 
-    plan = _plan(knn_join(sorted_geo, W.KNN_JOIN_QUERIES, 5))
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # cover prefilter pushed to the scan
-    assert "PushedFilters" in plan
-    assert "hilbert" in plan.split("PushedFilters", 1)[1][:400]
+    _assert_shape_probe(_plan(knn_join(sorted_geo, W.KNN_JOIN_QUERIES, 5)))
 
 
 def test_cell_pyramid_scans_corpus_once(sorted_geo):
@@ -288,12 +285,8 @@ def test_cell_pyramid_scans_corpus_once(sorted_geo):
 
 def test_pip_polygon_cover_prefilter_pushed(sorted_geo):
     """With the rasterized polygon cover the PIP probe must still push the
-    union-of-covers literal prefilter to the scan and stay a broadcast hash
-    join (no nested loop)."""
-    plan = _plan(pip_ops.pip_join(sorted_geo, W.POLYGONS))
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "PushedFilters" in plan
+    union-of-covers literal prefilter to the scan, with no join after it."""
+    _assert_shape_probe(_plan(pip_ops.pip_join(sorted_geo, W.POLYGONS)))
 
 
 def test_corridor_search_pruned_scan_no_join(sorted_geo):
@@ -654,16 +647,11 @@ def test_compaction_plan_manifest_scale_no_python(spark, sf_dir):
     assert "HashAggregate" in plan and "Window" in plan
 
 
-def test_pip_rings_broadcast_cover_probe_no_python(sorted_geo):
+def test_pip_rings_pruned_scan_no_join_no_python(sorted_geo):
     from hilbert_curve_spark import workload as W
     from hilbert_curve_spark.operators.pip import pip_rings_join
 
-    q = pip_rings_join(sorted_geo, W.RING_POLYGONS)
-    plan = _plan(q)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan        # the cover probe
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    _assert_shape_probe(_plan(pip_rings_join(sorted_geo, W.RING_POLYGONS)))
 
 
 def test_cell_isochrone_grid_bounded_single_arrow_task(sorted_geo):
