@@ -651,7 +651,8 @@ def _replay(c: Ctx, plan, output_mode: str, name: str, flush_gap_s: int | None =
         max_s = events.agg(
             F.max(F.col("ts").cast("timestamp").cast("long")).alias("m")
         ).first()["m"]
-        sentinel_s = max_s + flush_gap_s + 3600
+        # no events: no user to flush, so the sentinel set below is empty
+        sentinel_s = (max_s or 0) + flush_gap_s + 3600
         sentinels = events.select("user_id").distinct().select(
             F.lit(-1).cast("long").alias("event_id"),
             F.timestamp_seconds(F.lit(sentinel_s)).alias("ts"),
@@ -672,7 +673,7 @@ def _replay(c: Ctx, plan, output_mode: str, name: str, flush_gap_s: int | None =
 
 
 def _events_stream_sessions(c: Ctx) -> DataFrame:
-    """Stateful sessionization (``applyInPandasWithState``): with the flush
+    """Stateful sessionization (``es.sessionize_stream``): with the flush
     sentinels, emitted rows equal ALL batch sessions over the real events."""
     out, sentinel_s = _replay(c, es.sessionize_stream, "append", "drv_sessions", 30 * 60)
     return out.filter(F.col("session_start_s") < sentinel_s)

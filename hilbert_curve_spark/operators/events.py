@@ -492,14 +492,15 @@ def geofence_join(
     bounding box touches (cell edge 2**s >= the largest fence extent, so
     <= 4 cells per fence) carrying its edge list as an array<struct> column;
     events key to their HOME cell and hash-join the broadcast (no BNLJ —
-    plan-asserted), the exact integer ray-cast folds over the JOINED edge
-    array (same arithmetic as ``pip.inside_polygon_expr``, codegen, no
-    Python), the first-match tie-break is a hash aggregation
-    ``min(struct(ord, poly_id))`` per event, and the window aggregation is
-    identical to the literal form.  Batch form only (the per-event argmin
-    re-aggregates; the streaming geofence keeps the literal chain, fine for
-    small fence sets)."""
+    plan-asserted), the exact integer ray-cast (``pip.ray_cast_sql``, the
+    fold ``pip.inside_polygon_expr`` runs over a literal array) folds over
+    the JOINED edge array (codegen, no Python), the first-match tie-break
+    is a hash aggregation ``min(struct(ord, poly_id))`` per event, and the
+    window aggregation is identical to the literal form.  Batch form only
+    (the per-event argmin re-aggregates; the streaming geofence keeps the
+    literal chain, fine for small fence sets)."""
     from ..config import DEFAULT
+    from .pip import _edges, ray_cast_sql
 
     edge = DEFAULT.edge
     max_extent = 1
@@ -512,12 +513,7 @@ def geofence_join(
     for ordi, p in enumerate(polygons):
         xs = [v[0] for v in p["vertices"]]
         ys = [v[1] for v in p["vertices"]]
-        edges = [
-            (x1, y1, x2, y2)
-            for (x1, y1), (x2, y2) in zip(
-                p["vertices"], p["vertices"][1:] + p["vertices"][:1]
-            )
-        ]
+        edges = _edges(p["vertices"])
         for cx in range(min(xs) >> s, (max(xs) >> s) + 1):
             for cy in range(min(ys) >> s, (max(ys) >> s) + 1):
                 fence_rows.append((p["poly_id"], ordi, cx * edge + cy, edges))
@@ -527,14 +523,7 @@ def geofence_join(
         "poly_id string, ord int, ck long, "
         "edges array<struct<x1:long, y1:long, x2:long, y2:long>>",
     )
-    raycast = F.expr(
-        "aggregate(edges, false, (acc, e) -> (acc != ("
-        "((e.y1 > ey) != (e.y2 > ey)) AND "
-        "(CASE WHEN e.y2 - e.y1 > 0 "
-        "THEN ex * (e.y2 - e.y1) < e.x1 * (e.y2 - e.y1) + (ey - e.y1) * (e.x2 - e.x1) "
-        "ELSE ex * (e.y2 - e.y1) > e.x1 * (e.y2 - e.y1) + (ey - e.y1) * (e.x2 - e.x1) "
-        "END))))"
-    )
+    raycast = F.expr(ray_cast_sql("edges", "ex", "ey"))
     # ck must equal the driver-side fence cells above, keyed at config.edge
     pts = event_points(events).withColumn(
         "ck", F.shiftright("ex", s) * edge + F.shiftright("ey", s)

@@ -91,17 +91,25 @@ def inside_rings_expr(
     """Even-odd ray cast over the UNION of several closed rings' edges —
     the standard polygon-with-holes (and multi-polygon) membership rule:
     a point inside the outer ring and inside a hole ring crosses an odd
-    number of each, so the combined parity is even = outside.  The literal
-    edge array is folded with a boolean XOR (``!=``) accumulator; exact
-    int64 arithmetic end to end."""
+    number of each, so the combined parity is even = outside: one
+    :func:`ray_cast_sql` over the literal edge array."""
     edge_lits = ", ".join(
         f"named_struct('x1', CAST({x1} AS BIGINT), 'y1', CAST({y1} AS BIGINT), "
         f"'x2', CAST({x2} AS BIGINT), 'y2', CAST({y2} AS BIGINT))"
         for ring in rings
         for x1, y1, x2, y2 in _edges(ring)
     )
-    return F.expr(
-        f"aggregate(array({edge_lits}), false, (acc, e) -> (acc != ("
+    return F.expr(ray_cast_sql(f"array({edge_lits})", x, y))
+
+
+def ray_cast_sql(edges: str, x: str, y: str) -> str:
+    """The even-odd ray cast of point ``(x, y)`` as a Spark SQL boolean:
+    ``aggregate`` folds the ``array<struct<x1, y1, x2, y2>>`` expression
+    ``edges`` (a literal array or a column) with a boolean XOR (``!=``)
+    accumulator, one crossing test per edge — exact int64 arithmetic,
+    codegen, no Python."""
+    return (
+        f"aggregate({edges}, false, (acc, e) -> (acc != ("
         f"((e.y1 > {y}) != (e.y2 > {y})) AND "
         f"(CASE WHEN e.y2 - e.y1 > 0 "
         f"THEN {x} * (e.y2 - e.y1) < e.x1 * (e.y2 - e.y1) + ({y} - e.y1) * (e.x2 - e.x1) "

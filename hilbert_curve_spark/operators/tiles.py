@@ -10,11 +10,13 @@
   Hilbert range cover; ``range_query.shape_probe`` filters the scan by the
   union of all tile covers (row-group pruning on Hilbert-sorted storage)
   and tags each surviving doc with every tile whose exact window holds it
-  — no join, no broadcast table, and the doc side is shuffled only by the
-  final distinct over the matches.
+  — no join, no broadcast table, no shuffle.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,21 +61,25 @@ def tile_assignment(
 
     Driver compiles per-tile covers; :func:`..range_query.shape_probe`
     filters the scan by their union and tags each doc with every tile whose
-    exact window holds it.
+    exact window holds it.  A repeated ``tile_id`` is ONE shape — its
+    windows' ranges, the OR of their windows — so each (tile_id, doc) is
+    emitted once, as the ``SELECT DISTINCT`` oracle wants, with no shuffle.
     """
     from .range_query import box_residual, shape_probe, shape_value
 
-    shapes = []
+    windows: dict[str, list] = {}
     for t in tiles:
         x_lo, y_lo = t["x_start"], t["y_start"]
         x_hi, y_hi = x_lo + t["width"] - 1, y_lo + t["height"] - 1
         cov = cover_box(x_lo, x_hi, y_lo, y_hi, config.order, config.max_ranges)
-        shapes.append((cov.ranges, box_residual(cov)))
-    tile_id = shape_value([t["tile_id"] for t in tiles], "string")
-    # the oracle is a SELECT DISTINCT and a caller may repeat a tile_id
-    return shape_probe(doc_geo, shapes, config).select(
-        tile_id.alias("tile_id"), "doc_id"
-    ).distinct()
+        windows.setdefault(t["tile_id"], []).append(cov)
+    shapes = [
+        ([r for c in covs for r in c.ranges],
+         functools.reduce(operator.or_, map(box_residual, covs)))
+        for covs in windows.values()
+    ]
+    tile_id = shape_value(list(windows), "string")
+    return shape_probe(doc_geo, shapes, config).select(tile_id.alias("tile_id"), "doc_id")
 
 
 def hilbert_sql_cte(order: int, cells_sql: str, pre_ctes: str = "") -> str:

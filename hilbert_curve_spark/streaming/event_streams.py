@@ -1,5 +1,5 @@
 """Structured-Streaming forms of the event operators: watermarked tumbling
-windows and stateful sessionization (``applyInPandasWithState``).
+windows and stateful per-user scans.
 
 The reference has no streaming surface (SURVEY §2.3); these are the
 idiomatic-Spark twins of ``operators/events.py`` — same semantics, same
@@ -12,9 +12,11 @@ Design notes for the 100 TB / real-cluster shape:
   changing ``readStream`` options only — every transformation below is
   source-agnostic.
 * Watermarks bound state: the tumbling aggregation drops windows older
-  than the watermark, and the sessionizer sets a per-key event-time
-  timeout at ``last_ts + gap`` so closed sessions are emitted and evicted
-  instead of accumulating forever.
+  than the watermark, and the stateful twins that keep an open session or
+  segment set a per-key event-time timeout at ``last + gap`` so closed
+  state is emitted and evicted instead of accumulating forever.
+* Each stateful twin is a pure per-user step; :func:`_per_user_scan` owns
+  the Spark side (watermark, sort, late-data guard, state, timeout clamp).
 * State is keyed by ``user_id`` — the same key the batch sessionizer
   shuffles on, so a bucketed-by-user Kafka topic partitioning makes the
   stateful stage shuffle-free.
@@ -22,7 +24,7 @@ Design notes for the 100 TB / real-cluster shape:
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Callable, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -194,8 +196,86 @@ def dedup_stream(
     return proj.select(*keys).dropDuplicates(list(keys))
 
 
+def _per_user_scan(
+    frame: DataFrame,
+    scan: Callable[[Any, Optional[tuple], list], tuple],
+    out_schema: StructType,
+    state_schema: StructType,
+    cols: tuple[str, ...],
+    gap_s: Optional[int] = None,
+    on_timeout: Optional[Callable[[Any, tuple], tuple]] = None,
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` stage behind every stateful twin.
+
+    Per user and micro-batch, ``scan(user_id, state, rows)`` gets the stored
+    state tuple (or None) and the rows of ``frame`` (which carries ``ts``,
+    ``event_id``, ``user_id`` and ``ep``) as tuples of ``cols``, sorted by
+    ``(ts, event_id)`` with late rows dropped.  It returns ``(state,
+    out_rows, open_s)``: the new state (None stores nothing), the dict rows
+    to emit and the epoch second the open state last moved (None: nothing
+    open).  With ``gap_s`` that state times out ``gap_s`` later on event
+    time and ``on_timeout(user_id, state) -> (state or None, out_rows)``
+    closes it (None removes it); without ``gap_s`` nothing times out."""
+
+    def _step(
+        key: Tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        (user_id,) = key
+        if state.hasTimedOut:
+            new, out = on_timeout(user_id, state.get)
+            if new is None:
+                state.remove()
+            else:
+                state.update(new)
+        else:
+            rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
+            wm_ms = state.getCurrentWatermarkMs()
+            # late-data guard: unlike windowed aggregation,
+            # applyInPandasWithState does NOT filter rows behind the
+            # watermark — without this, an out-of-order micro-batch replay
+            # (e.g. file sources with unstable mtime ordering) feeds ancient
+            # events into current state and produces sessions with
+            # start > end (observed live).  Dropping late rows is exactly
+            # what the built-in watermarked operators do.
+            wm_s = wm_ms // 1000
+            if wm_s > 0:
+                rows = rows[rows["ep"] >= wm_s]
+            new, out, open_s = scan(
+                user_id,
+                state.get if state.exists else None,
+                list(zip(*(rows[c].tolist() for c in cols))),
+            )
+            if new is not None:
+                state.update(new)
+            if gap_s is not None and open_s is not None:
+                # a user whose events lag the global watermark by more than
+                # the delay can have open + gap already behind it — Spark
+                # rejects such a timestamp, so clamp to watermark+1: the
+                # overdue state then closes at the very next watermark
+                # advance (same emitted row)
+                state.setTimeoutTimestamp(max((open_s + gap_s) * 1000, wm_ms + 1))
+        if out:
+            yield pd.DataFrame(out)
+
+    return (
+        frame.withWatermark("ts", "10 minutes")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _step,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout
+            if gap_s is None
+            else GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
 def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Stateful streaming sessionization via ``applyInPandasWithState``.
+    """Stateful streaming sessionization, one :func:`_per_user_scan`.
 
     Per-user state carries (session_start, last_event, count) in integer
     epoch seconds — the exact arithmetic of the batch sessionizer, so the
@@ -207,84 +287,27 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """
     gap = gap_minutes * 60
 
-    def _sessionize(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_s, last_s, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "session_start_s": start_s,
-                        "session_end_s": last_s,
-                        "n_events": n,
-                    }
-                ]
-            )
-            return
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        secs = (rows["ts"].astype("int64") // 1_000_000_000).tolist()
-        # late-data guard: unlike windowed aggregation, applyInPandasWithState
-        # does NOT filter rows behind the watermark — without this, an
-        # out-of-order micro-batch replay (e.g. file sources with unstable
-        # mtime ordering) feeds ancient events into current state and
-        # produces sessions with start > end (observed live).  Dropping
-        # late rows is exactly what the built-in watermarked operators do.
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        if wm_s > 0:
-            secs = [s for s in secs if s >= wm_s]
-        cur = state.get if state.exists else None  # (start_s, last_s, n)
-        if not secs:
-            if cur is not None:
-                timeout_ms = (cur[1] + gap) * 1000
-                state.setTimeoutTimestamp(
-                    max(timeout_ms, state.getCurrentWatermarkMs() + 1)
-                )
-            return
+    def _emit(user_id, start_s, last_s, n):
+        return {
+            "user_id": user_id, "session_start_s": start_s,
+            "session_end_s": last_s, "n_events": n,
+        }
+
+    def _scan(user_id, cur, rows):  # cur: (start_s, last_s, n)
         closed = []
-        for s in secs:
+        for (s,) in rows:
             if cur is None:
                 cur = (s, s, 1)
             elif s - cur[1] > gap:
-                closed.append(cur)
+                closed.append(_emit(user_id, *cur))
                 cur = (s, s, 1)
             else:
                 cur = (cur[0], s, cur[2] + 1)
-        state.update(cur)
-        # a user whose events lag the global watermark by more than the
-        # delay can have last+gap already behind it — Spark rejects such a
-        # timestamp, so clamp to watermark+1: the overdue session then
-        # closes at the very next watermark advance (same emitted row)
-        timeout_ms = (cur[1] + gap) * 1000
-        state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))
-        if closed:
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "session_start_s": a,
-                        "session_end_s": b,
-                        "n_events": n,
-                    }
-                    for a, b, n in closed
-                ]
-            )
+        return cur, closed, None if cur is None else cur[1]
 
-    return (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _per_user_scan(
+        event_points(events), _scan, SESSION_SCHEMA, _STATE_SCHEMA, ("ep",),
+        gap_s=gap, on_timeout=lambda user_id, cur: (None, [_emit(user_id, *cur)]),
     )
 
 
@@ -316,7 +339,7 @@ def stay_points_stream(
     min_minutes: int = 60,
     min_points: int = 3,
 ) -> DataFrame:
-    """Streaming stay-point detection (``applyInPandasWithState``) — the
+    """Streaming stay-point detection (a :func:`_per_user_scan`) — the
     stateful twin of ``operators/trajectory.stay_points`` with the exact
     same integer arithmetic, so closed stays byte-match a batch run over
     the same stream prefix.
@@ -333,75 +356,38 @@ def stay_points_stream(
     gap = int(gap_minutes) * 60
     min_dur = int(min_minutes) * 60
     min_p = int(min_points)
-    pts = event_points(events)
 
-    def _emit(user_id, seg, n, start, last, sx, sy):
-        return {
+    def _closed(user_id, seg, n, start, last, lx, ly, sx, sy):
+        """The stay row of a closed segment, if it qualifies."""
+        if not (n and last - start >= min_dur and n >= min_p):
+            return []
+        return [{
             "user_id": user_id, "stay_id": seg, "n_points": n,
             "start_s": start, "end_s": last, "cx": sx // n, "cy": sy // n,
-        }
+        }]
 
-    def _stays(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            seg, n, start, last, lx, ly, sx, sy = state.get
-            # keep the counter so later events continue the batch numbering
-            state.update((seg + 1, 0, 0, 0, 0, 0, 0, 0))
-            if n and last - start >= min_dur and n >= min_p:
-                yield pd.DataFrame([_emit(user_id, seg, n, start, last, sx, sy)])
-            return
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        # late-data guard — same rationale as sessionize_stream
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        pts3 = [
-            (int(s), int(x), int(y))
-            for s, x, y in zip(rows["ep"].tolist(), rows["ex"].tolist(), rows["ey"].tolist())
-            if wm_s <= 0 or s >= wm_s
-        ]
-        cur = tuple(state.get) if state.exists else None
-        closed = []
-        for s, x, y in pts3:
-            if cur is None:
-                cur = (0, 1, s, s, x, y, x, y)
-            elif cur[1] == 0:
-                cur = (cur[0], 1, s, s, x, y, x, y)
+    def _scan(user_id, cur, rows):
+        out = []
+        for s, x, y in rows:
+            if cur is None or cur[1] == 0:
+                cur = (0 if cur is None else cur[0], 1, s, s, x, y, x, y)
             else:
                 seg, n, start, last, lx, ly, sx, sy = cur
                 d2 = (x - lx) * (x - lx) + (y - ly) * (y - ly)
                 if d2 > r2 or s - last > gap:
-                    closed.append(cur)
+                    out += _closed(user_id, *cur)
                     cur = (seg + 1, 1, s, s, x, y, x, y)
                 else:
                     cur = (seg, n + 1, start, s, x, y, sx + x, sy + y)
-        if cur is not None:
-            state.update(tuple(int(v) for v in cur))
-            if cur[1]:
-                timeout_ms = (cur[3] + gap) * 1000
-                state.setTimeoutTimestamp(
-                    max(timeout_ms, state.getCurrentWatermarkMs() + 1)
-                )
-        out = [
-            _emit(user_id, seg, n, start, last, sx, sy)
-            for seg, n, start, last, lx, ly, sx, sy in closed
-            if last - start >= min_dur and n >= min_p
-        ]
-        if out:
-            yield pd.DataFrame(out)
+        return cur, out, cur[3] if cur is not None and cur[1] else None
 
-    return (
-        pts.withWatermark("ts", "10 minutes")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _stays,
-            outputStructType=STAY_SCHEMA,
-            stateStructType=_STAY_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    def _timeout(user_id, cur):
+        # keep the counter so later events continue the batch numbering
+        return (cur[0] + 1, 0, 0, 0, 0, 0, 0, 0), _closed(user_id, *cur)
+
+    return _per_user_scan(
+        event_points(events), _scan, STAY_SCHEMA, _STAY_STATE_SCHEMA,
+        ("ep", "ex", "ey"), gap_s=gap, on_timeout=_timeout,
     )
 
 
@@ -422,7 +408,7 @@ _IMPT_STATE_SCHEMA = StructType(
 
 
 def impossible_travel_stream(events: DataFrame, vmax: int = 2) -> DataFrame:
-    """Streaming impossible-travel detection (``applyInPandasWithState``) —
+    """Streaming impossible-travel detection (a :func:`_per_user_scan`) —
     the stateful twin of ``operators/trajectory.impossible_travel`` with
     the exact same integer cross-multiplication (including the LEAST
     overflow cap), so a full-corpus replay byte-matches the batch run.
@@ -431,66 +417,30 @@ def impossible_travel_stream(events: DataFrame, vmax: int = 2) -> DataFrame:
     violating consecutive pair emits immediately — no timeout, no segment
     lifecycle, the simplest possible stateful operator and the shape a
     real-time account-security pipeline wants (alert at arrival time).
-    The same late-data guard as sessionize_stream drops below-watermark
+    The late-data guard of :func:`_per_user_scan` drops below-watermark
     arrivals (the batch comparison replays everything in one availableNow
     batch, where the guard is vacuous)."""
     v2 = int(vmax) * int(vmax)
     cap = (1 << 25) + 1
-    pts = event_points(events)
 
-    def _detect(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # NoTimeout: unreachable, defensive
-            return
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        pts4 = [
-            (int(s), int(e), int(x), int(y))
-            for s, e, x, y in zip(
-                rows["ep"].tolist(),
-                rows["event_id"].tolist(),
-                rows["ex"].tolist(),
-                rows["ey"].tolist(),
-            )
-            if wm_s <= 0 or s >= wm_s
-        ]
-        prev = tuple(state.get) if state.exists else None
+    def _scan(user_id, prev, rows):
         out = []
-        for s, eid, x, y in pts4:
+        for s, eid, x, y in rows:
             if prev is not None:
                 pep, peid, px, py = prev
                 dt = s - pep
                 d2 = (x - px) * (x - px) + (y - py) * (y - py)
                 if d2 > min(cap, v2 * dt * dt):
-                    out.append(
-                        {
-                            "user_id": user_id,
-                            "from_event": peid,
-                            "to_event": eid,
-                            "dt_s": dt,
-                            "dist2": d2,
-                        }
-                    )
+                    out.append({
+                        "user_id": user_id, "from_event": peid, "to_event": eid,
+                        "dt_s": dt, "dist2": d2,
+                    })
             prev = (s, eid, x, y)
-        if prev is not None:
-            state.update(tuple(int(v) for v in prev))
-        if out:
-            yield pd.DataFrame(out)
+        return prev, out, None
 
-    return (
-        pts.withWatermark("ts", "10 minutes")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _detect,
-            outputStructType=IMPTRAVEL_SCHEMA,
-            stateStructType=_IMPT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _per_user_scan(
+        event_points(events), _scan, IMPTRAVEL_SCHEMA, _IMPT_STATE_SCHEMA,
+        ("ep", "event_id", "ex", "ey"),
     )
 
 
@@ -516,7 +466,7 @@ def geo_funnel_stream(
     poly_b: dict,
     within_s: int = 86400,
 ) -> DataFrame:
-    """Streaming geofence funnel (``applyInPandasWithState``): per user,
+    """Streaming geofence funnel (a :func:`_per_user_scan`): per user,
     remember the FIRST fence-A visit; the FIRST fence-B event at or after
     it resolves the funnel — emit ``(user_id, t_a, t_b)`` iff
     ``t_b - t_a <= within_s`` (a later B can only be later, so the first
@@ -537,44 +487,20 @@ def geo_funnel_stream(
         .withColumn("in_b", inside_polygon_expr(poly_b["vertices"], "ex", "ey"))
     )
 
-    def _funnel(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # NoTimeout: unreachable, defensive
-            return
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        t_a, resolved = (tuple(state.get) if state.exists else (-1, 0))
+    def _scan(user_id, cur, rows):
+        t_a, resolved = cur or (-1, 0)
         out = []
-        for s, a, b in zip(
-            rows["ep"].tolist(), rows["in_a"].tolist(), rows["in_b"].tolist()
-        ):
-            if wm_s > 0 and s < wm_s:
-                continue  # late-data guard, same rationale as sessionize
-            s = int(s)
+        for s, a, b in rows:
             if a and t_a < 0:
                 t_a = s
             if b and t_a >= 0 and s >= t_a and not resolved:
                 resolved = 1
                 if s - t_a <= within:
                     out.append({"user_id": user_id, "t_a": t_a, "t_b": s})
-        state.update((int(t_a), int(resolved)))
-        if out:
-            yield pd.DataFrame(out)
+        return (t_a, resolved), out, None
 
-    return (
-        pts.withWatermark("ts", "10 minutes")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _funnel,
-            outputStructType=FUNNEL_SCHEMA,
-            stateStructType=_FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _per_user_scan(
+        pts, _scan, FUNNEL_SCHEMA, _FUNNEL_STATE_SCHEMA, ("ep", "in_a", "in_b")
     )
 
 
@@ -630,52 +556,25 @@ def geofence_dwell_stream(
             "dwell_s": last - start,
         }
 
-    def _dwell(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # pragma: no cover - flush rows close states
-            return
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        seq = [
-            (int(s), str(p))
-            for s, p in zip(rows["ep"].tolist(), rows["poly_id"].tolist())
-            if wm_s <= 0 or s >= wm_s
-        ]
-        cur = tuple(state.get) if state.exists else None
+    def _scan(user_id, cur, rows):  # cur: (episode, poly, n, start, last)
         out = []
-        for s, poly in seq:
+        for s, poly in rows:
             if poly == "_flush_":
                 if cur is not None and cur[2]:
-                    out.append(_emit(user_id, cur[0], cur[1], cur[2], cur[3], cur[4]))
+                    out.append(_emit(user_id, *cur))
                     cur = (cur[0] + 1, "", 0, 0, 0)
                 continue
             if cur is None or cur[2] == 0:
-                episode = cur[0] if cur is not None else 0
-                cur = (episode, poly, 1, s, s)
+                cur = (0 if cur is None else cur[0], poly, 1, s, s)
             else:
                 episode, cpoly, n, start, last = cur
                 if poly != cpoly or s - last > gap:
-                    out.append(_emit(user_id, episode, cpoly, n, start, last))
+                    out.append(_emit(user_id, *cur))
                     cur = (episode + 1, poly, 1, s, s)
                 else:
                     cur = (episode, poly, n + 1, start, s)
-        if cur is not None:
-            state.update((int(cur[0]), str(cur[1]), int(cur[2]), int(cur[3]), int(cur[4])))
-        if out:
-            yield pd.DataFrame(out)
+        return cur, out, None
 
-    return (
-        tagged.withWatermark("ts", "10 minutes")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _dwell,
-            outputStructType=DWELL_SCHEMA,
-            stateStructType=_DWELL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _per_user_scan(
+        tagged, _scan, DWELL_SCHEMA, _DWELL_STATE_SCHEMA, ("ep", "poly_id")
     )

@@ -10,8 +10,8 @@ that as a real Structured Streaming job:
   each micro-batch appends to the versioned log (foreachBatch so the sink
   stays plain parquet/Iceberg and the append is atomic per batch).
 
-Watermarked windowed aggregation and custom stateful operators
-(``applyInPandasWithState``) live in :mod:`.event_streams`.
+Watermarked windowed aggregation and the stateful per-user scans live in
+:mod:`.event_streams`.
 
 Versions are assigned from the micro-batch id — a monotone total order per
 key (SURVEY §7.4 risk 6: never executor wall-clock).

@@ -47,15 +47,17 @@ def test_doc_in_overlapping_shapes_appears_once_per_shape(small_geo):
     tiles = [
         {"tile_id": "a", "x_start": 1000, "y_start": 2000, "width": 40, "height": 40},
         {"tile_id": "b", "x_start": 1020, "y_start": 2020, "width": 40, "height": 40},
+        # a repeated tile_id whose window overlaps its first one: one row per doc
+        {"tile_id": "a", "x_start": 1010, "y_start": 2030, "width": 40, "height": 30},
     ]
     got = sorted(tuple(r) for r in tiles_ops.tile_assignment(geo, tiles).collect())
-    want = sorted(
+    want = sorted({
         (t["tile_id"], d)
         for t in tiles
         for d, (x, y) in pts.items()
         if t["x_start"] <= x < t["x_start"] + t["width"]
         and t["y_start"] <= y < t["y_start"] + t["height"]
-    )
+    })
     assert got == want
     assert {d for t, d in want if t == "a"} & {d for t, d in want if t == "b"}
 
