@@ -33,7 +33,7 @@ from hilbert_curve_spark import workload as W
 from hilbert_curve_spark.config import DEFAULT, EngineConfig
 from hilbert_curve_spark.curve.geohash import geohash_sql
 from hilbert_curve_spark.curve.hilbert import decode_nd, encode_nd
-from hilbert_curve_spark.curve.hilbert_native import with_decode_native
+from hilbert_curve_spark.curve.hilbert_native import hilbert_xy_sql, with_hilbert
 from hilbert_curve_spark.curve.hilbert_wide import (
     decode_index_wide,
     encode_point_wide,
@@ -42,7 +42,6 @@ from hilbert_curve_spark.curve.hilbert_wide import (
 )
 from hilbert_curve_spark.curve.s2_sql import s2_sql_cte
 from hilbert_curve_spark.functions.cells import hex_cell_expr, hex_cell_sql, s2_cell_xyz_udf
-from hilbert_curve_spark.functions.udfs import hilbert_encode_udf
 from hilbert_curve_spark.operators import adaptive as adapt_ops
 from hilbert_curve_spark.operators import brq as brq_ops
 from hilbert_curve_spark.operators import construction as cons_ops
@@ -473,11 +472,13 @@ def _csv_roundtrip(c: Ctx) -> DataFrame:
     CSV coordinates, and the R1 GRQ runs on the re-ingested table."""
     path = c.stored("csv_roundtrip", lambda p: readers.write_datarow_csv(c.doc_geo, p))
     back = readers.read_datarow_csv(c.spark, path)
-    geo2 = back.select(
-        F.expr("'doc' || lpad(CAST(fileID AS STRING), 10, '0')").alias("doc_id"),
-        F.col("pointX").alias("x"),
-        F.col("pointY").alias("y"),
-        hilbert_encode_udf(DEFAULT.order)(F.col("pointX"), F.col("pointY")).alias("hilbert"),
+    geo2 = with_hilbert(
+        back.select(
+            F.expr("'doc' || lpad(CAST(fileID AS STRING), 10, '0')").alias("doc_id"),
+            F.col("pointX").alias("x"),
+            F.col("pointY").alias("y"),
+        ),
+        DEFAULT.order,
     )
     return rq.grq_range_mode(geo2, **W.R1).select("doc_id", "x", "y")
 
@@ -495,7 +496,7 @@ def _format_roundtrip(c: Ctx, fmt: str) -> DataFrame:
 
 
 def _hilbert_islands(c: Ctx) -> DataFrame:
-    """Enumerate the R3 box's cells as a DataFrame, Arrow-batch encode,
+    """Enumerate the R3 box's cells as a DataFrame, codegen-encode them,
     merge consecutive indices via windowed gap-and-island (SURVEY S4)."""
     r = W.R3
     cells = tiles_ops.tile_cells(
@@ -508,10 +509,10 @@ def _hilbert_islands(c: Ctx) -> DataFrame:
 
 
 def _hilbert_decode(c: Ctx) -> DataFrame:
-    """The engine decodes its own hilbert column (pure-JVM d2xy unroll);
+    """The engine decodes its own hilbert column (codegen d2xy table);
     the oracle recomputes (x, y), so equality proves encode∘decode == id."""
-    dg = c.doc_geo.select("doc_id", "hilbert")
-    return with_decode_native(dg, DEFAULT.order, out_x="x", out_y="y").select("doc_id", "x", "y")
+    x, y = hilbert_xy_sql("hilbert", DEFAULT.order)
+    return c.doc_geo.select("doc_id", F.expr(x).alias("x"), F.expr(y).alias("y"))
 
 
 def _hilbert3d_roundtrip(c: Ctx) -> DataFrame:

@@ -101,13 +101,12 @@ def bench_ctx(spark, amp: int):
     the same way on first use), the flat tables re-laid as splittable
     files, the materialized corpus.  Returns (Ctx, corpus doc count)."""
     from __spark_entry__ import Ctx
-    from hilbert_curve_spark.operators.encode import encode_documents_native
+    from hilbert_curve_spark.operators.encode import encode_documents
     from hilbert_curve_spark.sources.layout import write_sorted
 
     corpus_path = _materialize_corpus(spark, amp)
     corpus = spark.read.parquet(corpus_path)
-    # bulk encode-to-table: the pure-JVM native path
-    encode_documents_native(corpus).write.mode("overwrite").parquet(f"{corpus_path}_raw")
+    encode_documents(corpus).write.mode("overwrite").parquet(f"{corpus_path}_raw")
     write_sorted(spark.read.parquet(f"{corpus_path}_raw"), f"{corpus_path}_geo", partitions=32)
     geo = spark.read.parquet(f"{corpus_path}_geo")
     ctx = Ctx(
@@ -190,7 +189,7 @@ def run_heavy(master: str, amp: int) -> dict:
 
     from hilbert_curve_spark.operators import dedup as dedup_ops
     from hilbert_curve_spark.operators.brq import keyword_index
-    from hilbert_curve_spark.operators.encode import encode_documents_native
+    from hilbert_curve_spark.operators.encode import encode_documents
     from hilbert_curve_spark.operators.range_query import prefix_index
     from hilbert_curve_spark.session import get_spark
     from hilbert_curve_spark.sources.interleave import build_documents
@@ -204,13 +203,13 @@ def run_heavy(master: str, amp: int) -> dict:
         geo_path = f"{corpus_path}_scaling_geo"
         if not os.path.exists(os.path.join(geo_path, "_SUCCESS")):
             raw = f"{corpus_path}_scaling_raw"
-            encode_documents_native(spark.read.parquet(corpus_path)).write.mode(
+            encode_documents(spark.read.parquet(corpus_path)).write.mode(
                 "overwrite"
             ).parquet(raw)
             write_sorted(spark.read.parquet(raw), geo_path, partitions=64)
         flat = _sf_table(spark, "documents").repartition(64)
         # warm-up: force JVM/codegen/Arrow init before timing
-        encode_documents_native(build_documents(spark, SF_DIR, amp=2)).count()
+        encode_documents(build_documents(spark, SF_DIR, amp=2)).count()
         corpus = spark.read.parquet(corpus_path)
         geo = spark.read.parquet(geo_path)
 
@@ -238,7 +237,7 @@ def run_heavy(master: str, amp: int) -> dict:
         pidx = prefix_index(geo)
         n_post = pidx.count()
         stages = {
-            "encode_sec": timed(lambda: force(encode_documents_native(corpus))),
+            "encode_sec": timed(lambda: force(encode_documents(corpus))),
             "index_sec": timed(lambda: force(pidx)),
             "kwindex_sec": timed(lambda: force(keyword_index(geo))),
             "minhash_sec": timed(lambda: force(dedup_ops.minhash_signatures(flat))),

@@ -9,8 +9,10 @@ produced by executing the reference Java kernel (see
 ``tests/test_hilbert.py``), e.g. order 3: index(5,6)=39, index(2,4)=30,
 index(1,3)=12, index(4,0)=58.
 
-All functions operate on whole numpy arrays — this is the hot path behind the
-engine's Arrow-batched pandas UDFs, so no per-row Python is ever executed.
+All functions operate on whole numpy arrays, so no per-row Python is ever
+executed: the driver-side covers and the n-D Arrow batches use them, and
+they are the reference the Spark expressions (``hilbert_native``) are
+tested against.
 For 2-D at order<=31 the index fits in int64 (the reference never exceeds
 order 17).
 """

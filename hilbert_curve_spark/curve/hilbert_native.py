@@ -1,142 +1,110 @@
-"""Pure-JVM Hilbert encode: the xy2d iteration as chained native projections.
+"""Pure-JVM 2-D Hilbert encode/decode as Spark SQL expressions.
 
-The classic xy2d loop (the same formulation as the DuckDB oracle CTE,
-``operators/tiles.py:hilbert_sql_cte``, proven equal to the reference
-Skilling kernel `hilbert/HilbertComponent/HilbertCurve.java:187-216` by the
-goldens + exhaustive order-3 check in ``tests/test_hilbert.py``) is unrolled
-into ``order`` chained ``withColumns`` projections over three working
-columns ``(hx, hy, d)``.
+The Hilbert siblings of ``morton.morton_expr_sql``: ``hilbert_sql`` and
+``hilbert_xy_sql`` return SQL text that whole-stage codegen compiles into
+the scan's projection (no Python, no Arrow, no UDF).
 
-Why this exists next to the numpy kernel (``curve/hilbert.py``): the Arrow
-path must ship every batch across the JVM<->Python boundary, and in the
-encode stage the (untouched) ``keywords`` array dominated that transfer.
-Here every iteration is a handful of integer CASE/bit ops on named columns,
-so whole-stage codegen compiles the unroll into straight-line local-variable
-Java — the encode rides the scan, no Python workers, no Arrow, and the
-stage scales with cores like any other codegen projection.
+Both run the classic xy2d iteration (the formulation of the DuckDB oracle
+CTE ``operators/tiles.py:hilbert_sql_cte``, equal to the reference Skilling
+kernel `hilbert/HilbertComponent/HilbertCurve.java:187-216` at every order)
+as a state machine.  The curve's orientation below any level is one of four
+states (identity, transpose, flip both axes, anti-transpose); one 2-bit step
+per axis maps ``(state, x bits, y bits)`` to ``(4 index bits, next state)``
+through a 64-entry literal table, one ``element_at`` per step.  An odd
+``order`` is padded with a leading zero bit per axis; the pad level turns
+the transposed state into the identity, so such curves start transposed.
 
-CollapseProject note: Spark only merges adjacent projections when the
-produced expressions are cheap or referenced at most once.  Each iteration
-references ``hx``/``hy`` several times, so the steps stay separate logical
-projections (all fused into one WholeStageCodegen physically) instead of
-being inlined into one O(4^order)-node expression.
-
-PUSHDOWN CAVEAT — this is a bulk-materialization kernel, not a composable
-query operator.  ``PushPredicateThroughNonJoin`` has no such referenced-
-more-than-once guard: a deterministic filter placed directly above the
-unroll that references the output column gets the alias chain substituted
-into the predicate layer by layer, growing ~4x per layer (O(4^order)
-nodes — the optimizer spins for hours at order 12; observed live).
-Aggregate/write/sort consumers are fine; filters must go below the unroll
-or above a materialization barrier (cache, parquet, ``mapInPandas``).
-``operators/encode.py`` keeps the Arrow kernel as the composable default
-for exactly this reason.
+Step ``k``'s table entry nests step ``k - 1``'s once, so the expression has
+O(steps^2) nodes; codegen's subexpression elimination evaluates each step
+once in a projection.  A filter pushed through the projection would still
+get one copy of the expression per comparison (a 64-range cover ran a
+2 GB driver out of heap), and a copy of every input expression per
+reference (the document span parse 42 times per copy at order 12).  ``with_hilbert``
+therefore passes the new column through a one-element ``explode``, which
+the optimizer does not push a predicate on the generated column through:
+filters on the column stay above the encode and compare a plain long,
+while filters on the other columns and column pruning still reach below.
+Property-tested against ``curve.hilbert.encode2d``/``decode2d`` in
+``tests/test_hilbert_native.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["with_hilbert_native", "with_decode_native"]
+__all__ = ["hilbert_sql", "hilbert_xy_sql", "with_hilbert"]
 
 
-def _bit(col: Column, s: int) -> Column:
-    return col.bitwiseAND(F.lit(s)) != 0
+def _level(state: int, a: int, b: int) -> tuple[int, int]:
+    """One xy2d level: ``state`` (bit 0 transpose, bit 1 flip) and the
+    level's actual (x, y) bits -> (quadrant digit, next state).  A low
+    canonical ``b`` rotates the rest: transpose, flipped when ``a``."""
+    if state & 2:
+        a, b = a ^ 1, b ^ 1
+    if state & 1:
+        a, b = b, a
+    next_state = state if b else state ^ (1 | a << 1)
+    return (3 * a) ^ b, next_state
 
 
-def with_hilbert_native(
-    df: DataFrame,
-    order: int,
-    x: str = "x",
-    y: str = "y",
-    out: str = "hilbert",
+def _tables() -> tuple[list[int], list[int]]:
+    """Encode ``[state*16 + xb*4 + yb] = digit << 2 | next`` and decode
+    ``[state*16 + digit] = xb << 4 | yb << 2 | next`` over two levels."""
+    enc, dec = [0] * 64, [0] * 64
+    for state in range(4):
+        for xb in range(4):
+            for yb in range(4):
+                d1, s1 = _level(state, xb >> 1, yb >> 1)
+                d2, s2 = _level(s1, xb & 1, yb & 1)
+                digit = d1 << 2 | d2
+                enc[state * 16 + xb * 4 + yb] = digit << 2 | s2
+                dec[state * 16 + digit] = xb << 4 | yb << 2 | s2
+    return enc, dec
+
+
+_ENC, _DEC = _tables()
+
+
+def _chain(table: list[int], order: int, step_bits):
+    """Yield ``(shift, entry_sql)`` per 2-bit step, most significant first;
+    ``step_bits(shift)`` is the step's 4-bit table column."""
+    if not 1 <= order <= 31:
+        raise ValueError("2-D Hilbert order must be in [1, 31]")
+    steps = (order + 1) // 2
+    arr = f"array({', '.join(map(str, table))})"
+    entry = str(order & 1)  # odd orders start transposed
+    for k in range(steps):
+        sh = 2 * (steps - 1 - k)
+        entry = f"element_at({arr}, CAST(({entry} & 3) * 16 + {step_bits(sh)} + 1 AS INT))"
+        yield sh, entry
+
+
+def hilbert_sql(x: str, y: str, order: int) -> str:
+    """Spark SQL BIGINT Hilbert index of the ``order``-bit lattice columns
+    ``(x, y)``, bit-for-bit ``curve.hilbert.encode2d``."""
+    terms = [
+        f"shiftleft(CAST(shiftright({e}, 2) AS BIGINT), {2 * sh})"
+        for sh, e in _chain(
+            _ENC, order, lambda sh: f"(shiftright({x}, {sh}) & 3) * 4 + (shiftright({y}, {sh}) & 3)"
+        )
+    ]
+    return f"({' | '.join(terms)})"
+
+
+def hilbert_xy_sql(h: str, order: int) -> tuple[str, str]:
+    """Spark SQL BIGINT ``(x, y)`` of the Hilbert index column ``h``,
+    bit-for-bit ``curve.hilbert.decode2d``."""
+    chain = list(_chain(_DEC, order, lambda sh: f"(shiftright({h}, {2 * sh}) & 15)"))
+    x = " | ".join(f"shiftleft(CAST(shiftright({e}, 4) AS BIGINT), {sh})" for sh, e in chain)
+    y = " | ".join(f"shiftleft(CAST(shiftright({e}, 2) & 3 AS BIGINT), {sh})" for sh, e in chain)
+    return f"({x})", f"({y})"
+
+
+def with_hilbert(
+    df: DataFrame, order: int, x: str = "x", y: str = "y", out: str = "hilbert"
 ) -> DataFrame:
-    """Append ``out`` = Hilbert index of integer lattice columns (x, y).
-
-    Matches ``curve.hilbert.encode2d`` bit-for-bit for 2-D, any order <= 31
-    (property-tested in ``tests/test_hilbert_native.py``).
-    """
-    hx, hy, d = "__hn_hx", "__hn_hy", "__hn_d"
-    df = df.withColumns(
-        {
-            hx: F.col(x).cast("long"),
-            hy: F.col(y).cast("long"),
-            d: F.lit(0).cast("long"),
-        }
-    )
-    for i in range(order - 1, -1, -1):
-        s = 1 << i
-        rx = _bit(F.col(hx), s)
-        ry = _bit(F.col(hy), s)
-        quadrant = (
-            F.when(rx, F.lit(3)).otherwise(F.lit(0)).bitwiseXOR(
-                F.when(ry, F.lit(1)).otherwise(F.lit(0))
-            )
-        ).cast("long")
-        # ry=0: conditional flip by rx, then swap axes; ry=1: unchanged
-        new_hx = F.when(
-            ry, F.col(hx)
-        ).otherwise(F.when(rx, F.lit(s - 1) - F.col(hy)).otherwise(F.col(hy)))
-        new_hy = F.when(
-            ry, F.col(hy)
-        ).otherwise(F.when(rx, F.lit(s - 1) - F.col(hx)).otherwise(F.col(hx)))
-        df = df.withColumns(
-            {
-                hx: new_hx,
-                hy: new_hy,
-                d: F.col(d) + F.lit(s).cast("long") * F.lit(s) * quadrant,
-            }
-        )
-    return df.withColumn(out, F.col(d)).drop(hx, hy, d)
-
-
-def with_decode_native(
-    df: DataFrame,
-    order: int,
-    h: str = "hilbert",
-    out_x: str = "x",
-    out_y: str = "y",
-) -> DataFrame:
-    """Append ``(out_x, out_y)`` = lattice point of Hilbert index column.
-
-    Inverse iteration (d2xy), s from 1 up to 2**(order-1): extract the
-    quadrant from the index, un-rotate, accumulate.  Bit-for-bit equal to
-    ``curve.hilbert.decode2d`` (same tests).
-    """
-    hx, hy, t = "__hn_ix", "__hn_iy", "__hn_t"
-    df = df.withColumns(
-        {
-            hx: F.lit(0).cast("long"),
-            hy: F.lit(0).cast("long"),
-            t: F.col(h).cast("long"),
-        }
-    )
-    for i in range(order):
-        s = 1 << i
-        rx = F.shiftright(F.col(t), 1).bitwiseAND(F.lit(1)) != 0
-        ry = (
-            F.col(t)
-            .bitwiseXOR(F.when(rx, F.lit(1)).otherwise(F.lit(0)))
-            .bitwiseAND(F.lit(1))
-            != 0
-        )
-        # un-rotate the accumulated (hx, hy), then add the quadrant offset
-        ux = F.when(
-            ry, F.col(hx)
-        ).otherwise(F.when(rx, F.lit(s - 1) - F.col(hy)).otherwise(F.col(hy)))
-        uy = F.when(
-            ry, F.col(hy)
-        ).otherwise(F.when(rx, F.lit(s - 1) - F.col(hx)).otherwise(F.col(hx)))
-        df = df.withColumns(
-            {
-                hx: ux + F.when(rx, F.lit(s)).otherwise(F.lit(0)).cast("long"),
-                hy: uy + F.when(ry, F.lit(s)).otherwise(F.lit(0)).cast("long"),
-                t: F.shiftright(F.col(t), 2),
-            }
-        )
-    return (
-        df.withColumn(out_x, F.col(hx))
-        .withColumn(out_y, F.col(hy))
-        .drop(hx, hy, t)
-    )
+    """``df`` plus ``out`` = ``hilbert_sql(x, y, order)``, behind the
+    one-element ``explode`` that keeps predicates on ``out`` above it."""
+    d = df.withColumn(out, F.expr(hilbert_sql(x, y, order)))
+    return d.select(*[F.explode(F.array(c)).alias(c) if c == out else c for c in d.columns])

@@ -11,49 +11,24 @@ mirroring the reference's working record
 ``cell`` is a coarse spatial bucket (``hilbert >> 2*cell_shift``) used as
 the co-location key for cell-bucketed joins and hot-cell salting.
 
-Two physical strategies, chosen by where the output goes:
+The Hilbert index is ``curve.hilbert_native.with_hilbert``: one codegen
+projection over the parse, no Python and no Arrow transfer.  Its one-element
+``explode`` keeps a ``hilbert BETWEEN ...`` filter placed directly above the
+encode from being substituted into the scan, so the encode composes with
+filters as well as with a sort, aggregate or write.
 
-* ``encode_documents`` (default, composable) — Arrow-batched numpy
-  Skilling kernel via ``mapInPandas``.  The Python eval node is a natural
-  optimizer barrier: callers can stack arbitrary predicates on the result
-  (``hilbert BETWEEN ...``) and the planner stops at the barrier instead
-  of substituting the encode expression into the predicate.
-
-* ``encode_documents_native`` (bulk materialization) — the pure-JVM xy2d
-  unroll from ``curve/hilbert_native.py``: zero Python, zero Arrow
-  transfer, scales with cores like any scan+projection (measured ~0.95
-  2->8-core efficiency vs ~0.45 for the Arrow path, and ~2x faster in
-  absolute terms).  The encode-to-sorted-table ETL stage — the shape that
-  actually runs at 100 TB, where encode output is written/aggregated, not
-  filtered in the same plan — uses this path (``jobs/pipeline.py``,
-  ``sources/layout.py`` callers, the bench heavy pipeline).  CAVEAT: do
-  not put a ``hilbert``-referencing filter directly above this plan —
-  predicate pushdown substitutes the alias chain through all ``order``
-  projections and the rewrite grows exponentially (the optimizer spins).
-  Materialize (write/cache) first — exactly what a bulk pipeline does
-  anyway.
-
-Span parsing and keyword extraction are native Column expressions in both
-paths; with ``mapInPandas`` only (doc_id, x, y, keywords) crosses the
-Arrow boundary (a scalar pandas UDF would let Catalyst collapse the parse
-into the Arrow stage's arguments and force the entire ``spans`` array
-through the Python-runner pass-through queue — measured 4.5x slower at
-2.5M rows).  The spans column itself is never rewritten — derived facts
-join back by doc_id (span-sequence invariant, BASELINE.json input_hint).
+Span parsing and keyword extraction are native Column expressions too.
+The spans column itself is never rewritten — derived facts join back by
+doc_id (span-sequence invariant, BASELINE.json input_hint).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
-from ..curve.hilbert import encode2d
-from ..curve.hilbert_native import with_hilbert_native
+from ..curve.hilbert_native import with_hilbert
 
 
 def parse_spans(docs: DataFrame, keep_spans: bool = False) -> DataFrame:
@@ -81,40 +56,11 @@ def parse_spans(docs: DataFrame, keep_spans: bool = False) -> DataFrame:
 def encode_documents(
     docs: DataFrame, config: EngineConfig = DEFAULT, keep_spans: bool = False
 ) -> DataFrame:
-    """doc_geo via the Arrow-batched numpy kernel (composable default)."""
-    parsed = parse_spans(docs, keep_spans=keep_spans)
-    order = config.order
-    shift = 2 * config.cell_shift
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    # StructType.add mutates in place — build a fresh schema instead of
-    # appending to parsed's cached one
-    out_schema = StructType(
-        list(parsed.schema.fields)
-        + [StructField("hilbert", LongType()), StructField("cell", LongType())]
+    """doc_geo: the span parse plus the codegen ``hilbert`` and ``cell``."""
+    return with_hilbert(parse_spans(docs, keep_spans=keep_spans), config.order).withColumn(
+        "cell", F.shiftright("hilbert", 2 * config.cell_shift)
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            b = b.copy()
-            h = encode2d(b["x"].to_numpy(np.int64), b["y"].to_numpy(np.int64), order)
-            b["hilbert"] = h
-            b["cell"] = h >> shift
-            yield b
 
-    return parsed.mapInPandas(_encode, out_schema)
-
-
-def encode_documents_native(
-    docs: DataFrame, config: EngineConfig = DEFAULT, keep_spans: bool = False
-) -> DataFrame:
-    """doc_geo via the pure-JVM native unroll (bulk-materialization path).
-
-    See the module docstring for when to use which; requires
-    ``spark.sql.codegen.hugeMethodLimit=8000`` (set in ``session.get_spark``)
-    so the unroll compiles per-operator instead of as one un-JIT-able fused
-    method.
-    """
-    parsed = parse_spans(docs, keep_spans=keep_spans)
-    out = with_hilbert_native(parsed, config.order)
-    return out.withColumn("cell", F.shiftright(F.col("hilbert"), 2 * config.cell_shift))
+# the name the benchmark harness imports
+encode_documents_native = encode_documents

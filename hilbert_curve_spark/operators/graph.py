@@ -389,29 +389,30 @@ def grid_kmeans(
         ((r.gx << s) + half, (r.gy << s) + half) for r in seeds
     ]  # deterministic: rows arrive sorted from the TakeOrdered above
     pts = doc_geo.select("doc_id", "x", "y")
-    assign_col = None
-    for _ in range(int(iters)):
+
+    def nearest(cents: list[tuple[int, int]]) -> F.Column:
+        # argmin over (dist2, cid) structs; typed, so no seeds (an empty
+        # corpus) is an empty array<struct> rather than array<void>
         arms = F.array(
             *[
                 F.struct(
-                    (
-                        (F.col("x") - F.lit(cx)) * (F.col("x") - F.lit(cx))
-                        + (F.col("y") - F.lit(cy)) * (F.col("y") - F.lit(cy))
-                    )
+                    ((F.col("x") - cx) * (F.col("x") - cx) + (F.col("y") - cy) * (F.col("y") - cy))
                     .cast("long")
                     .alias("d"),
                     F.lit(i).alias("c"),
                 )
                 for i, (cx, cy) in enumerate(cents)
             ]
-        )
-        assign_col = F.array_min(arms).getField("c")
+        ).cast("array<struct<d:bigint,c:int>>")
+        return F.array_min(arms).getField("c")
+
+    for _ in range(int(iters)):
         # k groups is maximal key skew: two-phase salted fold (partials per
         # (cid, salt), then the k-row final) — same rationale as
         # skew.salted_cell_counts, decomposable because the update is
         # SUM/COUNT
         partial = (
-            pts.withColumn("cid", assign_col)
+            pts.withColumn("cid", nearest(cents))
             .withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(config.salt_buckets)))
             .groupBy("cid", "salt")
             .agg(
@@ -430,33 +431,9 @@ def grid_kmeans(
             .collect()
         }
         cents = [upd.get(i, c) for i, c in enumerate(cents)]
-    arms = F.array(
-        *[
-            F.struct(
-                (
-                    (F.col("x") - F.lit(cx)) * (F.col("x") - F.lit(cx))
-                    + (F.col("y") - F.lit(cy)) * (F.col("y") - F.lit(cy))
-                )
-                .cast("long")
-                .alias("d"),
-                F.lit(i).alias("c"),
-            )
-            for i, (cx, cy) in enumerate(cents)
-        ]
-    )
-    final = salted_cell_counts(
-        pts.withColumn("cid", F.array_min(arms).getField("c")), config, ("cid",)
-    )
-    cent_rows = ", ".join(
-        f"({i}, {cx}, {cy})" for i, (cx, cy) in enumerate(cents)
-    )
-    spark = doc_geo.sparkSession
-    cent_df = spark.sql(
-        f"SELECT * FROM (VALUES {cent_rows}) AS t(cid, cx, cy)"
-    ).select(
-        F.col("cid").cast("int"),
-        F.col("cx").cast("long"),
-        F.col("cy").cast("long"),
+    final = salted_cell_counts(pts.withColumn("cid", nearest(cents)), config, ("cid",))
+    cent_df = doc_geo.sparkSession.createDataFrame(
+        [(i, cx, cy) for i, (cx, cy) in enumerate(cents)], "cid int, cx long, cy long"
     )
     return cent_df.join(final, "cid", "left").select(
         "cid", "cx", "cy", F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs")

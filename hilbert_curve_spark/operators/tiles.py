@@ -4,7 +4,7 @@
   the reference's ``generateHilbertMatrix``
   (`Experiment/TestByUserInput/BRQComparisonInput.java:13-23`), distributed:
   one row per (tile, cell), generated with native ``sequence``/``explode``
-  and encoded by the Arrow-batched kernel.
+  and encoded by the codegen ``curve.hilbert_native.with_hilbert``.
 * ``tile_assignment`` maps documents to the tiles whose window contains
   them.  Physical plan: each tile compiles (driver-side) to a budgeted
   Hilbert range cover; ``range_query.shape_probe`` filters the scan by the
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
 from ..curve.cover import cover_box
-from ..functions.udfs import hilbert_encode_udf
+from ..curve.hilbert_native import with_hilbert
 from .skew import grid_keys, salted_cell_counts
 
 TileSpec = dict  # {tile_id, x_start, y_start, width, height}
@@ -48,8 +48,7 @@ def tile_cells(spark: SparkSession, tiles: list[TileSpec], config: EngineConfig 
             F.explode(F.expr("sequence(y_start, y_start + height - 1)")).alias("cy"),
         )
     )
-    h = hilbert_encode_udf(config.order)(F.col("cx"), F.col("cy"))
-    return cells.withColumn("hilbert", h)
+    return with_hilbert(cells, config.order, "cx", "cy")
 
 
 def tile_assignment(

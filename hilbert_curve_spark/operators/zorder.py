@@ -89,8 +89,8 @@ def curve_locality_report(
     oracle-checked result instead of prose.
 
     Exact: cell curve indices are computed at order ``order - cell_shift``
-    over the cell coordinates (Hilbert via the pure-JVM unrolled
-    expression, Z via the magic-mask interleave — both codegen); runs are
+    over the cell coordinates (Hilbert via ``hilbert_native.with_hilbert``,
+    Z via the magic-mask interleave — both codegen); runs are
     counted with one lag window per (box, curve) over the enumerated cell
     set, which is bounded by the box area / 4^cell_shift, never the
     corpus.  The oracle recomputes Hilbert with the INDEPENDENT xy2d
@@ -100,7 +100,7 @@ def curve_locality_report(
     Plan: a literal box frame explodes to its cells (native ``sequence``),
     two codegen curve columns, one window per curve — no corpus scan at
     all; this is pure index planning."""
-    from ..curve.hilbert_native import with_hilbert_native
+    from ..curve.hilbert_native import with_hilbert
     from pyspark.sql import Window
 
     oc = config.order - int(cell_shift)
@@ -120,7 +120,7 @@ def curve_locality_report(
     ).select(
         "box_id", "cx", F.explode(F.expr("sequence(gy_lo, gy_hi)")).alias("cy")
     )
-    hcells = with_hilbert_native(cells, oc, "cx", "cy", "idx").select(
+    hcells = with_hilbert(cells, oc, "cx", "cy", "idx").select(
         "box_id", F.lit("hilbert").alias("curve"), "idx"
     )
     zcells = cells.select(

@@ -37,13 +37,12 @@ def get_spark(
         # heap, so size it for the slot count (32 writers x ~1 GB would GC-
         # thrash an 8g heap; measured 9x slowdown)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        # the native Hilbert unroll (curve/hilbert_native.py) chains ~order
-        # projections; fused into one whole-stage method they exceed the
-        # JVM JIT's 8 KB DontCompileHugeMethods threshold and run as
-        # INTERPRETED bytecode (measured 10x slower).  Capping the huge-
-        # method limit at the JIT threshold makes such stages fall back to
-        # per-operator compiled projections, which the JIT does compile
-        # (SPARK-21871's recommended setting).
+        # a fused whole-stage method over the JVM JIT's 8 KB
+        # DontCompileHugeMethods threshold is never JIT-compiled and runs
+        # as INTERPRETED bytecode (measured 10x slower on a long chain of
+        # projections).  Capping the huge-method limit at the JIT threshold
+        # makes such stages fall back to per-operator compiled code, which
+        # the JIT does compile (SPARK-21871's recommended setting).
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.ui.enabled", "false")
     )

@@ -42,16 +42,14 @@ def main() -> None:
     from hilbert_curve_spark.operators import range_query as rq
     from hilbert_curve_spark.operators import tiles as tiles_ops
     from hilbert_curve_spark.operators import spans as spans_ops
-    from hilbert_curve_spark.operators.encode import encode_documents_native
+    from hilbert_curve_spark.operators.encode import encode_documents
     from hilbert_curve_spark.sources.interleave import build_documents
 
     spark = SparkSession.builder.appName("hcs-pipeline").getOrCreate()
 
     stages = [
         Stage("corpus", lambda s, _: build_documents(s, args.sf_dir, amp=args.amp)),
-        # bulk encode-to-sorted-table: pure-JVM native unroll (sort/write
-        # above, never a filter — the pushdown-safe shape)
-        Stage("doc_geo", lambda s, o: encode_documents_native(o["corpus"]), sort_key="hilbert"),
+        Stage("doc_geo", lambda s, o: encode_documents(o["corpus"]), sort_key="hilbert"),
         Stage("prefix_index", lambda s, o: rq.prefix_index(o["doc_geo"])),
         Stage("keyword_index", lambda s, o: brq_ops.keyword_index(o["doc_geo"])),
         # training-shard materialization: token-budget chunks of the

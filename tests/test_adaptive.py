@@ -127,9 +127,9 @@ def test_partition_bounds_equi_depth(spark):
     """Every bucket threshold lands on the first cell whose running count
     reaches it, and bounds are nondecreasing in k."""
     pts = _lcg_points(600, seed=13, edge=DEFAULT.edge)
-    from hilbert_curve_spark.curve.hilbert_native import with_hilbert_native
+    from hilbert_curve_spark.curve.hilbert_native import with_hilbert
 
-    geo = with_hilbert_native(_geo(spark, pts), DEFAULT.order).withColumn(
+    geo = with_hilbert(_geo(spark, pts), DEFAULT.order).withColumn(
         "cell", F.shiftright("hilbert", 2 * DEFAULT.cell_shift)
     )
     buckets = 8

@@ -121,6 +121,14 @@ def test_tile_assignment_is_pruned_scan_no_join(sorted_geo):
     assert "Exchange" not in plan
 
 
+def test_tile_cells_encode_no_python(spark):
+    """Tile cells get their Hilbert index from the codegen expression: no
+    Python evaluation node, no shuffle."""
+    plan = _plan(tiles_ops.tile_cells(spark, W.TILES, DEFAULT))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "Exchange" not in plan
+
+
 def test_pip_join_is_pruned_scan_no_join_no_python(sorted_geo):
     # the ray cast is a native aggregate() fold inside the tag
     _assert_shape_probe(_plan(pip_ops.pip_join(sorted_geo, W.POLYGONS, DEFAULT)))

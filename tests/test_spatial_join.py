@@ -101,9 +101,9 @@ def test_knn_join_matches_brute_force(spark, initial_radius):
     # initial_radius=1 forces the growth loop through several rounds
     pts = _lcg_points(400)
     geo = _geo(spark, pts)
-    from hilbert_curve_spark.functions.udfs import hilbert_encode_udf
+    from hilbert_curve_spark.curve.hilbert_native import with_hilbert
 
-    geo = geo.withColumn("hilbert", hilbert_encode_udf(DEFAULT.order)("x", "y"))
+    geo = with_hilbert(geo, DEFAULT.order)
     qspecs = [("a", 100, 100), ("b", 4000, 4000), ("c", 2048, 17)]
     out = knn_join(geo, qspecs, 7, DEFAULT, initial_radius=initial_radius)
     got = {}
@@ -115,11 +115,9 @@ def test_knn_join_matches_brute_force(spark, initial_radius):
 
 def test_knn_join_k_larger_than_corpus(spark):
     pts = _lcg_points(5)
-    from hilbert_curve_spark.functions.udfs import hilbert_encode_udf
+    from hilbert_curve_spark.curve.hilbert_native import with_hilbert
 
-    geo = _geo(spark, pts).withColumn(
-        "hilbert", hilbert_encode_udf(DEFAULT.order)("x", "y")
-    )
+    geo = with_hilbert(_geo(spark, pts), DEFAULT.order)
     out = knn_join(geo, [("a", 10, 10)], 25, DEFAULT).collect()
     assert len(out) == 5  # whole corpus returned, no infinite loop
 
@@ -212,13 +210,11 @@ def test_distance_join_custom_config_shift():
 
 
 def test_poi_distance_join_matches_brute_force(spark):
-    from hilbert_curve_spark.functions.udfs import hilbert_encode_udf
+    from hilbert_curve_spark.curve.hilbert_native import with_hilbert
     from hilbert_curve_spark.operators.spatial_join import distance_join
 
     pts = _lcg_points(500)
-    geo = _geo(spark, pts).withColumn(
-        "hilbert", hilbert_encode_udf(DEFAULT.order)("x", "y")
-    )
+    geo = with_hilbert(_geo(spark, pts), DEFAULT.order)
     pois = [("a", 100, 100), ("b", 4090, 4090), ("c", 2048, 5)]
     r = 700
     got = {
@@ -373,13 +369,11 @@ def _brute_corridor(pts, verts, r):
 
 
 def test_corridor_search_matches_brute_force(spark):
-    from hilbert_curve_spark.functions.udfs import hilbert_encode_udf
+    from hilbert_curve_spark.curve.hilbert_native import with_hilbert
     from hilbert_curve_spark.operators.spatial_join import corridor_search
 
     pts = _lcg_points(800)
-    geo = _geo(spark, pts).withColumn(
-        "hilbert", hilbert_encode_udf(DEFAULT.order)("x", "y")
-    )
+    geo = with_hilbert(_geo(spark, pts), DEFAULT.order)
     # diagonal + axis-aligned + ZERO-LENGTH segment (duplicate vertex)
     route = [(100, 100), (1500, 900), (1500, 900), (1500, 3000), (3900, 3900)]
     r = 150
@@ -390,14 +384,12 @@ def test_corridor_search_matches_brute_force(spark):
 
 
 def test_corridor_exact_boundary(spark):
-    from hilbert_curve_spark.functions.udfs import hilbert_encode_udf
+    from hilbert_curve_spark.curve.hilbert_native import with_hilbert
     from hilbert_curve_spark.operators.spatial_join import corridor_search
 
     # perpendicular distance EXACTLY r must be included, r+1 excluded
     pts = [(50, 110), (50, 111), (0, 110), (100, 111)]
-    geo = _geo(spark, pts).withColumn(
-        "hilbert", hilbert_encode_udf(DEFAULT.order)("x", "y")
-    )
+    geo = with_hilbert(_geo(spark, pts), DEFAULT.order)
     got = {r_.doc_id for r_ in corridor_search(geo, [(0, 100), (100, 100)], 10, DEFAULT).collect()}
     assert got == {"d0000", "d0002"}
 

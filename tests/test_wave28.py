@@ -46,21 +46,30 @@ def _brute_kmeans(points, k, iters, shift, edge=4096):
 
 
 def test_grid_kmeans_brute_force(spark, sf_dir):
+    """The trimodal corpus, and the empty corpus, which must give what the
+    oracle gives on an empty table: no centroids."""
+    import duckdb
+    from pyspark.sql import functions as F
+
     from hilbert_curve_spark.operators.encode import encode_documents
-    from hilbert_curve_spark.operators.graph import grid_kmeans
+    from hilbert_curve_spark.operators.graph import grid_kmeans, grid_kmeans_oracle
     from hilbert_curve_spark.sources.interleave import build_documents
 
     geo = encode_documents(build_documents(spark, sf_dir, amp=4))
-    points = [(r.doc_id, r.x, r.y) for r in geo.select("doc_id", "x", "y").collect()]
-    expect = _brute_kmeans(points, W.KMEANS_K, W.KMEANS_ITERS, W.TOPKW_SHIFT)
-    got = {
-        (r.cid, r.cx, r.cy, r.n_docs)
-        for r in grid_kmeans(geo, W.KMEANS_K, W.KMEANS_ITERS, W.TOPKW_SHIFT).collect()
-    }
-    assert got == expect
+    got = {}
+    for name, corpus in (("corpus", geo), ("empty", geo.filter(F.lit(False)))):
+        points = [(r.doc_id, r.x, r.y) for r in corpus.select("doc_id", "x", "y").collect()]
+        got[name] = {
+            (r.cid, r.cx, r.cy, r.n_docs)
+            for r in grid_kmeans(corpus, W.KMEANS_K, W.KMEANS_ITERS, W.TOPKW_SHIFT).collect()
+        }
+        assert got[name] == _brute_kmeans(points, W.KMEANS_K, W.KMEANS_ITERS, W.TOPKW_SHIFT)
+        assert sum(n for *_, n in got[name]) == len(points)
     # the trimodal corpus must spread mass over >= 3 clusters, none empty
-    assert sum(1 for *_, n in got if n > 0) >= 3
-    assert sum(n for *_, n in got) == len(points)
+    assert sum(1 for *_, n in got["corpus"] if n > 0) >= 3
+    empty_geo = "doc_geo AS (SELECT 'd' AS doc_key, 0::BIGINT AS x, 0::BIGINT AS y WHERE false)"
+    oracle = grid_kmeans_oracle(W.KMEANS_K, W.KMEANS_ITERS, W.TOPKW_SHIFT)
+    assert duckdb.sql(f"WITH {empty_geo}, {oracle}").fetchall() == list(got["empty"]) == []
 
 
 def test_grid_kmeans_centroids_move(spark, sf_dir):
